@@ -1,9 +1,10 @@
 """Per-document extraction orchestration (the §3 lifecycle, minus OCR).
 
-This is the single-doc kernel the Spark plan wraps in
-``groupBy(doc_id).applyInPandas``: raw classified layout spans in → ordered
-output spans + markdown out.  Mirrors ``Transform._extract_from_pdf`` +
-``generate_chapter_files`` + ``render_markdown_file``
+This is the single-doc kernel the Spark plan runs under ``mapInPandas``
+over doc-contiguous partitions (plans/pipeline.py): raw classified layout
+spans in → ordered output spans + markdown out.  Mirrors
+``Transform._extract_from_pdf`` + ``generate_chapter_files`` +
+``render_markdown_file``
 (/root/reference/pdf_craft/transform.py:192, sequence/generation.py:23,
 markdown/render/render.py:15).
 """

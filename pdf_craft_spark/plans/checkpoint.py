@@ -29,8 +29,19 @@ from pdf_craft_spark.plans.sinks import ParquetBucketSink
 N_BUCKETS = 16
 
 
-def committed_doc_ids(spark: SparkSession, out_dir: str) -> DataFrame | None:
-    return ParquetBucketSink(out_dir, N_BUCKETS).committed_doc_ids(spark)
+def append_uncommitted(docs: DataFrame, sink, run_id: str) -> None:
+    """The one resume path, shared by batch resume (run_with_resume) and
+    streaming micro-batches (streaming/incremental.py): left-anti join
+    ``docs`` against the doc_ids already committed in ``sink``, extract
+    the rest and append their spans tagged with ``run_id``."""
+    done = sink.committed_doc_ids(docs.sparkSession)
+    todo = docs if done is None else docs.join(done, "doc_id", "left_anti")
+
+    # every span row carries the run that produced it — row-level lineage,
+    # and run_with_resume's per-run manifest delta is a cheap scan filtered
+    # on run_id (row-group stats / snapshot metadata prune old runs)
+    # instead of a re-extraction
+    sink.append_spans(extract_spans_df(todo).withColumn("run_id", F.lit(run_id)))
 
 
 def run_with_resume(
@@ -50,15 +61,7 @@ def run_with_resume(
     if sink is None:
         sink = ParquetBucketSink(out_dir, N_BUCKETS)
     t0 = time.time()
-    done = sink.committed_doc_ids(spark)
-    todo = docs if done is None else docs.join(done, "doc_id", "left_anti")
-
-    # every span row carries the run that produced it — row-level lineage,
-    # and the per-run manifest delta below is a cheap scan filtered on
-    # run_id (row-group stats / snapshot metadata prune old runs) instead
-    # of a re-extraction
-    flat = extract_spans_df(todo).withColumn("run_id", F.lit(run_id))
-    sink.append_spans(flat)
+    append_uncommitted(docs, sink, run_id)
     wall = time.time() - t0
 
     out = sink.read_spans(spark)

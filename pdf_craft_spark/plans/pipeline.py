@@ -34,11 +34,13 @@ reference, jointer.py:42-96) — that bound holds for any plan.
 from __future__ import annotations
 
 import os
-from collections.abc import Iterator
+from collections.abc import Callable, Iterable, Iterator
+from functools import partial
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from pdf_craft_spark.schemas import INTERLEAVED_DOC_SCHEMA, OUT_SPAN_SCHEMA
 from pdf_craft_spark.shipping import ensure_package_shipped
@@ -135,9 +137,6 @@ def prepare_stage1(flat: DataFrame) -> DataFrame:
     )
 
 
-_OUT_COLS = ["doc_id", "chapter_id", "kind", "text", "media_ref", "offset"]
-
-
 def _doc_spans(pdf: pd.DataFrame):
     """(doc_id, [(kind, text, media_ref, offset), ...]) per document.
 
@@ -174,52 +173,6 @@ def _doc_spans(pdf: pd.DataFrame):
     bounds = [0, *(np.flatnonzero(ids[1:] != ids[:-1]) + 1).tolist(), len(ids)]
     for i, j in zip(bounds[:-1], bounds[1:]):
         yield ids[i], list(zip(kinds[i:j], texts[i:j], media[i:j], offs[i:j]))
-
-
-def _extract_block(pdf: pd.DataFrame, stage1_done: bool, boilerplate: bool) -> pd.DataFrame:
-    """Run the per-doc kernel over a block of >=1 complete documents."""
-    from pdf_craft_spark.corpus import parse_raw_spans
-    from pdf_craft_spark.operators.document import extract_document
-
-    out_rows: list[tuple] = []
-    for doc_id, spans in _doc_spans(pdf):
-        pages = parse_raw_spans(spans)
-        _, out_spans = extract_document(
-            pages,
-            toc_assumed=True,
-            stage1_done=stage1_done,
-            boilerplate_strip=boilerplate,
-        )
-        out_rows.extend(
-            (doc_id, s.chapter_id, s.kind, s.text, s.media_ref, s.offset)
-            for s in out_spans
-        )
-    return pd.DataFrame(out_rows, columns=_OUT_COLS)
-
-
-def _make_kernel(stage1_done: bool, boilerplate: bool = False):
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        """mapInPandas kernel: the partition arrives doc-sorted; whole
-        Arrow batches are processed at once (pandas groupby inside), with
-        the trailing — possibly incomplete — document carried into the
-        next batch.  This amortizes Arrow/pandas per-call overhead over
-        hundreds of documents instead of paying it per group."""
-        carry: pd.DataFrame | None = None
-        for pdf in batches:
-            if carry is not None and len(carry):
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-            if not len(pdf):
-                continue
-            last_doc = pdf["doc_id"].iloc[-1]
-            is_last = pdf["doc_id"] == last_doc
-            carry = pdf[is_last]
-            complete = pdf[~is_last]
-            if len(complete):
-                yield _extract_block(complete, stage1_done, boilerplate)
-        if carry is not None and len(carry):
-            yield _extract_block(carry, stage1_done, boilerplate)
-
-    return kernel
 
 
 def _check_unique_docs(docs: DataFrame, assert_unique_docs: bool | None) -> None:
@@ -268,6 +221,77 @@ def _ensure_parallelism(docs: DataFrame) -> DataFrame:
     return docs
 
 
+def _extraction_plan(
+    docs: DataFrame,
+    schema: str | T.StructType,
+    emit: Callable[[str, list, bool], Iterable[tuple]],
+    stage1: bool,
+    assert_unique_docs: bool | None,
+) -> DataFrame:
+    """The one extraction plan every sink shares: nested contract table in,
+    ``emit(doc_id, pages, stage1_done)`` rows out, typed by ``schema``.
+
+    ZERO-shuffle plan (round 4): the contract table holds ONE ROW PER
+    DOCUMENT and rows are atomic within a partition, so explode_spans
+    already yields every document's spans contiguous — exactly what the
+    kernel's change-point grouping (_doc_spans) needs.  The old
+    repartition("doc_id") exchange bought nothing but data movement:
+    measured at local[32] / 3,200 docs, 4.6-4.9 s vs 5.7-5.8 s with the
+    exchange, outputs value-identical (and at 100 TB the win is
+    structural — extraction is scan-local, no shuffle bytes at all).  A
+    partition-LOCAL sort (no exchange) still runs so unordered spans
+    arrays get their offset order restored; _ensure_parallelism guards
+    the small-input case where scan partitions < cores."""
+    ensure_package_shipped(docs.sparkSession)
+    _check_unique_docs(docs, assert_unique_docs)
+    flat = explode_spans(_ensure_parallelism(docs))
+    if stage1:
+        flat = prepare_stage1(flat)
+    flat = flat.sortWithinPartitions("doc_id", "offset")
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    cols = schema.fieldNames()
+
+    def block(pdf: pd.DataFrame) -> pd.DataFrame:
+        """Run the per-doc kernel over a block of >=1 complete documents."""
+        from pdf_craft_spark.corpus import parse_raw_spans
+
+        rows: list[tuple] = []
+        for doc_id, spans in _doc_spans(pdf):
+            rows.extend(emit(doc_id, parse_raw_spans(spans), stage1))
+        return pd.DataFrame(rows, columns=cols)
+
+    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        """mapInPandas body: the partition arrives doc-sorted; whole Arrow
+        batches are processed at once, with the trailing — possibly
+        incomplete — document carried into the next batch.  This amortizes
+        Arrow/pandas per-call overhead over hundreds of documents instead
+        of paying it per document."""
+        carry: pd.DataFrame | None = None  # never empty once set
+        for pdf in batches:
+            if carry is not None:
+                pdf = pd.concat([carry, pdf], ignore_index=True)
+            if not len(pdf):
+                continue
+            is_last = pdf["doc_id"] == pdf["doc_id"].iloc[-1]
+            carry = pdf[is_last]
+            if not is_last.all():
+                yield block(pdf[~is_last])
+        if carry is not None:
+            yield block(carry)
+
+    return flat.mapInPandas(kernel, schema=schema)
+
+
+def _emit_spans(doc_id: str, pages: list, stage1_done: bool, boilerplate: bool) -> list[tuple]:
+    from pdf_craft_spark.operators.document import extract_document
+
+    _, out_spans = extract_document(
+        pages, stage1_done=stage1_done, boilerplate_strip=boilerplate
+    )
+    return [(doc_id, s.chapter_id, s.kind, s.text, s.media_ref, s.offset) for s in out_spans]
+
+
 def extract_spans_df(
     docs: DataFrame,
     stage1: bool = True,
@@ -275,29 +299,9 @@ def extract_spans_df(
     assert_unique_docs: bool | None = None,
 ) -> DataFrame:
     """Full extraction: nested contract table in, flat output spans out
-    (doc_id, chapter_id, kind, text, media_ref, offset).
-
-    ZERO-shuffle plan (round 4): the contract table holds ONE ROW PER
-    DOCUMENT and rows are atomic within a partition, so explode_spans
-    already yields every document's spans contiguous — exactly what the
-    kernel's change-point grouping needs.  The old repartition("doc_id")
-    exchange bought nothing but data movement: measured at local[32] /
-    3,200 docs, 4.6-4.9 s vs 5.7-5.8 s with the exchange, outputs
-    value-identical (and at 100 TB the win is structural — extraction is
-    scan-local, no shuffle bytes at all).  A partition-LOCAL sort (no
-    exchange) still runs so unordered spans arrays get their offset
-    order restored, same as the old plan; _ensure_parallelism guards the
-    small-input case where scan partitions < cores."""
-    ensure_package_shipped(docs.sparkSession)
-    _check_unique_docs(docs, assert_unique_docs)
-    flat = explode_spans(_ensure_parallelism(docs))
-    if stage1:
-        flat = prepare_stage1(flat)
-    flat = flat.sortWithinPartitions("doc_id", "offset")
-    return flat.mapInPandas(
-        _make_kernel(stage1_done=stage1, boilerplate=boilerplate),
-        schema=OUT_SPAN_SCHEMA,
-    )
+    (doc_id, chapter_id, kind, text, media_ref, offset)."""
+    emit = partial(_emit_spans, boilerplate=boilerplate)
+    return _extraction_plan(docs, OUT_SPAN_SCHEMA, emit, stage1, assert_unique_docs)
 
 
 def to_nested_output(flat_spans: DataFrame) -> DataFrame:
@@ -318,46 +322,19 @@ def to_nested_output(flat_spans: DataFrame) -> DataFrame:
 MARKDOWN_SCHEMA = "doc_id string, markdown string, n_spans int"
 
 
+def _emit_markdown(doc_id: str, pages: list, stage1_done: bool) -> list[tuple]:
+    from pdf_craft_spark.operators.document import extract_document
+
+    md, out_spans = extract_document(pages, stage1_done=stage1_done)
+    return [(doc_id, md, len(out_spans))]
+
+
 def extract_markdown_df(
     docs: DataFrame, stage1: bool = True, assert_unique_docs: bool | None = None
 ) -> DataFrame:
     """S8: the markdown-file sink as a DataFrame — one rendered markdown
     string per document (same kernel, string output instead of spans)."""
-    ensure_package_shipped(docs.sparkSession)
-    _check_unique_docs(docs, assert_unique_docs)
-    flat = explode_spans(_ensure_parallelism(docs))
-    if stage1:
-        flat = prepare_stage1(flat)
-    flat = flat.sortWithinPartitions("doc_id", "offset")  # narrow, no exchange
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pdf_craft_spark.corpus import parse_raw_spans
-        from pdf_craft_spark.operators.document import extract_document
-
-        carry: pd.DataFrame | None = None
-
-        def block(pdf: pd.DataFrame) -> pd.DataFrame:
-            rows = []
-            for doc_id, spans in _doc_spans(pdf):
-                md, out_spans = extract_document(
-                    parse_raw_spans(spans), stage1_done=stage1
-                )
-                rows.append((doc_id, md, len(out_spans)))
-            return pd.DataFrame(rows, columns=["doc_id", "markdown", "n_spans"])
-
-        for pdf in batches:
-            if carry is not None and len(carry):
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-            if not len(pdf):
-                continue
-            is_last = pdf["doc_id"] == pdf["doc_id"].iloc[-1]
-            carry = pdf[is_last]
-            if len(pdf[~is_last]):
-                yield block(pdf[~is_last])
-        if carry is not None and len(carry):
-            yield block(carry)
-
-    return flat.mapInPandas(kernel, schema=MARKDOWN_SCHEMA)
+    return _extraction_plan(docs, MARKDOWN_SCHEMA, _emit_markdown, stage1, assert_unique_docs)
 
 
 EPUB_RECORD_SCHEMA = (
@@ -371,51 +348,13 @@ EPUB_TOC_SCHEMA = (
 )
 
 
-def _epub_kernel(which: str, stage1: bool):
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pdf_craft_spark.corpus import parse_raw_spans
-        from pdf_craft_spark.operators.document import extract_epub_records
+def _emit_epub(doc_id: str, pages: list, stage1_done: bool, which: str) -> list[tuple]:
+    from pdf_craft_spark.operators.document import extract_epub_records
 
-        carry: pd.DataFrame | None = None
-
-        def block(pdf: pd.DataFrame) -> pd.DataFrame:
-            rec_rows: list[tuple] = []
-            toc_rows: list[tuple] = []
-            for doc_id, spans in _doc_spans(pdf):
-                rows, tocs = extract_epub_records(
-                    parse_raw_spans(spans), stage1_done=stage1
-                )
-                rec_rows.extend((doc_id, *r) for r in rows)
-                toc_rows.extend(
-                    (doc_id, t.toc_id, t.parent_id, t.pos, t.title, t.has_chapter)
-                    for t in tocs
-                )
-            if which == "records":
-                return pd.DataFrame(
-                    rec_rows,
-                    columns=["doc_id", "chapter_id", "seq", "record", "level",
-                             "text", "latex", "media_ref", "html", "title",
-                             "caption", "footnote_id"],
-                )
-            return pd.DataFrame(
-                toc_rows,
-                columns=["doc_id", "toc_id", "parent_id", "pos", "title",
-                         "has_chapter"],
-            )
-
-        for pdf in batches:
-            if carry is not None and len(carry):
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-            if not len(pdf):
-                continue
-            is_last = pdf["doc_id"] == pdf["doc_id"].iloc[-1]
-            carry = pdf[is_last]
-            if len(pdf[~is_last]):
-                yield block(pdf[~is_last])
-        if carry is not None and len(carry):
-            yield block(carry)
-
-    return kernel
+    records, tocs = extract_epub_records(pages, stage1_done=stage1_done)
+    if which == "records":
+        return [(doc_id, *r) for r in records]
+    return [(doc_id, t.toc_id, t.parent_id, t.pos, t.title, t.has_chapter) for t in tocs]
 
 
 def extract_epub_records_df(
@@ -428,14 +367,9 @@ def extract_epub_records_df(
     TextBlock/Formula/Image/Table/Footnote rows per document
     (``which='records'``) or the cleaned TOC tree rows (``which='toc'``);
     same zero-shuffle plan shape as the other sinks."""
-    ensure_package_shipped(docs.sparkSession)
-    _check_unique_docs(docs, assert_unique_docs)
-    flat = explode_spans(_ensure_parallelism(docs))
-    if stage1:
-        flat = prepare_stage1(flat)
-    flat = flat.sortWithinPartitions("doc_id", "offset")  # narrow, no exchange
     schema = EPUB_RECORD_SCHEMA if which == "records" else EPUB_TOC_SCHEMA
-    return flat.mapInPandas(_epub_kernel(which, stage1), schema=schema)
+    emit = partial(_emit_epub, which=which)
+    return _extraction_plan(docs, schema, emit, stage1, assert_unique_docs)
 
 
 def doc_metrics(flat_spans: DataFrame) -> DataFrame:

@@ -11,7 +11,7 @@ Delivery semantics: ``foreachBatch`` is at-least-once — a micro-batch can
 REPLAY after a failure between the parquet append and the offset commit.
 The sink is therefore made idempotent at the document level: each batch is
 left-anti-joined against the doc_ids already committed to the output
-(exactly what plans/checkpoint.run_with_resume does for batch resume), so
+(plans/checkpoint.append_uncommitted, the same path batch resume takes), so
 a replayed batch re-writes nothing and the OBSERVED result is
 effectively-once per document.  On Iceberg the same property comes
 cheaper, from MERGE/overwrite-by-filter snapshot atomicity keyed on
@@ -24,10 +24,9 @@ import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from pdf_craft_spark.plans.checkpoint import N_BUCKETS, committed_doc_ids
-from pdf_craft_spark.plans.pipeline import extract_spans_df
+from pdf_craft_spark.plans.checkpoint import N_BUCKETS, append_uncommitted
+from pdf_craft_spark.plans.sinks import ParquetBucketSink
 from pdf_craft_spark.schemas import INTERLEAVED_DOC_SCHEMA
 
 
@@ -35,24 +34,13 @@ def make_batch_processor(out_dir: str) -> Callable[[DataFrame, int], None]:
     """The foreachBatch body, exposed for direct replay testing: dedups
     the batch against committed doc_ids, so re-processing the same batch
     (an at-least-once replay) appends nothing."""
+    # write through the SAME sink as batch resume: one bucketing scheme
+    # (sinks.bucket_expr) per dataset, so external lineage recompute
+    # and mixed batch/stream output dirs stay consistent
+    sink = ParquetBucketSink(out_dir, N_BUCKETS)
 
     def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        done = committed_doc_ids(spark, out_dir)
-        todo = (
-            batch_df
-            if done is None
-            else batch_df.join(done, "doc_id", "left_anti")
-        )
-        # write through the SAME sink as batch resume: one bucketing scheme
-        # (sinks.bucket_expr) per dataset, so external lineage recompute
-        # and mixed batch/stream output dirs stay consistent
-        from pdf_craft_spark.plans.sinks import ParquetBucketSink
-
-        flat = extract_spans_df(todo).withColumn(
-            "run_id", F.lit(f"epoch_{epoch_id}")
-        )
-        ParquetBucketSink(out_dir, N_BUCKETS).append_spans(flat)
+        append_uncommitted(batch_df, sink, f"epoch_{epoch_id}")
 
     return process_batch
 

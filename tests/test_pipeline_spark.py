@@ -5,10 +5,12 @@ JVM prep must be behaviorally identical to the kernel's Python prep."""
 from __future__ import annotations
 
 from pdf_craft_spark.corpus import generate_document, pages_to_spans, parse_raw_spans
-from pdf_craft_spark.operators.document import extract_document
+from pdf_craft_spark.operators.document import extract_document, extract_epub_records
 from pdf_craft_spark.plans.pipeline import (
     corpus_df,
     doc_metrics,
+    extract_epub_records_df,
+    extract_markdown_df,
     extract_spans_df,
     to_nested_output,
 )
@@ -72,8 +74,6 @@ def test_doc_metrics(spark):
 
 
 def test_markdown_sink_matches_kernel(spark):
-    from pdf_craft_spark.plans.pipeline import extract_markdown_df
-
     docs = corpus_df(spark, 6, SEED, partitions=2)
     got = {r.doc_id: r.markdown for r in extract_markdown_df(docs).collect()}
     assert len(got) == 6
@@ -108,3 +108,56 @@ def test_assert_unique_docs_catches_cross_partition_duplicates(spark):
     dup = docs.unionAll(docs.limit(1))
     with pytest.raises(ValueError, match="contract violation"):
         extract_spans_df(dup, assert_unique_docs=True)
+
+
+def _rows_by_doc(df) -> dict[str, list[tuple]]:
+    """doc_id -> the sink's other columns, in the order the kernel emitted
+    them (the plan is narrow after mapInPandas, so collect keeps it)."""
+    out: dict[str, list[tuple]] = {}
+    for r in df.collect():
+        out.setdefault(r.doc_id, []).append(tuple(r)[1:])
+    return out
+
+
+def test_every_sink_matches_kernel_across_arrow_batches(spark):
+    """With 7-row Arrow batches every document straddles several batches,
+    so each sink's rows come through the carry-the-last-document path;
+    they must still equal the in-process kernel doc-for-doc."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    n_docs, batch = 4, 7
+    want: dict[str, dict[str, list[tuple]]] = {
+        "spans": {}, "markdown": {}, "records": {}, "toc": {}
+    }
+    for d in range(n_docs):
+        raw = pages_to_spans(generate_document(d, SEED))
+        assert len(raw) > 2 * batch  # the carry path runs for every doc
+        pages = parse_raw_spans(raw)
+        md, spans = extract_document(pages)
+        records, tocs = extract_epub_records(pages)
+        doc_id = str(d)
+        want["spans"][doc_id] = [
+            (s.chapter_id, s.kind, s.text, s.media_ref, s.offset) for s in spans
+        ]
+        want["markdown"][doc_id] = [(md, len(spans))]
+        want["records"][doc_id] = [tuple(r) for r in records]
+        want["toc"][doc_id] = [
+            (t.toc_id, t.parent_id, t.pos, t.title, t.has_chapter) for t in tocs
+        ]
+
+    old = spark.conf.get(key, None)
+    spark.conf.set(key, str(batch))
+    try:
+        docs = corpus_df(spark, n_docs, SEED, partitions=2)
+        got = {
+            "spans": _rows_by_doc(extract_spans_df(docs)),
+            "markdown": _rows_by_doc(extract_markdown_df(docs)),
+            "records": _rows_by_doc(extract_epub_records_df(docs, which="records")),
+            "toc": _rows_by_doc(extract_epub_records_df(docs, which="toc")),
+        }
+    finally:
+        if old is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, old)
+    for sink, by_doc in want.items():
+        assert got[sink] == {d: rows for d, rows in by_doc.items() if rows}, sink

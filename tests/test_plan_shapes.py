@@ -41,13 +41,24 @@ def test_a1_scan_pushdown_and_pruning(spark):
     assert "l_comment" not in read_schema and "l_orderkey" not in read_schema
 
 
-def test_extraction_has_zero_exchanges(spark):
+@pytest.mark.parametrize(
+    "builder, kwargs",
+    [
+        ("extract_spans_df", {}),
+        ("extract_markdown_df", {}),
+        ("extract_epub_records_df", {"which": "records"}),
+        ("extract_epub_records_df", {"which": "toc"}),
+    ],
+    ids=["spans", "markdown", "records", "toc"],
+)
+def test_extraction_has_zero_exchanges(spark, builder, kwargs):
     """Round 4: extraction is fully narrow — one row per document means
-    explode already co-locates every doc's spans, so the plan must carry
-    NO exchange at all (only a partition-local sort)."""
-    from pdf_craft_spark.plans.pipeline import corpus_df, extract_spans_df
+    explode already co-locates every doc's spans, so no sink's plan may
+    carry an exchange at all (only a partition-local sort)."""
+    from pdf_craft_spark.plans import pipeline
 
-    plan = _executed_plan(extract_spans_df(corpus_df(spark, 64)))
+    build = getattr(pipeline, builder)
+    plan = _executed_plan(build(pipeline.corpus_df(spark, 64), **kwargs))
     n_exchanges = plan.count("Exchange ")
     assert n_exchanges == 0, f"expected a fully narrow plan, got:\n{plan}"
     assert "Sort " in plan  # the partition-local offset-order restore
