@@ -776,30 +776,21 @@ def duck_media_cte() -> str:
     return "".join(parts)
 
 
-def synth_media_table(docs: DataFrame, materialize: bool = True) -> DataFrame:
+def synth_media_table(docs: DataFrame) -> DataFrame:
     """Deterministic binary payloads derived from document text —
     engine-portable (Spark unhex == DuckDB unhex over the same layered
     recipe, media_payload_layers) so the binary plumbing itself is
     oracle-checkable; PNG rows are fully valid zlib PNGs (module
-    comment above).
-
-    Materialized by default: Catalyst's CollapseProject inlines each
-    generation layer into every downstream reference, so the zlib/adler
-    layer chain re-expands wherever `content` is consumed — measured at
-    sf0.1 (5,000 media rows): extract_media_features 11.6 s against the
-    lazy expression tree vs 0.48 s against the materialized rows (24x),
-    dhash/collect paths ~18 s vs sub-second.  At prod the media table is
-    a SCAN of stored bytes, so the materialized form is also the honest
-    plan shape — generation is corpus synthesis, not operator work."""
+    comment above).  Returns the lazy frame; consumers read it through
+    a materialized session artifact (queries/multimodalq.py)."""
     df = docs.select("doc_id", "text")
     for name, expr in media_payload_layers("spark"):
         df = df.selectExpr("*", f"({expr}) AS {name}")
-    out = df.select(
+    return df.select(
         F.concat(F.lit("m"), F.col("doc_id").cast("string")).alias("media_ref"),
         F.expr(_MIME_CASE).alias("mime"),
         F.unhex(F.col("payload_hex")).alias("content"),
     )
-    return out.localCheckpoint(eager=True) if materialize else out
 
 
 # --- document modality: PDF (ISO 32000) metadata containers --------------------

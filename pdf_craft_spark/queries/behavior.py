@@ -12,14 +12,14 @@ session-timezone-free in both engines.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from pdf_craft_spark.sources import load_table
+
 
 def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
+    return load_table(spark, sf_dir, "events")
 
 
 # --- ordered funnel ----------------------------------------------------------
@@ -290,7 +290,7 @@ ORACLES = {
 # already the scalable shape.  Recency anchors to the corpus's own max
 # order date (1-row broadcast), not wall-clock, so results are stable.
 def ntile_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = spark.read.parquet(os.path.join(sf_dir, "orders.parquet"))
+    orders = load_table(spark, sf_dir, "orders")
     per_cust = orders.groupBy("o_custkey").agg(
         F.max("o_orderdate").alias("last_order"),
         F.count("*").alias("freq"),
@@ -573,7 +573,7 @@ ORACLES["recsys_item_cooccurrence_topk"] = RECSYS_ITEM_COOCCURRENCE_TOPK_SQL
 # partitioning.  Timestamps are emitted via date_format (tz-offset-free,
 # the proven cross-engine spelling).
 def event_compact_consecutive(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).select(
+    ev = load_table(spark, sf_dir, "events").select(
         "user_id",
         "event_type",
         "ts",
@@ -666,7 +666,7 @@ ORACLES["event_compact_consecutive"] = EVENT_COMPACT_CONSECUTIVE_SQL
 # identity sum(alloc) == sum_part min(supply, demand), and a weighted
 # pair checksum that pins WHICH receipt fed WHICH issue.
 def fifo_inventory_match(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet")).selectExpr(
+    li = load_table(spark, sf_dir, "lineitem").selectExpr(
         "l_partkey AS pk",
         "l_orderkey",
         "l_linenumber",
@@ -995,7 +995,7 @@ RANK_CHURN_TOP = 15
 
 
 def rank_churn_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet")).selectExpr(
+    li = load_table(spark, sf_dir, "lineitem").selectExpr(
         "l_suppkey",
         "CAST(l_shipdate AS DATE) AS d",
         "CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents",

@@ -11,12 +11,11 @@ too-short and non-digit dates, and NULL.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pdf_craft_spark.functions.bookmeta import book_meta
+from pdf_craft_spark.sources import load_table
 
 _STAMP = (
     "lpad(cast(1990 + doc_id % 35 as string), 4, '0') || "
@@ -56,7 +55,7 @@ _RAW_MODDATE = (
 
 
 def s3_book_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).select(
+    docs = load_table(spark, sf_dir, "documents").select(
         "doc_id",
         F.expr(_RAW_TITLE).alias("raw_title"),
         F.expr(_RAW_AUTHOR).alias("raw_author"),

@@ -9,17 +9,12 @@ DuckDB ``//`` (both truncate toward zero), no transcendental functions.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from pdf_craft_spark.queries.dedup import md5_prefix_long_sql
 from pdf_craft_spark.queries.indexing import Z_EPOCH, _hilbert_step, _zorder_terms
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+from pdf_craft_spark.sources import load_table as _t
 
 
 QUERIES: dict = {}

@@ -10,14 +10,10 @@ hash-for-hash.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+from pdf_craft_spark.sources import load_table as _t
 
 
 # --- expectations sweep -----------------------------------------------------
@@ -313,7 +309,7 @@ _ANALYZE_COLS = (
 
 
 def analyze_table_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet"))
+    li = _t(spark, sf_dir, "lineitem")
     stack_args = ", ".join(
         f"'{name}', {expr}" for name, expr in _ANALYZE_COLS
     )

@@ -27,17 +27,17 @@ each bucket.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
+
+from pdf_craft_spark.sources import load_table
 
 N_HASHES = 16
 N_BANDS = 8  # rows-per-band = 2
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+    return load_table(spark, sf_dir, "documents")
 
 
 def _tokens() -> F.Column:

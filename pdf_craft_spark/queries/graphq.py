@@ -29,10 +29,10 @@ being the other graph op).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from pdf_craft_spark.sources import load_table
 
 SCALE = 10**12
 FIXED_ITERS = 3
@@ -47,12 +47,8 @@ def custsupp_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pdf_craft_spark.queries.dedup import session_artifact
 
     def build() -> DataFrame:
-        li = spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet")).select(
-            "l_orderkey", "l_suppkey"
-        )
-        orders = spark.read.parquet(os.path.join(sf_dir, "orders.parquet")).select(
-            "o_orderkey", "o_custkey"
-        )
+        li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
+        orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
         # dedup on the raw int pair (cheap fixed-width hashing) — string
         # ids are built by consumers that need them
         return (
@@ -398,9 +394,7 @@ ORACLES["graph_label_propagation"] = GRAPH_LABEL_PROPAGATION_SQL
 def hierarchy_flatten_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).select(
-        "doc_id"
-    )
+    docs = load_table(spark, sf_dir, "documents").select("doc_id")
     nodes = docs.selectExpr(
         "doc_id AS child",
         "CASE WHEN doc_id < 7 THEN NULL ELSE doc_id div 7 END AS parent",

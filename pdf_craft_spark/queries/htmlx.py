@@ -39,6 +39,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pdf_craft_spark.sources import load_table
+
 QUERIES: dict = {}
 ORACLES: dict = {}
 
@@ -152,12 +154,10 @@ def classify_main(n_words: int, link_chars: int, n_chars: int) -> bool:
 
 
 def html_main_content_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
     from pdf_craft_spark.shipping import ensure_package_shipped
 
     ensure_package_shipped(spark)
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+    docs = load_table(spark, sf_dir, "documents")
     pages = docs.selectExpr("doc_id", f"{_page_sql()} AS html")
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

@@ -9,14 +9,10 @@ integer/ASCII-exact so the DuckDB oracle matches hash-for-hash.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+from pdf_craft_spark.sources import load_table as _t
 
 
 # --- inverted index ---------------------------------------------------------

@@ -23,10 +23,10 @@ pca_power_iteration: see its docstring below.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
+
+from pdf_craft_spark.sources import load_table as _t
 
 QUERIES: dict = {}
 ORACLES: dict = {}
@@ -35,7 +35,7 @@ _PPM = 1_000_000
 
 
 def decision_stump_train(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet"))
+    li = _t(spark, sf_dir, "lineitem")
     base = li.selectExpr(
         "CAST(l_quantity AS BIGINT) AS qty",
         "CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT)"
@@ -168,7 +168,7 @@ _MICRO = 1_000_000
 
 
 def pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
+    emb = _t(spark, sf_dir, "embeddings")
     e = (
         emb.selectExpr("vec_id AS id", "posexplode(embedding) AS (dim, x)")
         .selectExpr(
@@ -270,7 +270,7 @@ def conformal_interval_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     h = md5_prefix_long_sql("CAST(o_orderkey AS STRING)", 4, "spark")
     base = (
-        spark.read.parquet(os.path.join(sf_dir, "orders.parquet"))
+        _t(spark, sf_dir, "orders")
         .selectExpr(
             "o_orderkey",
             "o_orderpriority AS grp",
@@ -407,8 +407,8 @@ def als_factor_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pdf_craft_spark.queries.dedup import md5_prefix_long_sql
 
     h = md5_prefix_long_sql("CAST(l_partkey AS STRING)", 8, "spark")
-    o = spark.read.parquet(os.path.join(sf_dir, "orders.parquet"))
-    li = spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet"))
+    o = _t(spark, sf_dir, "orders")
+    li = _t(spark, sf_dir, "lineitem")
     rat = (
         o.join(li, o.o_orderkey == li.l_orderkey)
         .groupBy("o_custkey", "l_partkey")
@@ -501,7 +501,7 @@ ORACLES["als_factor_step"] = ALS_FACTOR_STEP_SQL
 # inside int64 up to ~3e6 rows, beyond which the sums widen to
 # DECIMAL(38,0) with the same plan (spearman/tfidf precedent).
 def gbt_residual_boost(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet"))
+    li = _t(spark, sf_dir, "lineitem")
     base = li.selectExpr(
         "CAST(l_quantity AS BIGINT) AS qty",
         "CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT)"
@@ -638,7 +638,7 @@ def calibration_bins_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pdf_craft_spark.queries.dedup import md5_prefix_long_sql
 
     h = md5_prefix_long_sql("CAST(doc_id AS STRING)", 4, "spark")
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+    docs = _t(spark, sf_dir, "documents")
     base = docs.selectExpr(
         "lang",
         "source",
@@ -729,8 +729,8 @@ ORACLES["calibration_bins_eval"] = CALIBRATION_BINS_EVAL_SQL
 # ~15-row compression, then constant-size self-joins.  Nothing after the
 # first aggregation grows with data volume.
 def isotonic_price_by_items(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = spark.read.parquet(os.path.join(sf_dir, "orders.parquet"))
-    li = spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet"))
+    o = _t(spark, sf_dir, "orders")
+    li = _t(spark, sf_dir, "lineitem")
     per_order = (
         o.join(li, o.o_orderkey == li.l_orderkey)
         .groupBy("o_orderkey")
@@ -840,7 +840,7 @@ def survival_km_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pdf_craft_spark.shipping import ensure_package_shipped
 
     ensure_package_shipped(spark)
-    o = spark.read.parquet(os.path.join(sf_dir, "orders.parquet")).select(
+    o = _t(spark, sf_dir, "orders").select(
         "o_custkey", "o_orderkey", F.col("o_orderdate").cast("date").alias("d")
     )
     w = "PARTITION BY o_custkey ORDER BY d, o_orderkey"
@@ -970,10 +970,6 @@ ORACLES["survival_km_curve"] = SURVIVAL_KM_CURVE_SQL
 # per-segment audit of the full encoded column (count, min, max, exact sum),
 # so the driver hash pins every encoded value, not a sample.  Everything is
 # integer cents with truncated division (engine-identical).
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-
-
 def loo_target_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = _t(spark, sf_dir, "orders").select(
         "o_custkey",
@@ -1144,7 +1140,7 @@ ORACLES["cv_kfold_mse"] = CV_KFOLD_MSE_SQL
 # action grid, ~20 rows), a broadcast policy join, one final agg; all
 # means in truncated integer cents.
 def bandit_replay_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).selectExpr(
+    ev = _t(spark, sf_dir, "events").selectExpr(
         "CAST(ts AS DATE) AS day",
         "CAST(hour(ts) DIV 6 AS BIGINT) AS ctx",
         "event_type AS action",
@@ -1258,7 +1254,7 @@ def embedding_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     h = md5_prefix_long_sql("CAST(vec_id AS STRING)", 4, "spark")
     e = (
-        spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
+        _t(spark, sf_dir, "embeddings")
         .selectExpr(
             "vec_id",
             f"CASE WHEN ({h}) % 2 = 0 THEN 'a' ELSE 'b' END AS half",

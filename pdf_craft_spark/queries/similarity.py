@@ -25,6 +25,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from pdf_craft_spark.sources import load_table
+
 N_QUERIES = 10
 TOP_K = 5
 N_PLANES = 8
@@ -32,7 +34,7 @@ DIM = 64
 
 
 def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
+    return load_table(spark, sf_dir, "embeddings")
 
 
 # The dot product as a left fold over zip_with (interpreted higher-order
@@ -415,10 +417,9 @@ def _fit_sample(sf_dir: str) -> tuple[int, "object"]:
 
     from pyspark.sql import SparkSession
 
-    path = os.path.join(sf_dir, "embeddings.parquet")
     spark = SparkSession.getActiveSession()
     if spark is not None:
-        df = spark.read.parquet(path).select("vec_id", "embedding")
+        df = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
         n = df.count()
         stride = max(1, n // SAMPLE_CAP)
         rows = (
@@ -431,7 +432,7 @@ def _fit_sample(sf_dir: str) -> tuple[int, "object"]:
         return n, mat
     import pyarrow.dataset as ds
 
-    dset = ds.dataset(path)
+    dset = ds.dataset(os.path.join(sf_dir, "embeddings.parquet"))
     n = dset.count_rows()  # row-group metadata only
     stride = max(1, n // SAMPLE_CAP)
     ids: list = []

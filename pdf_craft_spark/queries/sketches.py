@@ -34,8 +34,6 @@ the (m, n_buckets_set) columns this query already emits.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -43,6 +41,7 @@ from pdf_craft_spark.queries.dedup import (
     HASH_PCT_SQL as _HASH_PCT_SQL,
     md5_prefix_long_sql as _md5_long,
 )
+from pdf_craft_spark.sources import load_table
 
 _M = 256  # registers (p = 8)
 _WBITS = 52  # 60-bit hash minus 8 bucket bits
@@ -74,7 +73,7 @@ _EST = (
 
 
 def hll_distinct_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet"))
+    li = load_table(spark, sf_dir, "lineitem")
     regs = (
         li.selectExpr(
             "l_returnflag",
@@ -200,9 +199,7 @@ _TARGET = "CAST(ceil(q * n) AS BIGINT)"
 def quantile_sketch_prices(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
-    li = spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet")).select(
-        "l_returnflag", "l_extendedprice"
-    )
+    li = load_table(spark, sf_dir, "lineitem").select("l_returnflag", "l_extendedprice")
     stats = li.agg(
         F.min("l_extendedprice").alias("mn"), F.max("l_extendedprice").alias("mx")
     )
@@ -316,7 +313,7 @@ def _bloom_pos(engine: str, salt: int) -> str:
 def bloom_membership_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pdf_craft_spark.queries.dedup import hash_pct
 
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+    docs = load_table(spark, sf_dir, "documents")
     norm = F.md5(F.trim(F.regexp_replace(F.col("text"), r"\s+", " ")))
     base = docs.select(
         "doc_id", norm.alias("content_hash"), hash_pct().alias("pct")
@@ -449,9 +446,7 @@ def _cms_bucket(engine: str, r: int) -> str:
 def cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
-    items = spark.read.parquet(os.path.join(sf_dir, "orders.parquet")).select(
-        "o_custkey"
-    )
+    items = load_table(spark, sf_dir, "orders").select("o_custkey")
     stack_args = ", ".join(
         f"{r}, {_cms_bucket('spark', r)}" for r in range(_CMS_D)
     )
@@ -550,7 +545,7 @@ def sliding_hll_user_days_7d(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pdf_craft_spark.queries.timeseries import SLIDE_DAYS
 
-    ev = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
+    ev = load_table(spark, sf_dir, "events")
     key = "concat(CAST(user_id AS STRING), '|', CAST(day AS STRING))"
     h = _md5_long(key, 15, "spark")
     base = ev.selectExpr(
@@ -691,7 +686,7 @@ ORACLES["sliding_hll_user_days_7d"] = SLIDING_HLL_USER_DAYS_7D_SQL
 # event scan builds both register tables; the union registers are
 # greatest() of the two 256-int states — no second pass.
 def hll_set_algebra_user_days(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
+    ev = load_table(spark, sf_dir, "events")
     key = "concat(CAST(user_id AS STRING), '|', CAST(day AS STRING))"
     h = _md5_long(key, 15, "spark")
     base = ev.filter(
@@ -889,7 +884,7 @@ _R60 = 1 << 60  # hash range (exact as a double: 2^60 < 2^53? no — but a
 
 
 def theta_sketch_intersection(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
+    ev = load_table(spark, sf_dir, "events")
     key = "concat(CAST(user_id AS STRING), '|', CAST(day AS STRING))"
     h = _md5_long(key, 15, "spark")
     base = ev.filter(
@@ -1121,7 +1116,7 @@ AMS_G = 16  # groups (of AMS_K // AMS_G estimators each)
 
 
 def ams_f2_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = spark.read.parquet(os.path.join(sf_dir, "orders.parquet"))
+    o = load_table(spark, sf_dir, "orders")
     keys = o.groupBy("o_custkey").agg(F.count(F.lit(1)).cast("long").alias("cnt"))
     sign = _md5_long("concat(o_custkey, '|', j)", 15, "spark")
     z = (

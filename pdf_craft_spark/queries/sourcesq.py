@@ -25,6 +25,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from pdf_craft_spark.sources import load_table
+
 _SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType()),
@@ -70,7 +72,7 @@ def _fingerprint(df: DataFrame, fmt: str) -> DataFrame:
 
 
 def source_roundtrip_fidelity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).select(
+    docs = load_table(spark, sf_dir, "documents").select(
         *[f.name for f in _SCHEMA.fields]
     )
     # per-process, full-path-keyed scratch dir: concurrent processes (or
@@ -147,7 +149,7 @@ ORACLES = {"source_roundtrip_fidelity": SOURCE_ROUNDTRIP_FIDELITY_SQL}
 # schema-on-read pattern: the parse cost rides the scan, and only the
 # extracted integer shuffles.
 def json_extract_props(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
+    ev = load_table(spark, sf_dir, "events")
     k = F.expr(
         "CAST(CASE WHEN get_json_object(props, '$.k') RLIKE '^-?[0-9]+$'"
         " THEN get_json_object(props, '$.k') END AS BIGINT)"
@@ -233,12 +235,12 @@ def bucketed_join_colocate(spark: SparkSession, sf_dir: str) -> DataFrame:
     tc, to = f"bkt_cust_{tag}", f"bkt_ord_{tag}"
     work = tempfile.mkdtemp(prefix="bucketed_join_")
     try:
-        _t_read(spark, sf_dir, "customer").select(
+        load_table(spark, sf_dir, "customer").select(
             "c_custkey", "c_nationkey"
         ).write.bucketBy(N_BUCKETS_JOIN, "c_custkey").sortBy(
             "c_custkey"
         ).option("path", os.path.join(work, tc)).saveAsTable(tc)
-        _t_read(spark, sf_dir, "orders").selectExpr(
+        load_table(spark, sf_dir, "orders").selectExpr(
             "o_custkey", "CAST(o_totalprice AS DECIMAL(18,2)) AS price"
         ).write.bucketBy(N_BUCKETS_JOIN, "o_custkey").sortBy(
             "o_custkey"
@@ -275,10 +277,6 @@ def bucketed_join_colocate(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.sql(f"DROP TABLE IF EXISTS {tc}")
         spark.sql(f"DROP TABLE IF EXISTS {to}")
         shutil.rmtree(work, ignore_errors=True)
-
-
-def _t_read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
 
 
 BUCKETED_JOIN_COLOCATE_SQL = """

@@ -9,14 +9,10 @@ inputs); percentiles are ORDER STATISTICS, never interpolation or sketches.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+from pdf_craft_spark.sources import load_table as _t
 
 
 # --- Spearman rank correlation (integer-exact ranks) -----------------------
@@ -1199,7 +1195,7 @@ SPRT_LOWER = -SPRT_UPPER
 
 
 def sequential_ab_sprt(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).selectExpr(
+    ev = _t(spark, sf_dir, "events").selectExpr(
         "CAST(ts AS DATE) AS day",
         "CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS is_p",
     )

@@ -22,8 +22,10 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pdf_craft_spark.sources import load_table
+
 def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+    docs = load_table(spark, sf_dir, "documents")
     ev = docs.select(
         "doc_id",
         F.explode(
@@ -144,7 +146,7 @@ def streaming_windowed_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _windowed_metrics_utc(spark, sf_dir, windowed_extraction_metrics) -> DataFrame:
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).select(
+    docs = load_table(spark, sf_dir, "documents").select(
         F.col("doc_id").cast("string").alias("doc_id"),
         F.col("doc_id").alias("id_num"),
         F.length("text").alias("n_chars"),
@@ -302,7 +304,7 @@ def streaming_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     semantics exercised here are the same."""
     from pdf_craft_spark.queries.dedup import INGEST_BATCH_PCT, hash_pct
 
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+    docs = load_table(spark, sf_dir, "documents")
     norm = F.md5(F.trim(F.regexp_replace(F.col("text"), r"\s+", " ")))
     rows = docs.select(
         norm.alias("content_hash"),
@@ -433,7 +435,7 @@ SESSION_USER_MOD = 11
 
 def _sessionize_utc(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = (
-        spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
+        load_table(spark, sf_dir, "events")
         .filter(F.col("user_id") % SESSION_USER_MOD == 0)
         .select("user_id", F.col("ts").cast("timestamp").alias("ts"))
     )
@@ -581,9 +583,7 @@ def streaming_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _stream_join_utc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).select(
-        "event_id", "user_id"
-    )
+    ev = load_table(spark, sf_dir, "events").select("event_id", "user_id")
     base = F.to_timestamp(F.lit("2026-01-01 12:00:00"))
     m = (F.col("event_id") % 20).cast("int")
     c = (F.col("event_id") % 7).cast("int")
@@ -751,10 +751,8 @@ def streaming_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-planning drift (lost rows, double joins) breaks the count/revenue
     hash.  Revenue goes through DECIMAL(18,2) so summation order cannot
     split the engines."""
-    dim = spark.read.parquet(os.path.join(sf_dir, "customer.parquet")).select(
-        "c_custkey", "c_mktsegment"
-    )
-    orders = spark.read.parquet(os.path.join(sf_dir, "orders.parquet")).select(
+    dim = load_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
+    orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice"
     )
     b0 = orders.filter(F.col("o_orderkey") % 2 == 0)
@@ -841,7 +839,7 @@ def streaming_upsert_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pdf_craft_spark.queries.dedup import md5_prefix_long_sql as _mpl
 
     bp = _mpl("CAST(o_orderkey AS STRING)", 4, "spark") + " % 10000"
-    base = spark.read.parquet(os.path.join(sf_dir, "orders.parquet")).selectExpr(
+    base = load_table(spark, sf_dir, "orders").selectExpr(
         "o_orderkey",
         "o_orderstatus",
         "CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents",
@@ -990,7 +988,7 @@ def streaming_hll_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     key = "concat(CAST(user_id AS STRING), '|', CAST(day AS STRING))"
     h = _mpl(key, 15, "spark")
     base = (
-        spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
+        load_table(spark, sf_dir, "events")
         .selectExpr(
             "event_type",
             "datediff(CAST(ts AS DATE), DATE '1970-01-01') AS day",
@@ -1170,7 +1168,7 @@ def streaming_checkpoint_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
     sums double and n_batches hits 4+; if it skipped ahead, they
     undercount.  Feed = the events table split into three deterministic
     10-day windows, same recipe as streaming_hll_merge."""
-    ev = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).selectExpr(
+    ev = load_table(spark, sf_dir, "events").selectExpr(
         "event_type",
         "CAST(ts AS DATE) AS day",
         "CAST(round(value * 100) AS BIGINT) AS cents",

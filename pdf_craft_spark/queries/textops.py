@@ -15,11 +15,13 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from pdf_craft_spark.sources import load_table
+
 STOPWORDS = ("the", "of", "and", "a", "to", "in", "is", "it", "on", "for")
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+    return load_table(spark, sf_dir, "documents")
 
 
 def _tokens_col() -> F.Column:
@@ -577,7 +579,7 @@ def text_lm_bigram_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pdf_craft_spark.queries.dedup import hash_pct
 
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).select(
+    docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", hash_pct().alias("pct")
     )
     toks = docs.select(
@@ -670,7 +672,7 @@ BPE_MERGE_TOPK = 20
 def bpe_merge_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+    docs = load_table(spark, sf_dir, "documents")
     words = (
         docs.select(
             F.explode(
@@ -1257,9 +1259,7 @@ COLLOC_TOPK = 20
 def collocation_lift_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).select(
-        "doc_id", "text"
-    )
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     toks = docs.select(
         "doc_id",
         F.posexplode(
@@ -1472,7 +1472,7 @@ for _ in range(RBO_DEPTH):
 
 
 def rbo_rank_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet")).selectExpr(
+    li = load_table(spark, sf_dir, "lineitem").selectExpr(
         "l_suppkey",
         "CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents",
     )

@@ -12,14 +12,10 @@ identical canonical form.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+from pdf_craft_spark.sources import load_table as _t
 
 
 # --- range join: purchase attribution ---------------------------------------
@@ -1839,7 +1835,7 @@ FI_HOLDOUT_DAYS = 7
 
 
 def forecast_interval_empirical(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).selectExpr(
+    e = _t(spark, sf_dir, "events").selectExpr(
         "event_type AS et", "CAST(ts AS DATE) AS day"
     )
     daily = e.groupBy("et", "day").agg(F.count(F.lit(1)).cast("long").alias("y"))

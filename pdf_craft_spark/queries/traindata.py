@@ -20,8 +20,6 @@ arithmetic reproduce exactly across engines.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
@@ -31,6 +29,7 @@ from pdf_craft_spark.queries.dedup import (
     _shingle_list_duck,
     hash_pct as _dedup_hash_pct,
 )
+from pdf_craft_spark.sources import load_table
 
 # split fractions in percent: train 90 / val 5 / test 5
 VAL_PCT, TEST_PCT = 5, 5
@@ -39,7 +38,7 @@ SEQ_CAPACITY = 2048  # tokens per packed training sequence
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+    return load_table(spark, sf_dir, "documents")
 
 
 def _hash_pct() -> F.Column:
@@ -913,7 +912,7 @@ _RANKNORM_DIMS = 8
 
 
 def embed_rank_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
+    emb = load_table(spark, sf_dir, "embeddings")
     x = emb.select(
         "vec_id", F.posexplode("embedding").alias("dim", "xf")
     ).filter(F.col("dim") < _RANKNORM_DIMS).select(
@@ -1075,7 +1074,7 @@ def priority_sample_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pdf_craft_spark.queries.dedup import md5_prefix_long_sql
 
     h = md5_prefix_long_sql("CAST(o_orderkey AS STRING)", 10, "spark")
-    o = spark.read.parquet(os.path.join(sf_dir, "orders.parquet")).selectExpr(
+    o = load_table(spark, sf_dir, "orders").selectExpr(
         "o_orderkey",
         "CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) DIV 100 AS w",
         f"({h}) + 1 AS u",
@@ -1172,7 +1171,7 @@ ORACLES["priority_sample_orders"] = PRIORITY_SAMPLE_ORDERS_SQL
 # the pipeline.  One scan, one user-keyed agg each side, broadcast
 # label join.
 def training_label_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).selectExpr(
+    ev = load_table(spark, sf_dir, "events").selectExpr(
         "user_id",
         "event_type",
         "CAST(ts AS DATE) AS day",

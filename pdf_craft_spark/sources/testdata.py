@@ -1,9 +1,11 @@
-"""Readers for the driver-generated parquet test tables.
+"""The table-source seam: the one place that knows where a table lives.
 
-At cluster scale these would be Iceberg table scans
-(``spark.read.format("iceberg")``); the Iceberg jars are not in this image,
-so the connector is parquet with the same declared-schema discipline —
-Catalyst still gets pushdown + pruning on the parquet scan.
+Every ``sf_dir`` table read goes through ``load_table``; the layout today is
+one parquet file per table, ``{sf_dir}/{name}.parquet``.  At cluster scale
+these are Iceberg table scans (``spark.read.format("iceberg")``) and this
+function is the switch point; the Iceberg jars are not in this image, so
+the connector is parquet — Catalyst still gets pushdown + pruning on the
+scan.
 """
 
 from __future__ import annotations
@@ -12,23 +14,6 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-TABLE_NAMES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {n: load_table(spark, sf_dir, n) for n in TABLE_NAMES}

@@ -865,3 +865,21 @@ def test_median_two_pass_histogram_is_materialized(spark):
     plan = _executed_plan(QUERIES["median_binned_two_pass"](spark, SF_DIR))
     assert "ExistingRDD" in plan
     assert "BroadcastHashJoin" in plan  # targets broadcast into pass 2
+
+
+def test_table_reads_go_through_the_source_seam():
+    """Every sf_dir table read goes through sources.load_table — the one
+    place that knows the table layout — so the layout (or the switch to
+    Iceberg scans) changes in one file."""
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "pdf_craft_spark"
+    seam = pkg / "sources" / "testdata.py"
+    bypass = [
+        f"{path.relative_to(pkg)}:{i}"
+        for path in sorted(pkg.rglob("*.py"))
+        if path != seam
+        for i, line in enumerate(path.read_text().splitlines(), 1)
+        if "read.parquet(os.path.join(" in line
+    ]
+    assert not bypass, f"read tables via sources.load_table: {bypass}"
