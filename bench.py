@@ -461,6 +461,21 @@ def pipeline_only(cpus: int, n_docs: int) -> None:
     spark.stop()
 
 
+def scaling_headline(attempts: list[dict]) -> tuple[dict, float]:
+    """(headline attempt, best efficiency) of a scaling pairing's attempts.
+
+    The headline is the MEDIAN attempt by efficiency (upper middle for even
+    counts — disturbances are one-sided, so of two readings the higher is
+    closer to the undisturbed engine), never best-of-N.  Efficiency above
+    1.0 is superlinear and physically impossible for the same work on more
+    cores of one host (it means the lo level caught a disturbed window), so
+    such attempts stay disclosed in ``attempts`` but are left out of both
+    numbers whenever any attempt at or below 1.0 exists."""
+    plausible = [a for a in attempts if a["efficiency"] <= 1.0] or attempts
+    ranked = sorted(plausible, key=lambda a: a["efficiency"])
+    return ranked[len(ranked) // 2], ranked[-1]["efficiency"]
+
+
 def scaling_block(n_docs: int, cpus_hi: int) -> dict:
     """N vs 4N parallelism on identical input.
 
@@ -509,7 +524,8 @@ def scaling_block(n_docs: int, cpus_hi: int) -> dict:
     # ~10%), so min-of-reps per level is the closest estimate of the
     # undisturbed time.  The hi level is cheap, so it gets more reps
     # (more chances at one clean scheduling window), and a pairing whose
-    # efficiency lands below the retry bar is re-measured up to 3 times
+    # efficiency lands below the retry bar or above 1.0 (superlinear:
+    # impossible, so a disturbed lo level) is re-measured up to 3 times
     # with EVERY attempt reported — the criterion is the engine's
     # scaling, not one noisy window.  Quiet-box reference measurements
     # for this pairing: 0.96-0.98 (BENCH.md).
@@ -528,22 +544,24 @@ def scaling_block(n_docs: int, cpus_hi: int) -> dict:
             "speedup": round(min_lo / min_hi, 3),
             "efficiency": round(efficiency, 3),
         }
+        if attempt["efficiency"] > 1.0:
+            attempt["superlinear"] = True
         attempts.append(attempt)
-        if attempt["efficiency"] >= 0.85:
+        if 0.85 <= attempt["efficiency"] <= 1.0:
             break
-    # headline = the MEDIAN attempt by efficiency (upper middle for even
-    # counts — disturbances are one-sided, so of two readings the higher is
-    # closer to the undisturbed engine), never best-of-N; the selection rule
-    # rides in the record itself and every attempt is disclosed
-    ranked = sorted(attempts, key=lambda a: a["efficiency"])
-    headline = ranked[len(ranked) // 2]
+    # the selection rule rides in the record itself and every attempt is
+    # disclosed
+    headline, best = scaling_headline(attempts)
     return {
         "cpus_lo": cpus_lo,
         "cpus_hi": cpus_hi,
         "n_docs": n_docs,
         **headline,
-        "selection": "median-of-attempts (upper middle); min-of-reps per level",
-        "best_efficiency": ranked[-1]["efficiency"],
+        "selection": (
+            "median-of-attempts (upper middle) at efficiency <= 1.0; "
+            "min-of-reps per level"
+        ),
+        "best_efficiency": best,
         "attempts": attempts,
         "host_control": host_control(cpus_lo, cpus_hi),
     }
@@ -773,17 +791,11 @@ def main() -> None:
         # from its predecessors' leftovers (measured: with ~70 queries
         # accumulating blocks in one 8g driver, late checkpoint-heavy
         # queries ran 2x slower off spilled blocks).  Outside the timed
-        # window by construction; the pre-sweep caches stay.
-        from pdf_craft_spark.queries.dedup import PROTECTED_RDD_IDS
+        # window by construction; the pre-sweep caches and the protected
+        # session artifacts stay.
+        from pdf_craft_spark.queries.dedup import release_unprotected
 
-        m = spark.sparkContext._jsc.getPersistentRDDs()
-        for k in list(m.keySet()):
-            # PROTECTED_RDD_IDS: the session-scoped near-dup pair index
-            # (lsh_pairs_cached) — a persisted artifact shared by the
-            # whole graph/cluster family; releasing it severs a
-            # lineage-cut checkpoint mid-sweep
-            if int(k) not in keep_rdd_ids and int(k) not in PROTECTED_RDD_IDS:
-                m.get(k).unpersist()
+        release_unprotected(spark, keep_rdd_ids)
 
     _apply(_KERNEL_CONF)  # extraction reps run under the kernel conf
     # the extraction headline needs enough docs that the 1%-of-docs
@@ -831,6 +843,7 @@ def main() -> None:
         os.makedirs(os.path.dirname(detail_path), exist_ok=True)
         with open(detail_path, "w") as f:
             json.dump(result, f, indent=1)
+            f.write("\n")
     except OSError:
         detail_path = None  # headline still prints
 

@@ -40,6 +40,7 @@ def main() -> None:
 
     sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
     from pdf_craft_spark.queries import QUERIES
+    from pdf_craft_spark.queries.dedup import release_unprotected
     from pdf_craft_spark.session import get_spark
 
     # mirror bench.py's query-class session conf so numbers line up
@@ -59,8 +60,6 @@ def main() -> None:
     keep = {int(k) for k in jsc.getPersistentRDDs().keySet()}
     out: dict[str, list[float]] = {}
     for name in args.queries:
-        from pdf_craft_spark.queries.dedup import PROTECTED_RDD_IDS
-
         secs = []
         for rep in range(args.reps):
             spark.sparkContext.setJobDescription(f"{name} rep{rep}")
@@ -83,10 +82,7 @@ def main() -> None:
         out[name] = secs
         print(f"# {name}: {secs}", file=sys.stderr)
         # bench.py's inter-query unpersist discipline
-        m = jsc.getPersistentRDDs()
-        for k in list(m.keySet()):
-            if int(k) not in keep and int(k) not in PROTECTED_RDD_IDS:
-                m.get(k).unpersist()
+        release_unprotected(spark, keep)
     print(json.dumps({"sf_dir": SF_DIR, "cpus": args.cpus, "sink": args.sink, "queries": out}))
     spark.stop()
 

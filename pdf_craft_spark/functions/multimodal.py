@@ -11,34 +11,19 @@ the external OCR model.  At training-data scale the engine treats media as
   ``mapInPandas``.  RGB PNG pixel work is REAL by default, pure stdlib
   (functions/png.py: zlib inflate/deflate + unfilter/filter) — decode,
   pixel statistics, nearest-neighbor thumbnails.  Exotic image layouts
-  fall back to PIL behind ``MEDIA_CODECS_AVAILABLE`` (not in this image)
-  and then to a deterministic stub that preserves the real schema, batch
-  shape, and partitioning.
+  fall back to the real IHDR dimensions and then to a deterministic stub
+  that preserves the real schema, batch shape, and partitioning.
 """
 
 from __future__ import annotations
 
 import hashlib
-import os
 from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-try:  # pragma: no cover - not present in this image
-    import PIL.Image  # noqa: F401
-
-    MEDIA_CODECS_AVAILABLE = True
-except Exception:  # ImportError; anything else means a broken install
-    MEDIA_CODECS_AVAILABLE = False
-
-# Real pixel decode is an explicit opt-in (set PDF_CRAFT_SPARK_REAL_DECODE=1
-# on a cluster with the codecs installed).  A merely-importable PIL must NOT
-# change results: the deterministic stub is the default everywhere so the
-# oracle check stays engine-portable.
-REAL_DECODE = os.environ.get("PDF_CRAFT_SPARK_REAL_DECODE", "") == "1"
 
 MEDIA_SCHEMA = T.StructType(
     [
@@ -124,7 +109,7 @@ def parse_png_dims(content: bytes) -> tuple[int, int] | None:
     """REAL dimension extraction from the PNG IHDR chunk — width/height
     are big-endian uint32 at byte offsets 16-23, directly after the
     8-byte signature and the IHDR length+type; no codec involved (the
-    same parse PIL's PngImagePlugin does for ``.size``)."""
+    same header parse an image library does for its size)."""
     if len(content) >= 24 and content[:8] == _PNG_SIG and content[12:16] == b"IHDR":
         import struct
 
@@ -136,17 +121,7 @@ def parse_png_dims(content: bytes) -> tuple[int, int] | None:
 def _probe_dims(content: bytes, mime: str) -> tuple[int, int]:
     """The dimension ladder BELOW the stdlib pixel decode — for callers
     that already know decode_png_rgb returned None and must not pay for
-    a second inflate attempt: PIL (opt-in) → IHDR parse → stub."""
-    if REAL_DECODE and MEDIA_CODECS_AVAILABLE and mime.startswith("image/"):
-        try:  # pragma: no cover - codecs absent in this image
-            import io
-
-            import PIL.Image
-
-            with PIL.Image.open(io.BytesIO(content)) as img:
-                return img.size
-        except Exception:
-            pass
+    a second inflate attempt: IHDR parse → stub."""
     dims = parse_png_dims(content) if mime == "image/png" else None
     if dims is not None:
         return dims
@@ -161,9 +136,8 @@ def _decode_bytes(content: bytes, mime: str) -> tuple[int, int, int, list[float]
     (functions/png.py: zlib inflate + unfilter) — dims and features are
     then actual pixel statistics, by default, with no optional codec.
     PNGs the stdlib decoder can't handle (exotic layouts) fall back to
-    PIL when ``PDF_CRAFT_SPARK_REAL_DECODE=1`` and a codec is present,
-    then to REAL IHDR dims (parse_png_dims) + stub features, then to the
-    full stub — an importable PIL alone never changes behavior."""
+    REAL IHDR dims (parse_png_dims) + stub features, then to the full
+    stub."""
     if mime == "image/png":
         from pdf_craft_spark.functions.png import decode_png_rgb, rgb_features
 
@@ -172,26 +146,13 @@ def _decode_bytes(content: bytes, mime: str) -> tuple[int, int, int, list[float]
             hgt, wdt = arr.shape[:2]
             return wdt, hgt, 1, rgb_features(arr)
     dims = parse_png_dims(content) if mime == "image/png" else None
-    if REAL_DECODE and MEDIA_CODECS_AVAILABLE and mime.startswith("image/"):
-        try:  # pragma: no cover - codecs absent in this image
-            import io
-
-            import PIL.Image
-
-            with PIL.Image.open(io.BytesIO(content)) as img:
-                width, height = img.size
-                n_frames = int(getattr(img, "n_frames", 1))
-            _, _, _, feature = _decode_stub(content, mime)
-            return width, height, n_frames, feature
-        except Exception:
-            pass  # undecodable even for PIL → IHDR dims, then stub
     if dims is not None:
         _, _, _, feature = _decode_stub(content, mime)
         return dims[0], dims[1], 1, feature
     return _decode_stub(content, mime)
 
 
-def extract_media_features(media: DataFrame, batch_hint: int = 64) -> DataFrame:
+def extract_media_features(media: DataFrame) -> DataFrame:
     """Arrow-batched decode/feature kernel over mapInPandas.
 
     Partitioning note: media rows are independent → narrow op, no shuffle;
@@ -340,8 +301,7 @@ def resize_media(media: DataFrame, max_dim: int = THUMB_MAX_DIM) -> DataFrame:
     inflate + unfilter), nearest-neighbor resample via floor-division
     index maps, re-encode as a valid-zlib PNG (functions/png.py) — the
     oracle rebuilds the identical bytes in SQL.  Exotic layouts fall back
-    to PIL (PDF_CRAFT_SPARK_REAL_DECODE=1 + codec present) and then to
-    the IHDR-dims container stub.  Narrow op: rows independent, no
+    to the IHDR-dims container stub.  Narrow op: rows independent, no
     shuffle."""
     from pdf_craft_spark.shipping import ensure_package_shipped
 
@@ -368,23 +328,10 @@ def resize_media(media: DataFrame, max_dim: int = THUMB_MAX_DIM) -> DataFrame:
                     continue
                 # the stdlib decode just failed (or non-PNG mime) — probe
                 # dims WITHOUT re-running it (same ladder _decode_bytes
-                # uses below the stdlib step: PIL → IHDR → stub)
+                # uses below the stdlib step: IHDR → stub)
                 w, hgt = _probe_dims(content, mime)
                 tw, th = thumb_dims(w, hgt, max_dim)
-                if REAL_DECODE and MEDIA_CODECS_AVAILABLE:
-                    try:  # pragma: no cover - codecs absent in this image
-                        import io
-
-                        import PIL.Image
-
-                        with PIL.Image.open(io.BytesIO(content)) as img:
-                            buf = io.BytesIO()
-                            img.resize((tw, th)).save(buf, format="PNG")
-                            thumb = buf.getvalue()
-                    except Exception:
-                        thumb = _stub_thumb_png(content.hex().upper(), tw, th)
-                else:
-                    thumb = _stub_thumb_png(content.hex().upper(), tw, th)
+                thumb = _stub_thumb_png(content.hex().upper(), tw, th)
                 rows.append((f"{ref}#thumb{max_dim}", "image/png", thumb))
             yield pd.DataFrame(rows, columns=["media_ref", "mime", "content"])
 

@@ -1,4 +1,4 @@
-"""Pure-stdlib PNG pixel codec (zlib + numpy, no PIL/ffmpeg).
+"""Pure-stdlib PNG pixel codec (zlib + numpy, no imaging library or ffmpeg).
 
 The reference stores page images as content-addressed PNGs
 (/root/reference/pdf_craft/common/asset.py:16-34) and decodes them inside

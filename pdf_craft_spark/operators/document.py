@@ -104,7 +104,6 @@ def prepare_pages(pages: list[RawPage], text_ops: bool = True) -> list[RawPage]:
 def analyse_document(
     pages: list[RawPage],
     toc_assumed: bool = True,
-    prepared: bool = False,
     stage1_done: bool = False,
     boilerplate_strip: bool = False,
 ):
@@ -114,13 +113,14 @@ def analyse_document(
     the same generated chapter files (markdown/render/render.py:15,
     epub/render.py:43).
 
+    Pages go through prepare_pages whether or not they were prepared
+    before: it is idempotent, so already-prepared pages come out unchanged.
     ``stage1_done``: F1/F3/F4 already applied (JVM stage 1) — skip the
     Python re-run, keep F2 + renumbering.
     ``boilerplate_strip``: enable the §2.12 frequency-based repeated-line
     demotion (off by default: the reference's model does this upstream,
     so parity mode leaves repeated lines alone)."""
-    if not prepared:
-        pages = prepare_pages(pages, text_ops=not stage1_done)
+    pages = prepare_pages(pages, text_ops=not stage1_done)
     if boilerplate_strip:
         from pdf_craft_spark.operators.boilerplate import strip_boilerplate
 
@@ -208,7 +208,6 @@ def analyse_document(
 def extract_document(
     pages: list[RawPage],
     toc_assumed: bool = True,
-    prepared: bool = False,
     stage1_done: bool = False,
     boilerplate_strip: bool = False,
 ) -> tuple[str, list[OutSpan]]:
@@ -217,7 +216,6 @@ def extract_document(
     chapters, refs_by_key, _ = analyse_document(
         pages,
         toc_assumed=toc_assumed,
-        prepared=prepared,
         stage1_done=stage1_done,
         boilerplate_strip=boilerplate_strip,
     )
@@ -227,7 +225,6 @@ def extract_document(
 def extract_epub_records(
     pages: list[RawPage],
     toc_assumed: bool = True,
-    prepared: bool = False,
     stage1_done: bool = False,
 ) -> tuple[list[tuple], list]:
     """S9 sink: analyse_document + EPUB record conversion + TOC collection.
@@ -238,7 +235,7 @@ def extract_epub_records(
     )
 
     chapters, refs_by_key, toc_items = analyse_document(
-        pages, toc_assumed=toc_assumed, prepared=prepared, stage1_done=stage1_done
+        pages, toc_assumed=toc_assumed, stage1_done=stage1_done
     )
     return (
         document_epub_records(chapters, refs_by_key),

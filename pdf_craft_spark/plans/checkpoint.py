@@ -26,8 +26,6 @@ from pyspark.sql import functions as F
 from pdf_craft_spark.plans.pipeline import extract_spans_df
 from pdf_craft_spark.plans.sinks import ParquetBucketSink
 
-N_BUCKETS = 16
-
 
 def append_uncommitted(docs: DataFrame, sink, run_id: str) -> None:
     """The one resume path, shared by batch resume (run_with_resume) and
@@ -59,7 +57,7 @@ def run_with_resume(
     table (plans/sinks.py documents the 1:1 mapping).
     """
     if sink is None:
-        sink = ParquetBucketSink(out_dir, N_BUCKETS)
+        sink = ParquetBucketSink(out_dir)
     t0 = time.time()
     append_uncommitted(docs, sink, run_id)
     wall = time.time() - t0

@@ -32,9 +32,14 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+# the one bucket count of every spans dataset: a dataset written with two
+# counts would split one document's lineage across incompatible buckets
+N_BUCKETS = 16
 
-def bucket_expr(n_buckets: int):
-    """Engine-agnostic bucket id: pmod(int(md5(doc_id)[:6] base 16), n).
+
+def bucket_expr():
+    """Engine-agnostic bucket id: pmod(int(md5(doc_id)[:6] base 16), n)
+    with n = N_BUCKETS.
 
     Content-derived and reproducible in ANY engine (DuckDB recomputes it
     as ``CAST('0x' || substr(md5(doc_id),1,6) AS BIGINT) % n``), which
@@ -46,7 +51,7 @@ def bucket_expr(n_buckets: int):
     bucket)."""
     return F.pmod(
         F.conv(F.substring(F.md5(F.col("doc_id")), 1, 6), 16, 10).cast("long"),
-        F.lit(n_buckets),
+        F.lit(N_BUCKETS),
     )
 
 
@@ -58,9 +63,8 @@ class ParquetBucketSink:
     partition transform, so the layout carries over 1:1.
     """
 
-    def __init__(self, out_dir: str, n_buckets: int = 16):
+    def __init__(self, out_dir: str):
         self.out_dir = out_dir
-        self.n_buckets = n_buckets
 
     # -- paths -----------------------------------------------------------
     def _spans_path(self) -> str:
@@ -100,7 +104,7 @@ class ParquetBucketSink:
         if dedup-on-write were ever needed:
         ``MERGE INTO spans t USING delta s ON t.doc_id = s.doc_id AND
         t.offset = s.offset WHEN NOT MATCHED THEN INSERT *``."""
-        flat = flat.withColumn("bucket", bucket_expr(self.n_buckets))
+        flat = flat.withColumn("bucket", bucket_expr())
         flat.write.mode("append").partitionBy("bucket").parquet(self._spans_path())
 
     def read_spans(self, spark: SparkSession) -> DataFrame:
@@ -141,10 +145,9 @@ class IcebergSink:
     them) — constructor probes the catalog and fails with instructions.
     """
 
-    def __init__(self, spark: SparkSession, table: str, n_buckets: int = 16):
+    def __init__(self, spark: SparkSession, table: str):
         self.table = table
         self.manifest_table = table + "_manifest"
-        self.n_buckets = n_buckets
         try:
             spark.sql(f"SELECT 1 FROM {table} LIMIT 0")
             self._exists = True
@@ -161,7 +164,7 @@ class IcebergSink:
         # an explicit bucket column (identical hash to the parquet sink)
         # keeps the manifest's per-bucket lineage sink-agnostic; the table
         # is ALSO physically partitioned by it
-        return flat.withColumn("bucket", bucket_expr(self.n_buckets))
+        return flat.withColumn("bucket", bucket_expr())
 
     def committed_doc_ids(self, spark: SparkSession) -> DataFrame | None:
         if not self._exists:

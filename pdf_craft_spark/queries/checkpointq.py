@@ -16,7 +16,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pdf_craft_spark.plans.checkpoint import N_BUCKETS
+from pdf_craft_spark.plans.sinks import N_BUCKETS
 from pdf_craft_spark.queries.pipelineq import _GOLDEN_DIR
 
 N_FIRST = 6

@@ -543,6 +543,17 @@ def session_artifact(spark: SparkSession, name: str, build) -> DataFrame:
     return _ARTIFACTS[key]
 
 
+def release_unprotected(spark: SparkSession, keep: set[int]) -> None:
+    """Unpersist every persisted RDD outside ``keep`` ∪ PROTECTED_RDD_IDS —
+    the between-queries release of a sweep harness.  Session artifacts are
+    lineage-cut checkpoints: releasing one would make its next consumer
+    fail with CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND."""
+    persisted = spark.sparkContext._jsc.getPersistentRDDs()
+    for k in list(persisted.keySet()):
+        if int(k) not in keep and int(k) not in PROTECTED_RDD_IDS:
+            persisted.get(k).unpersist()
+
+
 def lsh_pairs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     return session_artifact(
         spark, f"lsh_pairs:{sf_dir}", lambda: dedup_minhash_lsh(spark, sf_dir)

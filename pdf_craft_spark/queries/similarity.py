@@ -375,14 +375,13 @@ KMEANS_ITERS = 8  # the sample is ≤2048×64 doubles — extra Lloyd passes are
 # gets the large fraction it genuinely needs while clustered embeddings
 # (the realistic case) automatically get a small one (measured ~0.1,
 # tests/test_ann_clustered.py), instead of every corpus paying the
-# isotropic worst case.  Set the env var (or the module attr, tests) to a
-# float to pin a fixed fraction.
-_NPROBE_ENV = os.environ.get("PDF_CRAFT_SPARK_NPROBE_FRAC", "")
-NPROBE_FRAC: float | None = float(_NPROBE_ENV) if _NPROBE_ENV else None
+# isotropic worst case.  Setting the module attr to a float (tests do)
+# pins a fixed fraction.
+NPROBE_FRAC: float | None = None
 # sample-recall target for the adaptive calibration: margin over the
 # shipped ≥0.9 recall gate (tests/test_ann_recall.py) to absorb
 # sample-vs-corpus estimation error
-IVF_RECALL_TARGET = float(os.environ.get("PDF_CRAFT_SPARK_IVF_RECALL_TARGET", "0.92"))
+IVF_RECALL_TARGET = 0.92
 CAL_QUERIES = 256  # calibration query rows (first sample rows)
 
 # per-directory calibration report (k, nprobe, fraction, sample recall) —

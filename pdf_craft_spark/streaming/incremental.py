@@ -25,7 +25,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from pdf_craft_spark.plans.checkpoint import N_BUCKETS, append_uncommitted
+from pdf_craft_spark.plans.checkpoint import append_uncommitted
 from pdf_craft_spark.plans.sinks import ParquetBucketSink
 from pdf_craft_spark.schemas import INTERLEAVED_DOC_SCHEMA
 
@@ -37,7 +37,7 @@ def make_batch_processor(out_dir: str) -> Callable[[DataFrame, int], None]:
     # write through the SAME sink as batch resume: one bucketing scheme
     # (sinks.bucket_expr) per dataset, so external lineage recompute
     # and mixed batch/stream output dirs stay consistent
-    sink = ParquetBucketSink(out_dir, N_BUCKETS)
+    sink = ParquetBucketSink(out_dir)
 
     def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
         append_uncommitted(batch_df, sink, f"epoch_{epoch_id}")

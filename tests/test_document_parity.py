@@ -73,7 +73,7 @@ def _our_markdown(doc_id: int, toc_assumed: bool = True) -> str:
     from pdf_craft_spark.operators.document import extract_document
 
     pages = _prepared_pages(doc_id)
-    md, _ = extract_document(pages, prepared=True, toc_assumed=toc_assumed)
+    md, _ = extract_document(pages, toc_assumed=toc_assumed)
     return md  # the S8 sink string itself — byte-compared, no fixups
 
 

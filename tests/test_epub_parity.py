@@ -165,7 +165,7 @@ def _our_records(doc_id: int):
     from pdf_craft_spark.operators.document import extract_epub_records
 
     pages = _prepared_pages(doc_id)
-    return extract_epub_records(pages, prepared=True)
+    return extract_epub_records(pages)
 
 
 def _flatten_our_rows(rows) -> dict:

@@ -8,7 +8,11 @@ from __future__ import annotations
 import hashlib
 
 from pdf_craft_spark.corpus import generate_document, pages_to_spans, parse_raw_spans
-from pdf_craft_spark.operators.document import extract_document
+from pdf_craft_spark.operators.document import (
+    extract_document,
+    extract_epub_records,
+    prepare_pages,
+)
 
 # updated 2026-08-16 (round 3): corpus v3 — PII fragments in prose and the
 # four adversarial docs 24-27 (520-page book / CJK-dense / pathological
@@ -49,3 +53,22 @@ def test_span_invariants():
             )
             if s.kind == "image":
                 assert s.media_ref and len(s.media_ref) == 64
+
+
+def test_kernel_output_is_the_same_for_raw_and_prepared_pages():
+    """prepare_pages is idempotent, so the kernel runs it on every input:
+    pages already passed through it give every sink exactly the output of
+    their raw originals.  Runs over the golden corpus (golden/n28: docs
+    0-27)."""
+    changed = 0
+    for doc_id in range(28):
+        raw = parse_raw_spans(pages_to_spans(generate_document(doc_id)))
+        prepared = prepare_pages(raw)
+        assert prepare_pages(prepared) == prepared
+        changed += prepared != raw
+        for toc_assumed in (True, False):
+            assert extract_document(prepared, toc_assumed=toc_assumed) == (
+                extract_document(raw, toc_assumed=toc_assumed)
+            ), (doc_id, toc_assumed)
+        assert extract_epub_records(prepared) == extract_epub_records(raw), doc_id
+    assert changed  # the corpus does exercise normalize/clamp/filter

@@ -85,8 +85,8 @@ def test_media_metadata_jvm_png_dims(spark):
 
 
 def test_real_decode_path_uses_ihdr_when_codec_absent():
-    """Even with PDF_CRAFT_SPARK_REAL_DECODE unset and no PIL, a PNG's
-    dimensions are the real ones (kernel upgraded from stub to byte parse)."""
+    """With no imaging codec at all, a PNG's dimensions are the real ones
+    (kernel upgraded from stub to byte parse)."""
     png = make_png(123, 77)
     w, h, nf, _ = _decode_bytes(png, "image/png")
     assert (w, h, nf) == (123, 77, 1)

@@ -883,3 +883,41 @@ def test_table_reads_go_through_the_source_seam():
         if "read.parquet(os.path.join(" in line
     ]
     assert not bypass, f"read tables via sources.load_table: {bypass}"
+
+
+def test_env_knobs_are_allowlisted():
+    """The package reads exactly these env vars; every other decision is a
+    module constant, so no unset knob multiplies the configurations the
+    tests would have to cover."""
+    import ast
+    import pathlib
+
+    def env_name(node):
+        # os.environ.get("X", ...), os.getenv("X", ...), os.environ["X"]
+        if isinstance(node, ast.Call) and node.args:
+            f = node.func
+            if isinstance(f, ast.Attribute) and (
+                f.attr == "getenv"
+                or (f.attr == "get" and isinstance(f.value, ast.Attribute)
+                    and f.value.attr == "environ")
+            ):
+                return node.args[0]
+        if isinstance(node, ast.Subscript) and isinstance(node.value, ast.Attribute):
+            if node.value.attr == "environ":
+                return node.slice
+        return None
+
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "pdf_craft_spark"
+    read = set()
+    for path in sorted(pkg.rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text())):
+            arg = env_name(node)
+            if arg is not None:
+                assert isinstance(arg, ast.Constant), f"{path}:{node.lineno}"
+                read.add(arg.value)
+    assert read == {
+        "SPARK_GRAFT_CPUS",
+        "SPARK_GRAFT_DRIVER_MEM",
+        "SPARK_GRAFT_ORACLE_SF_DIR",
+        "PDF_CRAFT_SPARK_ASSERT_UNIQUE_DOCS",
+    }

@@ -97,14 +97,15 @@ def test_ivf_assignment_artifact_shared_by_family(spark):
 
 def test_media_table_survives_sweep_release(spark, tmp_path):
     """A sweep harness releases every persisted RDD outside
-    PROTECTED_RDD_IDS between queries (bench.py, bench_extra.py); the
-    shared media table is a lineage-cut checkpoint, so it must be a
-    protected session artifact or the next media query cannot read it."""
+    PROTECTED_RDD_IDS between queries (dedup.release_unprotected, called
+    by bench.py and bench_extra.py); the shared media table is a
+    lineage-cut checkpoint, so it must be a protected session artifact or
+    the next media query cannot read it."""
     import os
     import shutil
 
     from pdf_craft_spark.queries import QUERIES
-    from pdf_craft_spark.queries.dedup import PROTECTED_RDD_IDS
+    from pdf_craft_spark.queries.dedup import release_unprotected
 
     # a private sf_dir so the media table is built inside this test
     shutil.copy(os.path.join(SF_DIR, "documents.parquet"), tmp_path)
@@ -116,9 +117,6 @@ def test_media_table_survives_sweep_release(spark, tmp_path):
     n_images = sum(r.mime.startswith("image/") for r in meta)
     assert n_images > 0
 
-    m = jsc.getPersistentRDDs()
-    for k in list(m.keySet()):
-        if int(k) not in before and int(k) not in PROTECTED_RDD_IDS:
-            m.get(k).unpersist()
+    release_unprotected(spark, before)
 
     assert QUERIES["media_dhash_index"](spark, sf_dir).count() == n_images
