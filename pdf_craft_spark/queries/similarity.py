@@ -25,7 +25,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from pdf_craft_spark.sources import load_table
+from pdf_craft_spark.sources import load_table, table_path
 
 N_QUERIES = 10
 TOP_K = 5
@@ -431,7 +431,7 @@ def _fit_sample(sf_dir: str) -> tuple[int, "object"]:
         return n, mat
     import pyarrow.dataset as ds
 
-    dset = ds.dataset(os.path.join(sf_dir, "embeddings.parquet"))
+    dset = ds.dataset(table_path(sf_dir, "embeddings"))
     n = dset.count_rows()  # row-group metadata only
     stride = max(1, n // SAMPLE_CAP)
     ids: list = []

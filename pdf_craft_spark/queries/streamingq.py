@@ -1,7 +1,7 @@
 """Driver-visible streaming queries — REAL Structured Streaming jobs
-(file source, multiple micro-batches, memory sink) whose results must
-hash-match a DuckDB batch truth, so streaming semantics are oracle rows,
-not just pytest claims:
+(file source, multiple micro-batches, memory or foreachBatch sink) whose
+results must hash-match a DuckDB batch truth, so streaming semantics are
+oracle rows, not just pytest claims:
 
 - ``streaming_doc_totals``: the stateful per-doc accumulator
   (applyInPandasWithState) across two micro-batches; final state ≡ the
@@ -9,20 +9,106 @@ not just pytest claims:
 - ``streaming_windowed_metrics``: watermarked tumbling windows across
   three batches; the emitted set ≡ an oracle that spells out the
   tolerate/drop watermark literals.
+- ``streaming_dedup_exact``: stateful ``dropDuplicates`` suppresses a
+  hash re-delivered in a later batch.
+- ``streaming_sessionize``: session windows that span a batch boundary
+  merge in the state store.
+- ``streaming_stream_join``: watermarked stream-stream interval join with
+  a dropped late click set.
+- ``streaming_static_enrich``: a fact stream joined to a static dimension.
+- ``streaming_upsert_merge``: a CDC feed MERGEd latest-wins by
+  ``foreachBatch``.
+- ``streaming_hll_merge``: HLL registers merged per batch ≡ the one-shot
+  batch sketch.
+- ``streaming_checkpoint_restart``: exactly-once across a query restart
+  from the same checkpoint.
 
-Event feeds are derived deterministically from the documents table."""
+All but the restart query run through ``_run_stream``, which owns the
+lifecycle: each source is a parquet file-source stream read one file per
+trigger; round *i* writes ONE file per source and is followed by
+``processAllAvailable``, so every round is its own micro-batch; the result
+is collected (detached) before the query's memory-sink view, the
+checkpoint and the input files are removed.  The restart query spells its
+lifecycle out because stopping and restarting the query object is what it
+tests.
+
+Event feeds are derived deterministically from the corpus tables."""
 
 from __future__ import annotations
 
+import contextlib
 import os
 import shutil
 import tempfile
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pdf_craft_spark.sources import load_table
+
+_EVENT_DDL = "doc_id string, kind string, n_chars long, event_time timestamp"
+
+
+def _run_stream(spark: SparkSession, schemas, rounds, start, result) -> DataFrame:
+    """Run one file-fed streaming query to completion and return its
+    result detached from the sink.
+
+    ``schemas`` maps each source name to its DDL; each source is its own
+    directory, read as a parquet stream one file per trigger.  ``rounds``
+    is a list of ``{source: DataFrame}``: round *i* writes each frame as
+    one file ``b{i}`` into its source, then waits for the query to drain
+    it.  ``start(streams, write)`` starts the query once round 0 is on
+    disk, where ``write(df)`` is ``df``'s stream writer with the
+    checkpoint set.  ``result(query)`` builds the final frame after the
+    query stops; it is collected and re-created before the memory-sink
+    view (named after the query), the checkpoint and the inputs go."""
+    work = tempfile.mkdtemp(prefix="stream_")
+    q = None
+
+    def read(src, ddl):
+        path = os.path.join(work, src)
+        os.makedirs(path)
+        return (
+            spark.readStream.schema(ddl)
+            .option("maxFilesPerTrigger", "1")
+            .option("recursiveFileLookup", "true")
+            .parquet(path)
+        )
+
+    def write(df):
+        return df.writeStream.option("checkpointLocation", os.path.join(work, "ckpt"))
+
+    try:
+        streams = {src: read(src, ddl) for src, ddl in schemas.items()}
+        for i, feeds in enumerate(rounds):
+            for src, df in feeds.items():
+                df.coalesce(1).write.parquet(os.path.join(work, src, f"b{i}"))
+            if q is None:
+                q = start(streams, write)
+            q.processAllAvailable()
+        q.stop()
+        final = result(q)
+        return spark.createDataFrame(final.collect(), final.schema)
+    finally:
+        if q is not None:
+            q.stop()
+            if q.name:
+                spark.catalog.dropTempView(q.name)
+        shutil.rmtree(work, ignore_errors=True)
+
+
+@contextlib.contextmanager
+def _utc(spark: SparkSession):
+    """Pin the session time zone to UTC for the block and restore it after.
+    Build a pinned query's feeds inside the block: Spark fixes the zone of
+    a timestamp expression when the DataFrame is built."""
+    before = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", before)
+
 
 def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
@@ -46,52 +132,23 @@ def streaming_doc_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pdf_craft_spark.streaming.eventtime import running_doc_totals
 
     events = _events(spark, sf_dir)
-    work = tempfile.mkdtemp(prefix="stream_totals_")
-    input_dir = os.path.join(work, "in")
-    name = f"totals_{uuid.uuid4().hex[:10]}"
-    try:
-        # two files == two micro-batches (maxFilesPerTrigger=1): the second
-        # batch must ACCUMULATE onto state built by the first
-        events.filter(F.col("i") % 2 == 0).drop("i").coalesce(1).write.parquet(
-            os.path.join(input_dir, "b0")
-        )
-        events.filter(F.col("i") % 2 == 1).drop("i").coalesce(1).write.parquet(
-            os.path.join(input_dir, "b1")
-        )
-        stream = (
-            spark.readStream.schema(
-                "doc_id string, kind string, n_chars long, event_time timestamp"
-            )
-            .option("maxFilesPerTrigger", "1")
-            .option("recursiveFileLookup", "true")
-            .parquet(input_dir)
-        )
-        q = (
-            running_doc_totals(stream)
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+    return _run_stream(
+        spark,
+        {"in": _EVENT_DDL},
+        # two rounds == two micro-batches: the second batch must ACCUMULATE
+        # onto state built by the first
+        [{"in": events.filter(F.col("i") % 2 == k).drop("i")} for k in (0, 1)],
+        lambda s, write: write(running_doc_totals(s["in"]))
+        .format("memory")
+        .queryName("stream_doc_totals")
+        .outputMode("update")
+        .start(),
         # latest update per doc == the final state == the batch aggregate
-        final = (
-            spark.table(name)
-            .groupBy("doc_id")
-            .agg(
-                F.max("n_spans").alias("n_events"),
-                F.max("n_chars").alias("n_chars"),
-            )
-            .orderBy("doc_id")
-        )
-        rows = final.collect()  # materialize before the tmp dir vanishes
-        return spark.createDataFrame(rows, final.schema)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+        lambda q: spark.table(q.name)
+        .groupBy("doc_id")
+        .agg(F.max("n_spans").alias("n_events"), F.max("n_chars").alias("n_chars"))
+        .orderBy("doc_id"),
+    )
 
 
 # the batch truth the streaming state must equal
@@ -137,83 +194,58 @@ def streaming_windowed_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     time_bucket never produces."""
     from pdf_craft_spark.streaming.eventtime import windowed_extraction_metrics
 
-    tz_before = spark.conf.get("spark.sql.session.timeZone")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    try:
-        return _windowed_metrics_utc(spark, sf_dir, windowed_extraction_metrics)
-    finally:
-        spark.conf.set("spark.sql.session.timeZone", tz_before)
-
-
-def _windowed_metrics_utc(spark, sf_dir, windowed_extraction_metrics) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents").select(
-        F.col("doc_id").cast("string").alias("doc_id"),
-        F.col("doc_id").alias("id_num"),
-        F.length("text").alias("n_chars"),
-        (F.col("doc_id") % 30).cast("int").alias("m"),
-    )
-    base = F.to_timestamp(F.lit("2026-01-01 12:00:00"))
-    kind = F.lit("text").alias("kind")
-
-    def ev(df, t):
-        return df.select("doc_id", kind, "n_chars", t.alias("event_time"))
-
-    b0 = ev(docs, F.timestamp_add("MINUTE", F.col("m"), base))
-    late_ok = ev(
-        docs.filter(F.col("id_num") % 5 == 0), F.timestamp_add("SECOND", F.lit(570), base)
-    )
-    late_drop = ev(
-        docs.filter(F.col("id_num") % 11 == 0), F.timestamp_add("MINUTE", F.lit(3), base)
-    )
-    fresh = ev(
-        docs.filter(F.col("id_num") % 3 == 0),
-        F.timestamp_add("MINUTE", F.col("m") % 5 + 50, base),
-    )
-
-    work = tempfile.mkdtemp(prefix="stream_win_")
-    input_dir = os.path.join(work, "in")
-    name = f"winm_{uuid.uuid4().hex[:10]}"
-    try:
-        b0.coalesce(1).write.parquet(os.path.join(input_dir, "b0"))
-        stream = (
-            spark.readStream.schema(
-                "doc_id string, kind string, n_chars long, event_time timestamp"
-            )
-            .option("maxFilesPerTrigger", "1")
-            .option("recursiveFileLookup", "true")
-            .parquet(input_dir)
+    with _utc(spark):
+        docs = load_table(spark, sf_dir, "documents").select(
+            F.col("doc_id").cast("string").alias("doc_id"),
+            F.col("doc_id").alias("id_num"),
+            F.length("text").alias("n_chars"),
+            (F.col("doc_id") % 30).cast("int").alias("m"),
         )
-        q = (
-            windowed_extraction_metrics(stream, "10 minutes", "20 minutes")
-            .writeStream.format("memory")
-            .queryName(name)
+        base = F.to_timestamp(F.lit("2026-01-01 12:00:00"))
+        kind = F.lit("text").alias("kind")
+
+        def ev(df, t):
+            return df.select("doc_id", kind, "n_chars", t.alias("event_time"))
+
+        b0 = ev(docs, F.timestamp_add("MINUTE", F.col("m"), base))
+        late_ok = ev(
+            docs.filter(F.col("id_num") % 5 == 0),
+            F.timestamp_add("SECOND", F.lit(570), base),
+        )
+        late_drop = ev(
+            docs.filter(F.col("id_num") % 11 == 0),
+            F.timestamp_add("MINUTE", F.lit(3), base),
+        )
+        fresh = ev(
+            docs.filter(F.col("id_num") % 3 == 0),
+            F.timestamp_add("MINUTE", F.col("m") % 5 + 50, base),
+        )
+        return _run_stream(
+            spark,
+            {"in": _EVENT_DDL},
+            [{"in": b0}, {"in": late_ok.unionByName(fresh)}, {"in": late_drop}],
+            lambda s, write: write(
+                windowed_extraction_metrics(s["in"], "10 minutes", "20 minutes")
+            )
+            .format("memory")
+            .queryName("stream_windowed_metrics")
             .outputMode("append")
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-            late_ok.unionByName(fresh).coalesce(1).write.parquet(
-                os.path.join(input_dir, "b1")
+            .start(),
+            # string-format the window bounds so session-timezone handling
+            # cancels on the round trip (to_timestamp -> date_format), and
+            # drop the HLL estimate (not DuckDB-reproducible; checked in
+            # pytest)
+            lambda q: spark.table(q.name)
+            .select(
+                F.date_format("window_start", "yyyy-MM-dd HH:mm:ss").alias(
+                    "window_start"
+                ),
+                F.date_format("window_end", "yyyy-MM-dd HH:mm:ss").alias("window_end"),
+                "n_spans",
+                "n_chars",
             )
-            q.processAllAvailable()
-            late_drop.coalesce(1).write.parquet(os.path.join(input_dir, "b2"))
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        # string-format the window bounds so session-timezone handling
-        # cancels on the round trip (to_timestamp -> date_format), and drop
-        # the HLL estimate (not DuckDB-reproducible; checked in pytest)
-        final = spark.table(name).select(
-            F.date_format("window_start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
-            F.date_format("window_end", "yyyy-MM-dd HH:mm:ss").alias("window_end"),
-            "n_spans",
-            "n_chars",
-        ).orderBy("window_start")
-        rows = final.collect()
-        return spark.createDataFrame(rows, final.schema)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+            .orderBy("window_start"),
+        )
 
 
 STREAMING_WINDOWED_METRICS_SQL = """
@@ -322,47 +354,26 @@ def streaming_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     intra = docs.filter(hash_pct() >= _INTRA_PCT).select(
         norm.alias("content_hash"), F.lit(1).alias("batch")
     )
-    work = tempfile.mkdtemp(prefix="stream_dedup_")
-    input_dir = os.path.join(work, "in")
-    name = f"dedup_{uuid.uuid4().hex[:10]}"
-    try:
-        rows.filter(F.col("batch") == 0).coalesce(1).write.parquet(
-            os.path.join(input_dir, "b0")
-        )
-        (
-            rows.filter(F.col("batch") == 1)
-            .unionByName(redeliver)
-            .unionByName(intra)
-            .coalesce(1)
-            .write.parquet(os.path.join(input_dir, "b1"))
-        )
-        stream = (
-            spark.readStream.schema("content_hash string, batch int")
-            .option("maxFilesPerTrigger", "1")
-            .option("recursiveFileLookup", "true")
-            .parquet(input_dir)
-        )
-        q = (
-            stream.dropDuplicates(["content_hash"])
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        final = (
-            spark.table(name)
-            .select("content_hash", F.col("batch").alias("first_batch"))
-            .orderBy("content_hash")
-        )
-        out = final.collect()  # materialize before the tmp dir vanishes
-        return spark.createDataFrame(out, final.schema)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    return _run_stream(
+        spark,
+        {"in": "content_hash string, batch int"},
+        [
+            {"in": rows.filter(F.col("batch") == 0)},
+            {
+                "in": rows.filter(F.col("batch") == 1)
+                .unionByName(redeliver)
+                .unionByName(intra)
+            },
+        ],
+        lambda s, write: write(s["in"].dropDuplicates(["content_hash"]))
+        .format("memory")
+        .queryName("stream_dedup_exact")
+        .outputMode("append")
+        .start(),
+        lambda q: spark.table(q.name)
+        .select("content_hash", F.col("batch").alias("first_batch"))
+        .orderBy("content_hash"),
+    )
 
 
 _REDELIVER_PCT = 10
@@ -421,76 +432,42 @@ def streaming_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     island: Spark merges an event landing exactly on the previous
     session's end — pinned in tests/test_streaming_sessionize.py;
     session_end = last event + gap).  Session tz pinned UTC like the other event-time jobs."""
-    tz_before = spark.conf.get("spark.sql.session.timeZone")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    try:
-        return _sessionize_utc(spark, sf_dir)
-    finally:
-        spark.conf.set("spark.sql.session.timeZone", tz_before)
-
-
-SESSION_GAP = "1 day"
-SESSION_USER_MOD = 11
-
-
-def _sessionize_utc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = (
-        load_table(spark, sf_dir, "events")
-        .filter(F.col("user_id") % SESSION_USER_MOD == 0)
-        .select("user_id", F.col("ts").cast("timestamp").alias("ts"))
-    )
-    # 1-row stats collect (house-permitted): the two batch-cut instants
-    lo, hi = ev.agg(F.min("ts"), F.max("ts")).first()
-    span = hi - lo
-    c1 = lo + span / 3
-    c2 = lo + 2 * (span / 3)
-    flush = spark.range(1).select(
-        F.lit(-1).cast("long").alias("user_id"),
-        F.to_timestamp(F.lit("2030-01-01 00:00:00")).alias("ts"),
-    )
-    work = tempfile.mkdtemp(prefix="stream_sess_")
-    input_dir = os.path.join(work, "in")
-    name = f"sess_{uuid.uuid4().hex[:10]}"
-    try:
-        ev.filter(F.col("ts") < F.lit(c1)).coalesce(1).write.parquet(
-            os.path.join(input_dir, "b0")
+    with _utc(spark):
+        ev = (
+            load_table(spark, sf_dir, "events")
+            .filter(F.col("user_id") % SESSION_USER_MOD == 0)
+            .select("user_id", F.col("ts").cast("timestamp").alias("ts"))
         )
-        stream = (
-            spark.readStream.schema("user_id long, ts timestamp")
-            .option("maxFilesPerTrigger", "1")
-            .option("recursiveFileLookup", "true")
-            .parquet(input_dir)
+        # 1-row stats collect (house-permitted): the two batch-cut instants
+        lo, hi = ev.agg(F.min("ts"), F.max("ts")).first()
+        span = hi - lo
+        c1 = lo + span / 3
+        c2 = lo + 2 * (span / 3)
+        ts = F.col("ts")
+        flush = spark.range(1).select(
+            F.lit(-1).cast("long").alias("user_id"),
+            F.to_timestamp(F.lit("2030-01-01 00:00:00")).alias("ts"),
         )
-        sess = (
-            stream.withWatermark("ts", SESSION_GAP)
-            .groupBy(
-                F.session_window("ts", SESSION_GAP).alias("w"), "user_id"
+        return _run_stream(
+            spark,
+            {"in": "user_id long, ts timestamp"},
+            [
+                {"in": ev.filter(ts < F.lit(c1))},
+                {"in": ev.filter((ts >= F.lit(c1)) & (ts < F.lit(c2)))},
+                {"in": ev.filter(ts >= F.lit(c2))},
+                {"in": flush},
+            ],
+            lambda s, write: write(
+                s["in"]
+                .withWatermark("ts", SESSION_GAP)
+                .groupBy(F.session_window(ts, SESSION_GAP).alias("w"), "user_id")
+                .agg(F.count("*").alias("n_events"))
             )
-            .agg(F.count("*").alias("n_events"))
-        )
-        q = (
-            sess.writeStream.format("memory")
-            .queryName(name)
+            .format("memory")
+            .queryName("stream_sessionize")
             .outputMode("append")
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-            ev.filter(
-                (F.col("ts") >= F.lit(c1)) & (F.col("ts") < F.lit(c2))
-            ).coalesce(1).write.parquet(os.path.join(input_dir, "b1"))
-            q.processAllAvailable()
-            ev.filter(F.col("ts") >= F.lit(c2)).coalesce(1).write.parquet(
-                os.path.join(input_dir, "b2")
-            )
-            q.processAllAvailable()
-            flush.coalesce(1).write.parquet(os.path.join(input_dir, "b3"))
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        final = (
-            spark.table(name)
+            .start(),
+            lambda q: spark.table(q.name)
             .filter(F.col("user_id") >= 0)
             .select(
                 "user_id",
@@ -502,12 +479,12 @@ def _sessionize_utc(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ),
                 F.col("n_events").cast("long").alias("n_events"),
             )
-            .orderBy("user_id", "session_start")
+            .orderBy("user_id", "session_start"),
         )
-        rows = final.collect()  # materialize before the tmp dir vanishes
-        return spark.createDataFrame(rows, final.schema)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+
+
+SESSION_GAP = "1 day"
+SESSION_USER_MOD = 11
 
 
 STREAMING_SESSIONIZE_SQL = f"""
@@ -574,66 +551,33 @@ def streaming_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: state is per-user and watermark-bounded (10-minute horizon),
     the join shuffles both streams on user_id once — the standard
     production attribution topology."""
-    tz_before = spark.conf.get("spark.sql.session.timeZone")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    try:
-        return _stream_join_utc(spark, sf_dir)
-    finally:
-        spark.conf.set("spark.sql.session.timeZone", tz_before)
+    with _utc(spark):
+        ev = load_table(spark, sf_dir, "events").select("event_id", "user_id")
+        base = F.to_timestamp(F.lit("2026-01-01 12:00:00"))
+        m = (F.col("event_id") % 20).cast("int")
+        c = (F.col("event_id") % 7).cast("int")
 
+        def clicks(cond, minutes):
+            return ev.filter(cond).select(
+                F.col("event_id").alias("click_id"),
+                "user_id",
+                F.timestamp_add("MINUTE", minutes, base).alias("click_time"),
+            )
 
-def _stream_join_utc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events").select("event_id", "user_id")
-    base = F.to_timestamp(F.lit("2026-01-01 12:00:00"))
-    m = (F.col("event_id") % 20).cast("int")
-    c = (F.col("event_id") % 7).cast("int")
-
-    imps = ev.select(
-        F.col("event_id").alias("imp_id"),
-        "user_id",
-        F.timestamp_add("MINUTE", m, base).alias("imp_time"),
-    )
-    c0 = ev.filter(F.col("event_id") % 3 == 0).select(
-        F.col("event_id").alias("click_id"),
-        "user_id",
-        F.timestamp_add("MINUTE", m + c, base).alias("click_time"),
-    )
-    c1_ok = ev.filter((F.col("event_id") % 11 == 0) & (m >= 2)).select(
-        F.col("event_id").alias("click_id"),
-        "user_id",
-        F.timestamp_add("MINUTE", m + 8, base).alias("click_time"),
-    )
-    c1_late = ev.filter(F.col("event_id") % 13 == 0).select(
-        F.col("event_id").alias("click_id"),
-        "user_id",
-        F.timestamp_add("MINUTE", F.lit(3), base).alias("click_time"),
-    )
-
-    work = tempfile.mkdtemp(prefix="stream_join_")
-    imp_dir = os.path.join(work, "imp")
-    clk_dir = os.path.join(work, "clk")
-    name = f"ssj_{uuid.uuid4().hex[:10]}"
-    try:
-        imps.coalesce(1).write.parquet(os.path.join(imp_dir, "b0"))
-        c0.coalesce(1).write.parquet(os.path.join(clk_dir, "b0"))
-        si = (
-            spark.readStream.schema("imp_id long, user_id long, imp_time timestamp")
-            .option("maxFilesPerTrigger", "1")
-            .option("recursiveFileLookup", "true")
-            .parquet(imp_dir)
-            .withWatermark("imp_time", "10 minutes")
+        imps = ev.select(
+            F.col("event_id").alias("imp_id"),
+            "user_id",
+            F.timestamp_add("MINUTE", m, base).alias("imp_time"),
         )
-        sc = (
-            spark.readStream.schema("click_id long, user_id long, click_time timestamp")
-            .option("maxFilesPerTrigger", "1")
-            .option("recursiveFileLookup", "true")
-            .parquet(clk_dir)
-            .withWatermark("click_time", "10 minutes")
-        )
-        joined = (
-            si.alias("i")
-            .join(
-                sc.alias("c"),
+        c0 = clicks(F.col("event_id") % 3 == 0, m + c)
+        c1_ok = clicks((F.col("event_id") % 11 == 0) & (m >= 2), m + 8)
+        c1_late = clicks(F.col("event_id") % 13 == 0, F.lit(3))
+
+        def start(s, write):
+            si = s["imp"].withWatermark("imp_time", "10 minutes").alias("i")
+            sc = s["clk"].withWatermark("click_time", "10 minutes").alias("c")
+            joined = si.join(
+                sc,
                 (F.col("i.user_id") == F.col("c.user_id"))
                 & (F.col("c.click_time") >= F.col("i.imp_time"))
                 & (
@@ -641,37 +585,32 @@ def _stream_join_utc(spark: SparkSession, sf_dir: str) -> DataFrame:
                     <= F.col("i.imp_time") + F.expr("INTERVAL 10 MINUTES")
                 ),
                 "inner",
-            )
-            .select(
+            ).select(
                 "imp_id",
                 "click_id",
                 F.col("i.user_id").alias("user_id"),
                 "imp_time",
                 "click_time",
             )
-        )
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-            c1_ok.unionByName(c1_late).coalesce(1).write.parquet(
-                os.path.join(clk_dir, "b1")
+            return (
+                write(joined)
+                .format("memory")
+                .queryName("stream_stream_join")
+                .outputMode("append")
+                .start()
             )
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        final = (
-            spark.table(name)
+
+        return _run_stream(
+            spark,
+            {
+                "imp": "imp_id long, user_id long, imp_time timestamp",
+                "clk": "click_id long, user_id long, click_time timestamp",
+            },
+            [{"imp": imps, "clk": c0}, {"clk": c1_ok.unionByName(c1_late)}],
+            start,
+            lambda q: spark.table(q.name)
             .select(
-                (
-                    (F.unix_micros("click_time") - F.unix_micros("imp_time"))
-                    / 60_000_000
-                )
+                ((F.unix_micros("click_time") - F.unix_micros("imp_time")) / 60_000_000)
                 .cast("int")
                 .alias("lag_min"),
                 "user_id",
@@ -681,12 +620,8 @@ def _stream_join_utc(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.count(F.lit(1)).alias("n_pairs"),
                 F.countDistinct("user_id").alias("n_users"),
             )
-            .orderBy("lag_min")
+            .orderBy("lag_min"),
         )
-        rows = final.collect()
-        return spark.createDataFrame(rows, final.schema)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 STREAMING_STREAM_JOIN_SQL = """
@@ -755,53 +690,31 @@ def streaming_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice"
     )
-    b0 = orders.filter(F.col("o_orderkey") % 2 == 0)
-    b1 = orders.filter(F.col("o_orderkey") % 2 == 1)
-
-    work = tempfile.mkdtemp(prefix="stream_enrich_")
-    in_dir = os.path.join(work, "in")
-    name = f"sse_{uuid.uuid4().hex[:10]}"
-    try:
-        b0.coalesce(1).write.parquet(os.path.join(in_dir, "b0"))
-        stream = (
-            spark.readStream.schema(
-                "o_orderkey long, o_custkey long, o_totalprice double"
+    return _run_stream(
+        spark,
+        {"in": "o_orderkey long, o_custkey long, o_totalprice double"},
+        [{"in": orders.filter(F.col("o_orderkey") % 2 == k)} for k in (0, 1)],
+        lambda s, write: write(
+            s["in"]
+            .join(dim, s["in"]["o_custkey"] == dim["c_custkey"])
+            .select(
+                "o_orderkey",
+                "c_mktsegment",
+                F.col("o_totalprice").cast("decimal(18,2)").alias("price"),
             )
-            .option("maxFilesPerTrigger", "1")
-            .option("recursiveFileLookup", "true")
-            .parquet(in_dir)
         )
-        enriched = stream.join(dim, stream["o_custkey"] == dim["c_custkey"]).select(
-            "o_orderkey",
-            "c_mktsegment",
-            F.col("o_totalprice").cast("decimal(18,2)").alias("price"),
+        .format("memory")
+        .queryName("stream_static_enrich")
+        .outputMode("append")
+        .start(),
+        lambda q: spark.table(q.name)
+        .groupBy("c_mktsegment")
+        .agg(
+            F.count(F.lit(1)).alias("n_orders"),
+            F.round(F.sum("price").cast("double"), 2).alias("revenue"),
         )
-        q = (
-            enriched.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-            b1.coalesce(1).write.parquet(os.path.join(in_dir, "b1"))
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        final = (
-            spark.table(name)
-            .groupBy("c_mktsegment")
-            .agg(
-                F.count(F.lit(1)).alias("n_orders"),
-                F.round(F.sum("price").cast("double"), 2).alias("revenue"),
-            )
-            .orderBy("c_mktsegment")
-        )
-        rows = final.collect()
-        return spark.createDataFrame(rows, final.schema)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+        .orderBy("c_mktsegment"),
+    )
 
 
 STREAMING_STATIC_ENRICH_SQL = """
@@ -867,8 +780,6 @@ def streaming_upsert_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     ]
 
-    work = tempfile.mkdtemp(prefix="stream_upsert_")
-    in_dir = os.path.join(work, "in")
     state: dict = {"df": None}
 
     def merge(bdf, batch_id):
@@ -903,45 +814,24 @@ def streaming_upsert_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         state["df"] = merged.localCheckpoint(eager=True)
 
-    try:
-        feed[0].coalesce(1).write.parquet(os.path.join(in_dir, "b0"))
-        stream = (
-            spark.readStream.schema(
-                "o_orderkey long, version long, op string,"
-                " o_orderstatus string, cents long"
-            )
-            .option("maxFilesPerTrigger", "1")
-            .option("recursiveFileLookup", "true")
-            .parquet(in_dir)
+    return _run_stream(
+        spark,
+        {
+            "in": "o_orderkey long, version long, op string,"
+            " o_orderstatus string, cents long"
+        },
+        [{"in": f} for f in feed],
+        lambda s, write: write(s["in"]).foreachBatch(merge).start(),
+        lambda _q: state["df"]
+        .filter(F.col("op") != "D")
+        .selectExpr(
+            "o_orderkey",
+            "o_orderstatus",
+            "CAST(cents AS BIGINT) AS cents",
+            "CAST(version AS BIGINT) AS version",
         )
-        q = (
-            stream.writeStream.foreachBatch(merge)
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-            feed[1].coalesce(1).write.parquet(os.path.join(in_dir, "b1"))
-            q.processAllAvailable()
-            feed[2].coalesce(1).write.parquet(os.path.join(in_dir, "b2"))
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        final = (
-            state["df"]
-            .filter(F.col("op") != "D")
-            .selectExpr(
-                "o_orderkey",
-                "o_orderstatus",
-                "CAST(cents AS BIGINT) AS cents",
-                "CAST(version AS BIGINT) AS version",
-            )
-            .orderBy("o_orderkey")
-        )
-        rows = final.collect()
-        return spark.createDataFrame(rows, final.schema)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+        .orderBy("o_orderkey"),
+    )
 
 
 def _streaming_upsert_sql() -> str:
@@ -1016,8 +906,6 @@ def streaming_hll_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint(eager=True)
     )
 
-    work = tempfile.mkdtemp(prefix="stream_hll_")
-    in_dir = os.path.join(work, "in")
     state: dict = {"df": None}
 
     def merge(bdf, batch_id):
@@ -1045,37 +933,13 @@ def streaming_hll_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             .localCheckpoint(eager=True)
         )
 
-    try:
-        for b in range(3):
-            batch = base.filter(F.col("batch_id") == b).select(
-                "event_type", "bucket", "rho"
-            )
-            batch.coalesce(1).write.parquet(os.path.join(in_dir, f"b{b}"))
-        stream = (
-            spark.readStream.schema("event_type string, bucket int, rho int")
-            .option("maxFilesPerTrigger", "1")
-            .option("recursiveFileLookup", "true")
-            .parquet(in_dir)
-        )
-        q = (
-            stream.writeStream.foreachBatch(merge)
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        sums = (
-            state["df"]
-            .groupBy("event_type")
-            .agg(
-                F.expr(
-                    f"CAST(sum(CAST(power(2, {_WBITS + 1} - mreg) AS BIGINT))"
-                    f" + ({_M} - count(1)) * {_SCALE} AS BIGINT)"
-                ).alias("s_scaled"),
-                F.count(F.lit(1)).cast("int").alias("n_buckets_set"),
-            )
+    def result(_q):
+        sums = state["df"].groupBy("event_type").agg(
+            F.expr(
+                f"CAST(sum(CAST(power(2, {_WBITS + 1} - mreg) AS BIGINT))"
+                f" + ({_M} - count(1)) * {_SCALE} AS BIGINT)"
+            ).alias("s_scaled"),
+            F.count(F.lit(1)).cast("int").alias("n_buckets_set"),
         )
         exact = (
             base.select("event_type", "day", "user_id")
@@ -1083,7 +947,7 @@ def streaming_hll_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("event_type")
             .agg(F.count(F.lit(1)).cast("long").alias("exact_user_days"))
         )
-        final = (
+        return (
             sums.join(exact, "event_type")
             .selectExpr(
                 "event_type",
@@ -1095,10 +959,21 @@ def streaming_hll_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .orderBy("event_type")
         )
-        rows = final.collect()
-        return spark.createDataFrame(rows, final.schema)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+
+    return _run_stream(
+        spark,
+        {"in": "event_type string, bucket int, rho int"},
+        [
+            {
+                "in": base.filter(F.col("batch_id") == b).select(
+                    "event_type", "bucket", "rho"
+                )
+            }
+            for b in range(3)
+        ],
+        lambda s, write: write(s["in"]).foreachBatch(merge).start(),
+        result,
+    )
 
 
 def _streaming_hll_sql() -> str:

@@ -1,7 +1,8 @@
 """The table-source seam: the one place that knows where a table lives.
 
-Every ``sf_dir`` table read goes through ``load_table``; the layout today is
-one parquet file per table, ``{sf_dir}/{name}.parquet``.  At cluster scale
+Every ``sf_dir`` table read goes through ``load_table`` (or, for a reader
+without a session, ``table_path``); the layout today is one parquet file per
+table, ``{sf_dir}/{name}.parquet``.  At cluster scale
 these are Iceberg table scans (``spark.read.format("iceberg")``) and this
 function is the switch point; the Iceberg jars are not in this image, so
 the connector is parquet — Catalyst still gets pushdown + pruning on the
@@ -15,5 +16,9 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 
+def table_path(sf_dir: str, name: str) -> str:
+    return os.path.join(sf_dir, f"{name}.parquet")
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    return spark.read.parquet(table_path(sf_dir, name))

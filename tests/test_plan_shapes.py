@@ -868,9 +868,10 @@ def test_median_two_pass_histogram_is_materialized(spark):
 
 
 def test_table_reads_go_through_the_source_seam():
-    """Every sf_dir table read goes through sources.load_table — the one
-    place that knows the table layout — so the layout (or the switch to
-    Iceberg scans) changes in one file."""
+    """Every sf_dir table read goes through sources.load_table (or
+    sources.table_path where no session exists) — the one place that knows
+    the table layout — so the layout (or the switch to Iceberg scans)
+    changes in one file."""
     import pathlib
 
     pkg = pathlib.Path(__file__).resolve().parents[1] / "pdf_craft_spark"
@@ -880,9 +881,45 @@ def test_table_reads_go_through_the_source_seam():
         for path in sorted(pkg.rglob("*.py"))
         if path != seam
         for i, line in enumerate(path.read_text().splitlines(), 1)
-        if "read.parquet(os.path.join(" in line
+        if "read.parquet(os.path.join(" in line or "os.path.join(sf_dir" in line
     ]
     assert not bypass, f"read tables via sources.load_table: {bypass}"
+
+
+def test_stream_lifecycle_lives_in_the_driver():
+    """Stream set-up (readers, writers, draining, the scratch dir) appears
+    only in streamingq._run_stream and in streaming_checkpoint_restart,
+    whose restart of the query object is what it tests; every other
+    streaming query goes through the driver, so the lifecycle and its
+    cleanup are spelled once."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "pdf_craft_spark" / "queries"
+    owners = {"_run_stream", "streaming_checkpoint_restart"}
+
+    def is_setup(node, path):
+        if not isinstance(node, ast.Attribute):
+            return False
+        if node.attr in {"readStream", "writeStream", "processAllAvailable"}:
+            return True
+        # batch queries elsewhere in queries/ use scratch dirs of their own
+        return (
+            path.name == "streamingq.py"
+            and node.attr == "mkdtemp"
+            and isinstance(node.value, ast.Name)
+            and node.value.id == "tempfile"
+        )
+
+    outside = [
+        f"{path.name}:{node.lineno}"
+        for path in sorted(pkg.rglob("*.py"))
+        for top in ast.parse(path.read_text()).body
+        if getattr(top, "name", None) not in owners
+        for node in ast.walk(top)
+        if is_setup(node, path)
+    ]
+    assert not outside, f"run streams through streamingq._run_stream: {outside}"
 
 
 def test_env_knobs_are_allowlisted():
