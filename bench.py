@@ -678,7 +678,7 @@ def ann_frontier_block(spark) -> dict:
         t0 = time.time()
         rows = sim.sim_recall(spark, d).collect()
         dt = time.time() - t0
-        _n, nprobe, cents = sim.ivf_fit(d)
+        _n, nprobe, cents, cal = sim.ivf_fit(d)
         by: dict[str, list[float]] = {}
         for r in rows:
             by.setdefault(r.method, []).append(r.recall_at_k)
@@ -686,7 +686,7 @@ def ann_frontier_block(spark) -> dict:
             "ivf_lists": len(cents),
             "ivf_nprobe": nprobe,
             "ivf_candidate_fraction": round(nprobe / len(cents), 3),
-            "calibration": sim._CAL_INFO.get(d, {}),
+            "calibration": cal,
             "recall_at_5": {
                 m: round(sum(v) / len(v), 3) for m, v in sorted(by.items())
             },
@@ -722,10 +722,9 @@ def main() -> None:
     from pdf_craft_spark.queries import similarity as _sim
 
     t0 = time.time()
-    _sim.ivf_fit(SF_DIR)
+    cal = _sim.ivf_fit(SF_DIR)[3]
     ivf_fit_sec = round(time.time() - t0, 3)
-    print(f"# ivf_fit (one-time, cached): {ivf_fit_sec:.2f}s "
-          f"{_sim._CAL_INFO.get(SF_DIR)}", file=sys.stderr)
+    print(f"# ivf_fit (one-time, cached): {ivf_fit_sec:.2f}s {cal}", file=sys.stderr)
 
     # same treatment for the synthetic media table: at prod the media_*
     # queries scan a committed table; here the table is GENERATED (layered

@@ -17,27 +17,25 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pdf_craft_spark.plans.sinks import N_BUCKETS
+from pdf_craft_spark.queries.dedup import registered
 from pdf_craft_spark.queries.pipelineq import _GOLDEN_DIR
 
 N_FIRST = 6
 N_TOTAL = 12
 
-# both queries below need the same two-run resume; one execution per Spark
-# application serves both (the driver sweep runs them in one session), with
-# only the collected rows kept — the tmp sink dir is gone by return time
-_RESUME_CACHE: dict[str, tuple] = {}
-
 
 def _two_run_resume(spark: SparkSession):
-    """Run the 6-doc then 12-doc resume once; return materialized
-    (spans_rows, spans_schema, manifest_rows, manifest_schema)."""
+    """Run the 6-doc then 12-doc resume once per Spark application (both
+    queries below need it, and the driver sweep runs them in one session);
+    return the materialized (spans_rows, spans_schema, manifest_rows,
+    manifest_schema) — the tmp sink dir is gone by return time."""
+    return registered(spark, "two_run_resume", lambda: (_run_two_resumes(spark), ()))
+
+
+def _run_two_resumes(spark: SparkSession):
     from pdf_craft_spark.plans.checkpoint import run_with_resume
     from pdf_craft_spark.plans.pipeline import corpus_df
     from pdf_craft_spark.plans.sinks import ParquetBucketSink
-
-    app_id = spark.sparkContext.applicationId
-    if app_id in _RESUME_CACHE:
-        return _RESUME_CACHE[app_id]
 
     out_dir = tempfile.mkdtemp(prefix="resume_q_")
     try:
@@ -50,11 +48,9 @@ def _two_run_resume(spark: SparkSession):
         manifest = sink.read_manifest(spark).select(
             "run_id", "bucket", "n_docs", "n_spans", "status"
         ).orderBy("run_id", "bucket")
-        result = (spans.collect(), spans.schema, manifest.collect(), manifest.schema)
+        return spans.collect(), spans.schema, manifest.collect(), manifest.schema
     finally:
         shutil.rmtree(out_dir, ignore_errors=True)
-    _RESUME_CACHE[app_id] = result
-    return result
 
 
 def checkpoint_resume_spans(spark: SparkSession, sf_dir: str) -> DataFrame:

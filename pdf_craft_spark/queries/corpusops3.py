@@ -12,6 +12,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from pdf_craft_spark.queries import dedup
+from pdf_craft_spark.queries.dedup import (
+    DEDUP_MINHASH_LSH_SQL,
+    _SHINGLES_DUCK,
+    lsh_pairs_cached,
+    shingles_cached,
+)
 from pdf_craft_spark.sources import load_table as _t
 
 
@@ -115,9 +122,7 @@ def basket_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     derives from.  At prod this is a written table of the basket-prep
     job; here the scan+distinct runs once per session instead of once
     per consumer (guide §2.4: shared exchange)."""
-    from pdf_craft_spark.queries.dedup import session_artifact
-
-    return session_artifact(
+    return dedup.session_artifact(
         spark,
         f"basket:{sf_dir}",
         lambda: _t(spark, sf_dir, "lineitem")
@@ -131,8 +136,6 @@ def copurchase_sup_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     support, support >= 2 — the one edge rule sssp / link prediction /
     edge support / assortativity / market-basket all share (three copies
     of this recipe used to drift independently; now there is one)."""
-    from pdf_craft_spark.queries.dedup import session_artifact
-
     def build() -> DataFrame:
         basket = basket_cached(spark, sf_dir)
         a, b = basket.alias("a"), basket.alias("b")
@@ -147,7 +150,7 @@ def copurchase_sup_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("sup") >= 2)
         )
 
-    return session_artifact(spark, f"copurchase_sup:{sf_dir}", build)
+    return dedup.session_artifact(spark, f"copurchase_sup:{sf_dir}", build)
 
 
 def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -293,8 +296,6 @@ CONTAIN_TOPK = 20
 
 
 def dedup_containment_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pdf_craft_spark.queries.dedup import lsh_pairs_cached, shingles_cached
-
     pairs = lsh_pairs_cached(spark, sf_dir).select("doc_a", "doc_b")
     # the session shingle artifact is already distinct per (doc_id, sh)
     sh = shingles_cached(spark, sf_dir)
@@ -327,8 +328,6 @@ def dedup_containment_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _containment_sql() -> str:
-    from pdf_craft_spark.queries.dedup import _SHINGLES_DUCK, DEDUP_MINHASH_LSH_SQL
-
     return f"""
 WITH pairs AS (
   SELECT doc_a, doc_b FROM ({DEDUP_MINHASH_LSH_SQL})

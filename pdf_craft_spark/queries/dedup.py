@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from pdf_craft_spark.sources import load_table
+from pdf_craft_spark.sources import fingerprint, load_table
 
 N_HASHES = 16
 N_BANDS = 8  # rows-per-band = 2
@@ -511,47 +511,86 @@ DEDUP_SIMHASH_SQL = _simhash_duck_sql()
 # The DuckDB oracle computes the same closure with WITH RECURSIVE, so the
 # iterative distributed algorithm is value-checked against a declarative
 # ground truth.
-# --- session-scoped materialized artifacts ----------------------------------
+# --- the artifact registry -------------------------------------------------
 # Every graph/cluster consumer (CC, LPA, k-core, BFS, triangles, link
 # prediction, keep-best, the estimate-error calibration) reads the SAME
 # near-dup pair table — and, one level down, the whole dedup/setsim
 # family reads the SAME shingle and MinHash-signature tables.  At
 # production scale these are PERSISTED artifacts of the dedup pass —
-# downstream jobs read them, they do not re-mine the corpus — so the
-# in-process twin is a session-scoped cache of the materialized
-# (localCheckpoint) table, keyed by (application, artifact, sf_dir):
-# a fresh session always rebuilds from the parquet inputs, and nothing
-# survives the process.  PROTECTED_RDD_IDS lets sweep harnesses
-# (bench.py) release per-query intermediates without severing these
-# shared indexes' lineage-cut blocks.
-_ARTIFACTS: dict[tuple[str, str], "DataFrame"] = {}
+# downstream jobs read them, they do not re-mine the corpus.  The
+# in-process twin is this registry, the one memo shared across queries.
+# An entry is keyed on (name, scope) and stores the fingerprint of the
+# sf_dir its name embeds after ``:`` (sources.fingerprint):
+# - scope is the Spark application for DataFrame artifacts and other
+#   session values, None for the numpy fits (the oracle builders call
+#   them at import, sessionless);
+# - a changed fingerprint rebuilds the entry, unpersisting and
+#   unprotecting the old checkpoint's blocks;
+# - a new application drops every older application's entries and
+#   protected ids.
+# PROTECTED_RDD_IDS lets sweep harnesses (bench.py) release per-query
+# intermediates without severing live artifacts' lineage-cut blocks; it
+# is only mutated in place, since callers import the set by name.
+_REGISTRY: dict[tuple[str, str | None], tuple[tuple, object, frozenset[int]]] = {}
 PROTECTED_RDD_IDS: set[int] = set()
 
 
+def _persisted(spark: SparkSession) -> set[int]:
+    return {int(k) for k in spark.sparkContext._jsc.getPersistentRDDs().keySet()}
+
+
+def _unpersist(spark: SparkSession, ids: set[int]) -> None:
+    persisted = spark.sparkContext._jsc.getPersistentRDDs()
+    for k in [k for k in persisted.keySet() if int(k) in ids]:
+        persisted.get(k).unpersist()
+
+
+def _live_application(spark: SparkSession) -> str:
+    app = spark.sparkContext.applicationId
+    for key in [k for k in _REGISTRY if k[1] not in (None, app)]:
+        PROTECTED_RDD_IDS.difference_update(_REGISTRY.pop(key)[2])
+    return app
+
+
+def registered(spark: SparkSession | None, name: str, build):
+    """The registry value of ``name``, scoped to ``spark``'s application
+    (unscoped when None).  ``build()`` returns ``(value, rdd_ids)``; the
+    ids stay protected while the entry lives."""
+    key = (name, None if spark is None else _live_application(spark))
+    fp = fingerprint(name.partition(":")[2])
+    entry = _REGISTRY.get(key)
+    if entry is None or entry[0] != fp:
+        if entry is not None and entry[2]:
+            PROTECTED_RDD_IDS.difference_update(entry[2])
+            _unpersist(spark, entry[2])
+        value, ids = build()
+        entry = _REGISTRY[key] = (fp, value, frozenset(ids))
+    return entry[1]
+
+
 def session_artifact(spark: SparkSession, name: str, build) -> DataFrame:
-    """Materialize ``build()`` once per (session, name) and register its
-    checkpoint blocks as protected.  ``name`` must embed every input the
-    artifact depends on (the sf_dir, at minimum)."""
-    key = (spark.sparkContext.applicationId, name)
-    if key not in _ARTIFACTS:
-        jsc = spark.sparkContext._jsc
-        before = {int(k) for k in jsc.getPersistentRDDs().keySet()}
+    """``build()`` materialized as a protected localCheckpoint, registered
+    under ``name`` = ``"<artifact>:<sf_dir>"``."""
+
+    def checkpoint():
+        before = _persisted(spark)
         df = build().localCheckpoint(eager=True)
-        after = {int(k) for k in jsc.getPersistentRDDs().keySet()}
-        PROTECTED_RDD_IDS.update(after - before)
-        _ARTIFACTS[key] = df
-    return _ARTIFACTS[key]
+        # nested artifacts built inside ``build`` already own their ids
+        ids = _persisted(spark) - before - PROTECTED_RDD_IDS
+        PROTECTED_RDD_IDS.update(ids)
+        return df, ids
+
+    return registered(spark, name, checkpoint)
 
 
 def release_unprotected(spark: SparkSession, keep: set[int]) -> None:
     """Unpersist every persisted RDD outside ``keep`` ∪ PROTECTED_RDD_IDS —
     the between-queries release of a sweep harness.  Session artifacts are
     lineage-cut checkpoints: releasing one would make its next consumer
-    fail with CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND."""
-    persisted = spark.sparkContext._jsc.getPersistentRDDs()
-    for k in list(persisted.keySet()):
-        if int(k) not in keep and int(k) not in PROTECTED_RDD_IDS:
-            persisted.get(k).unpersist()
+    fail with CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND.  A dead application's
+    protected ids are dropped first: a restarted session reuses RDD ids."""
+    _live_application(spark)
+    _unpersist(spark, _persisted(spark) - keep - PROTECTED_RDD_IDS)
 
 
 def lsh_pairs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:

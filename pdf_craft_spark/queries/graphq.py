@@ -32,6 +32,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pdf_craft_spark.queries import dedup
+from pdf_craft_spark.queries.dedup import (
+    DEDUP_COMPONENTS_SQL,
+    DEDUP_MINHASH_LSH_SQL,
+    cc_labels_cached,
+    lsh_pairs_cached,
+    md5_prefix_long_sql,
+)
 from pdf_craft_spark.sources import load_table
 
 SCALE = 10**12
@@ -44,8 +52,6 @@ def custsupp_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     table every bipartite-graph consumer (pagerank, HITS, random walks,
     maximal matching) derives its edges from — the written edge table at
     prod, built once per session instead of once per consumer."""
-    from pdf_craft_spark.queries.dedup import session_artifact
-
     def build() -> DataFrame:
         li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
         orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
@@ -59,7 +65,7 @@ def custsupp_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
             .distinct()
         )
 
-    return session_artifact(spark, f"custsupp:{sf_dir}", build)
+    return dedup.session_artifact(spark, f"custsupp:{sf_dir}", build)
 
 
 def pagerank_purchase_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -199,8 +205,6 @@ ORACLES = {"pagerank_purchase_graph": PAGERANK_PURCHASE_GRAPH_SQL}
 # skewed nodes; id-ordering is the right default for the near-dup graph
 # whose max degree is bounded by the dedup cutoffs upstream.
 def graph_triangle_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pdf_craft_spark.queries.dedup import lsh_pairs_cached
-
     pairs = lsh_pairs_cached(spark, sf_dir)
     nodes = pairs.selectExpr("doc_a AS d").unionAll(pairs.selectExpr("doc_b AS d"))
     deg = nodes.groupBy("d").agg(F.count(F.lit(1)).alias("degree"))
@@ -233,8 +237,6 @@ def graph_triangle_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _triangle_stats_sql() -> str:
-    from pdf_craft_spark.queries.dedup import DEDUP_MINHASH_LSH_SQL
-
     return f"""
 WITH pairs AS (
   SELECT doc_a, doc_b FROM ({DEDUP_MINHASH_LSH_SQL})
@@ -292,8 +294,6 @@ LPA_ITERS = 2
 def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
-    from pdf_craft_spark.queries.dedup import lsh_pairs_cached
-
     pairs = lsh_pairs_cached(spark, sf_dir).select("doc_a", "doc_b")
     edges = (
         pairs.selectExpr("doc_a AS v", "doc_b AS u")
@@ -329,8 +329,6 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _label_propagation_sql() -> str:
-    from pdf_craft_spark.queries.dedup import DEDUP_MINHASH_LSH_SQL
-
     rounds = []
     for i in range(1, LPA_ITERS + 1):
         rounds.append(f"""f{i} AS (
@@ -476,8 +474,6 @@ BFS_N_SEEDS = 5
 
 
 def graph_bfs_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pdf_craft_spark.queries.dedup import lsh_pairs_cached
-
     pairs = lsh_pairs_cached(spark, sf_dir)
     edges = (
         pairs.selectExpr("doc_a AS src", "doc_b AS dst")
@@ -519,8 +515,6 @@ def graph_bfs_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _bfs_distance_sql() -> str:
-    from pdf_craft_spark.queries.dedup import DEDUP_MINHASH_LSH_SQL
-
     return f"""
 WITH RECURSIVE pairs AS (
   SELECT doc_a, doc_b FROM ({DEDUP_MINHASH_LSH_SQL})
@@ -566,8 +560,6 @@ KCORE_ITERS = 3
 
 
 def graph_kcore_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pdf_craft_spark.queries.dedup import lsh_pairs_cached
-
     pairs = lsh_pairs_cached(spark, sf_dir).select("doc_a", "doc_b")
     edges = (
         pairs.selectExpr("doc_a AS v", "doc_b AS u")
@@ -605,8 +597,6 @@ def graph_kcore_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _kcore_sql() -> str:
-    from pdf_craft_spark.queries.dedup import DEDUP_MINHASH_LSH_SQL
-
     rounds = []
     for i in range(1, KCORE_ITERS + 1):
         rounds.append(f"""d{i} AS (
@@ -757,8 +747,6 @@ WALK_LEN = 3
 
 
 def graph_random_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pdf_craft_spark.queries.dedup import md5_prefix_long_sql
-
     pairs = custsupp_cached(spark, sf_dir).selectExpr(
         "'c' || CAST(cust AS STRING) AS src",
         "'s' || CAST(supp AS STRING) AS dst",
@@ -799,8 +787,6 @@ def graph_random_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _random_walks_sql() -> str:
-    from pdf_craft_spark.queries.dedup import md5_prefix_long_sql
-
     steps = []
     prev = "w0"
     for t in range(1, WALK_LEN + 1):
@@ -1144,8 +1130,6 @@ def _modularity_of(pairs: DataFrame, labels: DataFrame, name: str) -> DataFrame:
 
 
 def graph_modularity_partitions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pdf_craft_spark.queries.dedup import cc_labels_cached, lsh_pairs_cached
-
     pairs = lsh_pairs_cached(spark, sf_dir).select("doc_a", "doc_b")
     lpa = graph_label_propagation(spark, sf_dir).selectExpr(
         "doc_id AS v", "community AS c"
@@ -1159,11 +1143,6 @@ def graph_modularity_partitions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _modularity_sql() -> str:
-    from pdf_craft_spark.queries.dedup import (
-        DEDUP_COMPONENTS_SQL,
-        DEDUP_MINHASH_LSH_SQL,
-    )
-
     rounds = []
     for i in range(1, LPA_ITERS + 1):
         rounds.append(f"""f{i} AS (
@@ -1272,8 +1251,6 @@ def maximal_matching_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _maximal_matching(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pdf_craft_spark.queries.dedup import md5_prefix_long_sql
-
     h = md5_prefix_long_sql("concat(cust, '_', supp)", 15, "spark")
     # edge-hash projection over the shared trading-pair artifact; still
     # checkpointed because every matching round re-reads the eh column
@@ -1321,8 +1298,6 @@ def _maximal_matching(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _mm_sql() -> str:
-    from pdf_craft_spark.queries.dedup import md5_prefix_long_sql
-
     h = md5_prefix_long_sql("(cust || '_' || supp)", 15, "duck")
     # MATERIALIZED: DuckDB inlines CTEs per reference by default, so the
     # md5 edge build and every round table would re-execute once per

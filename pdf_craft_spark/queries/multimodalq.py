@@ -27,6 +27,7 @@ from pdf_craft_spark.functions.multimodal import (
     sample_frames,
     synth_media_table,
 )
+from pdf_craft_spark.queries import dedup
 from pdf_craft_spark.sources import load_table
 
 
@@ -43,9 +44,7 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # 11.6 s against the lazy expression tree vs 0.48 s against the materialized
 # rows (24x), dhash/collect paths ~18 s vs sub-second.
 def _media(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pdf_craft_spark.queries.dedup import session_artifact
-
-    return session_artifact(
+    return dedup.session_artifact(
         spark, f"media:{sf_dir}", lambda: synth_media_table(_docs(spark, sf_dir))
     )
 

@@ -25,6 +25,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from pdf_craft_spark.queries import dedup
 from pdf_craft_spark.sources import load_table, table_path
 
 N_QUERIES = 10
@@ -368,32 +369,24 @@ SIM_LSH_TOPK_SQL = _lsh_topk_duck_sql()
 # both engines run the identical quantizer.
 SAMPLE_CAP = 2048
 KMEANS_ITERS = 8  # the sample is ≤2048×64 doubles — extra Lloyd passes are ~free
-# fraction of the k lists each query probes — the recall/cost dial.  The
-# DEFAULT (None) is ADAPTIVE: ivf_fit measures recall@TOP_K on its own fit
-# sample across probe counts and picks the smallest nprobe that clears
-# IVF_RECALL_TARGET — so an isotropic corpus (worst case for list pruning)
-# gets the large fraction it genuinely needs while clustered embeddings
-# (the realistic case) automatically get a small one (measured ~0.1,
+# The fraction of the k lists each query probes — the recall/cost dial —
+# is ADAPTIVE: ivf_fit measures recall@TOP_K on its own fit sample across
+# probe counts and picks the smallest nprobe that clears IVF_RECALL_TARGET
+# — so an isotropic corpus (worst case for list pruning) gets the large
+# fraction it genuinely needs while clustered embeddings (the realistic
+# case) automatically get a small one (measured 2 of 45 lists,
 # tests/test_ann_clustered.py), instead of every corpus paying the
-# isotropic worst case.  Setting the module attr to a float (tests do)
-# pins a fixed fraction.
-NPROBE_FRAC: float | None = None
+# isotropic worst case.
 # sample-recall target for the adaptive calibration: margin over the
 # shipped ≥0.9 recall gate (tests/test_ann_recall.py) to absorb
 # sample-vs-corpus estimation error
 IVF_RECALL_TARGET = 0.92
 CAL_QUERIES = 256  # calibration query rows (first sample rows)
 
-# per-directory calibration report (k, nprobe, fraction, sample recall) —
-# observability for bench.py's ann_frontier block
-_CAL_INFO: dict[str, dict] = {}
-
 # The sf the external driver's oracle comparison runs at; the static
 # ORACLES entries embed centroids fit on THIS directory.  Tests at other
 # sf values build matched oracles via oracle_overrides().
 ORACLE_SF_DIR = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
-
-_FIT_CACHE: dict[str, tuple[int, int, list[tuple[int, list[float]]]]] = {}
 
 
 def _fit_sample(sf_dir: str) -> tuple[int, "object"]:
@@ -449,16 +442,20 @@ def _fit_sample(sf_dir: str) -> tuple[int, "object"]:
     return n, mat
 
 
-def ivf_fit(sf_dir: str) -> tuple[int, int, list[tuple[int, list[float]]]]:
+def ivf_fit(sf_dir: str) -> tuple[int, int, list[tuple[int, list[float]]], dict]:
     """Sampled k-means fit over the embeddings table → (n_vectors, nprobe,
-    [(cid, centroid)]).  Deterministic: fixed vec_id-stride sample
-    (see _fit_sample — distributed under Spark, streamed otherwise; for
-    dense 0..n-1 vec_ids both reproduce the historical positional stride
-    bit-for-bit), fixed seeds, fixed iteration count, numpy pairwise sums
-    (no threaded BLAS reductions) — the same directory always yields the
-    same literals, so Spark and the SQL oracle share one quantizer."""
-    if sf_dir in _FIT_CACHE:
-        return _FIT_CACHE[sf_dir]
+    [(cid, centroid)], calibration report), memoized in the artifact
+    registry against the directory's table fingerprint.  Deterministic:
+    fixed vec_id-stride sample (see _fit_sample — distributed under Spark,
+    streamed otherwise; for dense 0..n-1 vec_ids both reproduce the
+    historical positional stride bit-for-bit), fixed seeds, fixed
+    iteration count, numpy pairwise sums (no threaded BLAS reductions) —
+    the same tables always yield the same literals, so Spark and the SQL
+    oracle share one quantizer."""
+    return dedup.registered(None, f"ivf_fit:{sf_dir}", lambda: (_ivf_fit(sf_dir), ()))
+
+
+def _ivf_fit(sf_dir: str) -> tuple[int, int, list[tuple[int, list[float]]], dict]:
     import math
 
     import numpy as np
@@ -493,23 +490,13 @@ def ivf_fit(sf_dir: str) -> tuple[int, int, list[tuple[int, list[float]]]]:
             if len(members):
                 c = members.mean(axis=0)
                 cents[ci] = c / np.sqrt((c * c).sum())
-    if NPROBE_FRAC is not None:
-        nprobe = max(2, math.ceil(NPROBE_FRAC * k))
-        _CAL_INFO[sf_dir] = {
-            "mode": "fixed",
-            "k": k,
-            "nprobe": nprobe,
-            "frac": round(nprobe / k, 4),
-        }
-    else:
-        nprobe = _calibrate_nprobe(sf_dir, sample, cents)
-    fit = (n, nprobe, [(ci, [float(v) for v in cents[ci]]) for ci in range(k)])
-    _FIT_CACHE[sf_dir] = fit
-    return fit
+    nprobe, cal = _calibrate_nprobe(sample, cents)
+    return n, nprobe, [(ci, [float(v) for v in cents[ci]]) for ci in range(k)], cal
 
 
-def _calibrate_nprobe(sf_dir: str, sample: "object", cents: "object") -> int:
-    """Measured-recall probe calibration on the fit sample.
+def _calibrate_nprobe(sample: "object", cents: "object") -> tuple[int, dict]:
+    """Measured-recall probe calibration on the fit sample → (nprobe,
+    report of k, nprobe, fraction and sample recall).
 
     Computes, entirely on the ≤SAMPLE_CAP in-memory sample, the recall@
     TOP_K a probe count of p would achieve (for the first CAL_QUERIES
@@ -559,7 +546,7 @@ def _calibrate_nprobe(sf_dir: str, sample: "object", cents: "object") -> int:
     # query side tolerates nprobe > k (slice just truncates), but the
     # sample-recall report must index within the k-length curve
     nprobe = max(2, (int(meets[0]) + 1) if len(meets) else k)
-    _CAL_INFO[sf_dir] = {
+    return nprobe, {
         "mode": "adaptive",
         "k": k,
         "nprobe": nprobe,
@@ -568,7 +555,6 @@ def _calibrate_nprobe(sf_dir: str, sample: "object", cents: "object") -> int:
         "sample_recall": round(float(recall_at[min(nprobe, k) - 1]), 4),
         "cal_queries": nq,
     }
-    return nprobe
 
 
 def _cent_struct_array(cents: list[tuple[int, list[float]]]) -> str:
@@ -607,10 +593,8 @@ def ivf_assign_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     once per session both stops Catalyst inlining it into join inputs
     (measured 86s vs <1s for the join at sf0.1) and shares the one
     evaluation across the family."""
-    from pdf_craft_spark.queries.dedup import session_artifact
-
     def build() -> DataFrame:
-        _n, _nprobe, cents = ivf_fit(sf_dir)
+        _n, _nprobe, cents, _cal = ivf_fit(sf_dir)
         return (
             _emb(spark, sf_dir)
             .select(
@@ -626,11 +610,11 @@ def ivf_assign_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    return session_artifact(spark, f"ivf_assign:{sf_dir}", build)
+    return dedup.session_artifact(spark, f"ivf_assign:{sf_dir}", build)
 
 
 def sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _n, nprobe, cents = ivf_fit(sf_dir)
+    _n, nprobe, cents, _cal = ivf_fit(sf_dir)
     # narrow projections over the materialized assignment artifact — the
     # real IVF shape (the inverted-list assignment is a built artifact;
     # write it as a table at prod, localCheckpoint here)
@@ -680,7 +664,7 @@ def _ivf_duck_sql(sf_dir: str) -> str:
     directory, the same fold-shaped distance (list_reduce over
     list_transform is left-associated like Spark's aggregate; squared
     terms are non-negative so the 0.0 init is value-neutral)."""
-    _n, nprobe, cents = ivf_fit(sf_dir)
+    _n, nprobe, cents, _cal = ivf_fit(sf_dir)
     cent_rows = ",\n    ".join(
         "({}, [{}]::DOUBLE[])".format(cid, ", ".join(repr(float(x)) for x in vals))
         for cid, vals in cents
@@ -1178,7 +1162,7 @@ def semantic_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _semdedup_duck_sql(sf_dir: str) -> str:
-    _n, _nprobe, cents = ivf_fit(sf_dir)
+    _n, _nprobe, cents, _cal = ivf_fit(sf_dir)
     cent_rows = ",\n    ".join(
         "({}, [{}]::DOUBLE[])".format(cid, ", ".join(repr(float(x)) for x in vals))
         for cid, vals in cents
@@ -1257,15 +1241,14 @@ PQ_K = 16  # codes per subspace (4 bits)
 PQ_ITERS = 8
 PQ_SHORTLIST = 100
 
-_PQ_FIT_CACHE: dict[str, list[list[tuple[int, list[float]]]]] = {}
-
-
 def pq_fit(sf_dir: str) -> list[list[tuple[int, list[float]]]]:
     """Per-subspace k-means codebooks over the unit-normalized sample —
-    deterministic exactly like ivf_fit (same sample rule, farthest-point
-    seeding, pairwise numpy sums, fixed iterations)."""
-    if sf_dir in _PQ_FIT_CACHE:
-        return _PQ_FIT_CACHE[sf_dir]
+    deterministic and memoized exactly like ivf_fit (same sample rule,
+    farthest-point seeding, pairwise numpy sums, fixed iterations)."""
+    return dedup.registered(None, f"pq_fit:{sf_dir}", lambda: (_pq_fit(sf_dir), ()))
+
+
+def _pq_fit(sf_dir: str) -> list[list[tuple[int, list[float]]]]:
     import numpy as np
 
     _n, mat = _fit_sample(sf_dir)
@@ -1289,7 +1272,6 @@ def pq_fit(sf_dir: str) -> list[list[tuple[int, list[float]]]]:
                 if len(members):
                     cents[ci] = members.mean(axis=0)
         books.append([(ci, [float(v) for v in cents[ci]]) for ci in range(k)])
-    _PQ_FIT_CACHE[sf_dir] = books
     return books
 
 
@@ -1326,8 +1308,6 @@ def pq_codes_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session artifact: the written PQ code table (vec_id, c0..c7) —
     the interpreted subspace encode is identical in pq_topk and
     ivfpq_topk, so it runs once per session instead of once per query."""
-    from pdf_craft_spark.queries.dedup import session_artifact
-
     def build() -> DataFrame:
         books = pq_fit(sf_dir)
         base = _emb(spark, sf_dir).select(
@@ -1337,7 +1317,7 @@ def pq_codes_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return base.selectExpr("vec_id", *_pq_code_exprs(books))
 
-    return session_artifact(spark, f"pq_codes:{sf_dir}", build)
+    return dedup.session_artifact(spark, f"pq_codes:{sf_dir}", build)
 
 
 def pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1524,7 +1504,7 @@ IVFPQ_SHORTLIST = 150
 
 
 def ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _n, nprobe, cents = ivf_fit(sf_dir)
+    _n, nprobe, cents, _cal = ivf_fit(sf_dir)
     books = pq_fit(sf_dir)
     # the written IVF-PQ index = coarse list id (from the shared IVF
     # assignment artifact) + the 8-byte code (from the shared PQ code
@@ -1600,7 +1580,7 @@ def ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ivfpq_duck_sql(sf_dir: str) -> str:
-    _n, nprobe, cents = ivf_fit(sf_dir)
+    _n, nprobe, cents, _cal = ivf_fit(sf_dir)
     books = pq_fit(sf_dir)
     ivf_rows = ",\n    ".join(
         "({}, [{}]::DOUBLE[])".format(cid, ", ".join(repr(float(x)) for x in vals))

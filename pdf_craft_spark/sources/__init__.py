@@ -1,1 +1,1 @@
-from pdf_craft_spark.sources.testdata import load_table, table_path  # noqa: F401
+from pdf_craft_spark.sources.testdata import fingerprint, load_table, table_path  # noqa: F401

@@ -20,5 +20,14 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
+def fingerprint(sf_dir: str) -> tuple[tuple[str, int, int], ...]:
+    """``(name, size, mtime_ns)`` of every table under ``sf_dir`` (``()`` if
+    there is no such directory): the input identity cached artifacts key on."""
+    if not os.path.isdir(sf_dir):
+        return ()
+    tables = [e for e in os.scandir(sf_dir) if e.name.endswith(".parquet")]
+    return tuple(sorted((e.name, e.stat().st_size, e.stat().st_mtime_ns) for e in tables))
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(table_path(sf_dir, name))

@@ -62,44 +62,37 @@ def clustered_dir(tmp_path_factory):
     return str(d)
 
 
-def test_clustered_recall_at_small_probe_fraction(spark, clustered_dir, monkeypatch):
+def test_clustered_recall_at_small_probe_fraction(spark, clustered_dir):
+    """The adaptive fit probes at most a tenth of the lists on clustered
+    data, and both ANN dataflows still clear 0.9 mean recall@5 there
+    (measured: 2 of 45 lists, ivf recall 0.94, lsh recall 1.0)."""
     import pdf_craft_spark.queries.similarity as sim
 
-    monkeypatch.setattr(sim, "NPROBE_FRAC", 0.1)
-    sim._FIT_CACHE.pop(clustered_dir, None)
-    try:
-        n, nprobe, cents = sim.ivf_fit(clustered_dir)
-        k = len(cents)
-        assert n == N_VECS and k == math.ceil(math.sqrt(N_VECS))
-        assert nprobe == max(2, math.ceil(0.1 * k))  # ~5 of 45 lists
+    n, nprobe, cents, _cal = sim.ivf_fit(clustered_dir)
+    k = len(cents)
+    assert n == N_VECS and k == math.ceil(math.sqrt(N_VECS))
+    assert nprobe / k <= 0.1
 
-        rows = sim.sim_recall(spark, clustered_dir).collect()
-        by_method: dict[str, list[float]] = {}
-        for r in rows:
-            by_method.setdefault(r.method, []).append(r.recall_at_k)
-        for method, vals in by_method.items():
-            mean = sum(vals) / len(vals)
-            # isotropic corpus needs 0.65k probes for 0.9; clustered data
-            # clears it at 0.1k — the index is doing its job
-            assert mean >= 0.9, f"{method} clustered recall {mean:.2f} < 0.9"
-    finally:
-        sim._FIT_CACHE.pop(clustered_dir, None)
+    rows = sim.sim_recall(spark, clustered_dir).collect()
+    by_method: dict[str, list[float]] = {}
+    for r in rows:
+        by_method.setdefault(r.method, []).append(r.recall_at_k)
+    assert set(by_method) == {"ivf", "lsh"}
+    for method, vals in by_method.items():
+        mean = sum(vals) / len(vals)
+        # isotropic corpus needs 0.65k probes for 0.9; clustered data
+        # clears it at under 0.1k — the index is doing its job
+        assert mean >= 0.9, f"{method} clustered recall {mean:.2f} < 0.9"
 
 
-def test_clustered_adaptive_calibration_picks_small_fraction(clustered_dir, monkeypatch):
+def test_clustered_adaptive_calibration_picks_small_fraction(clustered_dir):
     """The round-5 adaptive calibration must DISCOVER the cluster
-    structure on its own: with no fixed fraction pinned, the fit picks a
-    small probe budget on clustered data (measured: 2 of 45 lists) while
-    still clearing the recall target on its sample."""
+    structure on its own: the fit picks a small probe budget on clustered
+    data (measured: 2 of 45 lists) while still clearing the recall target
+    on its sample."""
     import pdf_craft_spark.queries.similarity as sim
 
-    monkeypatch.setattr(sim, "NPROBE_FRAC", None)  # default adaptive path
-    sim._FIT_CACHE.pop(clustered_dir, None)
-    try:
-        _n, nprobe, cents = sim.ivf_fit(clustered_dir)
-        cal = sim._CAL_INFO[clustered_dir]
-        assert cal["mode"] == "adaptive"
-        assert nprobe / len(cents) <= 0.15, cal
-        assert cal["sample_recall"] >= sim.IVF_RECALL_TARGET
-    finally:
-        sim._FIT_CACHE.pop(clustered_dir, None)
+    _n, nprobe, cents, cal = sim.ivf_fit(clustered_dir)
+    assert cal["mode"] == "adaptive"
+    assert nprobe / len(cents) <= 0.15, cal
+    assert cal["sample_recall"] >= sim.IVF_RECALL_TARGET

@@ -29,9 +29,9 @@ def test_fit_sample_paths_bit_identical(spark, monkeypatch):
 
 
 def test_fit_caches_and_matches_sample(spark):
-    sim._FIT_CACHE.pop(SF_DIR, None)
-    n, nprobe, cents = sim.ivf_fit(SF_DIR)
-    assert sim.ivf_fit(SF_DIR) is sim._FIT_CACHE[SF_DIR]
+    fit = sim.ivf_fit(SF_DIR)
+    assert sim.ivf_fit(SF_DIR) is fit
+    n, nprobe, cents, _cal = fit
     assert n == 500 and nprobe >= 2
     # centroids are unit vectors (spherical k-means contract)
     for _cid, vec in cents:
@@ -55,7 +55,6 @@ def test_fit_on_degenerate_single_vector_corpus(tmp_path):
         str(tmp_path / "embeddings.parquet"),
     )
     d = str(tmp_path)
-    sim._FIT_CACHE.pop(d, None)
-    n, nprobe, cents = sim.ivf_fit(d)
+    n, nprobe, cents, cal = sim.ivf_fit(d)
     assert n == 1 and len(cents) == 1 and nprobe == 2
-    assert sim._CAL_INFO[d]["mode"] == "adaptive"
+    assert cal["mode"] == "adaptive"

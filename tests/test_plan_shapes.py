@@ -958,3 +958,46 @@ def test_env_knobs_are_allowlisted():
         "SPARK_GRAFT_ORACLE_SF_DIR",
         "PDF_CRAFT_SPARK_ASSERT_UNIQUE_DOCS",
     }
+
+
+def test_module_memos_are_allowlisted():
+    """Every cross-query memo lives in the one artifact registry
+    (queries/dedup.py), keyed on its session and its input fingerprint; a
+    module-level empty container anywhere else is a new memo that can
+    outlive its inputs.  The registry tables of queries and oracles, and
+    textops' precomputed weight list, are filled once at import."""
+    import ast
+    import pathlib
+
+    def empty(node):
+        if isinstance(node, ast.Dict):
+            return not node.keys
+        if isinstance(node, (ast.List, ast.Set)):
+            return not node.elts
+        return (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Name)
+            and node.func.id in {"set", "dict", "list"}
+            and not node.args
+            and not node.keywords
+        )
+
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "pdf_craft_spark"
+    found = set()
+    for path in sorted(pkg.rglob("*.py")):
+        for top in ast.parse(path.read_text()).body:
+            if isinstance(top, ast.Assign):
+                targets, value = top.targets, top.value
+            elif isinstance(top, ast.AnnAssign) and top.value is not None:
+                targets, value = [top.target], top.value
+            else:
+                continue
+            if empty(value):
+                found.update(
+                    f"{path.stem}.{t.id}" for t in targets if isinstance(t, ast.Name)
+                )
+    allowed = {"dedup._REGISTRY", "dedup.PROTECTED_RDD_IDS", "textops.RBO_W"}
+    unlisted = {
+        name for name in found - allowed if name.split(".")[1] not in {"QUERIES", "ORACLES"}
+    }
+    assert not unlisted, f"keep cross-query memos in dedup.registered: {sorted(unlisted)}"
