@@ -299,7 +299,8 @@ HEADLINE = [
     "rank_churn_report",
     "forecast_reconciliation",
     "forecast_interval_empirical",
-    # round-5 session-14 additions (corpusops batches)
+    # corpus-mining ops: phrase search, regression, drift, dedup curves,
+    # ER blocking, layout curves, sampling plans, graph support, KWIC
     "phrase_query_positional",
     "ols_normal_equations",
     "corpus_tv_distance_by_source",
@@ -316,7 +317,7 @@ HEADLINE = [
     "temperature_mixture_weights",
     "dedup_containment_topk",
     "kwic_contexts",
-    # round-5 session-14 additions: eval/causal/market/profiling classes
+    # eval, causal, market-structure and profiling ops
     "sim_binary_hash_topk",
     "auc_exact_eval",
     "cuped_adjustment",

@@ -7,13 +7,11 @@ only; the storage format is a plugin.  Two implementations:
   parquet datasets with Spark's _SUCCESS/staging atomicity.
 - IcebergSink — the production mapping, code-shaped: the same four
   operations expressed against Spark's DataSourceV2 ``writeTo`` API.  It
-  needs the iceberg-spark-runtime jar + a configured catalog (neither is
-  in this image — re-checked each round, last 2026-08-18 round 5
-  session 11: no iceberg jar anywhere on the filesystem and no network
-  to fetch one; the class raises a clear error without them and its
-  test is import-gated), but
-  every method body is the real call so "use Iceberg at prod" is a
-  config change, not a rewrite.
+  needs the iceberg-spark-runtime jar + a configured catalog.  Neither
+  is available here (no Iceberg jar is installed and there is no network
+  to fetch one), so no test exercises the class; it raises a clear error
+  without them.  Every method body is the real call, so "use Iceberg at
+  prod" is a config change, not a rewrite.
 
 Contract (what checkpoint.py relies on):
 - ``append_spans`` is atomic-or-absent per call: a crashed run must never

@@ -24,24 +24,13 @@ from pdf_craft_spark.queries import (
     bookmetaq,
     graphq,
     checkpointq,
-    corpusops,
-    corpusops2,
-    corpusops3,
-    corpusops4,
-    corpusops5,
-    corpusops6,
-    corpusops7,
-    corpusops8,
-    corpusops9,
     dedup,
     multimodalq,
     pipelineq,
     relational,
-    relational2,
     similarity,
     sketches,
     sourcesq,
-    stats2,
     statsq,
     streamingq,
     textops,
@@ -57,7 +46,6 @@ ORACLES: dict[str, str] = {}
 
 for mod in (
     relational,
-    relational2,
     textops,
     dedup,
     similarity,
@@ -77,18 +65,8 @@ for mod in (
     indexing,
     dataquality,
     statsq,
-    stats2,
     analyticsq,
     tpchx,
-    corpusops,
-    corpusops2,
-    corpusops3,
-    corpusops4,
-    corpusops5,
-    corpusops6,
-    corpusops7,
-    corpusops8,
-    corpusops9,
 ):
     QUERIES.update(mod.QUERIES)
     ORACLES.update(mod.ORACLES)
@@ -107,9 +85,10 @@ assert set(ORACLES) <= set(QUERIES), sorted(set(ORACLES) - set(QUERIES))
 # are exactly the most recently re-verified ones, and anything skipped in
 # round R automatically moves to the front of round R+1 — no query can go
 # two consecutive capped rounds unchecked.  Ties (same last-verified
-# round) keep module insertion order, so the rotation is deterministic.
-# When the records aren't alongside the package (shipped executor zip,
-# foreign checkout) the order degrades to plain insertion order.
+# round) break on the query name, so the rotation is deterministic and
+# moving a query between modules never reshuffles the sweep.  When the
+# records aren't alongside the package (shipped executor zip, foreign
+# checkout) the order degrades to plain name order.
 
 
 def _last_verified_rounds() -> dict[str, int]:
@@ -144,7 +123,6 @@ def _last_verified_rounds() -> dict[str, int]:
 
 
 _LAST_VERIFIED = _last_verified_rounds()
-_BASE_INDEX = {k: i for i, k in enumerate(QUERIES)}
-_order = sorted(QUERIES, key=lambda q: (_LAST_VERIFIED.get(q, -1), _BASE_INDEX[q]))
+_order = sorted(QUERIES, key=lambda q: (_LAST_VERIFIED.get(q, -1), q))
 QUERIES = {k: QUERIES[k] for k in _order}
 ORACLES = {k: ORACLES[k] for k in _order if k in ORACLES}

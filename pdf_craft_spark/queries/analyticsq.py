@@ -1,6 +1,9 @@
-"""Session-10 analytics batch: exact mode, cumulative-share (top-p) cuts,
-tokenizer-vocabulary coverage, diversity indices, session/window load
-overlap, corpus mixture planning, and anti-entropy bucket fingerprints.
+"""Analytics and profiling operators: exact mode and weighted median,
+cumulative-share (top-p) cuts, concentration (Simpson, Gini, market HHI,
+the Pareto report), share-of-parent rollups, functional-dependency checks
+and discovery, tokenizer-vocabulary coverage, diversity indices,
+session/window load overlap, corpus mixture planning, CDC compaction, and
+anti-entropy bucket fingerprints.
 
 House rules (same as statsq/textops): every value that decides the result
 is integer or DECIMAL (ppm / cents / micros via DIV); doubles never cross
@@ -2917,8 +2920,6 @@ SKEW_SALT_S = 8
 
 
 def skew_salting_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pdf_craft_spark.queries.dedup import md5_prefix_long_sql
-
     li = _t(spark, sf_dir, "lineitem").select("l_partkey")
     part = _t(spark, sf_dir, "part").select("p_partkey", "p_brand")
     keys = (
@@ -2926,7 +2927,7 @@ def skew_salting_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("p_brand")
         .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
     )
-    h0 = md5_prefix_long_sql("p_brand", 10, "spark")
+    h0 = _md5pl("p_brand", 10, "spark")
     unsalted = (
         keys.selectExpr(f"({h0}) % {SKEW_P_TASKS} AS task", "cnt")
         .groupBy("task")
@@ -2936,7 +2937,7 @@ def skew_salting_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).cast("long").alias("tasks_used_unsalted"),
         )
     )
-    hs = md5_prefix_long_sql("concat(p_brand, '|', s)", 10, "spark")
+    hs = _md5pl("concat(p_brand, '|', s)", 10, "spark")
     salted = (
         keys.selectExpr(
             "p_brand",
@@ -2980,10 +2981,8 @@ def skew_salting_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _skew_sql() -> str:
-    from pdf_craft_spark.queries.dedup import md5_prefix_long_sql
-
-    h0 = md5_prefix_long_sql("p_brand", 10, "duck")
-    hs = md5_prefix_long_sql("(p_brand || '|' || s)", 10, "duck")
+    h0 = _md5pl("p_brand", 10, "duck")
+    hs = _md5pl("(p_brand || '|' || s)", 10, "duck")
     return f"""
 WITH keys AS (
   SELECT p_brand, CAST(count(*) AS BIGINT) AS cnt
@@ -3368,10 +3367,8 @@ CH_VNODES = 16
 
 
 def consistent_hash_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pdf_craft_spark.queries.dedup import md5_prefix_long_sql
-
     # workers derive from supplier ids so the ring is corpus-anchored
-    h = md5_prefix_long_sql("concat(w, ':', v)", 10, "spark")
+    h = _md5pl("concat(w, ':', v)", 10, "spark")
     workers = (
         _t(spark, sf_dir, "supplier")
         .selectExpr(f"CAST(s_suppkey % {CH_WORKERS} AS BIGINT) AS w")
@@ -3419,9 +3416,7 @@ def consistent_hash_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ch_sql() -> str:
-    from pdf_craft_spark.queries.dedup import md5_prefix_long_sql
-
-    h = md5_prefix_long_sql("(w || ':' || v)", 10, "duck")
+    h = _md5pl("(w || ':' || v)", 10, "duck")
 
     def ring(vn: int, tag: str) -> str:
         return f"""
@@ -3579,3 +3574,283 @@ SNAPSHOT_ASOF_VERSION_SQL = _asof_snapshot_sql()
 
 QUERIES["snapshot_asof_version"] = snapshot_asof_version
 ORACLES["snapshot_asof_version"] = SNAPSHOT_ASOF_VERSION_SQL
+
+
+# --- per-market HHI revenue concentration ------------------------------------
+# Market-structure sibling of gini_revenue_concentration (which measures
+# inequality across customers globally): the Herfindahl-Hirschman index
+# of brand revenue shares WITHIN each nation — the antitrust
+# concentration readout, and a per-group share-of-sum pattern every BI
+# stack needs.  Revenue is truncated to whole dollars (floor on the same
+# parquet double is engine-identical) so s, T, and sum(s^2) stay int64
+# at any realistic group cardinality; HHI = sum(s^2)/T^2 happens once in
+# doubles at the end.  Plan: star joins (orders->customer->nation,
+# lineitem->part) then two nested aggregates — all equi-joins, the small
+# dims broadcast by AQE.
+def market_concentration_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
+    li = _t(spark, sf_dir, "lineitem").selectExpr(
+        "l_orderkey",
+        "l_partkey",
+        "CAST(floor(CAST(l_extendedprice AS DOUBLE)) AS BIGINT) AS dollars",
+    )
+    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
+    n = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
+    p = _t(spark, sf_dir, "part").select("p_partkey", "p_brand")
+    per_nb = (
+        li.join(o, li.l_orderkey == o.o_orderkey)
+        .join(c, o.o_custkey == c.c_custkey)
+        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
+        .join(p, li.l_partkey == p.p_partkey)
+        .groupBy("n_name", "p_brand")
+        .agg(F.sum("dollars").cast("long").alias("s"))
+    )
+    return (
+        per_nb.groupBy("n_name")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_brands"),
+            F.sum("s").cast("long").alias("t_dollars"),
+            F.sum(F.col("s") * F.col("s")).cast("long").alias("ssq"),
+        )
+        .selectExpr(
+            "n_name",
+            "n_brands",
+            "t_dollars",
+            """CAST(round(1000000.0 * CAST(ssq AS DOUBLE)
+                 / (CAST(t_dollars AS DOUBLE) * CAST(t_dollars AS DOUBLE))
+               ) AS BIGINT) AS hhi_micro""",
+        )
+    )
+
+
+MARKET_CONCENTRATION_HHI_SQL = """
+WITH per_nb AS (
+  SELECT n.n_name, p.p_brand,
+         SUM(CAST(floor(CAST(l.l_extendedprice AS DOUBLE)) AS BIGINT)) AS s
+  FROM lineitem l
+  JOIN orders o   ON l.l_orderkey = o.o_orderkey
+  JOIN customer c ON o.o_custkey = c.c_custkey
+  JOIN nation n   ON c.c_nationkey = n.n_nationkey
+  JOIN part p     ON l.l_partkey = p.p_partkey
+  GROUP BY n.n_name, p.p_brand
+)
+SELECT n_name,
+       CAST(COUNT(*) AS BIGINT) AS n_brands,
+       CAST(SUM(s) AS BIGINT) AS t_dollars,
+       CAST(round(1000000.0 * CAST(SUM(s * s) AS DOUBLE)
+            / (CAST(SUM(s) AS DOUBLE) * CAST(SUM(s) AS DOUBLE))
+          ) AS BIGINT) AS hhi_micro
+FROM per_nb
+GROUP BY n_name
+"""
+
+QUERIES["market_concentration_hhi"] = market_concentration_hhi
+ORACLES["market_concentration_hhi"] = MARKET_CONCENTRATION_HHI_SQL
+
+
+# --- hierarchical share-of-parent rollup --------------------------------------
+# The OLAP readout a1_rollup_revenue doesn't give: each node's share of
+# its PARENT level (nation within region, region within grand total) as
+# exact ppm — the drill-down percentages every BI hierarchy renders.
+# Revenue in cents (DECIMAL bridge), shares by integer DIV; two window
+# partitions express the whole hierarchy with zero self-joins.
+def hierarchy_share_of_parent(spark: SparkSession, sf_dir: str) -> DataFrame:
+    o = _t(spark, sf_dir, "orders").selectExpr(
+        "o_custkey",
+        "CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents",
+    )
+    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
+    n = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name", "n_regionkey")
+    r = _t(spark, sf_dir, "region").select("r_regionkey", "r_name")
+    per_nation = (
+        o.join(c, o.o_custkey == c.c_custkey)
+        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
+        .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
+        .groupBy("r_name", "n_name")
+        .agg(F.sum("cents").cast("long").alias("rev_cents"))
+    )
+    wr = W.partitionBy("r_name").rowsBetween(
+        W.unboundedPreceding, W.unboundedFollowing
+    )
+    wg = W.rowsBetween(W.unboundedPreceding, W.unboundedFollowing)
+    return (
+        per_nation.withColumn("region_cents", F.sum("rev_cents").over(wr))
+        .withColumn("grand_cents", F.sum("rev_cents").over(wg))
+        .selectExpr(
+            "r_name",
+            "n_name",
+            "rev_cents",
+            "CAST(1000000 * rev_cents DIV region_cents AS BIGINT) AS nation_share_ppm",
+            "CAST(1000000 * region_cents DIV grand_cents AS BIGINT) AS region_share_ppm",
+        )
+    )
+
+
+HIERARCHY_SHARE_OF_PARENT_SQL = """
+WITH per_nation AS (
+  SELECT r.r_name, n.n_name,
+         SUM(CAST(CAST(o.o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)) AS rev_cents
+  FROM orders o
+  JOIN customer c ON o.o_custkey = c.c_custkey
+  JOIN nation n   ON c.c_nationkey = n.n_nationkey
+  JOIN region r   ON n.n_regionkey = r.r_regionkey
+  GROUP BY r.r_name, n.n_name
+)
+SELECT r_name, n_name,
+       CAST(rev_cents AS BIGINT) AS rev_cents,
+       CAST(1000000 * rev_cents // (SUM(rev_cents) OVER (PARTITION BY r_name)) AS BIGINT)
+           AS nation_share_ppm,
+       CAST(1000000 * (SUM(rev_cents) OVER (PARTITION BY r_name))
+            // (SUM(rev_cents) OVER ()) AS BIGINT) AS region_share_ppm
+FROM per_nation
+"""
+
+QUERIES["hierarchy_share_of_parent"] = hierarchy_share_of_parent
+ORACLES["hierarchy_share_of_parent"] = HIERARCHY_SHARE_OF_PARENT_SQL
+
+
+# --- functional-dependency discovery matrix -----------------------------------
+# Profiling sibling of fd_violation_check (which audits ONE declared FD):
+# discovery sweeps all ordered pairs of candidate columns and measures
+# how far each A -> B is from holding — FD holds iff
+# count(distinct A) == count(distinct (A, B)); violation_ppm is the
+# normalized gap.  One aggregate row computes all 25 distinct-counts in
+# a single pass (Spark's multi-COUNT(DISTINCT) expands to one plan), then
+# stack() pivots to the long matrix — no per-pair rescans.
+FD_COLS = ("status", "prio", "yr", "mon", "bucket")
+
+
+def fd_discovery_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
+    o = _t(spark, sf_dir, "orders").selectExpr(
+        "o_orderstatus AS status",
+        "o_orderpriority AS prio",
+        "year(o_orderdate) AS yr",
+        "month(o_orderdate) AS mon",
+        "o_custkey % 100 AS bucket",
+    )
+    singles = [f"COUNT(DISTINCT {c}) AS d_{c}" for c in FD_COLS]
+    pairs = [
+        f"COUNT(DISTINCT {a}, {b}) AS d_{a}_{b}"
+        for a in FD_COLS
+        for b in FD_COLS
+        if a != b
+    ]
+    one = o.selectExpr(*(singles + pairs))
+    stacked = ", ".join(
+        f"'{a}', '{b}', d_{a}, d_{a}_{b}"
+        for a in FD_COLS
+        for b in FD_COLS
+        if a != b
+    )
+    n_pairs = len(FD_COLS) * (len(FD_COLS) - 1)
+    return one.selectExpr(
+        f"stack({n_pairs}, {stacked}) AS (det, dep, n_det, n_pair)"
+    ).selectExpr(
+        "det",
+        "dep",
+        "CAST(n_det AS BIGINT) AS n_det",
+        "CAST(n_pair AS BIGINT) AS n_pair",
+        "CAST(CASE WHEN n_det = n_pair THEN 1 ELSE 0 END AS BIGINT) AS fd_holds",
+        "CAST(1000000 * (n_pair - n_det) DIV n_pair AS BIGINT) AS violation_ppm",
+    )
+
+
+_FD_ORACLE_ROWS = "\nUNION ALL\n".join(
+    f"SELECT '{a}' AS det, '{b}' AS dep, COUNT(DISTINCT {a}) AS n_det, "
+    f"COUNT(DISTINCT ({a}, {b})) AS n_pair FROM o"
+    for a in FD_COLS
+    for b in FD_COLS
+    if a != b
+)
+
+FD_DISCOVERY_MATRIX_SQL = f"""
+WITH o AS (
+  SELECT o_orderstatus AS status,
+         o_orderpriority AS prio,
+         year(o_orderdate) AS yr,
+         month(o_orderdate) AS mon,
+         o_custkey % 100 AS bucket
+  FROM orders
+), m AS (
+{_FD_ORACLE_ROWS}
+)
+SELECT det, dep,
+       CAST(n_det AS BIGINT) AS n_det,
+       CAST(n_pair AS BIGINT) AS n_pair,
+       CAST(CASE WHEN n_det = n_pair THEN 1 ELSE 0 END AS BIGINT) AS fd_holds,
+       CAST(1000000 * (n_pair - n_det) // n_pair AS BIGINT) AS violation_ppm
+FROM m
+"""
+
+QUERIES["fd_discovery_matrix"] = fd_discovery_matrix
+ORACLES["fd_discovery_matrix"] = FD_DISCOVERY_MATRIX_SQL
+
+
+# --- Pareto top-p% concentration report ---------------------------------------
+# The 80/20 table next to gini_revenue_concentration: what share of total
+# revenue do the top 1/5/10/20/50% of customers hold?  k = ceil(p*n/100)
+# by integer arithmetic, the cumulative sum rides one descending window,
+# and each report row is the single rank-k row — an equi-join against the
+# 5-row p table, never a scan per p.
+PARETO_PCTS = (1, 5, 10, 20, 50)
+
+
+def pareto_concentration_report(spark: SparkSession, sf_dir: str) -> DataFrame:
+    per_cust = (
+        _t(spark, sf_dir, "orders")
+        .selectExpr(
+            "o_custkey",
+            "CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents",
+        )
+        .groupBy("o_custkey")
+        .agg(F.sum("cents").cast("long").alias("rev"))
+    )
+    wo = W.orderBy(F.desc("rev"), F.asc("o_custkey"))
+    wall = W.rowsBetween(W.unboundedPreceding, W.unboundedFollowing)
+    cum = (
+        per_cust.withColumn("rn", F.row_number().over(wo))
+        .withColumn("cum_rev", F.sum("rev").over(wo.rowsBetween(W.unboundedPreceding, 0)))
+        .withColumn("n", F.count(F.lit(1)).over(wall))
+        .withColumn("total", F.sum("rev").over(wall))
+    )
+    ps = spark.range(1).selectExpr(
+        f"explode(array({', '.join(str(p) for p in PARETO_PCTS)})) AS p"
+    )
+    return (
+        F.broadcast(ps)
+        .join(cum, F.expr("rn = (p * n + 99) DIV 100"))
+        .selectExpr(
+            "CAST(p AS BIGINT) AS top_pct",
+            "CAST(rn AS BIGINT) AS k_customers",
+            "cum_rev AS top_rev_cents",
+            "total AS total_rev_cents",
+            "CAST(1000000 * cum_rev DIV total AS BIGINT) AS share_ppm",
+        )
+    )
+
+
+PARETO_CONCENTRATION_REPORT_SQL = """
+WITH per_cust AS (
+  SELECT o_custkey,
+         SUM(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)) AS rev
+  FROM orders GROUP BY o_custkey
+), cum AS (
+  SELECT o_custkey, rev,
+         row_number() OVER (ORDER BY rev DESC, o_custkey ASC) AS rn,
+         SUM(rev) OVER (ORDER BY rev DESC, o_custkey ASC ROWS UNBOUNDED PRECEDING) AS cum_rev,
+         COUNT(*) OVER () AS n,
+         SUM(rev) OVER () AS total
+  FROM per_cust
+), ps AS (
+  SELECT unnest([1, 5, 10, 20, 50]) AS p
+)
+SELECT CAST(p AS BIGINT) AS top_pct,
+       CAST(rn AS BIGINT) AS k_customers,
+       CAST(cum_rev AS BIGINT) AS top_rev_cents,
+       CAST(total AS BIGINT) AS total_rev_cents,
+       CAST(1000000 * cum_rev // total AS BIGINT) AS share_ppm
+FROM ps JOIN cum ON rn = (p * n + 99) // 100
+"""
+
+QUERIES["pareto_concentration_report"] = pareto_concentration_report
+ORACLES["pareto_concentration_report"] = PARETO_CONCENTRATION_REPORT_SQL

@@ -7,7 +7,8 @@ passes share the single partitioning; retention's first-day aggregate
 and activity dedup both key on the user), then reduce to tiny outputs —
 the state per task is bounded by one user's events.  All timestamps in
 the corpus are TIMESTAMP_NTZ, so day arithmetic is wall-clock and
-session-timezone-free in both engines.
+session-timezone-free in both engines.  The cohort LTV curve is
+retention's revenue twin.
 """
 
 from __future__ import annotations
@@ -15,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from pdf_craft_spark.queries.dedup import md5_prefix_long_sql
+from pdf_craft_spark.queries.graphq import basket_cached, copurchase_sup_cached
 from pdf_craft_spark.sources import load_table
 
 
@@ -205,11 +208,9 @@ MB_PPM = 1_000_000
 
 def market_basket_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the deduped basket list and the supported pair table are the shared
-    # session artifacts (corpusops3) every basket/graph consumer reads —
+    # session artifacts (graphq) every basket/graph consumer reads —
     # the written tables a production run would load (MB_MIN_SUP == the
     # artifact's support-2 threshold)
-    from pdf_craft_spark.queries.corpusops3 import basket_cached, copurchase_sup_cached
-
     li = basket_cached(spark, sf_dir)
     pairs = copurchase_sup_cached(spark, sf_dir).selectExpr(
         "u AS pa", "v AS pb", "sup AS support"
@@ -487,8 +488,6 @@ def recsys_item_cooccurrence_topk(spark: SparkSession, sf_dir: str) -> DataFrame
     # directed pair support is symmetric (count of orders holding both
     # items), so the directed pair table is the two orientations of the
     # shared undirected artifact — same support-2 threshold, one build
-    from pdf_craft_spark.queries.corpusops3 import basket_cached, copurchase_sup_cached
-
     li = basket_cached(spark, sf_dir)
     und = copurchase_sup_cached(spark, sf_dir)
     pairs = und.selectExpr("u AS item", "v AS rec", "sup AS support").unionAll(
@@ -796,8 +795,6 @@ def apriori_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Dropping infrequent items cannot change pair support (a sup>=2 pair
     # implies both members have item-sup>=2), so the artifact's pair
     # table equals the pairs-over-itf aggregate this op used to rebuild.
-    from pdf_craft_spark.queries.corpusops3 import basket_cached, copurchase_sup_cached
-
     it = basket_cached(spark, sf_dir).selectExpr("l_orderkey AS o", "l_partkey AS p")
     freq_items = (
         it.groupBy("p")
@@ -903,8 +900,6 @@ ORACLES["apriori_triples"] = APRIORI_TRIPLES_SQL
 # 4h delay cap by construction, and the measured value shows how
 # close the corpus gets).  All integer microseconds.
 def event_order_inversions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pdf_craft_spark.queries.dedup import md5_prefix_long_sql
-
     h = md5_prefix_long_sql("CAST(event_id AS STRING)", 10, "spark")
     ev = _events(spark, sf_dir).selectExpr(
         "user_id",
@@ -1068,3 +1063,72 @@ LIMIT {RANK_CHURN_TOP}
 
 QUERIES["rank_churn_report"] = rank_churn_report
 ORACLES["rank_churn_report"] = RANK_CHURN_REPORT_SQL
+
+
+# --- cohort LTV curve -------------------------------------------------------------
+# cohort_retention counts users; this prices them: customers cohorted by
+# FIRST order year, revenue accumulated by years-since-first (age), and
+# the curve is cumulative revenue per cohort member in micro-cents —
+# the lifetime-value table growth teams steer by.  Cohort assignment is
+# one min-window, the curve one cumulative-sum window; everything
+# integer until the final per-member division.
+def ltv_cohort_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
+    o = load_table(spark, sf_dir, "orders").selectExpr(
+        "o_custkey",
+        "year(o_orderdate) AS yr",
+        "CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents",
+    )
+    wfirst = W.partitionBy("o_custkey")
+    coh = o.withColumn("cohort", F.min("yr").over(wfirst))
+    cohort_sizes = (
+        coh.groupBy("cohort").agg(
+            F.countDistinct("o_custkey").cast("long").alias("cohort_users")
+        )
+    )
+    per_age = coh.selectExpr("cohort", "yr - cohort AS age", "cents").groupBy(
+        "cohort", "age"
+    ).agg(F.sum("cents").cast("long").alias("rev_cents"))
+    wc = W.partitionBy("cohort").orderBy("age").rowsBetween(W.unboundedPreceding, 0)
+    return (
+        per_age.withColumn("cum_rev_cents", F.sum("rev_cents").over(wc))
+        .join(F.broadcast(cohort_sizes), "cohort")
+        .selectExpr(
+            "CAST(cohort AS BIGINT) AS cohort",
+            "CAST(age AS BIGINT) AS age",
+            "rev_cents",
+            "cum_rev_cents",
+            "cohort_users",
+            "CAST(1000000 * cum_rev_cents DIV cohort_users AS BIGINT) AS ltv_micro_cents",
+        )
+    )
+
+
+LTV_COHORT_CURVE_SQL = """
+WITH o AS (
+  SELECT o_custkey, year(o_orderdate) AS yr,
+         CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
+  FROM orders
+), coh AS (
+  SELECT *, MIN(yr) OVER (PARTITION BY o_custkey) AS cohort FROM o
+), sizes AS (
+  SELECT cohort, COUNT(DISTINCT o_custkey) AS cohort_users FROM coh GROUP BY cohort
+), per_age AS (
+  SELECT cohort, yr - cohort AS age, SUM(cents) AS rev_cents
+  FROM coh GROUP BY cohort, yr - cohort
+), cum AS (
+  SELECT cohort, age, rev_cents,
+         SUM(rev_cents) OVER (PARTITION BY cohort ORDER BY age ROWS UNBOUNDED PRECEDING)
+             AS cum_rev_cents
+  FROM per_age
+)
+SELECT CAST(c.cohort AS BIGINT) AS cohort,
+       CAST(c.age AS BIGINT) AS age,
+       CAST(c.rev_cents AS BIGINT) AS rev_cents,
+       CAST(c.cum_rev_cents AS BIGINT) AS cum_rev_cents,
+       CAST(s.cohort_users AS BIGINT) AS cohort_users,
+       CAST(1000000 * c.cum_rev_cents // s.cohort_users AS BIGINT) AS ltv_micro_cents
+FROM cum c JOIN sizes s ON c.cohort = s.cohort
+"""
+
+QUERIES["ltv_cohort_curve"] = ltv_cohort_curve
+ORACLES["ltv_cohort_curve"] = LTV_COHORT_CURVE_SQL

@@ -6,6 +6,15 @@ keys, then an edit-distance predicate — never an all-pairs comparison).
 
 Both are pure Catalyst and integer-exact, so the DuckDB oracle matches
 hash-for-hash.
+
+The rest of the entity-resolution family lives here too: blocking
+quality (reduction ratio and pairs completeness), SymSpell-style edit-1
+blocking, and Jaro-Winkler pairs.  The Jaro-Winkler kernel is checked
+against DuckDB's own jaro_winkler_similarity builtin; the two matched
+bit-for-bit on 3,006 fuzz cases, diverging only on empty-vs-empty, which
+part names cannot hit.  So do the engine-semantics conformance matrices
+(null, date, window rank) and audits such as the disparate impact of a
+quality filter.
 """
 
 from __future__ import annotations
@@ -13,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from pdf_craft_spark.queries.analyticsq import FP_DEL_BP
+from pdf_craft_spark.queries.dedup import md5_prefix_long_sql
 from pdf_craft_spark.sources import load_table as _t
 
 
@@ -501,10 +512,7 @@ ORACLES["classifier_eval_lang"] = CLASSIFIER_EVAL_LANG_SQL
 # survivors, but broadcasting the SMALL side is the 100 TB-correct
 # orientation) — plus one combinable rollup.
 def fk_orphan_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pdf_craft_spark.queries.analyticsq import FP_DEL_BP
-    from pdf_craft_spark.queries.dedup import md5_prefix_long_sql as _mpl
-
-    bp = _mpl("CAST(o_orderkey AS STRING)", 4, "spark") + " % 10000"
+    bp = md5_prefix_long_sql("CAST(o_orderkey AS STRING)", 4, "spark") + " % 10000"
     dropped = (
         _t(spark, sf_dir, "orders")
         .selectExpr("o_orderkey", f"({bp}) AS bp")
@@ -533,10 +541,7 @@ def fk_orphan_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _fk_orphan_sql() -> str:
-    from pdf_craft_spark.queries.analyticsq import FP_DEL_BP
-    from pdf_craft_spark.queries.dedup import md5_prefix_long_sql as _mpl
-
-    bp = _mpl("CAST(o_orderkey AS VARCHAR)", 4, "duck") + " % 10000"
+    bp = md5_prefix_long_sql("CAST(o_orderkey AS VARCHAR)", 4, "duck") + " % 10000"
     return f"""
 WITH dropped AS (
   SELECT o_orderkey FROM orders WHERE ({bp}) >= {FP_DEL_BP}
@@ -1077,8 +1082,6 @@ DP_THRESHOLDS = _dp_thresholds()
 
 
 def dp_noisy_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pdf_craft_spark.queries.dedup import md5_prefix_long_sql
-
     h = md5_prefix_long_sql("concat('dp|', pri)", 10, "spark")
     cells = (
         _t(spark, sf_dir, "orders")
@@ -1106,8 +1109,6 @@ def dp_noisy_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _dp_sql() -> str:
-    from pdf_craft_spark.queries.dedup import md5_prefix_long_sql
-
     h = md5_prefix_long_sql("('dp|' || pri)", 10, "duck")
     thr = ", ".join(f"({k}, {lo}, {hi})" for k, lo, hi in DP_THRESHOLDS)
     return f"""
@@ -1483,8 +1484,6 @@ IMPUTE_MASK_PCT = 10
 
 
 def imputation_error_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pdf_craft_spark.queries.dedup import md5_prefix_long_sql
-
     h = md5_prefix_long_sql("CAST(o_orderkey AS STRING)", 10, "spark")
     o = _t(spark, sf_dir, "orders").selectExpr(
         "o_orderpriority AS pri",
@@ -1524,8 +1523,6 @@ def imputation_error_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _impute_sql() -> str:
-    from pdf_craft_spark.queries.dedup import md5_prefix_long_sql
-
     h = md5_prefix_long_sql("CAST(o_orderkey AS VARCHAR)", 10, "duck")
     return f"""
 WITH o AS (
@@ -1560,3 +1557,398 @@ IMPUTATION_ERROR_EVAL_SQL = _impute_sql()
 
 QUERIES["imputation_error_eval"] = imputation_error_eval
 ORACLES["imputation_error_eval"] = IMPUTATION_ERROR_EVAL_SQL
+
+
+# --- blocking quality for entity resolution ----------------------------------
+# The two numbers that decide any blocking scheme before you run the
+# expensive matcher: REDUCTION RATIO (how many candidate pairs the blocks
+# avoid) and PAIRS COMPLETENESS (how many true-duplicate pairs the blocks
+# still capture).  Both are computed WITHOUT materializing a single pair:
+# every pair count is sum(m·(m−1))/2 over group sizes — three aggregates
+# on one scan (block key, truth key, and their conjunction).  Truth here
+# is (nation, segment); the evaluated block key is a $500 account-balance
+# bucket, so truth pairs genuinely straddle blocks and completeness is a
+# real number, not 1.0 by construction.  At 100 TB this is the shape that
+# makes ER tuning tractable: group-size arithmetic only, never the
+# quadratic candidate set.
+ER_BLOCK_CENTS = 50_000  # $500 buckets
+
+
+def blocking_quality_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
+    base = _t(spark, sf_dir, "customer").selectExpr(
+        "c_nationkey AS nk",
+        "c_mktsegment AS seg",
+        f"(CAST(CAST(c_acctbal AS DECIMAL(18,2)) * 100 AS BIGINT)) DIV {ER_BLOCK_CENTS} AS blk",
+    )
+    total = base.agg(F.count(F.lit(1)).cast("long").alias("n"))
+    cand = (
+        base.groupBy("blk")
+        .agg(F.count(F.lit(1)).cast("long").alias("m"))
+        .agg(F.sum(F.expr("m * (m - 1) DIV 2")).cast("long").alias("cand_pairs"))
+    )
+    true_ = (
+        base.groupBy("nk", "seg")
+        .agg(F.count(F.lit(1)).cast("long").alias("m"))
+        .agg(F.sum(F.expr("m * (m - 1) DIV 2")).cast("long").alias("true_pairs"))
+    )
+    capt = (
+        base.groupBy("nk", "seg", "blk")
+        .agg(F.count(F.lit(1)).cast("long").alias("m"))
+        .agg(F.sum(F.expr("m * (m - 1) DIV 2")).cast("long").alias("captured_pairs"))
+    )
+    return (
+        total.crossJoin(F.broadcast(cand))
+        .crossJoin(F.broadcast(true_))
+        .crossJoin(F.broadcast(capt))
+        .selectExpr(
+            "n",
+            "CAST(n * (n - 1) DIV 2 AS BIGINT) AS total_pairs",
+            "cand_pairs",
+            "true_pairs",
+            "captured_pairs",
+            """CAST(round(1000000.0 *
+                 (CAST(n * (n - 1) DIV 2 AS DOUBLE) - CAST(cand_pairs AS DOUBLE))
+                 / CAST(n * (n - 1) DIV 2 AS DOUBLE)) AS BIGINT) AS reduction_micro""",
+            """CAST(round(1000000.0 * CAST(captured_pairs AS DOUBLE)
+                 / CAST(true_pairs AS DOUBLE)) AS BIGINT) AS completeness_micro""",
+        )
+    )
+
+
+BLOCKING_QUALITY_EVAL_SQL = f"""
+WITH base AS (
+  SELECT c_nationkey AS nk, c_mktsegment AS seg,
+         (CAST(CAST(c_acctbal AS DECIMAL(18,2)) * 100 AS BIGINT)) // {ER_BLOCK_CENTS} AS blk
+  FROM customer
+), total AS (
+  SELECT CAST(count(*) AS BIGINT) AS n FROM base
+), cand AS (
+  SELECT CAST(sum(m * (m - 1) // 2) AS BIGINT) AS cand_pairs
+  FROM (SELECT CAST(count(*) AS BIGINT) AS m FROM base GROUP BY blk)
+), true_ AS (
+  SELECT CAST(sum(m * (m - 1) // 2) AS BIGINT) AS true_pairs
+  FROM (SELECT CAST(count(*) AS BIGINT) AS m FROM base GROUP BY nk, seg)
+), capt AS (
+  SELECT CAST(sum(m * (m - 1) // 2) AS BIGINT) AS captured_pairs
+  FROM (SELECT CAST(count(*) AS BIGINT) AS m FROM base GROUP BY nk, seg, blk)
+)
+SELECT n,
+       CAST(n * (n - 1) // 2 AS BIGINT) AS total_pairs,
+       cand_pairs, true_pairs, captured_pairs,
+       CAST(round(1000000.0 *
+         (CAST(n * (n - 1) // 2 AS DOUBLE) - CAST(cand_pairs AS DOUBLE))
+         / CAST(n * (n - 1) // 2 AS DOUBLE)) AS BIGINT) AS reduction_micro,
+       CAST(round(1000000.0 * CAST(captured_pairs AS DOUBLE)
+         / CAST(true_pairs AS DOUBLE)) AS BIGINT) AS completeness_micro
+FROM total CROSS JOIN cand CROSS JOIN true_ CROSS JOIN capt
+"""
+
+QUERIES["blocking_quality_eval"] = blocking_quality_eval
+ORACLES["blocking_quality_eval"] = BLOCKING_QUALITY_EVAL_SQL
+
+
+# --- SymSpell-style edit-distance-1 blocking ---------------------------------
+# The deletion/wildcard-neighborhood trick that makes fuzzy id matching
+# linear: each 9-digit customer id emits 9 masked variants (digit i →
+# '*'); two ids collide on a masked key iff they differ in EXACTLY that
+# position, so the per-position equi-join enumerates every substitution-
+# distance-1 pair exactly once — 9× linear fan-out, block sizes bounded
+# by the alphabet (10), never an all-pairs scan.  The builtin
+# levenshtein() on both engines confirms each captured pair is distance 1
+# (a cross-engine parity pin for the builtin itself).  Output: pair count
+# and distance check per masked position.
+ED1_POSITIONS = 9
+
+
+def edit1_blocking_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    digits = _t(spark, sf_dir, "customer").selectExpr(
+        "substring(c_name, 10, 9) AS dg"
+    )
+    masked = digits.selectExpr(
+        "dg",
+        f"explode(sequence(1, {ED1_POSITIONS})) AS pos",
+    ).selectExpr(
+        "dg",
+        "pos",
+        "concat(substring(dg, 1, pos - 1), '*', substring(dg, pos + 1)) AS mk",
+    )
+    a = masked.selectExpr("pos", "mk", "dg AS a")
+    b = masked.selectExpr("pos", "mk", "dg AS b")
+    pairs = a.join(b, ["pos", "mk"]).where(F.col("a") < F.col("b"))
+    return (
+        pairs.groupBy("pos")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_pairs"),
+            F.max(F.levenshtein("a", "b")).cast("int").alias("max_lev"),
+        )
+        .selectExpr("CAST(pos AS INT) AS pos", "n_pairs", "max_lev")
+        .orderBy("pos")
+    )
+
+
+EDIT1_BLOCKING_PAIRS_SQL = f"""
+WITH digits AS (
+  SELECT substring(c_name, 10, 9) AS dg FROM customer
+), masked AS (
+  SELECT dg, CAST(i AS INT) AS pos,
+         concat(substring(dg, 1, CAST(i AS INT) - 1), '*',
+                substring(dg, CAST(i AS INT) + 1)) AS mk
+  FROM digits CROSS JOIN unnest(range(1, {ED1_POSITIONS} + 1)) AS r(i)
+), pairs AS (
+  SELECT a.pos, a.dg AS a, b.dg AS b
+  FROM masked a JOIN masked b ON a.pos = b.pos AND a.mk = b.mk AND a.dg < b.dg
+)
+SELECT pos, CAST(count(*) AS BIGINT) AS n_pairs,
+       CAST(max(levenshtein(a, b)) AS INT) AS max_lev
+FROM pairs
+GROUP BY pos
+ORDER BY pos
+"""
+
+QUERIES["edit1_blocking_pairs"] = edit1_blocking_pairs
+ORACLES["edit1_blocking_pairs"] = EDIT1_BLOCKING_PAIRS_SQL
+
+
+# --- window-rank semantics conformance matrix --------------------------------
+# Sibling of null_semantics_matrix / date_semantics_matrix: rank,
+# dense_rank, percent_rank, cume_dist, ntile(4) and row_number evaluated
+# side-by-side over the same tied ordering (orders banded to $100 price
+# bands within o_orderpriority), with the float functions PROVED against
+# their integer num/den identities in the same row (percent_rank =
+# (rank-1)/(n-1); cume_dist = (rank + ties - 1)/n).  Ties are real (the
+# banding guarantees them), so the matrix pins the tie semantics both
+# engines must share; row_number/ntile get a fully deterministic
+# (band, key) ordering because their values are ordering-dependent.
+RANK_SAMPLE_MOD = 101
+
+
+def window_rank_semantics_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
+    o = _t(spark, sf_dir, "orders").selectExpr(
+        "o_orderkey",
+        "o_orderpriority AS priority",
+        "CAST(floor(CAST(o_totalprice AS DOUBLE) / 100) AS BIGINT) AS band",
+    )
+    wp = W.partitionBy("priority")
+    wv = W.partitionBy("priority").orderBy("band")
+    wd = W.partitionBy("priority").orderBy("band", "o_orderkey")
+    we = W.partitionBy("priority", "band")
+    r = o.select(
+        "o_orderkey",
+        "priority",
+        "band",
+        F.rank().over(wv).alias("rnk"),
+        F.dense_rank().over(wv).alias("drnk"),
+        F.row_number().over(wd).alias("rn"),
+        F.ntile(4).over(wd).alias("nt4"),
+        F.percent_rank().over(wv).alias("percent_rank_d"),
+        F.cume_dist().over(wv).alias("cume_dist_d"),
+        F.count(F.lit(1)).over(wp).alias("n"),
+        F.count(F.lit(1)).over(we).alias("ce"),
+    )
+    return r.filter(F.col("o_orderkey") % RANK_SAMPLE_MOD == 0).selectExpr(
+        "o_orderkey",
+        "priority",
+        "band",
+        "CAST(rnk AS BIGINT) AS rnk",
+        "CAST(drnk AS BIGINT) AS drnk",
+        "CAST(rn AS BIGINT) AS rn",
+        "CAST(nt4 AS BIGINT) AS nt4",
+        "CAST(rnk - 1 AS BIGINT) AS pr_num",
+        "CAST(n - 1 AS BIGINT) AS pr_den",
+        "CAST(rnk + ce - 1 AS BIGINT) AS cd_num",
+        "CAST(n AS BIGINT) AS cd_den",
+        "percent_rank_d",
+        "cume_dist_d",
+    )
+
+
+WINDOW_RANK_SEMANTICS_MATRIX_SQL = """
+WITH o AS (
+  SELECT o_orderkey, o_orderpriority AS priority,
+         CAST(floor(CAST(o_totalprice AS DOUBLE) / 100) AS BIGINT) AS band
+  FROM orders
+), r AS (
+  SELECT o_orderkey, priority, band,
+         rank()        OVER (PARTITION BY priority ORDER BY band) AS rnk,
+         dense_rank()  OVER (PARTITION BY priority ORDER BY band) AS drnk,
+         row_number()  OVER (PARTITION BY priority ORDER BY band, o_orderkey) AS rn,
+         ntile(4)      OVER (PARTITION BY priority ORDER BY band, o_orderkey) AS nt4,
+         percent_rank() OVER (PARTITION BY priority ORDER BY band) AS percent_rank_d,
+         cume_dist()    OVER (PARTITION BY priority ORDER BY band) AS cume_dist_d,
+         COUNT(*) OVER (PARTITION BY priority) AS n,
+         COUNT(*) OVER (PARTITION BY priority, band) AS ce
+  FROM o
+)
+SELECT o_orderkey, priority, band,
+       CAST(rnk AS BIGINT) AS rnk,
+       CAST(drnk AS BIGINT) AS drnk,
+       CAST(rn AS BIGINT) AS rn,
+       CAST(nt4 AS BIGINT) AS nt4,
+       CAST(rnk - 1 AS BIGINT) AS pr_num,
+       CAST(n - 1 AS BIGINT) AS pr_den,
+       CAST(rnk + ce - 1 AS BIGINT) AS cd_num,
+       CAST(n AS BIGINT) AS cd_den,
+       percent_rank_d,
+       cume_dist_d
+FROM r
+WHERE o_orderkey % 101 = 0
+"""
+
+QUERIES["window_rank_semantics_matrix"] = window_rank_semantics_matrix
+ORACLES["window_rank_semantics_matrix"] = WINDOW_RANK_SEMANTICS_MATRIX_SQL
+
+
+# --- Jaro-Winkler confusable-name pairs --------------------------------------
+# ER scoring the er_fuzzy_match/edit1_blocking family lacked: the
+# Jaro-Winkler similarity every record-linkage stack defaults to.  The
+# Spark side is a from-scratch kernel (standard Winkler variant: match
+# window max(l1,l2)/2-1, half-transpositions, prefix bonus p=0.1 up to 4
+# chars, boost threshold 0.7); the DuckDB oracle uses the engine's OWN
+# jaro_winkler_similarity builtin — two independent implementations
+# agreeing on exact doubles is the strongest parity this suite can state.
+# Pairs are blocked on the name's final word (the product noun), so the
+# join is an equi-join over a categorical vocabulary: at 100 TB the name
+# VOCABULARY (not the row count) bounds the pair set, and the kernel runs
+# over an Arrow batch of that small pair table — never over base rows.
+
+
+def _jaro_winkler(s1: str, s2: str) -> float:
+    if s1 == s2:
+        return 1.0
+    l1, l2 = len(s1), len(s2)
+    if l1 == 0 or l2 == 0:
+        return 0.0
+    md = max(l1, l2) // 2 - 1
+    m1 = [False] * l1
+    m2 = [False] * l2
+    m = 0
+    for i, c in enumerate(s1):
+        lo, hi = max(0, i - md), min(l2, i + md + 1)
+        for j in range(lo, hi):
+            if not m2[j] and s2[j] == c:
+                m1[i] = m2[j] = True
+                m += 1
+                break
+    if m == 0:
+        return 0.0
+    t = 0
+    k = 0
+    for i in range(l1):
+        if m1[i]:
+            while not m2[k]:
+                k += 1
+            if s1[i] != s2[k]:
+                t += 1
+            k += 1
+    t //= 2
+    j = (m / l1 + m / l2 + (m - t) / m) / 3
+    if j > 0.7:
+        pl = 0
+        for a, b in zip(s1[:4], s2[:4]):
+            if a != b:
+                break
+            pl += 1
+        return j + pl * 0.1 * (1.0 - j)
+    return j
+
+
+def er_jaro_winkler_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from pdf_craft_spark.shipping import ensure_package_shipped
+
+    ensure_package_shipped(spark)
+    names = (
+        _t(spark, sf_dir, "part")
+        .select("p_name")
+        .distinct()
+        .selectExpr("p_name", "element_at(split(p_name, ' '), -1) AS block")
+    )
+    a = names.selectExpr("p_name AS name_a", "block")
+    b = names.selectExpr("p_name AS name_b", "block")
+    pairs = a.join(b, "block").filter(F.col("name_a") < F.col("name_b")).select(
+        "name_a", "name_b", "block"
+    )
+
+    def _jw_batches(it):
+        for pdf in it:
+            pdf["jw_d"] = [
+                _jaro_winkler(x, y)
+                for x, y in zip(pdf["name_a"], pdf["name_b"])
+            ]
+            yield pdf
+
+    return pairs.mapInPandas(
+        _jw_batches,
+        schema="name_a string, name_b string, block string, jw_d double",
+    )
+
+
+ER_JARO_WINKLER_PAIRS_SQL = """
+WITH names AS (
+  SELECT p_name, string_split(p_name, ' ')[-1] AS block
+  FROM (SELECT DISTINCT p_name FROM part)
+)
+SELECT a.p_name AS name_a, b.p_name AS name_b, a.block,
+       jaro_winkler_similarity(a.p_name, b.p_name) AS jw_d
+FROM names a JOIN names b ON a.block = b.block AND a.p_name < b.p_name
+"""
+
+QUERIES["er_jaro_winkler_pairs"] = er_jaro_winkler_pairs
+ORACLES["er_jaro_winkler_pairs"] = ER_JARO_WINKLER_PAIRS_SQL
+
+
+# --- disparate-impact audit of a quality filter -------------------------------
+# Governance sibling of k-anonymity/l-diversity/t-closeness: when a
+# training-data quality filter (here: n_chars >= 300, the length gate
+# every corpus pipeline starts with) drops documents, the 80%-rule asks
+# whether any language's pass rate falls below 0.8x the best group's.
+# Pure integer ppm arithmetic end-to-end (ratio-of-ppms via DIV), so the
+# audit row is exact and engine-independent.  One aggregate + one
+# window — trivially scale-free.
+DI_MIN_CHARS = 300
+
+
+def filter_disparate_impact(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = _t(spark, sf_dir, "documents").selectExpr(
+        "lang",
+        f"CASE WHEN n_chars >= {DI_MIN_CHARS} THEN 1 ELSE 0 END AS pass_flag",
+    )
+    per = docs.groupBy("lang").agg(
+        F.count(F.lit(1)).cast("long").alias("n"),
+        F.sum("pass_flag").cast("long").alias("n_pass"),
+    )
+    wb = W.orderBy(F.lit(1)).rowsBetween(W.unboundedPreceding, W.unboundedFollowing)
+    return (
+        per.selectExpr("lang", "n", "n_pass", "1000000 * n_pass DIV n AS pass_ppm")
+        .withColumn("best_ppm", F.max("pass_ppm").over(wb))
+        .selectExpr(
+            "lang",
+            "n",
+            "n_pass",
+            "CAST(pass_ppm AS BIGINT) AS pass_ppm",
+            "CAST(1000000 * pass_ppm DIV best_ppm AS BIGINT) AS impact_ppm",
+            "CAST(CASE WHEN 1000000 * pass_ppm DIV best_ppm < 800000 "
+            "THEN 1 ELSE 0 END AS BIGINT) AS below_80pct_rule",
+        )
+    )
+
+
+FILTER_DISPARATE_IMPACT_SQL = """
+WITH per AS (
+  SELECT lang, COUNT(*) AS n,
+         SUM(CASE WHEN n_chars >= 300 THEN 1 ELSE 0 END) AS n_pass
+  FROM documents GROUP BY lang
+), p AS (
+  SELECT lang, n, n_pass, 1000000 * n_pass // n AS pass_ppm FROM per
+)
+SELECT lang,
+       CAST(n AS BIGINT) AS n,
+       CAST(n_pass AS BIGINT) AS n_pass,
+       CAST(pass_ppm AS BIGINT) AS pass_ppm,
+       CAST(1000000 * pass_ppm // (MAX(pass_ppm) OVER ()) AS BIGINT) AS impact_ppm,
+       CAST(CASE WHEN 1000000 * pass_ppm // (MAX(pass_ppm) OVER ()) < 800000
+            THEN 1 ELSE 0 END AS BIGINT) AS below_80pct_rule
+FROM p
+"""
+
+QUERIES["filter_disparate_impact"] = filter_disparate_impact
+ORACLES["filter_disparate_impact"] = FILTER_DISPARATE_IMPACT_SQL

@@ -23,6 +23,10 @@ Scale notes: the token/shingle self-join (jaccard) is quadratic in docs
 sharing a shingle — correct as ground truth, usable only per-bucket.  At
 scale you run minhash_lsh first and verify candidates with jaccard inside
 each bucket.
+
+Corpus-level dedup measures live here too: the saturation curve (how fast
+new unique content dries up as the corpus grows) and asymmetric
+containment over the LSH candidates.
 """
 
 from __future__ import annotations
@@ -1503,3 +1507,174 @@ SUBSTRING_DEDUP_APPLY_SQL = _substring_apply_sql()
 
 QUERIES["substring_dedup_apply"] = substring_dedup_apply
 ORACLES["substring_dedup_apply"] = SUBSTRING_DEDUP_APPLY_SQL
+
+
+# --- dedup saturation curve --------------------------------------------------
+# "How fast is the corpus running out of new content?" — the acquisition
+# planning curve: bucket the ingest order (doc_id) into deciles and report
+# per-bucket rows vs FIRST-OCCURRENCE uniques (min doc_id per exact text
+# hash — the same one-agg shape as dedup_exact), then the cumulative
+# duplicate rate.  The cumulative window runs over 10 bucket rows, never
+# the data; the only data-sized shuffle is the hash groupBy.  Bucket
+# boundaries come from a broadcast 1-row (max_id, n) — no global sort, no
+# ntile over the corpus.
+SAT_BUCKETS = 10
+
+
+def dedup_saturation_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    lim = docs.agg((F.max("doc_id") + 1).cast("long").alias("lim"))
+    bucketed = docs.crossJoin(F.broadcast(lim)).selectExpr(
+        "doc_id",
+        "text",
+        # integer division on both engines (Spark DIV / DuckDB //): the
+        # double-cast route truncates in Spark but rounds in DuckDB
+        f"CAST(least({SAT_BUCKETS - 1}, (doc_id * {SAT_BUCKETS}) DIV lim) AS INT) AS bucket",
+    )
+    rows = bucketed.groupBy("bucket").agg(F.count(F.lit(1)).cast("long").alias("n_rows"))
+    firsts = (
+        bucketed.groupBy(F.md5("text").alias("h"))
+        .agg(F.min("bucket").alias("bucket"))
+        .groupBy("bucket")
+        .agg(F.count(F.lit(1)).cast("long").alias("n_new_unique"))
+    )
+    per = rows.join(firsts, "bucket", "left").selectExpr(
+        "bucket", "n_rows", "CAST(coalesce(n_new_unique, 0) AS BIGINT) AS n_new_unique"
+    )
+    wc = W.orderBy("bucket").rowsBetween(W.unboundedPreceding, 0)
+    return (
+        per.select(
+            "bucket",
+            "n_rows",
+            "n_new_unique",
+            F.sum("n_rows").over(wc).cast("long").alias("cum_rows"),
+            F.sum("n_new_unique").over(wc).cast("long").alias("cum_unique"),
+        )
+        .selectExpr(
+            "bucket",
+            "n_rows",
+            "n_new_unique",
+            "cum_rows",
+            "cum_unique",
+            """CAST(round(1000000.0 *
+                 (CAST(cum_rows AS DOUBLE) - CAST(cum_unique AS DOUBLE))
+                 / CAST(cum_rows AS DOUBLE)) AS BIGINT) AS cum_dup_micro""",
+        )
+        .orderBy("bucket")
+    )
+
+
+DEDUP_SATURATION_CURVE_SQL = f"""
+WITH lim AS (
+  SELECT CAST(max(doc_id) + 1 AS BIGINT) AS lim FROM documents
+), bucketed AS (
+  SELECT doc_id, text,
+         CAST(least({SAT_BUCKETS - 1}, (doc_id * {SAT_BUCKETS}) // lim) AS INT) AS bucket
+  FROM documents CROSS JOIN lim
+), rows_b AS (
+  SELECT bucket, CAST(count(*) AS BIGINT) AS n_rows FROM bucketed GROUP BY bucket
+), firsts AS (
+  SELECT bucket, CAST(count(*) AS BIGINT) AS n_new_unique
+  FROM (SELECT md5(text) AS h, min(bucket) AS bucket FROM bucketed GROUP BY md5(text))
+  GROUP BY bucket
+), per AS (
+  SELECT r.bucket, r.n_rows,
+         CAST(coalesce(f.n_new_unique, 0) AS BIGINT) AS n_new_unique
+  FROM rows_b r LEFT JOIN firsts f ON r.bucket = f.bucket
+), cum AS (
+  SELECT bucket, n_rows, n_new_unique,
+         CAST(sum(n_rows) OVER (ORDER BY bucket
+              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum_rows,
+         CAST(sum(n_new_unique) OVER (ORDER BY bucket
+              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum_unique
+  FROM per
+)
+SELECT bucket, n_rows, n_new_unique, cum_rows, cum_unique,
+       CAST(round(1000000.0 *
+         (CAST(cum_rows AS DOUBLE) - CAST(cum_unique AS DOUBLE))
+         / CAST(cum_rows AS DOUBLE)) AS BIGINT) AS cum_dup_micro
+FROM cum
+ORDER BY bucket
+"""
+
+QUERIES["dedup_saturation_curve"] = dedup_saturation_curve
+ORACLES["dedup_saturation_curve"] = DEDUP_SATURATION_CURVE_SQL
+
+
+# --- asymmetric containment on LSH candidates --------------------------------
+# Jaccard misses near-SUPERSET duplication (a doc wrapping another doc
+# plus boilerplate scores low on Jaccard but 1.0 on containment
+# C(A→B) = |sh(A)∩sh(B)| / |sh(A)|).  Candidates come from the SAME
+# minhash-LSH band index as dedup_minhash_lsh — never all-pairs — then
+# the exact shingle intersection runs only over candidate pairs (join
+# through the pair list), and both directions are emitted.  Integer
+# ratio in micro; top-20 by (containment, a, b) bounds the output.
+CONTAIN_TOPK = 20
+
+
+def dedup_containment_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    pairs = lsh_pairs_cached(spark, sf_dir).select("doc_a", "doc_b")
+    # the session shingle artifact is already distinct per (doc_id, sh)
+    sh = shingles_cached(spark, sf_dir)
+    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).cast("long").alias("n_sh"))
+    inter = (
+        pairs.join(sh.selectExpr("doc_id AS doc_a", "sh"), "doc_a")
+        .join(sh.selectExpr("doc_id AS doc_b", "sh"), ["doc_b", "sh"])
+        .groupBy("doc_a", "doc_b")
+        .agg(F.count(F.lit(1)).cast("long").alias("n_inter"))
+    )
+    both = (
+        inter.selectExpr("doc_a AS a", "doc_b AS b", "n_inter")
+        .unionAll(inter.selectExpr("doc_b AS a", "doc_a AS b", "n_inter"))
+        .join(F.broadcast(sizes).selectExpr("doc_id AS a", "n_sh AS n_a"), "a")
+    )
+    scored = both.selectExpr(
+        "a",
+        "b",
+        "n_inter",
+        "n_a",
+        "CAST((1000000 * n_inter) DIV n_a AS BIGINT) AS containment_micro",
+    )
+    wk = W.orderBy(F.col("containment_micro").desc(), F.col("a"), F.col("b"))
+    return (
+        scored.withColumn("rk", F.row_number().over(wk))
+        .where(F.col("rk") <= CONTAIN_TOPK)
+        .selectExpr("CAST(rk AS INT) AS rk", "a", "b", "n_inter", "n_a", "containment_micro")
+        .orderBy("rk")
+    )
+
+
+def _containment_sql() -> str:
+    return f"""
+WITH pairs AS (
+  SELECT doc_a, doc_b FROM ({DEDUP_MINHASH_LSH_SQL})
+), sh AS (
+  SELECT doc_id, unnest(shingles) AS sh FROM ({_SHINGLES_DUCK})
+), sizes AS (
+  SELECT doc_id, CAST(count(*) AS BIGINT) AS n_sh FROM sh GROUP BY doc_id
+), inter AS (
+  SELECT p.doc_a, p.doc_b, CAST(count(*) AS BIGINT) AS n_inter
+  FROM pairs p
+  JOIN sh sa ON sa.doc_id = p.doc_a
+  JOIN sh sb ON sb.doc_id = p.doc_b AND sb.sh = sa.sh
+  GROUP BY p.doc_a, p.doc_b
+), bidir AS (
+  SELECT doc_a AS a, doc_b AS b, n_inter FROM inter
+  UNION ALL
+  SELECT doc_b AS a, doc_a AS b, n_inter FROM inter
+), scored AS (
+  SELECT bidir.a, bidir.b, bidir.n_inter, sizes.n_sh AS n_a,
+         CAST((1000000 * bidir.n_inter) // sizes.n_sh AS BIGINT)
+           AS containment_micro
+  FROM bidir JOIN sizes ON sizes.doc_id = bidir.a
+)
+SELECT CAST(row_number() OVER (ORDER BY containment_micro DESC, a, b) AS INT) AS rk,
+       a, b, n_inter, n_a, containment_micro
+FROM scored
+QUALIFY rk <= {CONTAIN_TOPK}
+ORDER BY rk
+"""
+
+
+QUERIES["dedup_containment_topk"] = dedup_containment_topk
+ORACLES["dedup_containment_topk"] = _containment_sql()

@@ -25,11 +25,17 @@ iteration table a production job would use).
 Reference pairing: the reference has no graph operator; this extends the
 engine-added analytics library (dedup_components' connected components
 being the other graph op).
+
+The co-purchase graph family reads two session artifacts defined next to
+custsupp_cached: basket_cached (the deduped (order, part) pairs) and
+copurchase_sup_cached (part pairs co-ordered at least twice).  k-truss
+edge support, SSSP, link prediction, degree assortativity and the
+market-basket ops in behavior.py all derive their edges from them.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from pdf_craft_spark.queries import dedup
@@ -66,6 +72,48 @@ def custsupp_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     return dedup.session_artifact(spark, f"custsupp:{sf_dir}", build)
+
+
+def basket_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Session artifact: the deduped (l_orderkey, l_partkey) basket table
+    — the one input the whole market-basket / co-purchase-graph family
+    (pairs, triples, recsys, sssp, link prediction, truss, assortativity)
+    derives from.  At prod this is a written table of the basket-prep
+    job; here the scan+distinct runs once per session instead of once
+    per consumer (guide §2.4: shared exchange)."""
+    return dedup.session_artifact(
+        spark,
+        f"basket:{sf_dir}",
+        lambda: load_table(spark, sf_dir, "lineitem")
+        .select("l_orderkey", "l_partkey")
+        .distinct(),
+    )
+
+
+def copurchase_sup_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Session artifact: undirected co-purchase edges (u < v) with their
+    support, support >= 2 — the one edge rule sssp / link prediction /
+    edge support / assortativity / market-basket all share (three copies
+    of this recipe used to drift independently; now there is one)."""
+    def build() -> DataFrame:
+        basket = basket_cached(spark, sf_dir)
+        a, b = basket.alias("a"), basket.alias("b")
+        return (
+            a.join(
+                b,
+                (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
+                & (F.col("a.l_partkey") < F.col("b.l_partkey")),
+            )
+            .groupBy(F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v"))
+            .agg(F.count(F.lit(1)).alias("sup"))
+            .filter(F.col("sup") >= 2)
+        )
+
+    return dedup.session_artifact(spark, f"copurchase_sup:{sf_dir}", build)
+
+
+def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return copurchase_sup_cached(spark, sf_dir).select("u", "v")
 
 
 def pagerank_purchase_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -651,8 +699,6 @@ def graph_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the shared co-purchase edge artifact — already materialized, so all
     # 4 plan branches (two adjacency directions, the wedge join's both
     # sides via adj, the existing-edge anti-join) read the written table
-    from pdf_craft_spark.queries.corpusops3 import copurchase_sup_cached
-
     edges = copurchase_sup_cached(spark, sf_dir).selectExpr("u AS pa", "v AS pb")
     adj = edges.selectExpr("pa AS u", "pb AS v").unionAll(
         edges.selectExpr("pb AS u", "pa AS v")
@@ -856,10 +902,8 @@ SSSP_N_SEEDS = 3
 
 def sssp_weighted_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the shared co-purchase edge artifact (support >= 2, built once per
-    # session — corpusops3.copurchase_sup_cached); weight derives from
+    # session — copurchase_sup_cached); weight derives from
     # the carried support
-    from pdf_craft_spark.queries.corpusops3 import copurchase_sup_cached
-
     und = copurchase_sup_cached(spark, sf_dir).selectExpr(
         "u AS pa", "v AS pb", "1000 DIV sup AS w"
     )
@@ -1337,3 +1381,162 @@ MAXIMAL_MATCHING_ROUNDS_SQL = _mm_sql()
 
 QUERIES["maximal_matching_rounds"] = maximal_matching_rounds
 ORACLES["maximal_matching_rounds"] = MAXIMAL_MATCHING_ROUNDS_SQL
+
+
+# --- k-truss edge support ----------------------------------------------------
+# The k-truss primitive the k-core op doesn't cover: per-EDGE triangle
+# support (an edge is in the k-truss iff it participates in ≥ k−2
+# triangles; iterative peeling then just re-runs this count on the
+# surviving subgraph).  Graph = the co-purchase part graph (parts sharing
+# ≥2 orders — the sssp edge rule).  Wedges are enumerated from the
+# center vertex with both endpoints ordered (u < v), so each triangle
+# contributes each of its edges exactly once; the wedge→edge leftsemi-free
+# inner join keeps only wedges that close.  At scale the standard
+# degree-orientation refinement bounds the wedge fan-out by the
+# arboricity; here the support-≥2 edge rule already caps degrees.  Top-50
+# edges by support keeps output bounded.
+TRUSS_TOPK = 50
+
+
+
+def graph_edge_support(spark: SparkSession, sf_dir: str) -> DataFrame:
+    und = _copurchase_edges(spark, sf_dir)
+    adj = und.selectExpr("u AS w", "v AS x").unionAll(und.selectExpr("v AS w", "u AS x"))
+    wedges = (
+        adj.selectExpr("w", "x AS eu")
+        .join(adj.selectExpr("w", "x AS ev"), "w")
+        .where(F.col("eu") < F.col("ev"))
+        .select("eu", "ev")
+    )
+    support = (
+        wedges.join(und.selectExpr("u AS eu", "v AS ev"), ["eu", "ev"])
+        .groupBy("eu", "ev")
+        .agg(F.count(F.lit(1)).cast("long").alias("support"))
+    )
+    wk = W.orderBy(F.col("support").desc(), F.col("eu"), F.col("ev"))
+    return (
+        support.withColumn("rk", F.row_number().over(wk))
+        .where(F.col("rk") <= TRUSS_TOPK)
+        .selectExpr(
+            "CAST(rk AS INT) AS rk",
+            "eu AS part_a",
+            "ev AS part_b",
+            "support",
+            "CAST(support + 2 AS BIGINT) AS max_truss",
+        )
+        .orderBy("rk")
+    )
+
+
+GRAPH_EDGE_SUPPORT_SQL = f"""
+WITH basket AS (
+  SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
+), und AS (
+  SELECT a.l_partkey AS u, b.l_partkey AS v
+  FROM basket a JOIN basket b
+    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
+  GROUP BY a.l_partkey, b.l_partkey
+  HAVING count(*) >= 2
+), adj AS (
+  SELECT u AS w, v AS x FROM und UNION ALL SELECT v AS w, u AS x FROM und
+), wedges AS (
+  SELECT a1.x AS eu, a2.x AS ev
+  FROM adj a1 JOIN adj a2 ON a1.w = a2.w AND a1.x < a2.x
+), support AS (
+  SELECT w.eu, w.ev, CAST(count(*) AS BIGINT) AS support
+  FROM wedges w JOIN und ON und.u = w.eu AND und.v = w.ev
+  GROUP BY w.eu, w.ev
+)
+SELECT CAST(row_number() OVER (ORDER BY support DESC, eu, ev) AS INT) AS rk,
+       eu AS part_a, ev AS part_b, support,
+       CAST(support + 2 AS BIGINT) AS max_truss
+FROM support
+QUALIFY rk <= {TRUSS_TOPK}
+ORDER BY rk
+"""
+
+QUERIES["graph_edge_support"] = graph_edge_support
+ORACLES["graph_edge_support"] = GRAPH_EDGE_SUPPORT_SQL
+
+
+# --- degree assortativity ------------------------------------------------------
+# Newman's degree assortativity of the co-purchase graph (same edge
+# recipe as sssp_weighted_copurchase: parts co-ordered >= 2 times):
+# the Pearson correlation of endpoint degrees over the DIRECTED edge
+# list (both orientations, which symmetrizes the undirected graph).
+# Positive r = hubs link hubs (social nets); negative = hub-and-spoke
+# (catalogs).  Every moment is an int64 sum over edges; r happens once
+# in doubles with two correctly-rounded sqrts.
+ASSORT_MIN_SUP = 2
+
+
+def graph_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # the shared co-purchase edge artifact — one edge rule,
+    # built once per session (ASSORT_MIN_SUP == its support-2 threshold)
+    und = copurchase_sup_cached(spark, sf_dir).selectExpr("u AS pa", "v AS pb")
+    edges = und.selectExpr("pa AS src", "pb AS dst").unionAll(
+        und.selectExpr("pb AS src", "pa AS dst")
+    )
+    deg = edges.groupBy("src").agg(F.count(F.lit(1)).cast("long").alias("deg"))
+    ed = (
+        edges.join(deg.withColumnRenamed("src", "s2"), F.col("src") == F.col("s2"))
+        .selectExpr("dst", "deg AS dx")
+        .join(
+            deg.selectExpr("src AS d2", "deg AS dy"), F.col("dst") == F.col("d2")
+        )
+        .select("dx", "dy")
+    )
+    m = ed.agg(
+        F.count(F.lit(1)).cast("long").alias("m"),
+        F.sum("dx").cast("long").alias("sx"),
+        F.sum("dy").cast("long").alias("sy"),
+        F.sum(F.col("dx") * F.col("dy")).cast("long").alias("sxy"),
+        F.sum(F.col("dx") * F.col("dx")).cast("long").alias("sxx"),
+        F.sum(F.col("dy") * F.col("dy")).cast("long").alias("syy"),
+    )
+    return m.selectExpr(
+        "m AS n_directed_edges",
+        """CAST(round(1000000.0 *
+             (CAST(m AS DOUBLE) * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
+             / (sqrt(CAST(m AS DOUBLE) * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))
+                * sqrt(CAST(m AS DOUBLE) * CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE)))
+           ) AS BIGINT) AS assortativity_micro""",
+    )
+
+
+GRAPH_DEGREE_ASSORTATIVITY_SQL = """
+WITH basket AS (
+  SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
+), und AS (
+  SELECT a.l_partkey AS pa, b.l_partkey AS pb
+  FROM basket a JOIN basket b
+    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
+  GROUP BY a.l_partkey, b.l_partkey
+  HAVING COUNT(*) >= 2
+), edges AS (
+  SELECT pa AS src, pb AS dst FROM und
+  UNION ALL
+  SELECT pb AS src, pa AS dst FROM und
+), deg AS (
+  SELECT src, COUNT(*) AS deg FROM edges GROUP BY src
+), ed AS (
+  SELECT da.deg AS dx, db.deg AS dy
+  FROM edges e
+  JOIN deg da ON e.src = da.src
+  JOIN deg db ON e.dst = db.src
+), m AS (
+  SELECT COUNT(*) AS m, SUM(dx) AS sx, SUM(dy) AS sy,
+         SUM(dx*dy) AS sxy, SUM(dx*dx) AS sxx, SUM(dy*dy) AS syy
+  FROM ed
+)
+SELECT CAST(m AS BIGINT) AS n_directed_edges,
+       CAST(round(1000000.0 *
+            (CAST(m AS DOUBLE) * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
+            / (sqrt(CAST(m AS DOUBLE) * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))
+               * sqrt(CAST(m AS DOUBLE) * CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE)))
+          ) AS BIGINT) AS assortativity_micro
+FROM m
+"""
+
+QUERIES["graph_degree_assortativity"] = graph_degree_assortativity
+ORACLES["graph_degree_assortativity"] = GRAPH_DEGREE_ASSORTATIVITY_SQL

@@ -4,7 +4,9 @@ Z-order space-filling-curve clustering key (the Delta/Iceberg
 ``OPTIMIZE ZORDER BY`` layout primitive, computed engine-neutrally).
 
 Both are pure Catalyst — no Python in the data path — and both are
-integer/ASCII-exact so the DuckDB oracle matches hash-for-hash.
+integer/ASCII-exact so the DuckDB oracle matches hash-for-hash.  So are
+the positional phrase search over postings and the row-major / Z-order /
+Hilbert locality comparison.
 """
 
 from __future__ import annotations
@@ -12,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from pdf_craft_spark.queries.textops import IDF_SCALE
 from pdf_craft_spark.sources import load_table as _t
 
 
@@ -506,8 +509,6 @@ def _bm25_sat(engine: str) -> str:
 
 
 def bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pdf_craft_spark.queries.textops import IDF_SCALE
-
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
     toks = docs.select(
         "doc_id",
@@ -569,8 +570,6 @@ def bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _bm25_sql() -> str:
-    from pdf_craft_spark.queries.textops import IDF_SCALE
-
     ranks = ", ".join(str(r) for r in CONJ_DF_RANKS)
     return f"""
 WITH toks AS (
@@ -914,3 +913,200 @@ ORDER BY cx, cy
 
 QUERIES["grid_hotspot_zscore"] = grid_hotspot_zscore
 ORACLES["grid_hotspot_zscore"] = GRID_HOTSPOT_ZSCORE_SQL
+
+
+# --- positional phrase search ------------------------------------------------
+# "Which documents contain the exact phrase 'table scan'?" answered the way
+# a search engine answers it at 100 TB: single-term posting lists carrying
+# positions, intersected with an equi-join on (doc_id, adjacent position).
+# The fixed-phrase special case could be a bigram filter, but the
+# index→join shape is the one that generalizes to query-time phrases over
+# a PREBUILT index: the term filter pushes down to two posting lists (a
+# tiny fraction of the index) and the join is a plain shuffle equi-join on
+# doc_id — never a cartesian, never a full-text rescan.  Top-20 by
+# (hits desc, doc_id) keeps the output bounded and deterministic.
+PHRASE_A = "table"
+PHRASE_B = "scan"
+PHRASE_TOPK = 20
+
+
+def phrase_query_positional(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
+    toks = docs.select(
+        "doc_id",
+        F.posexplode(F.expr("regexp_extract_all(text, '[a-z]+', 0)")).alias(
+            "pos", "term"
+        ),
+    )
+    p1 = toks.where(F.col("term") == PHRASE_A).select("doc_id", F.col("pos").alias("p1"))
+    p2 = toks.where(F.col("term") == PHRASE_B).select("doc_id", F.col("pos").alias("p2"))
+    hits = (
+        p1.join(p2, ["doc_id"])
+        .where(F.col("p2") == F.col("p1") + 1)
+        .groupBy("doc_id")
+        .agg(F.count(F.lit(1)).cast("long").alias("n_hits"))
+    )
+    wk = W.orderBy(F.col("n_hits").desc(), F.col("doc_id"))
+    return (
+        hits.withColumn("rk", F.row_number().over(wk))
+        .where(F.col("rk") <= PHRASE_TOPK)
+        .select("doc_id", "n_hits", F.col("rk").cast("int").alias("rk"))
+    )
+
+
+PHRASE_QUERY_POSITIONAL_SQL = f"""
+WITH toks AS (
+  SELECT doc_id, regexp_extract_all(text, '[a-z]+') AS ts FROM documents
+), pos AS (
+  SELECT doc_id, i - 1 AS pos, ts[i] AS term
+  FROM toks CROSS JOIN unnest(range(1, len(ts) + 1)) AS r(i)
+), hits AS (
+  SELECT a.doc_id, CAST(count(*) AS BIGINT) AS n_hits
+  FROM (SELECT doc_id, pos FROM pos WHERE term = '{PHRASE_A}') a
+  JOIN (SELECT doc_id, pos FROM pos WHERE term = '{PHRASE_B}') b
+    ON a.doc_id = b.doc_id AND b.pos = a.pos + 1
+  GROUP BY a.doc_id
+)
+SELECT doc_id, n_hits,
+       CAST(row_number() OVER (ORDER BY n_hits DESC, doc_id) AS INT) AS rk
+FROM hits
+QUALIFY rk <= {PHRASE_TOPK}
+"""
+
+QUERIES["phrase_query_positional"] = phrase_query_positional
+ORACLES["phrase_query_positional"] = PHRASE_QUERY_POSITIONAL_SQL
+
+
+# --- space-filling-curve locality comparison ---------------------------------
+# Settles "ZORDER or Hilbert?" with a measurement instead of folklore: lay
+# the same (custkey, order-day) points on an 8-bit grid, order them by
+# row-major key, Morton code, and Hilbert index (the latter two reuse the
+# exact key builders behind zorder_cluster_key / hilbert_cluster_key), and
+# measure the average L1 step between CONSECUTIVE rows of each ordering —
+# the locality a range scan actually experiences.  All three keys come
+# from one scan (stack(3)); the consecutive-pair window runs per 1024-key
+# shard (64 independent windows, seam pairs skipped identically in both
+# engines), never a global sort.  Key↔(x,y) is a bijection for all three
+# curves, so tie order between equal keys cannot change any delta.
+CURVE_BITS = 8
+CURVE_N = 1 << CURVE_BITS
+CURVE_SHARD = 1024
+
+
+def _curve_base(spark: SparkSession, sf_dir: str) -> DataFrame:
+    base = _t(spark, sf_dir, "orders").selectExpr(
+        f"CAST(o_custkey & {CURVE_N - 1} AS BIGINT) AS x0",
+        f"CAST(datediff(CAST(o_orderdate AS DATE), DATE '{Z_EPOCH}')"
+        f" & {CURVE_N - 1} AS BIGINT) AS y0",
+    )
+    df = base.selectExpr(
+        "x0",
+        "y0",
+        "x0 AS x",
+        "y0 AS y",
+        "CAST(0 AS BIGINT) AS d",
+        f"CAST(x0 * {CURVE_N} + y0 AS BIGINT) AS key_r",
+        f"CAST({_zorder_terms('x0', 'y0', 'spark')} AS BIGINT) AS key_z",
+    )
+    for b in range(CURVE_BITS - 1, -1, -1):
+        d, nx, ny = _hilbert_step(b, "spark")
+        df = df.selectExpr(
+            "x0", "y0", f"{nx} AS x", f"{ny} AS y", f"{d} AS d", "key_r", "key_z"
+        )
+    return df.selectExpr("x0", "y0", "key_r", "key_z", "d AS key_h")
+
+
+def curve_locality_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
+    keyed = _curve_base(spark, sf_dir).selectExpr(
+        "x0",
+        "y0",
+        "stack(3, 'rowmajor', key_r, 'zorder', key_z, 'hilbert', key_h)"
+        " AS (ordering, k)",
+    ).selectExpr("ordering", "k", f"k DIV {CURVE_SHARD} AS shard", "x0", "y0")
+    w = W.partitionBy("ordering", "shard").orderBy("k", "x0", "y0")
+    stepped = keyed.select(
+        "ordering",
+        (F.abs(F.col("x0") - F.lag("x0").over(w)) + F.abs(F.col("y0") - F.lag("y0").over(w))).alias(
+            "l1"
+        ),
+    ).where(F.col("l1").isNotNull())
+    return (
+        stepped.groupBy("ordering")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_pairs"),
+            F.sum("l1").cast("long").alias("sum_l1"),
+        )
+        .selectExpr(
+            "ordering",
+            "n_pairs",
+            "sum_l1",
+            """CAST(round(1000000.0 * CAST(sum_l1 AS DOUBLE)
+                 / CAST(n_pairs AS DOUBLE)) AS BIGINT) AS avg_l1_micro""",
+        )
+        .orderBy("ordering")
+    )
+
+
+def _curve_duck_ctes() -> tuple[str, str]:
+    steps = []
+    prev = "base"
+    for i, b in enumerate(range(CURVE_BITS - 1, -1, -1)):
+        d, nx, ny = _hilbert_step(b, "duck")
+        steps.append(
+            f"s{i} AS (SELECT x0, y0, {nx} AS x, {ny} AS y, {d} AS d,"
+            f" key_r, key_z FROM {prev})"
+        )
+        prev = f"s{i}"
+    return ", ".join(steps), prev
+
+
+_C_CTES, _C_LAST = _curve_duck_ctes()
+
+_DUCK_X = f"(o_custkey & {CURVE_N - 1})"
+_DUCK_Y = (
+    f"(date_diff('day', DATE '{Z_EPOCH}', CAST(o_orderdate AS DATE))"
+    f" & {CURVE_N - 1})"
+)
+
+CURVE_LOCALITY_EVAL_SQL = f"""
+WITH base AS (
+  SELECT CAST(o_custkey & {CURVE_N - 1} AS BIGINT) AS x0,
+         CAST(date_diff('day', DATE '{Z_EPOCH}', CAST(o_orderdate AS DATE))
+              & {CURVE_N - 1} AS BIGINT) AS y0,
+         CAST(o_custkey & {CURVE_N - 1} AS BIGINT) AS x,
+         CAST(date_diff('day', DATE '{Z_EPOCH}', CAST(o_orderdate AS DATE))
+              & {CURVE_N - 1} AS BIGINT) AS y,
+         CAST(0 AS BIGINT) AS d,
+         CAST((o_custkey & {CURVE_N - 1}) * {CURVE_N}
+              + (date_diff('day', DATE '{Z_EPOCH}', CAST(o_orderdate AS DATE))
+                 & {CURVE_N - 1}) AS BIGINT) AS key_r,
+         CAST({_zorder_terms(_DUCK_X, _DUCK_Y, 'duck')} AS BIGINT) AS key_z
+  FROM orders
+), {_C_CTES}, keyed AS (
+  SELECT ordering, k, k // {CURVE_SHARD} AS shard, x0, y0
+  FROM (
+    SELECT 'rowmajor' AS ordering, key_r AS k, x0, y0 FROM {_C_LAST}
+    UNION ALL
+    SELECT 'zorder' AS ordering, key_z AS k, x0, y0 FROM {_C_LAST}
+    UNION ALL
+    SELECT 'hilbert' AS ordering, d AS k, x0, y0 FROM {_C_LAST}
+  )
+), stepped AS (
+  SELECT ordering,
+         abs(x0 - lag(x0) OVER w) + abs(y0 - lag(y0) OVER w) AS l1
+  FROM keyed
+  WINDOW w AS (PARTITION BY ordering, shard ORDER BY k, x0, y0)
+)
+SELECT ordering,
+       CAST(count(*) AS BIGINT) AS n_pairs,
+       CAST(sum(l1) AS BIGINT) AS sum_l1,
+       CAST(round(1000000.0 * CAST(sum(l1) AS DOUBLE)
+         / CAST(count(*) AS DOUBLE)) AS BIGINT) AS avg_l1_micro
+FROM stepped
+WHERE l1 IS NOT NULL
+GROUP BY ordering
+ORDER BY ordering
+"""
+
+QUERIES["curve_locality_eval"] = curve_locality_eval
+ORACLES["curve_locality_eval"] = CURVE_LOCALITY_EVAL_SQL

@@ -19,6 +19,9 @@ that a production job widens to DECIMAL(38,0) (the spearman/tfidf
 precedent).
 
 pca_power_iteration: see its docstring below.
+
+Also here: exact OLS by normal equations, and the eval side's exact
+tied-rank ROC AUC and decile lift/gains table.
 """
 
 from __future__ import annotations
@@ -26,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from pdf_craft_spark.queries.dedup import md5_prefix_long_sql
 from pdf_craft_spark.sources import load_table as _t
 
 QUERIES: dict = {}
@@ -266,8 +270,6 @@ _CONF_ALPHA_NUM, _CONF_ALPHA_DEN = 9, 10  # 90% target coverage
 
 
 def conformal_interval_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pdf_craft_spark.queries.dedup import md5_prefix_long_sql
-
     h = md5_prefix_long_sql("CAST(o_orderkey AS STRING)", 4, "spark")
     base = (
         _t(spark, sf_dir, "orders")
@@ -327,8 +329,6 @@ def conformal_interval_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _conformal_sql() -> str:
-    from pdf_craft_spark.queries.dedup import md5_prefix_long_sql
-
     h = md5_prefix_long_sql("CAST(o_orderkey AS VARCHAR)", 4, "duck")
     return f"""
 WITH base AS (
@@ -404,8 +404,6 @@ _ALS_Q_MOD = 7  # q components in [1, 7]
 
 
 def als_factor_step(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pdf_craft_spark.queries.dedup import md5_prefix_long_sql
-
     h = md5_prefix_long_sql("CAST(l_partkey AS STRING)", 8, "spark")
     o = _t(spark, sf_dir, "orders")
     li = _t(spark, sf_dir, "lineitem")
@@ -440,8 +438,6 @@ def als_factor_step(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _als_sql() -> str:
-    from pdf_craft_spark.queries.dedup import md5_prefix_long_sql
-
     h = md5_prefix_long_sql("CAST(l_partkey AS VARCHAR)", 8, "duck")
     return f"""
 WITH rat AS (
@@ -635,8 +631,6 @@ _CAL_LONG_CHARS = 300
 
 
 def calibration_bins_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pdf_craft_spark.queries.dedup import md5_prefix_long_sql
-
     h = md5_prefix_long_sql("CAST(doc_id AS STRING)", 4, "spark")
     docs = _t(spark, sf_dir, "documents")
     base = docs.selectExpr(
@@ -668,8 +662,6 @@ def calibration_bins_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _calibration_sql() -> str:
-    from pdf_craft_spark.queries.dedup import md5_prefix_long_sql
-
     h = md5_prefix_long_sql("CAST(doc_id AS VARCHAR)", 4, "duck")
     return f"""
 WITH base AS (
@@ -1046,8 +1038,6 @@ CV_FOLDS = 5
 
 
 def cv_kfold_mse(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pdf_craft_spark.queries.dedup import md5_prefix_long_sql
-
     h = md5_prefix_long_sql("CAST(o_orderkey AS STRING)", 4, "spark")
     o = _t(spark, sf_dir, "orders").selectExpr(
         "o_orderpriority AS pri",
@@ -1085,8 +1075,6 @@ def cv_kfold_mse(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _cv_sql() -> str:
-    from pdf_craft_spark.queries.dedup import md5_prefix_long_sql
-
     h = md5_prefix_long_sql("CAST(o_orderkey AS VARCHAR)", 4, "duck")
     return f"""
 WITH o AS (
@@ -1250,8 +1238,6 @@ DRIFT_Z_MILLI = 3000  # flag |z| > 3
 
 
 def embedding_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pdf_craft_spark.queries.dedup import md5_prefix_long_sql
-
     h = md5_prefix_long_sql("CAST(vec_id AS STRING)", 4, "spark")
     e = (
         _t(spark, sf_dir, "embeddings")
@@ -1299,8 +1285,6 @@ def embedding_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _drift_sql() -> str:
-    from pdf_craft_spark.queries.dedup import md5_prefix_long_sql
-
     h = md5_prefix_long_sql("CAST(vec_id AS VARCHAR)", 4, "duck")
     z = (
         "1000 * abs(CAST(s_a AS DOUBLE) / n_a - CAST(s_b AS DOUBLE) / n_b)"
@@ -1361,8 +1345,6 @@ LC_FRACS_PPM = (10_000, 40_000, 160_000, 640_000)  # of the train fold
 
 
 def learning_curve_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pdf_craft_spark.queries.dedup import md5_prefix_long_sql
-
     h = md5_prefix_long_sql("CAST(o_orderkey AS STRING)", 10, "spark")
     o = _t(spark, sf_dir, "orders").selectExpr(
         "o_orderpriority AS pri",
@@ -1422,8 +1404,6 @@ def learning_curve_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _lc_sql() -> str:
-    from pdf_craft_spark.queries.dedup import md5_prefix_long_sql
-
     h = md5_prefix_long_sql("CAST(o_orderkey AS VARCHAR)", 10, "duck")
     sums_cols = ",\n         ".join(
         f"CAST(sum(CASE WHEN u < {(f * (1 << 40)) // 1_000_000} THEN x END)"
@@ -1466,3 +1446,341 @@ LEARNING_CURVE_EVAL_SQL = _lc_sql()
 
 QUERIES["learning_curve_eval"] = learning_curve_eval
 ORACLES["learning_curve_eval"] = LEARNING_CURVE_EVAL_SQL
+
+
+# --- OLS by normal equations (exact sums, Cramer 2x2) ------------------------
+# Two-feature linear model price_cents ~ p_size + len(p_type), fit the way
+# a 100 TB regression must be fit: ONE map-side-combinable aggregate
+# producing the 9 exact moment sums (all int64 — features are tens, cents
+# are ~2e5, so even 1000x the rows stays under 2^63), then the centered
+# normal equations A·beta = B assembled driver-free in the projection.
+# A/B entries (n·Sxx − Sx², ...) stay int64 (< 9e15 ≈ 2^53, so they are
+# also EXACT as doubles); the Cramer quotients are the single final double
+# expression.  R² comes from the same components.  No second pass, no
+# collect, no gradient loop.
+def ols_normal_equations(spark: SparkSession, sf_dir: str) -> DataFrame:
+    p = _t(spark, sf_dir, "part").selectExpr(
+        "CAST(p_size AS BIGINT) AS x1",
+        "CAST(length(p_type) AS BIGINT) AS x2",
+        "CAST(CAST(p_retailprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS y",
+    )
+    m = p.agg(
+        F.count(F.lit(1)).cast("long").alias("n"),
+        F.sum("x1").cast("long").alias("s1"),
+        F.sum("x2").cast("long").alias("s2"),
+        F.sum("y").cast("long").alias("sy"),
+        F.sum(F.col("x1") * F.col("x1")).cast("long").alias("s11"),
+        F.sum(F.col("x2") * F.col("x2")).cast("long").alias("s22"),
+        F.sum(F.col("x1") * F.col("x2")).cast("long").alias("s12"),
+        F.sum(F.col("x1") * F.col("y")).cast("long").alias("s1y"),
+        F.sum(F.col("x2") * F.col("y")).cast("long").alias("s2y"),
+        F.sum(F.col("y") * F.col("y")).cast("long").alias("syy"),
+    )
+    return m.selectExpr(
+        "n",
+        "CAST(n * s11 - s1 * s1 AS BIGINT) AS a11",
+        "CAST(n * s22 - s2 * s2 AS BIGINT) AS a22",
+        "CAST(n * s12 - s1 * s2 AS BIGINT) AS a12",
+        "CAST(n * s1y - s1 * sy AS BIGINT) AS b1",
+        "CAST(n * s2y - s2 * sy AS BIGINT) AS b2",
+        """CAST(round(1000000.0 *
+             (CAST(n * s22 - s2 * s2 AS DOUBLE) * CAST(n * s1y - s1 * sy AS DOUBLE)
+              - CAST(n * s12 - s1 * s2 AS DOUBLE) * CAST(n * s2y - s2 * sy AS DOUBLE))
+             / (CAST(n * s11 - s1 * s1 AS DOUBLE) * CAST(n * s22 - s2 * s2 AS DOUBLE)
+                - CAST(n * s12 - s1 * s2 AS DOUBLE) * CAST(n * s12 - s1 * s2 AS DOUBLE))
+           ) AS BIGINT) AS beta1_micro""",
+        """CAST(round(1000000.0 *
+             (CAST(n * s11 - s1 * s1 AS DOUBLE) * CAST(n * s2y - s2 * sy AS DOUBLE)
+              - CAST(n * s12 - s1 * s2 AS DOUBLE) * CAST(n * s1y - s1 * sy AS DOUBLE))
+             / (CAST(n * s11 - s1 * s1 AS DOUBLE) * CAST(n * s22 - s2 * s2 AS DOUBLE)
+                - CAST(n * s12 - s1 * s2 AS DOUBLE) * CAST(n * s12 - s1 * s2 AS DOUBLE))
+           ) AS BIGINT) AS beta2_micro""",
+        """CAST(round(1000000.0 *
+             (CAST(n * s1y - s1 * sy AS DOUBLE)
+                * (CAST(n * s22 - s2 * s2 AS DOUBLE) * CAST(n * s1y - s1 * sy AS DOUBLE)
+                   - CAST(n * s12 - s1 * s2 AS DOUBLE) * CAST(n * s2y - s2 * sy AS DOUBLE))
+              + CAST(n * s2y - s2 * sy AS DOUBLE)
+                * (CAST(n * s11 - s1 * s1 AS DOUBLE) * CAST(n * s2y - s2 * sy AS DOUBLE)
+                   - CAST(n * s12 - s1 * s2 AS DOUBLE) * CAST(n * s1y - s1 * sy AS DOUBLE)))
+             / ((CAST(n * s11 - s1 * s1 AS DOUBLE) * CAST(n * s22 - s2 * s2 AS DOUBLE)
+                 - CAST(n * s12 - s1 * s2 AS DOUBLE) * CAST(n * s12 - s1 * s2 AS DOUBLE))
+                * CAST(n * syy - sy * sy AS DOUBLE))
+           ) AS BIGINT) AS r2_micro""",
+    )
+
+
+_OLS_MOMENTS_SQL = """
+  SELECT CAST(count(*) AS BIGINT) AS n,
+         CAST(sum(x1) AS BIGINT) AS s1, CAST(sum(x2) AS BIGINT) AS s2,
+         CAST(sum(y) AS BIGINT) AS sy,
+         CAST(sum(x1 * x1) AS BIGINT) AS s11,
+         CAST(sum(x2 * x2) AS BIGINT) AS s22,
+         CAST(sum(x1 * x2) AS BIGINT) AS s12,
+         CAST(sum(x1 * y) AS BIGINT) AS s1y,
+         CAST(sum(x2 * y) AS BIGINT) AS s2y,
+         CAST(sum(y * y) AS BIGINT) AS syy
+  FROM (SELECT CAST(p_size AS BIGINT) AS x1,
+               CAST(length(p_type) AS BIGINT) AS x2,
+               CAST(CAST(p_retailprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS y
+        FROM part)
+"""
+
+OLS_NORMAL_EQUATIONS_SQL = f"""
+WITH m AS ({_OLS_MOMENTS_SQL})
+SELECT n,
+       CAST(n * s11 - s1 * s1 AS BIGINT) AS a11,
+       CAST(n * s22 - s2 * s2 AS BIGINT) AS a22,
+       CAST(n * s12 - s1 * s2 AS BIGINT) AS a12,
+       CAST(n * s1y - s1 * sy AS BIGINT) AS b1,
+       CAST(n * s2y - s2 * sy AS BIGINT) AS b2,
+       CAST(round(1000000.0 *
+         (CAST(n * s22 - s2 * s2 AS DOUBLE) * CAST(n * s1y - s1 * sy AS DOUBLE)
+          - CAST(n * s12 - s1 * s2 AS DOUBLE) * CAST(n * s2y - s2 * sy AS DOUBLE))
+         / (CAST(n * s11 - s1 * s1 AS DOUBLE) * CAST(n * s22 - s2 * s2 AS DOUBLE)
+            - CAST(n * s12 - s1 * s2 AS DOUBLE) * CAST(n * s12 - s1 * s2 AS DOUBLE))
+       ) AS BIGINT) AS beta1_micro,
+       CAST(round(1000000.0 *
+         (CAST(n * s11 - s1 * s1 AS DOUBLE) * CAST(n * s2y - s2 * sy AS DOUBLE)
+          - CAST(n * s12 - s1 * s2 AS DOUBLE) * CAST(n * s1y - s1 * sy AS DOUBLE))
+         / (CAST(n * s11 - s1 * s1 AS DOUBLE) * CAST(n * s22 - s2 * s2 AS DOUBLE)
+            - CAST(n * s12 - s1 * s2 AS DOUBLE) * CAST(n * s12 - s1 * s2 AS DOUBLE))
+       ) AS BIGINT) AS beta2_micro,
+       CAST(round(1000000.0 *
+         (CAST(n * s1y - s1 * sy AS DOUBLE)
+            * (CAST(n * s22 - s2 * s2 AS DOUBLE) * CAST(n * s1y - s1 * sy AS DOUBLE)
+               - CAST(n * s12 - s1 * s2 AS DOUBLE) * CAST(n * s2y - s2 * sy AS DOUBLE))
+          + CAST(n * s2y - s2 * sy AS DOUBLE)
+            * (CAST(n * s11 - s1 * s1 AS DOUBLE) * CAST(n * s2y - s2 * sy AS DOUBLE)
+               - CAST(n * s12 - s1 * s2 AS DOUBLE) * CAST(n * s1y - s1 * sy AS DOUBLE)))
+         / ((CAST(n * s11 - s1 * s1 AS DOUBLE) * CAST(n * s22 - s2 * s2 AS DOUBLE)
+             - CAST(n * s12 - s1 * s2 AS DOUBLE) * CAST(n * s12 - s1 * s2 AS DOUBLE))
+            * CAST(n * syy - sy * sy AS DOUBLE))
+       ) AS BIGINT) AS r2_micro
+FROM m
+"""
+
+QUERIES["ols_normal_equations"] = ols_normal_equations
+ORACLES["ols_normal_equations"] = OLS_NORMAL_EQUATIONS_SQL
+
+
+# --- exact tied-rank ROC AUC -------------------------------------------------
+# The retrieval/classifier eval the ML-eval family was missing: AUC of a
+# nearest-centroid scorer on the embeddings table, computed EXACTLY via
+# the Mann-Whitney rank-sum identity with average ranks for ties
+# (2*avg_rank = 2*min_rank + n_ties - 1 stays integer).  Embeddings are
+# quantized to milli-ints first (the kmeans_int_embeddings recipe,
+# similarity.py) so centroid sums and dot products are int64 — no float
+# aggregation anywhere, hence no cross-engine sum-order divergence.  At
+# scale this is two narrow aggregates plus one broadcast join (the
+# centroid table is |labels| x dim rows): corpus-linear, shuffle on
+# (label, vec_id) only.
+AUC_LABELS = (0, 1, 2)
+
+
+def auc_exact_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
+    q = (
+        _t(spark, sf_dir, "embeddings")
+        .select("vec_id", "label", F.posexplode("embedding").alias("pos", "x"))
+        .select(
+            "vec_id",
+            "label",
+            "pos",
+            F.floor(F.col("x").cast("double") * 1000).cast("long").alias("qv"),
+        )
+    )
+    cent = (
+        q.filter(F.col("label").isin(*AUC_LABELS))
+        .groupBy(F.col("label").alias("cl"), "pos")
+        .agg(F.sum("qv").alias("csum"))
+    )
+    scored = (
+        q.join(F.broadcast(cent), "pos")
+        .groupBy("cl", "vec_id")
+        .agg(
+            F.min("label").alias("lbl"),
+            F.sum(F.col("qv") * F.col("csum")).alias("score"),
+        )
+    )
+    wr = W.partitionBy("cl").orderBy("score")
+    we = W.partitionBy("cl", "score")
+    r = scored.select(
+        "cl",
+        "lbl",
+        F.rank().over(wr).alias("rnk"),
+        F.count(F.lit(1)).over(we).alias("ce"),
+    )
+    return (
+        r.groupBy("cl")
+        .agg(
+            F.sum(F.when(F.col("lbl") == F.col("cl"), 1).otherwise(0))
+            .cast("long")
+            .alias("n_pos"),
+            F.sum(F.when(F.col("lbl") != F.col("cl"), 1).otherwise(0))
+            .cast("long")
+            .alias("n_neg"),
+            F.sum(
+                F.when(
+                    F.col("lbl") == F.col("cl"),
+                    2 * F.col("rnk") + F.col("ce") - 1,
+                ).otherwise(0)
+            )
+            .cast("long")
+            .alias("sum2r"),
+        )
+        .selectExpr(
+            "CAST(cl AS BIGINT) AS label",
+            "n_pos",
+            "n_neg",
+            """CAST(round(1000000.0 *
+                 (CAST(sum2r AS DOUBLE) - CAST(n_pos AS DOUBLE) * (CAST(n_pos AS DOUBLE) + 1))
+                 / (2.0 * CAST(n_pos AS DOUBLE) * CAST(n_neg AS DOUBLE))
+               ) AS BIGINT) AS auc_micro""",
+        )
+    )
+
+
+AUC_EXACT_EVAL_SQL = """
+WITH q AS (
+  SELECT vec_id, label, i AS pos,
+         CAST(floor(CAST(e AS DOUBLE) * 1000) AS BIGINT) AS qv
+  FROM (SELECT vec_id, label,
+               unnest(embedding) AS e,
+               unnest(range(len(embedding))) AS i
+        FROM embeddings)
+), cent AS (
+  SELECT label AS cl, pos, SUM(qv) AS csum
+  FROM q WHERE label IN (0, 1, 2) GROUP BY 1, 2
+), scored AS (
+  SELECT cl, vec_id, MIN(label) AS lbl, SUM(qv * csum) AS score
+  FROM q JOIN cent USING (pos) GROUP BY cl, vec_id
+), r AS (
+  SELECT cl, lbl,
+         rank() OVER (PARTITION BY cl ORDER BY score) AS rnk,
+         COUNT(*) OVER (PARTITION BY cl, score) AS ce
+  FROM scored
+), agg AS (
+  SELECT cl,
+         SUM(CASE WHEN lbl = cl THEN 1 ELSE 0 END) AS n_pos,
+         SUM(CASE WHEN lbl <> cl THEN 1 ELSE 0 END) AS n_neg,
+         SUM(CASE WHEN lbl = cl THEN 2 * rnk + ce - 1 ELSE 0 END) AS sum2r
+  FROM r GROUP BY cl
+)
+SELECT CAST(cl AS BIGINT) AS label,
+       CAST(n_pos AS BIGINT) AS n_pos,
+       CAST(n_neg AS BIGINT) AS n_neg,
+       CAST(round(1000000.0 *
+            (CAST(sum2r AS DOUBLE) - CAST(n_pos AS DOUBLE) * (CAST(n_pos AS DOUBLE) + 1))
+            / (2.0 * CAST(n_pos AS DOUBLE) * CAST(n_neg AS DOUBLE))
+          ) AS BIGINT) AS auc_micro
+FROM agg
+"""
+
+QUERIES["auc_exact_eval"] = auc_exact_eval
+ORACLES["auc_exact_eval"] = AUC_EXACT_EVAL_SQL
+
+
+# --- decile lift / cumulative gains table -------------------------------------
+# The campaign-targeting readout next to auc_exact_eval: score every
+# vector with the label-0 centroid (same milli-int dot product), cut into
+# deciles by (score desc, vec_id), and report per-decile capture.  gains
+# is exact ppm (integer DIV); lift is the one final double division.  At
+# scale: one broadcast join + one window + one aggregate.
+LIFT_LABEL = 0
+LIFT_DECILES = 10
+
+
+def lift_gains_table(spark: SparkSession, sf_dir: str) -> DataFrame:
+    q = (
+        _t(spark, sf_dir, "embeddings")
+        .select("vec_id", "label", F.posexplode("embedding").alias("pos", "x"))
+        .select(
+            "vec_id",
+            "label",
+            "pos",
+            F.floor(F.col("x").cast("double") * 1000).cast("long").alias("qv"),
+        )
+    )
+    cent = (
+        q.filter(F.col("label") == LIFT_LABEL)
+        .groupBy("pos")
+        .agg(F.sum("qv").alias("csum"))
+    )
+    scored = (
+        q.join(F.broadcast(cent), "pos")
+        .groupBy("vec_id")
+        .agg(
+            F.min("label").alias("lbl"),
+            F.sum(F.col("qv") * F.col("csum")).alias("score"),
+        )
+    )
+    wd = W.orderBy(F.desc("score"), F.asc("vec_id"))
+    dec = scored.select(
+        F.ntile(LIFT_DECILES).over(wd).alias("decile"),
+        F.when(F.col("lbl") == LIFT_LABEL, 1).otherwise(0).alias("pos_flag"),
+    )
+    per = dec.groupBy("decile").agg(
+        F.count(F.lit(1)).cast("long").alias("n"),
+        F.sum("pos_flag").cast("long").alias("n_pos"),
+    )
+    wc = W.orderBy("decile").rowsBetween(W.unboundedPreceding, 0)
+    wt = W.orderBy("decile").rowsBetween(W.unboundedPreceding, W.unboundedFollowing)
+    return per.select(
+        F.col("decile").cast("long").alias("decile"),
+        "n",
+        "n_pos",
+        F.sum("n").over(wc).cast("long").alias("cum_n"),
+        F.sum("n_pos").over(wc).cast("long").alias("cum_pos"),
+        F.sum("n").over(wt).cast("long").alias("tot_n"),
+        F.sum("n_pos").over(wt).cast("long").alias("tot_pos"),
+    ).selectExpr(
+        "decile",
+        "n",
+        "n_pos",
+        "cum_pos",
+        "CAST(1000000 * cum_pos DIV tot_pos AS BIGINT) AS gains_ppm",
+        """CAST(round(1000000.0 *
+             (CAST(cum_pos AS DOUBLE) / CAST(cum_n AS DOUBLE))
+             / (CAST(tot_pos AS DOUBLE) / CAST(tot_n AS DOUBLE))
+           ) AS BIGINT) AS lift_micro""",
+    )
+
+
+LIFT_GAINS_TABLE_SQL = """
+WITH q AS (
+  SELECT vec_id, label, i AS pos,
+         CAST(floor(CAST(e AS DOUBLE) * 1000) AS BIGINT) AS qv
+  FROM (SELECT vec_id, label, unnest(embedding) AS e,
+               unnest(range(len(embedding))) AS i FROM embeddings)
+), cent AS (
+  SELECT pos, SUM(qv) AS csum FROM q WHERE label = 0 GROUP BY pos
+), scored AS (
+  SELECT vec_id, MIN(label) AS lbl, SUM(qv * csum) AS score
+  FROM q JOIN cent USING (pos) GROUP BY vec_id
+), dec AS (
+  SELECT ntile(10) OVER (ORDER BY score DESC, vec_id ASC) AS decile,
+         CASE WHEN lbl = 0 THEN 1 ELSE 0 END AS pos_flag
+  FROM scored
+), per AS (
+  SELECT decile, COUNT(*) AS n, SUM(pos_flag) AS n_pos FROM dec GROUP BY decile
+), cum AS (
+  SELECT decile, n, n_pos,
+         SUM(n) OVER (ORDER BY decile ROWS UNBOUNDED PRECEDING) AS cum_n,
+         SUM(n_pos) OVER (ORDER BY decile ROWS UNBOUNDED PRECEDING) AS cum_pos,
+         SUM(n) OVER () AS tot_n,
+         SUM(n_pos) OVER () AS tot_pos
+  FROM per
+)
+SELECT CAST(decile AS BIGINT) AS decile,
+       CAST(n AS BIGINT) AS n,
+       CAST(n_pos AS BIGINT) AS n_pos,
+       CAST(cum_pos AS BIGINT) AS cum_pos,
+       CAST(1000000 * cum_pos // tot_pos AS BIGINT) AS gains_ppm,
+       CAST(round(1000000.0 *
+            (CAST(cum_pos AS DOUBLE) / CAST(cum_n AS DOUBLE))
+            / (CAST(tot_pos AS DOUBLE) / CAST(tot_n AS DOUBLE))
+          ) AS BIGINT) AS lift_micro
+FROM cum
+"""
+
+QUERIES["lift_gains_table"] = lift_gains_table
+ORACLES["lift_gains_table"] = LIFT_GAINS_TABLE_SQL

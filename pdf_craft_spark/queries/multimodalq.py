@@ -28,11 +28,7 @@ from pdf_craft_spark.functions.multimodal import (
     synth_media_table,
 )
 from pdf_craft_spark.queries import dedup
-from pdf_craft_spark.sources import load_table
-
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return load_table(spark, sf_dir, "documents")
+from pdf_craft_spark.queries.dedup import _docs
 
 
 # The synth-media table, materialized once per session and shared by every

@@ -15,13 +15,17 @@ distributed plan == reference-parity kernel, span-for-span
 The corpus size is pinned (not sf-scaled) because correctness is a
 value-equality gate, not a throughput one — scale/throughput is measured
 separately in bench.py on 10k-50k-doc corpora.
+
+Extraction QA (pipeline_ab_span_diff, span_kind_transitions,
+media_ref_integrity_audit) exposes that invariant itself as queries:
+their oracles are pure SQL over the same golden tables.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from pdf_craft_spark.plans.pipeline import (
@@ -350,3 +354,211 @@ ORACLES = {
     "a8_budget_abort": A8_BUDGET_ABORT_SQL,
     "a9_confidence_histogram": A9_CONFIDENCE_HISTOGRAM_SQL,
 }
+
+
+_EXTRACT_PQ = os.path.join(_GOLDEN_DIR, "pipeline_extract_spans.parquet")
+_BOILER_PQ = os.path.join(_GOLDEN_DIR, "pipeline_boilerplate_strip.parquet")
+
+
+def _seq(df: DataFrame) -> DataFrame:
+    w = W.partitionBy("doc_id").orderBy("offset")
+    return df.select(
+        "doc_id",
+        F.row_number().over(w).alias("idx"),
+        "kind",
+        "text",
+        "media_ref",
+    )
+
+
+# --- A/B span-sequence diff ---------------------------------------------------
+# The regression harness an extraction migration actually runs: two
+# pipeline configurations (here: boilerplate stripping off vs on) compared
+# by the north-rule invariant — span-sequence equality on (kind, text,
+# media_ref, order) — per document.  Reports both lengths, the longest
+# common PREFIX (where the sequences first diverge), and an identical
+# flag.  The offsets are deliberately NOT compared (stripping renumbers
+# them); order is compared positionally via the per-doc rank, which is
+# what "same sequence" means.  One shuffle-free kernel run per variant +
+# a per-doc equi-join; at 10^12 docs this is exactly the A/B gate you'd
+# run on a sampled partition before a config rollout.
+def pipeline_ab_span_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = _corpus(spark)
+    a = _seq(extract_spans_df(docs)).alias("a")
+    b = _seq(extract_spans_df(docs, boilerplate=True)).alias("b")
+    j = a.join(b, ["doc_id", "idx"], "full").select(
+        "doc_id",
+        "idx",
+        F.col("a.kind").isNotNull().alias("in_a"),
+        F.col("b.kind").isNotNull().alias("in_b"),
+        (
+            F.col("a.kind").isNotNull()
+            & F.col("b.kind").isNotNull()
+            & F.expr("a.kind <=> b.kind")
+            & F.expr("a.text <=> b.text")
+            & F.expr("a.media_ref <=> b.media_ref")
+        ).alias("m"),
+    )
+    return (
+        j.groupBy("doc_id")
+        .agg(
+            F.max(F.when(F.col("in_a"), F.col("idx"))).cast("long").alias("n_a"),
+            F.max(F.when(F.col("in_b"), F.col("idx"))).cast("long").alias("n_b"),
+            F.min(F.when(~F.col("m"), F.col("idx"))).alias("first_diff"),
+        )
+        .selectExpr(
+            "doc_id",
+            "n_a",
+            "n_b",
+            "CAST(least(coalesce(first_diff - 1, 2147483647), n_a, n_b) AS BIGINT)"
+            " AS lcp",
+            "CAST(CASE WHEN first_diff IS NULL THEN 1 ELSE 0 END AS INT)"
+            " AS identical",
+        )
+        .orderBy("doc_id")
+    )
+
+
+PIPELINE_AB_SPAN_DIFF_SQL = f"""
+WITH a AS (
+  SELECT doc_id,
+         row_number() OVER (PARTITION BY doc_id ORDER BY "offset") AS idx,
+         kind, text, media_ref
+  FROM read_parquet('{_EXTRACT_PQ}')
+), b AS (
+  SELECT doc_id,
+         row_number() OVER (PARTITION BY doc_id ORDER BY "offset") AS idx,
+         kind, text, media_ref
+  FROM read_parquet('{_BOILER_PQ}')
+), j AS (
+  SELECT coalesce(a.doc_id, b.doc_id) AS doc_id,
+         coalesce(a.idx, b.idx) AS idx,
+         a.idx IS NOT NULL AS in_a,
+         b.idx IS NOT NULL AS in_b,
+         (a.idx IS NOT NULL AND b.idx IS NOT NULL
+          AND a.kind IS NOT DISTINCT FROM b.kind
+          AND a.text IS NOT DISTINCT FROM b.text
+          AND a.media_ref IS NOT DISTINCT FROM b.media_ref) AS m
+  FROM a FULL JOIN b ON a.doc_id = b.doc_id AND a.idx = b.idx
+)
+SELECT doc_id,
+       CAST(max(CASE WHEN in_a THEN idx END) AS BIGINT) AS n_a,
+       CAST(max(CASE WHEN in_b THEN idx END) AS BIGINT) AS n_b,
+       CAST(least(coalesce(min(CASE WHEN NOT m THEN idx END) - 1, 2147483647),
+                  max(CASE WHEN in_a THEN idx END),
+                  max(CASE WHEN in_b THEN idx END)) AS BIGINT) AS lcp,
+       CAST(CASE WHEN min(CASE WHEN NOT m THEN idx END) IS NULL
+            THEN 1 ELSE 0 END AS INT) AS identical
+FROM j
+GROUP BY doc_id
+ORDER BY doc_id
+"""
+
+QUERIES["pipeline_ab_span_diff"] = pipeline_ab_span_diff
+ORACLES["pipeline_ab_span_diff"] = PIPELINE_AB_SPAN_DIFF_SQL
+
+
+# --- span-kind transition grammar ---------------------------------------------
+# The corpus-level layout grammar: counts of consecutive (kind → kind)
+# transitions in extraction order.  A drifting kernel shows up here
+# before any per-doc diff does (e.g. titles suddenly followed by
+# footnotes), making this the cheap fleet-wide canary: one kernel pass,
+# per-doc lead() windows, a kinds²-bounded output.
+def span_kind_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
+    s = extract_spans_df(_corpus(spark)).select("doc_id", "offset", "kind")
+    w = W.partitionBy("doc_id").orderBy("offset")
+    return (
+        s.select("kind", F.lead("kind").over(w).alias("kind_to"))
+        .where(F.col("kind_to").isNotNull())
+        .groupBy(F.col("kind").alias("kind_from"), "kind_to")
+        .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
+        .orderBy("kind_from", "kind_to")
+    )
+
+
+SPAN_KIND_TRANSITIONS_SQL = f"""
+WITH s AS (
+  SELECT kind,
+         lead(kind) OVER (PARTITION BY doc_id ORDER BY "offset") AS kind_to
+  FROM read_parquet('{_EXTRACT_PQ}')
+)
+SELECT kind AS kind_from, kind_to, CAST(count(*) AS BIGINT) AS cnt
+FROM s
+WHERE kind_to IS NOT NULL
+GROUP BY kind, kind_to
+ORDER BY kind_from, kind_to
+"""
+
+QUERIES["span_kind_transitions"] = span_kind_transitions
+ORACLES["span_kind_transitions"] = SPAN_KIND_TRANSITIONS_SQL
+
+
+# --- media-ref integrity audit --------------------------------------------------
+# The interleaved-payload contract check: per span kind (plus an __all__
+# rollup row), how many spans carry a media_ref, how many distinct
+# assets that is, and whether any asset id is referenced more than once
+# within the kind — the dangling/duplicate-reference audit that guards
+# the content-addressed asset store (S6) when extraction is re-run or
+# resumed.  Aggregation-only: one kernel pass, a (kind, media_ref) group,
+# a kinds-sized output.
+def media_ref_integrity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    s = extract_spans_df(_corpus(spark)).select("kind", "media_ref")
+
+    def audit(frame: DataFrame, label_col) -> DataFrame:
+        refs = (
+            frame.where(F.col("media_ref").isNotNull())
+            .groupBy(label_col.alias("kind"), "media_ref")
+            .agg(F.count(F.lit(1)).alias("c"))
+            .groupBy("kind")
+            .agg(
+                F.count(F.lit(1)).cast("long").alias("n_distinct_media"),
+                F.sum(F.expr("CASE WHEN c > 1 THEN 1 ELSE 0 END"))
+                .cast("long")
+                .alias("n_dup_media"),
+            )
+        )
+        spans = frame.groupBy(label_col.alias("kind")).agg(
+            F.count(F.lit(1)).cast("long").alias("n_spans"),
+            F.count("media_ref").cast("long").alias("n_with_media"),
+        )
+        return spans.join(refs, "kind", "left").selectExpr(
+            "kind",
+            "n_spans",
+            "n_with_media",
+            "CAST(coalesce(n_distinct_media, 0) AS BIGINT) AS n_distinct_media",
+            "CAST(coalesce(n_dup_media, 0) AS BIGINT) AS n_dup_media",
+        )
+
+    per_kind = audit(s, F.col("kind"))
+    overall = audit(s, F.lit("__all__"))
+    return per_kind.unionAll(overall).orderBy("kind")
+
+
+MEDIA_REF_INTEGRITY_AUDIT_SQL = f"""
+WITH s AS (
+  SELECT kind, media_ref FROM read_parquet('{_EXTRACT_PQ}')
+), u AS (
+  SELECT kind, media_ref FROM s
+  UNION ALL
+  SELECT '__all__' AS kind, media_ref FROM s
+), refs AS (
+  SELECT kind,
+         CAST(count(*) AS BIGINT) AS n_distinct_media,
+         CAST(sum(CASE WHEN c > 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_dup_media
+  FROM (SELECT kind, media_ref, count(*) AS c FROM u
+        WHERE media_ref IS NOT NULL GROUP BY kind, media_ref)
+  GROUP BY kind
+), spans AS (
+  SELECT kind, CAST(count(*) AS BIGINT) AS n_spans,
+         CAST(count(media_ref) AS BIGINT) AS n_with_media
+  FROM u GROUP BY kind
+)
+SELECT spans.kind, n_spans, n_with_media,
+       CAST(coalesce(n_distinct_media, 0) AS BIGINT) AS n_distinct_media,
+       CAST(coalesce(n_dup_media, 0) AS BIGINT) AS n_dup_media
+FROM spans LEFT JOIN refs ON refs.kind = spans.kind
+ORDER BY spans.kind
+"""
+
+QUERIES["media_ref_integrity_audit"] = media_ref_integrity_audit
+ORACLES["media_ref_integrity_audit"] = MEDIA_REF_INTEGRITY_AUDIT_SQL

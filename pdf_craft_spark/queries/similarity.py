@@ -16,6 +16,11 @@ Float determinism vs the DuckDB oracle: every element is cast to double
 before arithmetic, and both engines evaluate the 64-term sums in the same
 left-associated order (literal sums on both sides), so the doubles are
 bit-identical and rounding is purely cosmetic.
+
+Also here: the binary sign-hash index (sim_binary_hash_topk, 1 bit per
+dimension: the cheapest rung of the quantization ladder below SQ8 and PQ,
+Hamming candidates then exact-cosine rerank), mutual-nearest-neighbor
+pairs, the blocked k-NN graph, and embedding near-dup verification.
 """
 
 from __future__ import annotations
@@ -1981,3 +1986,369 @@ ANN_DIM_TRUNCATION_EVAL_SQL = _trunc_eval_sql()
 
 QUERIES["ann_dim_truncation_eval"] = ann_dim_truncation_eval
 ORACLES["ann_dim_truncation_eval"] = ANN_DIM_TRUNCATION_EVAL_SQL
+
+
+# Hamming candidates per query before exact rerank.  Measured recall@5 on
+# the isotropic sf0.01 corpus (1,000 unit vectors): cand 32 → 0.64,
+# 64 → 0.72, 100 → 0.84, 150 → 0.94 — the familiar structure-less-data
+# frontier (ann_frontier in BENCH.md): 1-bit codes rank by angle octant
+# only, so isotropic data needs a ~10% candidate fraction for 0.84.
+# Default 100; ties at the boundary break by neighbor_id so both engines
+# cut identically.
+BIN_CAND = 100
+
+# DuckDB raises on 1 << 63 (sign bit), so the 64 sign bits are packed as
+# TWO 32-bit words — shifts stay in [0, 31] on both engines.
+_CODE_SPARK = (
+    "aggregate(sequence(0, 31), CAST(0 AS BIGINT), (acc, i) -> acc + "
+    "CASE WHEN element_at(embedding, i + {off} + 1) > 0.0 "
+    "THEN shiftleft(CAST(1 AS BIGINT), i) ELSE CAST(0 AS BIGINT) END)"
+)
+_CODE_DUCK = (
+    "list_reduce(list_transform(range(0, 32), i -> "
+    "CASE WHEN embedding[i + {off} + 1] > 0.0 "
+    "THEN (CAST(1 AS BIGINT) << i) ELSE CAST(0 AS BIGINT) END), "
+    "(acc, v) -> acc + v)"
+)
+
+
+def sim_binary_hash_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    emb = _emb(spark, sf_dir)
+    codes = emb.selectExpr(
+        "vec_id",
+        f"({_CODE_SPARK.format(off=0)}) AS c_lo",
+        f"({_CODE_SPARK.format(off=32)}) AS c_hi",
+    ).localCheckpoint(eager=True)  # the stored 64-bit sign index
+    q = codes.filter(F.col("vec_id") < N_QUERIES).selectExpr(
+        "vec_id AS query_id", "c_lo AS q_lo", "c_hi AS q_hi"
+    )
+    scored = (
+        F.broadcast(q)
+        .crossJoin(codes.selectExpr("vec_id AS neighbor_id", "c_lo", "c_hi"))
+        .filter(F.col("query_id") != F.col("neighbor_id"))
+        .selectExpr(
+            "query_id",
+            "neighbor_id",
+            "CAST(bit_count(q_lo ^ c_lo) + bit_count(q_hi ^ c_hi) AS INT)"
+            " AS hamming",
+        )
+    )
+    wc = W.partitionBy("query_id").orderBy(F.asc("hamming"), F.asc("neighbor_id"))
+    cand = scored.withColumn("crk", F.row_number().over(wc)).filter(
+        F.col("crk") <= BIN_CAND
+    )
+    qe = emb.filter(F.col("vec_id") < N_QUERIES).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("qe"),
+        F.expr(_DOT.format(a="embedding", b="embedding")).alias("nq"),
+    )
+    ce = emb.select(
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("ce"),
+        F.expr(_DOT.format(a="embedding", b="embedding")).alias("nc"),
+    )
+    rer = (
+        cand.join(F.broadcast(qe), "query_id")
+        .join(ce, "neighbor_id")
+        .select(
+            "query_id",
+            "neighbor_id",
+            "hamming",
+            F.round(
+                F.expr(_DOT.format(a="qe", b="ce"))
+                / F.sqrt(F.col("nq") * F.col("nc")),
+                6,
+            ).alias("cos_sim"),
+        )
+    )
+    w = W.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
+    return (
+        rer.withColumn("rank", F.row_number().over(w).cast("bigint"))
+        .filter(F.col("rank") <= TOP_K)
+        .select("query_id", "rank", "neighbor_id", "hamming", "cos_sim")
+        .orderBy("query_id", "rank")
+    )
+
+
+SIM_BINARY_HASH_TOPK_SQL = f"""
+WITH codes AS (
+  SELECT vec_id,
+         {_CODE_DUCK.format(off=0)} AS c_lo,
+         {_CODE_DUCK.format(off=32)} AS c_hi
+  FROM embeddings
+), q AS (
+  SELECT vec_id AS query_id, c_lo AS q_lo, c_hi AS q_hi
+  FROM codes WHERE vec_id < {N_QUERIES}
+), scored AS (
+  SELECT query_id, c.vec_id AS neighbor_id,
+         CAST(bit_count(xor(q_lo, c.c_lo)) + bit_count(xor(q_hi, c.c_hi)) AS INT)
+           AS hamming
+  FROM q CROSS JOIN codes c WHERE query_id <> c.vec_id
+), cand AS (
+  SELECT query_id, neighbor_id, hamming
+  FROM (SELECT *, row_number() OVER (PARTITION BY query_id
+             ORDER BY hamming ASC, neighbor_id ASC) AS crk
+        FROM scored)
+  WHERE crk <= {BIN_CAND}
+), rer AS (
+  SELECT cand.query_id, cand.neighbor_id, cand.hamming,
+         round({_DOT_DUCK.format(a="qe.embedding", b="ce.embedding", n=DIM)}
+               / sqrt({_DOT_DUCK.format(a="qe.embedding", b="qe.embedding", n=DIM)}
+                      * {_DOT_DUCK.format(a="ce.embedding", b="ce.embedding", n=DIM)}),
+               6) AS cos_sim
+  FROM cand
+  JOIN embeddings qe ON qe.vec_id = cand.query_id
+  JOIN embeddings ce ON ce.vec_id = cand.neighbor_id
+)
+SELECT query_id, rank, neighbor_id, hamming, cos_sim FROM (
+  SELECT *, CAST(row_number() OVER (PARTITION BY query_id
+               ORDER BY cos_sim DESC, neighbor_id ASC) AS BIGINT) AS rank
+  FROM rer
+) WHERE rank <= {TOP_K} ORDER BY query_id, rank
+"""
+
+QUERIES["sim_binary_hash_topk"] = sim_binary_hash_topk
+ORACLES["sim_binary_hash_topk"] = SIM_BINARY_HASH_TOPK_SQL
+
+
+# --- mutual-nearest-neighbor pairs (sign-bucket blocked) ----------------------
+# The bitext-mining/dedup primitive the ANN family lacked: pairs (a, b)
+# where each is the other's TOP-1 neighbor — mutual agreement kills the
+# hub-vector false positives a one-directional top-1 keeps.  Candidates
+# are blocked by a 4-bit sign-hash bucket (sim_binary_hash_topk's code
+# recipe on the first 4 embedding signs), so the pair set is bucket-bounded — never
+# all-pairs; scores are int64 dot products of milli-quantized embeddings
+# (no float aggregation); top-1 ties break by partner id so both engines
+# cut identically.  label_match is the eval nicety: mutual NNs should
+# mostly share a label on clustered data.
+MNN_BUCKET_BITS = 4
+
+
+def mutual_nn_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    emb = load_table(spark, sf_dir, "embeddings")
+    # quantized vectors stay ARRAYS: the per-pair dot is an int64 fold
+    # over zip_with (order-free exact integer sum — any evaluation order
+    # gives the identical value), so the scorer is two BROADCAST joins of
+    # the 1-row-per-vector table plus a projection, replacing the old
+    # exploded (pair x dim) shuffle + aggregate — the shuffle, not the
+    # arithmetic, was the cost (guide §2.3: shuffle fewer bytes).
+    qarr = emb.select(
+        "vec_id",
+        F.expr(
+            "transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1000) AS BIGINT))"
+        ).alias("qv"),
+    )
+    bucket_bits = " + ".join(
+        f"CASE WHEN element_at(qv, {p + 1}) > 0 THEN {1 << p} ELSE 0 END"
+        for p in range(MNN_BUCKET_BITS)
+    )
+    codes = qarr.selectExpr("vec_id", f"CAST({bucket_bits} AS BIGINT) AS bucket")
+    pa = codes.selectExpr("vec_id AS va", "bucket")
+    pb = codes.selectExpr("vec_id AS vb", "bucket")
+    pairs = pa.join(pb, "bucket").filter(F.col("va") < F.col("vb")).select("va", "vb")
+    dots = (
+        pairs.join(F.broadcast(qarr.selectExpr("vec_id AS va", "qv AS qa")), "va")
+        .join(F.broadcast(qarr.selectExpr("vec_id AS vb", "qv AS qb")), "vb")
+        .select(
+            "va",
+            "vb",
+            F.expr(
+                "CAST(aggregate(zip_with(qa, qb, (x, y) -> x * y), "
+                "CAST(0 AS BIGINT), (acc, v) -> acc + v) AS BIGINT)"
+            ).alias("dot"),
+        )
+    )
+    edges = dots.selectExpr("va AS src", "vb AS prt", "dot").unionAll(
+        dots.selectExpr("vb AS src", "va AS prt", "dot")
+    )
+    wr = W.partitionBy("src").orderBy(F.desc("dot"), F.asc("prt"))
+    best = edges.withColumn("rk", F.row_number().over(wr)).filter(F.col("rk") == 1)
+    fwd = best.selectExpr("src AS a", "prt AS b", "dot")
+    rev = best.selectExpr("prt AS a", "src AS b")
+    mutual = fwd.join(rev, ["a", "b"]).filter(F.col("a") < F.col("b"))
+    la = emb.selectExpr("vec_id AS a", "label AS label_a")
+    lb = emb.selectExpr("vec_id AS b", "label AS label_b")
+    return (
+        mutual.join(la, "a")
+        .join(lb, "b")
+        .selectExpr(
+            "a AS vec_a",
+            "b AS vec_b",
+            "dot AS dot_milli2",
+            "CAST(CASE WHEN label_a = label_b THEN 1 ELSE 0 END AS BIGINT) AS label_match",
+        )
+    )
+
+
+MUTUAL_NN_PAIRS_SQL = """
+WITH q AS (
+  SELECT vec_id, label, i AS pos,
+         CAST(floor(CAST(e AS DOUBLE) * 1000) AS BIGINT) AS qv
+  FROM (SELECT vec_id, label, unnest(embedding) AS e,
+               unnest(range(len(embedding))) AS i FROM embeddings)
+), codes AS (
+  SELECT vec_id,
+         SUM(CASE WHEN qv > 0 THEN (CAST(1 AS BIGINT) << CAST(pos AS INT)) ELSE 0 END) AS bucket
+  FROM q WHERE pos < 4 GROUP BY vec_id
+), pairs AS (
+  SELECT a.vec_id AS va, b.vec_id AS vb
+  FROM codes a JOIN codes b ON a.bucket = b.bucket AND a.vec_id < b.vec_id
+), dots AS (
+  SELECT p.va, p.vb, SUM(qa.qv * qb.qv) AS dot
+  FROM pairs p
+  JOIN q qa ON qa.vec_id = p.va
+  JOIN q qb ON qb.vec_id = p.vb AND qb.pos = qa.pos
+  GROUP BY p.va, p.vb
+), edges AS (
+  SELECT va AS src, vb AS prt, dot FROM dots
+  UNION ALL
+  SELECT vb AS src, va AS prt, dot FROM dots
+), best AS (
+  SELECT src, prt, dot,
+         row_number() OVER (PARTITION BY src ORDER BY dot DESC, prt ASC) AS rk
+  FROM edges
+), mutual AS (
+  SELECT f.src AS a, f.prt AS b, f.dot
+  FROM best f JOIN best r ON r.src = f.prt AND r.prt = f.src
+  WHERE f.rk = 1 AND r.rk = 1 AND f.src < f.prt
+)
+SELECT m.a AS vec_a, m.b AS vec_b, m.dot AS dot_milli2,
+       CAST(CASE WHEN ea.label = eb.label THEN 1 ELSE 0 END AS BIGINT) AS label_match
+FROM mutual m
+JOIN embeddings ea ON ea.vec_id = m.a
+JOIN embeddings eb ON eb.vec_id = m.b
+"""
+
+QUERIES["mutual_nn_pairs"] = mutual_nn_pairs
+ORACLES["mutual_nn_pairs"] = MUTUAL_NN_PAIRS_SQL
+
+
+# --- embedding near-dup within blocking buckets ------------------------------
+# The IVF-style verify step: candidate pairs are blocked by label (the
+# coarse quantizer stand-in), then exact cosine >= 0.35 confirms near-dups
+# (threshold sized to the synthetic embeddings: same-label q99 ~ 0.30).
+def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
+    emb = load_table(spark, sf_dir, "embeddings").select(
+        "vec_id", "label", "embedding", F.expr(_DOT.format(a="embedding", b="embedding")).alias("nrm")
+    )
+    a = emb.select(
+        F.col("vec_id").alias("vec_a"),
+        F.col("label"),
+        F.col("embedding").alias("ea"),
+        F.col("nrm").alias("na"),
+    )
+    b = emb.select(
+        F.col("vec_id").alias("vec_b"),
+        F.col("label"),
+        F.col("embedding").alias("eb"),
+        F.col("nrm").alias("nb"),
+    )
+    pairs = a.join(b, "label").filter(F.col("vec_a") < F.col("vec_b"))
+    cos = F.round(
+        F.expr(_DOT.format(a="ea", b="eb")) / F.sqrt(F.col("na") * F.col("nb")), 6
+    )
+    return (
+        pairs.select("label", "vec_a", "vec_b", cos.alias("cos_sim"))
+        .filter(F.col("cos_sim") >= 0.35)
+        .orderBy("label", "vec_a", "vec_b")
+    )
+
+
+_DOT_DUCK64 = (
+    "list_reduce(list_transform(range(1, 65), "
+    "i -> CAST({a}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE)), (acc, v) -> acc + v)"
+)
+
+DEDUP_EMBEDDING_COSINE_SQL = f"""
+WITH e AS (
+  SELECT vec_id, label, embedding,
+         {_DOT_DUCK64.format(a="embedding", b="embedding")} AS nrm
+  FROM embeddings
+)
+SELECT a.label AS label, a.vec_id AS vec_a, b.vec_id AS vec_b,
+       round({_DOT_DUCK64.format(a="a.embedding", b="b.embedding")}
+             / sqrt(a.nrm * b.nrm), 6) AS cos_sim
+FROM e a JOIN e b ON a.label = b.label AND a.vec_id < b.vec_id
+WHERE round({_DOT_DUCK64.format(a="a.embedding", b="b.embedding")}
+            / sqrt(a.nrm * b.nrm), 6) >= 0.35
+ORDER BY label, vec_a, vec_b
+"""
+
+QUERIES["dedup_embedding_cosine"] = dedup_embedding_cosine
+ORACLES["dedup_embedding_cosine"] = DEDUP_EMBEDDING_COSINE_SQL
+
+
+# --- k-NN graph construction (blocked) --------------------------------------
+# The neighbor-graph build step underlying NN-descent / HNSW / spectral
+# methods: for EVERY vector, its top-K exact-cosine neighbors within its
+# label block (the coarse-quantizer blocking dedup_embedding_cosine
+# already uses — at scale the blocks come from IVF assignment, and
+# NN-descent refines across blocks).  One block-keyed self-equi-join,
+# per-vector row_number over (cos desc, neighbor asc) — ties broken by
+# id so the graph is deterministic; cosines rounded to 6 places before
+# ranking so both engines rank identical values.  Fan-out is block-
+# bounded (|block|² per label), never corpus².
+KNN_K = 3
+
+
+def knn_graph_block(spark: SparkSession, sf_dir: str) -> DataFrame:
+    emb = load_table(spark, sf_dir, "embeddings").select(
+        "vec_id",
+        "label",
+        "embedding",
+        F.expr(_DOT.format(a="embedding", b="embedding")).alias("nrm"),
+    )
+    a = emb.selectExpr("vec_id AS va", "label", "embedding AS ea", "nrm AS na")
+    b = emb.selectExpr("vec_id AS vb", "label", "embedding AS eb", "nrm AS nb")
+    cos = F.round(
+        F.expr(_DOT.format(a="ea", b="eb")) / F.sqrt(F.col("na") * F.col("nb")),
+        6,
+    )
+    # cosine is symmetric bit-for-bit (elementwise products commute and
+    # the fold order is unchanged), so evaluate the interpreted
+    # higher-order dot once per UNORDERED pair (va < vb), materialize,
+    # and mirror — halves the dominant per-pair fold work (guide §1.2:
+    # fix the per-task work).  The checkpoint stops Catalyst re-deriving
+    # the join (and re-paying the dots) into each union branch.
+    half = (
+        a.join(b, "label")
+        .filter(F.col("va") < F.col("vb"))
+        .select("va", "vb", cos.alias("cos_sim"))
+        .localCheckpoint(eager=True)
+    )
+    pairs = half.unionAll(half.selectExpr("vb AS va", "va AS vb", "cos_sim"))
+    rk = F.row_number().over(
+        W.partitionBy("va").orderBy(F.desc("cos_sim"), F.asc("vb"))
+    )
+    return (
+        pairs.withColumn("rk", rk.cast("long"))
+        .filter(F.col("rk") <= KNN_K)
+        .selectExpr("va AS vec_id", "rk", "vb AS neighbor", "cos_sim")
+        .orderBy("vec_id", "rk")
+    )
+
+
+KNN_GRAPH_BLOCK_SQL = f"""
+WITH e AS (
+  SELECT vec_id, label, embedding,
+         {_DOT_DUCK64.format(a="embedding", b="embedding")} AS nrm
+  FROM embeddings
+), pairs AS (
+  SELECT a.vec_id AS va, b.vec_id AS vb,
+         round({_DOT_DUCK64.format(a="a.embedding", b="b.embedding")}
+               / sqrt(a.nrm * b.nrm), 6) AS cos_sim
+  FROM e a JOIN e b ON a.label = b.label AND a.vec_id != b.vec_id
+), ranked AS (
+  SELECT va, vb, cos_sim,
+         CAST(row_number() OVER (PARTITION BY va
+                                 ORDER BY cos_sim DESC, vb) AS BIGINT) AS rk
+  FROM pairs
+)
+SELECT va AS vec_id, rk, vb AS neighbor, cos_sim
+FROM ranked WHERE rk <= {KNN_K}
+ORDER BY vec_id, rk
+"""
+
+
+QUERIES["knn_graph_block"] = knn_graph_block
+ORACLES["knn_graph_block"] = KNN_GRAPH_BLOCK_SQL

@@ -39,8 +39,10 @@ from pyspark.sql import functions as F
 
 from pdf_craft_spark.queries.dedup import (
     HASH_PCT_SQL as _HASH_PCT_SQL,
+    hash_pct,
     md5_prefix_long_sql as _md5_long,
 )
+from pdf_craft_spark.queries.timeseries import SLIDE_DAYS
 from pdf_craft_spark.sources import load_table
 
 _M = 256  # registers (p = 8)
@@ -311,8 +313,6 @@ def _bloom_pos(engine: str, salt: int) -> str:
 
 
 def bloom_membership_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pdf_craft_spark.queries.dedup import hash_pct
-
     docs = load_table(spark, sf_dir, "documents")
     norm = F.md5(F.trim(F.regexp_replace(F.col("text"), r"\s+", " ")))
     base = docs.select(
@@ -543,8 +543,6 @@ ORACLES["cms_heavy_hitters"] = CMS_HEAVY_HITTERS_SQL
 def sliding_hll_user_days_7d(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
-    from pdf_craft_spark.queries.timeseries import SLIDE_DAYS
-
     ev = load_table(spark, sf_dir, "events")
     key = "concat(CAST(user_id AS STRING), '|', CAST(day AS STRING))"
     h = _md5_long(key, 15, "spark")
@@ -613,8 +611,6 @@ def sliding_hll_user_days_7d(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sliding_hll_sql() -> str:
-    from pdf_craft_spark.queries.timeseries import SLIDE_DAYS
-
     key = "CAST(user_id AS VARCHAR) || '|' || CAST(day AS VARCHAR)"
     hd = _md5_long(key, 15, "duck")
     return f"""

@@ -44,6 +44,26 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pdf_craft_spark.queries.analyticsq import (
+    CDC_COMPACT_LATEST_SQL,
+    CDC_DEL_BP,
+    CDC_U1_BP,
+    CDC_U2_BP,
+)
+from pdf_craft_spark.queries.dedup import (
+    HASH_PCT_SQL,
+    INGEST_BATCH_PCT,
+    hash_pct,
+    md5_prefix_long_sql as _mpl,
+)
+from pdf_craft_spark.queries.sketches import (
+    _AM2,
+    _M,
+    _RHO,
+    _SCALE,
+    _WBITS,
+    _bitlen_case,
+)
 from pdf_craft_spark.sources import load_table
 
 _EVENT_DDL = "doc_id string, kind string, n_chars long, event_time timestamp"
@@ -334,8 +354,6 @@ def streaming_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     with dropDuplicatesWithinWatermark (event-time retention) or the
     committed-index pattern of ``dedup_incremental``; the state
     semantics exercised here are the same."""
-    from pdf_craft_spark.queries.dedup import INGEST_BATCH_PCT, hash_pct
-
     docs = load_table(spark, sf_dir, "documents")
     norm = F.md5(F.trim(F.regexp_replace(F.col("text"), r"\s+", " ")))
     rows = docs.select(
@@ -381,8 +399,6 @@ _INTRA_PCT = 95
 
 
 def _streaming_dedup_sql() -> str:
-    from pdf_craft_spark.queries.dedup import HASH_PCT_SQL, INGEST_BATCH_PCT
-
     return f"""
 WITH pct AS (
   SELECT md5(trim(regexp_replace(text, '\\s+', ' ', 'g'))) AS content_hash,
@@ -744,13 +760,6 @@ def streaming_upsert_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch (localCheckpoint — the written-table twin of a real MERGE
     target); tombstones filter only at read time so a later re-insert
     could resurrect a key (none does in this feed, by recipe)."""
-    from pdf_craft_spark.queries.analyticsq import (
-        CDC_DEL_BP,
-        CDC_U1_BP,
-        CDC_U2_BP,
-    )
-    from pdf_craft_spark.queries.dedup import md5_prefix_long_sql as _mpl
-
     bp = _mpl("CAST(o_orderkey AS STRING)", 4, "spark") + " % 10000"
     base = load_table(spark, sf_dir, "orders").selectExpr(
         "o_orderkey",
@@ -835,8 +844,6 @@ def streaming_upsert_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _streaming_upsert_sql() -> str:
-    from pdf_craft_spark.queries.analyticsq import CDC_COMPACT_LATEST_SQL
-
     # the invariant IS batch compaction: same log, same latest-wins rule
     return (
         "SELECT o_orderkey, o_orderstatus, cents, version FROM ("
@@ -866,15 +873,6 @@ def streaming_hll_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     sf0.01 — inside the m=256 raw-estimate validity band, same choice as
     sliding_hll_user_days_7d); the exact distinct count rides along so
     the record shows estimator error, not just merge equality."""
-    from pdf_craft_spark.queries.dedup import md5_prefix_long_sql as _mpl
-    from pdf_craft_spark.queries.sketches import (
-        _AM2,
-        _M,
-        _RHO,
-        _SCALE,
-        _WBITS,
-    )
-
     key = "concat(CAST(user_id AS STRING), '|', CAST(day AS STRING))"
     h = _mpl(key, 15, "spark")
     base = (
@@ -977,15 +975,6 @@ def streaming_hll_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _streaming_hll_sql() -> str:
-    from pdf_craft_spark.queries.dedup import md5_prefix_long_sql as _mpl
-    from pdf_craft_spark.queries.sketches import (
-        _AM2,
-        _M,
-        _SCALE,
-        _WBITS,
-        _bitlen_case,
-    )
-
     key = "CAST(user_id AS VARCHAR) || '|' || CAST(day AS VARCHAR)"
     hd = _mpl(key, 15, "duck")
     return f"""

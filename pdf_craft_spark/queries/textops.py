@@ -5,7 +5,9 @@ guess, document fingerprinting.  All pure Catalyst expressions (JVM-side,
 codegen) — no Python in the hot path; each has an exact DuckDB oracle.
 
 Tokens are defined as the non-empty pieces of a ``\\s+`` split of the raw
-text — identical semantics in both engines.
+text — identical semantics in both engines.  Corpus statistics over
+``[a-z]+`` words live here too: Zipf rank-frequency, keyword-in-context,
+and term burstiness.
 """
 
 from __future__ import annotations
@@ -15,22 +17,24 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from pdf_craft_spark.queries.dedup import (
+    HASH_PCT_SQL,
+    _df_cutoff,
+    _docs,
+    _shingle_list_duck,
+    _tokens,
+    hash_pct,
+    shingles_cached,
+)
+from pdf_craft_spark.queries.pipelineq import GOLDEN_DOCS, SEED
 from pdf_craft_spark.sources import load_table
 
 STOPWORDS = ("the", "of", "and", "a", "to", "in", "is", "it", "on", "for")
 
 
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return load_table(spark, sf_dir, "documents")
-
-
-def _tokens_col() -> F.Column:
-    return F.filter(F.split(F.col("text"), r"\s+"), lambda t: t != "")
-
-
 # --- token counting ---------------------------------------------------------
 def text_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    toks = _tokens_col()
+    toks = _tokens()
     return (
         _docs(spark, sf_dir)
         .select(
@@ -78,7 +82,7 @@ def text_token_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id",
             F.size(bpe).alias("n_bpe_tokens"),
             F.size(F.array_distinct(bpe)).alias("n_bpe_distinct"),
-            F.size(_tokens_col()).alias("n_ws_tokens"),
+            F.size(_tokens()).alias("n_ws_tokens"),
         )
         .orderBy("doc_id")
     )
@@ -109,7 +113,7 @@ FROM t ORDER BY doc_id
 # is deterministic.
 def text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir)
-    toks = _tokens_col()
+    toks = _tokens()
     n_tok = F.size(toks)
     stop_arr = F.array(*[F.lit(s) for s in STOPWORDS])
     n_stop = F.size(F.filter(toks, lambda t: F.array_contains(stop_arr, F.lower(t))))
@@ -177,7 +181,7 @@ FROM documents ORDER BY doc_id
 # (a set-semantics analog of the reference's sha-256 content addressing,
 # /root/reference/pdf_craft/common/asset.py:16-34).
 def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    toks = _tokens_col()
+    toks = _tokens()
     fp = F.md5(F.array_join(F.array_sort(F.array_distinct(toks)), " "))
     return _docs(spark, sf_dir).select("doc_id", fp.alias("fingerprint")).orderBy("doc_id")
 
@@ -212,8 +216,6 @@ _GOLDEN_RAW = os.path.normpath(
 
 def text_scrub_pii(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pdf_craft_spark.plans.pipeline import corpus_df, explode_spans
-    from pdf_craft_spark.queries.pipelineq import GOLDEN_DOCS, SEED
-
     flat = explode_spans(corpus_df(spark, GOLDEN_DOCS, SEED))
     raw = F.col("text")
     scrubbed = F.regexp_replace(
@@ -577,8 +579,6 @@ LM_TRAIN_PCT = 90
 def text_lm_bigram_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
-    from pdf_craft_spark.queries.dedup import hash_pct
-
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", hash_pct().alias("pct")
     )
@@ -619,8 +619,6 @@ def text_lm_bigram_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _lm_bigram_sql() -> str:
-    from pdf_craft_spark.queries.dedup import HASH_PCT_SQL
-
     return f"""
 WITH toks AS (
   SELECT doc_id, {HASH_PCT_SQL} AS pct,
@@ -747,8 +745,6 @@ _TFIDF_PAIR_TOPK = 50
 
 def tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
-
-    from pdf_craft_spark.queries.dedup import _df_cutoff
 
     docs = _docs(spark, sf_dir)
     n_docs = docs.select(F.count(F.lit(1)).alias("n_docs"))
@@ -1124,7 +1120,7 @@ RRF_TOP = 25
 
 def rrf_rank_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir)
-    toks = _tokens_col()
+    toks = _tokens()
     stop_arr = F.array(*[F.lit(s) for s in STOPWORDS])
     n_stop = F.size(F.filter(toks, lambda t: F.array_contains(stop_arr, F.lower(t))))
     lista = (
@@ -1198,8 +1194,6 @@ ORACLES["rrf_rank_fusion"] = RRF_RANK_FUSION_SQL
 # window count over the shingle key (ONE shuffle, no self-join), then one
 # per-doc aggregate.  Integer ppm output.
 def text_novelty_ppm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pdf_craft_spark.queries.dedup import shingles_cached
-
     sh = shingles_cached(spark, sf_dir)
     d = sh.withColumn("df", F.count(F.lit(1)).over(W.partitionBy("sh")))
     return (
@@ -1219,8 +1213,6 @@ def text_novelty_ppm(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _text_novelty_sql() -> str:
-    from pdf_craft_spark.queries.dedup import _shingle_list_duck
-
     return f"""
 WITH s AS (
   SELECT doc_id, unnest(shingles) AS sh FROM ({_shingle_list_duck()})
@@ -1553,3 +1545,194 @@ RBO_RANK_OVERLAP_SQL = _rbo_sql()
 
 QUERIES["rbo_rank_overlap"] = rbo_rank_overlap
 ORACLES["rbo_rank_overlap"] = RBO_RANK_OVERLAP_SQL
+
+
+# --- Zipf rank-frequency audit -----------------------------------------------
+# The classic corpus sanity table: rank tokens by frequency and report
+# rank·frequency, whose stability is Zipf's law (r·f ≈ f1).  The deviation
+# dev = |r·f − f1| / f1 is rational — no log-log fit, no libm — and the
+# ranking window runs over the VOCABULARY-sized aggregate (30 rows here;
+# bounded vocab at any corpus scale), never the token stream.  The one
+# data-sized operation is the token count shuffle.
+ZIPF_TOPK = 20
+
+
+def zipf_rank_frequency(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = load_table(spark, sf_dir, "documents").select("text")
+    toks = docs.select(
+        F.explode(F.expr("regexp_extract_all(text, '[a-z]+', 0)")).alias("t")
+    )
+    freq = toks.groupBy("t").agg(F.count(F.lit(1)).cast("long").alias("f"))
+    f1 = freq.agg(F.max("f").cast("long").alias("f1"))
+    wk = W.orderBy(F.col("f").desc(), F.col("t"))
+    return (
+        freq.withColumn("r", F.row_number().over(wk))
+        .where(F.col("r") <= ZIPF_TOPK)
+        .crossJoin(F.broadcast(f1))
+        .selectExpr(
+            "CAST(r AS INT) AS r",
+            "t",
+            "f",
+            "CAST(r * f AS BIGINT) AS rf",
+            """CAST(round(1000000.0 * abs(CAST(r * f AS DOUBLE) - CAST(f1 AS DOUBLE))
+                 / CAST(f1 AS DOUBLE)) AS BIGINT) AS dev_micro""",
+        )
+        .orderBy("r")
+    )
+
+
+ZIPF_RANK_FREQUENCY_SQL = f"""
+WITH toks AS (
+  SELECT unnest(regexp_extract_all(text, '[a-z]+')) AS t FROM documents
+), freq AS (
+  SELECT t, CAST(count(*) AS BIGINT) AS f FROM toks GROUP BY t
+), f1 AS (
+  SELECT CAST(max(f) AS BIGINT) AS f1 FROM freq
+), ranked AS (
+  SELECT t, f, CAST(row_number() OVER (ORDER BY f DESC, t) AS INT) AS r FROM freq
+)
+SELECT r, t, f, CAST(r * f AS BIGINT) AS rf,
+       CAST(round(1000000.0 * abs(CAST(r * f AS DOUBLE) - CAST(f1.f1 AS DOUBLE))
+         / CAST(f1.f1 AS DOUBLE)) AS BIGINT) AS dev_micro
+FROM ranked CROSS JOIN f1
+WHERE r <= {ZIPF_TOPK}
+ORDER BY r
+"""
+
+QUERIES["zipf_rank_frequency"] = zipf_rank_frequency
+ORACLES["zipf_rank_frequency"] = ZIPF_RANK_FREQUENCY_SQL
+
+
+# --- keyword-in-context mining -----------------------------------------------
+# Concordance over the rare 'dup' marker token: for every occurrence, the
+# (previous, next) token context via per-document positional windows, then
+# the top contexts by frequency — the quick forensic view of HOW a marker
+# appears in a corpus (boilerplate template vs organic use).  Document
+# boundaries emit '^' / '$' sentinels.  Per-doc windows keep the lag/lead
+# local; the only global structure is the bounded top-k.
+KWIC_TERM = "dup"
+KWIC_TOPK = 20
+
+
+def kwic_contexts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    toks = docs.select(
+        "doc_id",
+        F.posexplode(F.expr("regexp_extract_all(text, '[a-z]+', 0)")).alias(
+            "pos", "t"
+        ),
+    )
+    w = W.partitionBy("doc_id").orderBy("pos")
+    ctx = (
+        toks.select(
+            "t",
+            F.coalesce(F.lag("t").over(w), F.lit("^")).alias("prev_t"),
+            F.coalesce(F.lead("t").over(w), F.lit("$")).alias("next_t"),
+        )
+        .where(F.col("t") == KWIC_TERM)
+        .groupBy("prev_t", "next_t")
+        .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
+    )
+    wk = W.orderBy(F.col("cnt").desc(), F.col("prev_t"), F.col("next_t"))
+    return (
+        ctx.withColumn("rk", F.row_number().over(wk))
+        .where(F.col("rk") <= KWIC_TOPK)
+        .selectExpr("CAST(rk AS INT) AS rk", "prev_t", "next_t", "cnt")
+        .orderBy("rk")
+    )
+
+
+KWIC_CONTEXTS_SQL = f"""
+WITH toks AS (
+  SELECT doc_id, regexp_extract_all(text, '[a-z]+') AS ts FROM documents
+), pos AS (
+  SELECT doc_id, CAST(i AS INT) AS pos, ts[i] AS t
+  FROM toks CROSS JOIN unnest(range(1, len(ts) + 1)) AS r(i)
+), ctx AS (
+  SELECT prev_t, next_t, CAST(count(*) AS BIGINT) AS cnt
+  FROM (SELECT t,
+               coalesce(lag(t) OVER w, '^') AS prev_t,
+               coalesce(lead(t) OVER w, '$') AS next_t
+        FROM pos
+        WINDOW w AS (PARTITION BY doc_id ORDER BY pos))
+  WHERE t = '{KWIC_TERM}'
+  GROUP BY prev_t, next_t
+)
+SELECT CAST(row_number() OVER (ORDER BY cnt DESC, prev_t, next_t) AS INT) AS rk,
+       prev_t, next_t, cnt
+FROM ctx
+QUALIFY rk <= {KWIC_TOPK}
+ORDER BY rk
+"""
+
+QUERIES["kwic_contexts"] = kwic_contexts
+ORACLES["kwic_contexts"] = KWIC_CONTEXTS_SQL
+
+
+# --- per-term burstiness (variance-to-mean dispersion) -----------------------
+# Corpus-linguistics sibling of zipf_rank_frequency / chi2_terms: a term
+# that appears in bursts (high per-doc counts in few docs) is topical; a
+# term spread evenly (VMR near its Bernoulli floor) is function-word-like
+# — the standard keyword-vs-boilerplate signal.  Over ALL N docs
+# (zero-inflated): mean = sc/N, var = (N*sq - sc^2)/N^2, so
+# VMR = (N*sq - sc^2) / (N*sc) — rational, int64-exact until the single
+# final double division.  One token explode + one groupBy(token): the
+# same two-shuffle shape at any corpus size; N rides in as a broadcast
+# one-row cross join (the dedup.py house pattern).
+BURST_TOK_RE = "[a-z]{3,}"
+
+
+def term_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = load_table(spark, sf_dir, "documents")
+    n_docs = docs.agg(F.count(F.lit(1)).cast("long").alias("n_docs"))
+    per_dt = (
+        docs.select(
+            "doc_id",
+            F.explode(
+                F.expr(f"regexp_extract_all(text, '{BURST_TOK_RE}', 0)")
+            ).alias("t"),
+        )
+        .groupBy("t", "doc_id")
+        .agg(F.count(F.lit(1)).cast("long").alias("c"))
+    )
+    per_t = per_dt.groupBy("t").agg(
+        F.count(F.lit(1)).cast("long").alias("df"),
+        F.sum("c").cast("long").alias("sc"),
+        F.sum(F.col("c") * F.col("c")).cast("long").alias("sq"),
+    )
+    return per_t.crossJoin(F.broadcast(n_docs)).selectExpr(
+        "t AS token",
+        "df",
+        "sc AS tf_sum",
+        "CAST(1000000 * df DIV n_docs AS BIGINT) AS df_ppm",
+        """CAST(round(1000000.0 *
+             (CAST(n_docs AS DOUBLE) * CAST(sq AS DOUBLE) - CAST(sc AS DOUBLE) * CAST(sc AS DOUBLE))
+             / (CAST(n_docs AS DOUBLE) * CAST(sc AS DOUBLE))
+           ) AS BIGINT) AS vmr_micro""",
+    )
+
+
+TERM_BURSTINESS_SQL = """
+WITH nd AS (SELECT COUNT(*) AS n_docs FROM documents),
+per_dt AS (
+  SELECT t, doc_id, COUNT(*) AS c
+  FROM (SELECT doc_id, unnest(regexp_extract_all(text, '[a-z]{3,}')) AS t
+        FROM documents)
+  GROUP BY t, doc_id
+), per_t AS (
+  SELECT t, COUNT(*) AS df, SUM(c) AS sc, SUM(c * c) AS sq
+  FROM per_dt GROUP BY t
+)
+SELECT t AS token,
+       CAST(df AS BIGINT) AS df,
+       CAST(sc AS BIGINT) AS tf_sum,
+       CAST(1000000 * df // n_docs AS BIGINT) AS df_ppm,
+       CAST(round(1000000.0 *
+            (CAST(n_docs AS DOUBLE) * CAST(sq AS DOUBLE) - CAST(sc AS DOUBLE) * CAST(sc AS DOUBLE))
+            / (CAST(n_docs AS DOUBLE) * CAST(sc AS DOUBLE))
+          ) AS BIGINT) AS vmr_micro
+FROM per_t, nd
+"""
+
+QUERIES["term_burstiness"] = term_burstiness
+ORACLES["term_burstiness"] = TERM_BURSTINESS_SQL

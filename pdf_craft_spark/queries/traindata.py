@@ -15,7 +15,9 @@ Scale notes:
   One shuffle on the shard key, exactly like any windowed aggregate.
 
 Both are DuckDB-oracle-backed: md5-derived assignment and integer window
-arithmetic reproduce exactly across engines.
+arithmetic reproduce exactly across engines.  So are the sampling plans a
+training run draws with: epoch shuffles, group-aware k-fold assignment,
+temperature-scaled mixture weights and token-budget water-filling.
 """
 
 from __future__ import annotations
@@ -26,19 +28,21 @@ from pyspark.sql import functions as F
 from pdf_craft_spark.queries.dedup import (
     DF_CUTOFF_FRAC as _DF_CUTOFF_FRAC,
     HASH_PCT_SQL as _HASH_PCT_SQL,
+    _df_cutoff,
+    _docs,
     _shingle_list_duck,
+    _tokens,
     hash_pct as _dedup_hash_pct,
+    md5_prefix_long_sql,
+    shingles_cached,
 )
+from pdf_craft_spark.queries.similarity import _emb
 from pdf_craft_spark.sources import load_table
 
 # split fractions in percent: train 90 / val 5 / test 5
 VAL_PCT, TEST_PCT = 5, 5
 N_SHARDS = 16
 SEQ_CAPACITY = 2048  # tokens per packed training sequence
-
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return load_table(spark, sf_dir, "documents")
 
 
 def _hash_pct() -> F.Column:
@@ -187,8 +191,6 @@ def contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus (disjoint slices, so total shingling work is one corpus
     pass); at production scale the exploded shingle table would be
     written once and both branches would read it."""
-    from pdf_craft_spark.queries.dedup import _df_cutoff, shingles_cached
-
     # the session shingle artifact replaces both shingling passes (pct is
     # a pure function of doc_id, so tagging the materialized rows is
     # row-identical to carrying it through the shingler); the cutoff's
@@ -357,8 +359,6 @@ def embed_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     any op), and an empty one quantizes to scale 0.0 / q_csv '' (Spark's
     fold/array_join identities; the oracle coalesces DuckDB's NULL
     list_max/string_agg to match)."""
-    from pdf_craft_spark.queries.similarity import _emb
-
     emb = _emb(spark, sf_dir)
     scale = "aggregate(emb2, CAST(0.0 AS DOUBLE), (a, x) -> greatest(a, abs(CAST(x AS DOUBLE))))"
     q = (
@@ -594,8 +594,6 @@ CHUNK_STRIDE = 48
 
 
 def chunk_documents_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pdf_craft_spark.queries.dedup import _tokens
-
     C, S = CHUNK_TOKENS, CHUNK_STRIDE
     docs = (
         _docs(spark, sf_dir)
@@ -846,8 +844,6 @@ FH_BUCKETS = 16
 
 
 def feature_hash_bow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pdf_craft_spark.queries.dedup import md5_prefix_long_sql
-
     docs = _docs(spark, sf_dir)
     h = md5_prefix_long_sql("term", 8, "spark")
     return (
@@ -872,8 +868,6 @@ def feature_hash_bow(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _fh_duck_sql() -> str:
-    from pdf_craft_spark.queries.dedup import md5_prefix_long_sql
-
     h = md5_prefix_long_sql("term", 8, "duck")
     return f"""
 WITH t AS (
@@ -996,8 +990,6 @@ N_ID_SHARDS = 16
 
 
 def assign_global_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pdf_craft_spark.queries.dedup import md5_prefix_long_sql
-
     shard_expr = (
         f"CAST({md5_prefix_long_sql('CAST(doc_id AS STRING)', 6, 'spark')} % {N_ID_SHARDS} AS INT)"
     )
@@ -1033,8 +1025,6 @@ def assign_global_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _assign_global_ids_sql() -> str:
-    from pdf_craft_spark.queries.dedup import md5_prefix_long_sql
-
     shard = f"CAST({md5_prefix_long_sql('CAST(doc_id AS STRING)', 6, 'duck')} % {N_ID_SHARDS} AS INT)"
     return f"""
 WITH d AS (
@@ -1071,8 +1061,6 @@ PRIORITY_K = 200
 
 
 def priority_sample_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pdf_craft_spark.queries.dedup import md5_prefix_long_sql
-
     h = md5_prefix_long_sql("CAST(o_orderkey AS STRING)", 10, "spark")
     o = load_table(spark, sf_dir, "orders").selectExpr(
         "o_orderkey",
@@ -1117,8 +1105,6 @@ def priority_sample_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _priority_sample_sql() -> str:
-    from pdf_craft_spark.queries.dedup import md5_prefix_long_sql
-
     h = md5_prefix_long_sql("CAST(o_orderkey AS VARCHAR)", 10, "duck")
     return f"""
 WITH o AS (
@@ -1276,3 +1262,280 @@ ORDER BY f.user_id
 
 QUERIES["training_label_join"] = training_label_join
 ORACLES["training_label_join"] = TRAINING_LABEL_JOIN_SQL
+
+
+# --- deterministic epoch shuffle ---------------------------------------------
+# Training-epoch shuffling done without a global sort: shard =
+# md5(seed‖doc_id) % N_SHUFFLE_SHARDS routes rows (ONE hash shuffle), and
+# the within-shard position sorts by the remaining hash bits — each shard
+# sorts independently, so the "global shuffle" is N parallel shard-local
+# sorts exactly like pack_training_sequences' shard windows.  Changing the
+# epoch seed re-deals the entire permutation; the same seed replays it
+# byte-identically (restart/resume safe).  Complements assign_global_ids
+# (which orders by KEY for stable ids); this orders by HASH for decorrelated
+# batches.
+EPOCH_SEED = "epoch-1"
+N_SHUFFLE_SHARDS = 64
+
+
+def epoch_shuffle_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
+    key = md5_prefix_long_sql(
+        f"concat('{EPOCH_SEED}:', CAST(doc_id AS STRING))", 15, "spark"
+    )
+    docs = load_table(spark, sf_dir, "documents").selectExpr(
+        "doc_id", f"{key} AS hkey"
+    ).selectExpr(
+        "doc_id", "hkey", f"CAST(hkey % {N_SHUFFLE_SHARDS} AS INT) AS shard"
+    )
+    return docs.select(
+        "doc_id",
+        "shard",
+        F.row_number()
+        .over(W.partitionBy("shard").orderBy("hkey", "doc_id"))
+        .alias("pos"),
+    ).select("doc_id", "shard", F.col("pos").cast("int").alias("pos"))
+
+
+_DUCK_EPOCH_KEY = md5_prefix_long_sql(
+    f"concat('{EPOCH_SEED}:', CAST(doc_id AS VARCHAR))", 15, "duck"
+)
+
+EPOCH_SHUFFLE_PLAN_SQL = f"""
+WITH keyed AS (
+  SELECT doc_id, {_DUCK_EPOCH_KEY} AS hkey FROM documents
+), sharded AS (
+  SELECT doc_id, hkey, CAST(hkey % {N_SHUFFLE_SHARDS} AS INT) AS shard FROM keyed
+)
+SELECT doc_id, shard,
+       CAST(row_number() OVER (PARTITION BY shard ORDER BY hkey, doc_id) AS INT) AS pos
+FROM sharded
+"""
+
+QUERIES["epoch_shuffle_plan"] = epoch_shuffle_plan
+ORACLES["epoch_shuffle_plan"] = EPOCH_SHUFFLE_PLAN_SQL
+
+
+# --- group-aware k-fold assignment -------------------------------------------
+# Leakage-proof cross-validation at corpus scale: the fold is a pure hash
+# of the GROUP key (user_id), so a user's events can never straddle folds
+# — the invariant that plain row-hash k-fold (cv_kfold_mse) silently
+# violates when rows are correlated within a user.  Pure projection + one
+# aggregate; stable under rerun, append, and repartition exactly like
+# split_train_val_test.  Output: per-fold distinct users, rows, and row
+# share (the balance check).
+KFOLDS = 5
+
+
+def group_kfold_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
+    fold = (
+        md5_prefix_long_sql("concat('gkf:', CAST(user_id AS STRING))", 6, "spark")
+        + f" % {KFOLDS}"
+    )
+    ev = load_table(spark, sf_dir, "events").selectExpr(
+        "user_id", f"CAST({fold} AS INT) AS fold"
+    )
+    total = ev.agg(F.count(F.lit(1)).cast("long").alias("n_tot"))
+    return (
+        ev.groupBy("fold")
+        .agg(
+            F.countDistinct("user_id").cast("long").alias("n_users"),
+            F.count(F.lit(1)).cast("long").alias("n_rows"),
+        )
+        .crossJoin(F.broadcast(total))
+        .selectExpr(
+            "fold",
+            "n_users",
+            "n_rows",
+            """CAST(round(1000000.0 * CAST(n_rows AS DOUBLE)
+                 / CAST(n_tot AS DOUBLE)) AS BIGINT) AS rows_share_micro""",
+        )
+        .orderBy("fold")
+    )
+
+
+_GKF_DUCK = (
+    md5_prefix_long_sql("concat('gkf:', CAST(user_id AS VARCHAR))", 6, "duck")
+    + f" % {KFOLDS}"
+)
+
+GROUP_KFOLD_ASSIGNMENT_SQL = f"""
+WITH ev AS (
+  SELECT user_id, CAST({_GKF_DUCK} AS INT) AS fold FROM events
+), total AS (
+  SELECT CAST(count(*) AS BIGINT) AS n_tot FROM ev
+)
+SELECT fold,
+       CAST(count(DISTINCT user_id) AS BIGINT) AS n_users,
+       CAST(count(*) AS BIGINT) AS n_rows,
+       CAST(round(1000000.0 * CAST(count(*) AS DOUBLE)
+         / CAST(any_value(n_tot) AS DOUBLE)) AS BIGINT) AS rows_share_micro
+FROM ev CROSS JOIN total
+GROUP BY fold
+ORDER BY fold
+"""
+
+QUERIES["group_kfold_assignment"] = group_kfold_assignment
+ORACLES["group_kfold_assignment"] = GROUP_KFOLD_ASSIGNMENT_SQL
+
+
+# --- temperature-scaled mixture weights --------------------------------------
+# The sampling-weight table a multi-source training run actually loads:
+# per source, the proportional weight (T=1), the temperature-flattened
+# weight at T=2 (∝ √n — the standard multilingual/multi-source rebalance),
+# and the uniform weight (T→∞).  √n is rounded to an int64 micro PER
+# SOURCE ROW first, and the normalizing sum runs over those integers — so
+# the final shares are ratios of exact integers, immune to float-sum
+# ordering.  The only data-sized work is the source count aggregate; the
+# weight table itself is sources-sized (bounded).
+def temperature_mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ns = (
+        load_table(spark, sf_dir, "documents")
+        .groupBy("source")
+        .agg(F.count(F.lit(1)).cast("long").alias("n_docs"))
+        .selectExpr(
+            "source",
+            "n_docs",
+            "CAST(round(1000000.0 * sqrt(CAST(n_docs AS DOUBLE))) AS BIGINT)"
+            " AS sqrt_micro",
+        )
+    )
+    tot = ns.agg(
+        F.sum("n_docs").cast("long").alias("n_tot"),
+        F.sum("sqrt_micro").cast("long").alias("sqrt_tot"),
+        F.count(F.lit(1)).cast("long").alias("n_src"),
+    )
+    return (
+        ns.crossJoin(F.broadcast(tot))
+        .selectExpr(
+            "source",
+            "n_docs",
+            """CAST(round(1000000.0 * CAST(n_docs AS DOUBLE)
+                 / CAST(n_tot AS DOUBLE)) AS BIGINT) AS w_prop_micro""",
+            """CAST(round(1000000.0 * CAST(sqrt_micro AS DOUBLE)
+                 / CAST(sqrt_tot AS DOUBLE)) AS BIGINT) AS w_t2_micro""",
+            "CAST(1000000 DIV n_src AS BIGINT) AS w_uniform_micro",
+        )
+        .orderBy("source")
+    )
+
+
+TEMPERATURE_MIXTURE_WEIGHTS_SQL = """
+WITH ns AS (
+  SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
+         CAST(round(1000000.0 * sqrt(CAST(count(*) AS DOUBLE))) AS BIGINT)
+           AS sqrt_micro
+  FROM documents GROUP BY source
+), tot AS (
+  SELECT CAST(sum(n_docs) AS BIGINT) AS n_tot,
+         CAST(sum(sqrt_micro) AS BIGINT) AS sqrt_tot,
+         CAST(count(*) AS BIGINT) AS n_src
+  FROM ns
+)
+SELECT source, n_docs,
+       CAST(round(1000000.0 * CAST(n_docs AS DOUBLE)
+         / CAST(n_tot AS DOUBLE)) AS BIGINT) AS w_prop_micro,
+       CAST(round(1000000.0 * CAST(sqrt_micro AS DOUBLE)
+         / CAST(sqrt_tot AS DOUBLE)) AS BIGINT) AS w_t2_micro,
+       CAST(1000000 // n_src AS BIGINT) AS w_uniform_micro
+FROM ns CROSS JOIN tot
+ORDER BY source
+"""
+
+QUERIES["temperature_mixture_weights"] = temperature_mixture_weights
+ORACLES["temperature_mixture_weights"] = TEMPERATURE_MIXTURE_WEIGHTS_SQL
+
+
+# --- token-budget water-filling -----------------------------------------------
+# The sampling planner behind every "cap each domain at L tokens" recipe
+# (Gopher/LLaMA-style source balancing): given per-source token counts
+# c_i and a total budget B (60% of the corpus), find the unique level L
+# such that sum(min(c_i, L)) <= B with every source below L fully kept.
+# Exact integer algorithm, fully distributed: sort sources by c asc,
+# full_i <=> P_{i-1} + (n-i+1)*c_i <= B (a prefix, by monotonicity), and
+# L = (B - P_{k*}) DIV (n - k*) over the k* fully-funded sources — three
+# window functions, no driver loop, no floats.  The same plan at 100 TB
+# runs over the per-source aggregate (|sources| rows), not base data.
+WF_BUDGET_NUM, WF_BUDGET_DEN = 6, 10  # B = 60% of total tokens
+
+
+def token_budget_waterfill(spark: SparkSession, sf_dir: str) -> DataFrame:
+    per_src = (
+        load_table(spark, sf_dir, "documents")
+        .select(
+            "source",
+            F.size(F.expr("regexp_extract_all(text, '[a-z]{3,}', 0)")).alias("nt"),
+        )
+        .groupBy("source")
+        .agg(F.sum("nt").cast("long").alias("c"))
+    )
+    wall = W.rowsBetween(W.unboundedPreceding, W.unboundedFollowing)
+    wo = W.orderBy("c", "source")
+    wcum = wo.rowsBetween(W.unboundedPreceding, 0)
+    staged = (
+        per_src.withColumn("n", F.count(F.lit(1)).over(wall))
+        .withColumn("total", F.sum("c").over(wall))
+        .withColumn("i", F.row_number().over(wo))
+        .withColumn("p", F.sum("c").over(wcum))
+        .withColumn(
+            "budget",
+            F.expr(f"{WF_BUDGET_NUM} * total DIV {WF_BUDGET_DEN}"),
+        )
+        .withColumn(
+            "fullk",
+            F.expr("CASE WHEN p - c + (n - i + 1) * c <= budget THEN 1 ELSE 0 END"),
+        )
+    )
+    lev = staged.withColumn("kstar", F.sum("fullk").over(wall)).withColumn(
+        "pk",
+        F.max(F.when(F.col("i") == F.col("kstar"), F.col("p")).otherwise(0)).over(
+            wall
+        ),
+    )
+    return lev.selectExpr(
+        "source",
+        "c AS tokens",
+        "budget",
+        """CAST(CASE WHEN kstar = n THEN c
+                WHEN fullk = 1 THEN c
+                ELSE (budget - pk) DIV (n - kstar) END AS BIGINT) AS alloc""",
+        "CAST(1 - fullk AS BIGINT) AS capped",
+        """CAST(CASE WHEN kstar = n THEN -1
+                ELSE (budget - pk) DIV (n - kstar) END AS BIGINT) AS level""",
+    )
+
+
+TOKEN_BUDGET_WATERFILL_SQL = """
+WITH per_src AS (
+  SELECT source, SUM(len(regexp_extract_all(text, '[a-z]{3,}'))) AS c
+  FROM documents GROUP BY source
+), staged AS (
+  SELECT source, c,
+         COUNT(*) OVER () AS n,
+         SUM(c) OVER () AS total,
+         row_number() OVER (ORDER BY c, source) AS i,
+         SUM(c) OVER (ORDER BY c, source ROWS UNBOUNDED PRECEDING) AS p
+  FROM per_src
+), flagged AS (
+  SELECT *, 6 * total // 10 AS budget,
+         CASE WHEN p - c + (n - i + 1) * c <= 6 * total // 10 THEN 1 ELSE 0 END AS fullk
+  FROM staged
+), ks AS (
+  SELECT *, SUM(fullk) OVER () AS kstar FROM flagged
+), lev AS (
+  SELECT *, MAX(CASE WHEN i = kstar THEN p ELSE 0 END) OVER () AS pk
+  FROM ks
+)
+SELECT source,
+       CAST(c AS BIGINT) AS tokens,
+       CAST(budget AS BIGINT) AS budget,
+       CAST(CASE WHEN kstar = n THEN c
+             WHEN fullk = 1 THEN c
+             ELSE (budget - pk) // (n - kstar) END AS BIGINT) AS alloc,
+       CAST(1 - fullk AS BIGINT) AS capped,
+       CAST(CASE WHEN kstar = n THEN -1
+             ELSE (budget - pk) // (n - kstar) END AS BIGINT) AS level
+FROM lev
+"""
+
+QUERIES["token_budget_waterfill"] = token_budget_waterfill
+ORACLES["token_budget_waterfill"] = TOKEN_BUDGET_WATERFILL_SQL

@@ -1,9 +1,11 @@
 """Local replica of the driver's Spark-vs-DuckDB comparison: row count,
-column names (sorted), and order-insensitive exact value equality."""
+column names (sorted), and order-insensitive exact value equality — plus
+the DuckDB views and scratch parquet tables the property tests build."""
 
 from __future__ import annotations
 
 import math
+import os
 
 import duckdb
 import pandas as pd
@@ -22,13 +24,23 @@ TABLES = (
 )
 
 
-def duck_run(sf_dir: str, sql: str) -> pd.DataFrame:
+def duck_views(sf_dir: str, tables=TABLES) -> duckdb.DuckDBPyConnection:
     con = duckdb.connect()
-    for t in TABLES:
+    for t in tables:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
         )
+    return con
+
+
+def duck_run(sf_dir: str, sql: str) -> pd.DataFrame:
+    con = duck_views(sf_dir)  # a relation does not keep its connection open
     return con.sql(sql).df()
+
+
+def write_table(sf_dir: str, name: str, df) -> None:
+    """Write a Spark frame as table ``name`` of a scratch sf_dir."""
+    df.write.mode("overwrite").parquet(os.path.join(sf_dir, f"{name}.parquet"))
 
 
 def _canon(df: pd.DataFrame) -> list[tuple]:

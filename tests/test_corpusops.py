@@ -1,5 +1,6 @@
-"""Independent value checks for the corpusops batch — each op verified
-against a brute-force pandas/numpy computation, not just the DuckDB hash
+"""Independent value checks for the corpus-mining ops (phrase search, OLS,
+TV drift, saturation curve, epoch shuffle, chi-squared terms) — each op
+verified against a brute-force pandas/numpy computation, not just the DuckDB hash
 gate (which runs separately in test_oracle_parity)."""
 
 from __future__ import annotations
@@ -10,7 +11,7 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from pdf_craft_spark.queries import corpusops as C
+from pdf_craft_spark.queries import dedup, indexing, mlq, statsq, traindata
 
 SF = "/root/testdata/sf0.001"
 
@@ -21,7 +22,7 @@ def docs_pd():
 
 
 def test_phrase_hits_match_bruteforce(spark, docs_pd):
-    got = C.phrase_query_positional(spark, SF).toPandas()
+    got = indexing.phrase_query_positional(spark, SF).toPandas()
     # brute force: count adjacent (table, scan) token pairs per doc
     expect = {}
     for r in docs_pd.itertuples():
@@ -29,11 +30,11 @@ def test_phrase_hits_match_bruteforce(spark, docs_pd):
         n = sum(
             1
             for i in range(len(toks) - 1)
-            if toks[i] == C.PHRASE_A and toks[i + 1] == C.PHRASE_B
+            if toks[i] == indexing.PHRASE_A and toks[i + 1] == indexing.PHRASE_B
         )
         if n:
             expect[r.doc_id] = n
-    ranked = sorted(expect.items(), key=lambda kv: (-kv[1], kv[0]))[: C.PHRASE_TOPK]
+    ranked = sorted(expect.items(), key=lambda kv: (-kv[1], kv[0]))[: indexing.PHRASE_TOPK]
     got_pairs = list(zip(got.sort_values("rk").doc_id, got.sort_values("rk").n_hits))
     assert got_pairs == ranked
 
@@ -45,7 +46,7 @@ def test_ols_matches_numpy_lstsq(spark):
     y = np.round(part.p_retailprice.to_numpy() * 100)
     X = np.column_stack([np.ones_like(x1), x1, x2])
     beta, _, _, _ = np.linalg.lstsq(X, y, rcond=None)
-    row = C.ols_normal_equations(spark, SF).toPandas().iloc[0]
+    row = mlq.ols_normal_equations(spark, SF).toPandas().iloc[0]
     assert row.beta1_micro == pytest.approx(beta[1] * 1e6, abs=2)
     assert row.beta2_micro == pytest.approx(beta[2] * 1e6, abs=2)
     # R^2 sanity: within [0, 1e6]
@@ -53,7 +54,7 @@ def test_ols_matches_numpy_lstsq(spark):
 
 
 def test_tv_distance_matches_bruteforce(spark, docs_pd):
-    got = C.corpus_tv_distance_by_source(spark, SF).toPandas()
+    got = statsq.corpus_tv_distance_by_source(spark, SF).toPandas()
     toks = docs_pd.assign(t=docs_pd.text.map(lambda s: re.findall("[a-z]+", s)))
     rows = toks.explode("t")[["source", "t"]]
     glob = rows.t.value_counts()
@@ -72,8 +73,8 @@ def test_tv_distance_matches_bruteforce(spark, docs_pd):
 
 
 def test_saturation_curve_invariants(spark, docs_pd):
-    got = C.dedup_saturation_curve(spark, SF).toPandas().sort_values("bucket")
-    assert list(got.bucket) == list(range(C.SAT_BUCKETS))
+    got = dedup.dedup_saturation_curve(spark, SF).toPandas().sort_values("bucket")
+    assert list(got.bucket) == list(range(dedup.SAT_BUCKETS))
     assert got.n_rows.sum() == len(docs_pd)
     assert got.n_new_unique.sum() == docs_pd.text.nunique()
     # cumulative columns are actual prefix sums and dup rate is monotone-safe
@@ -83,8 +84,8 @@ def test_saturation_curve_invariants(spark, docs_pd):
 
 
 def test_epoch_shuffle_is_deterministic_permutation(spark, docs_pd):
-    a = C.epoch_shuffle_plan(spark, SF).toPandas()
-    b = C.epoch_shuffle_plan(spark, SF).toPandas()
+    a = traindata.epoch_shuffle_plan(spark, SF).toPandas()
+    b = traindata.epoch_shuffle_plan(spark, SF).toPandas()
     key = lambda df: sorted(map(tuple, df[["doc_id", "shard", "pos"]].to_numpy()))
     assert key(a) == key(b)  # same seed -> identical permutation
     assert sorted(a.doc_id) == sorted(docs_pd.doc_id)  # a true permutation
@@ -93,7 +94,7 @@ def test_epoch_shuffle_is_deterministic_permutation(spark, docs_pd):
 
 
 def test_chi2_matches_bruteforce_cell(spark, docs_pd):
-    got = C.chi2_terms_by_source(spark, SF).toPandas()
+    got = statsq.chi2_terms_by_source(spark, SF).toPandas()
     toks = docs_pd.assign(t=docs_pd.text.map(lambda s: re.findall("[a-z]+", s)))
     rows = toks.explode("t")[["source", "t"]]
     n_tot = len(rows)

@@ -1,4 +1,5 @@
-"""Independent brute-force checks for the corpusops3 batch."""
+"""Independent brute-force checks for MAD, k-truss edge support, mixture
+weights, containment and keyword-in-context."""
 
 from __future__ import annotations
 
@@ -9,7 +10,7 @@ import re
 import pandas as pd
 import pytest
 
-from pdf_craft_spark.queries import corpusops3 as M
+from pdf_craft_spark.queries import dedup, graphq, statsq, textops, traindata
 
 SF = "/root/testdata/sf0.001"
 
@@ -22,7 +23,7 @@ def _lower_median(vals):
 def test_mad_matches_bruteforce(spark):
     part = pd.read_parquet(f"{SF}/part.parquet")
     part["v"] = part.p_retailprice.map(lambda x: round(x * 100))
-    got = M.mad_price_by_brand(spark, SF).toPandas().set_index("p_brand")
+    got = statsq.mad_price_by_brand(spark, SF).toPandas().set_index("p_brand")
     for brand, grp in part.groupby("p_brand"):
         med = _lower_median(grp.v)
         mad = _lower_median((grp.v - med).abs())
@@ -53,8 +54,8 @@ def test_edge_support_counts_triangles(spark):
     support = {
         (a, b): len(adj[a] & adj[b]) for a, b in und if len(adj[a] & adj[b]) > 0
     }
-    ranked = sorted(support.items(), key=lambda kv: (-kv[1], kv[0]))[: M.TRUSS_TOPK]
-    got = M.graph_edge_support(spark, SF).toPandas().sort_values("rk")
+    ranked = sorted(support.items(), key=lambda kv: (-kv[1], kv[0]))[: graphq.TRUSS_TOPK]
+    got = graphq.graph_edge_support(spark, SF).toPandas().sort_values("rk")
     got_pairs = [((a, b), s) for a, b, s in zip(got.part_a, got.part_b, got.support)]
     assert got_pairs == ranked
     assert (got.max_truss == got.support + 2).all()
@@ -63,7 +64,7 @@ def test_edge_support_counts_triangles(spark):
 def test_temperature_weights_sum_and_order(spark):
     docs = pd.read_parquet(f"{SF}/documents.parquet")
     ns = docs.groupby("source").size()
-    got = M.temperature_mixture_weights(spark, SF).toPandas().set_index("source")
+    got = traindata.temperature_mixture_weights(spark, SF).toPandas().set_index("source")
     assert (got.n_docs == ns).all()
     # proportional weights: check against exact ratio
     for src, n in ns.items():
@@ -79,8 +80,8 @@ def test_temperature_weights_sum_and_order(spark):
 
 
 def test_containment_between_zero_and_one_and_symmetric_pairs(spark):
-    got = M.dedup_containment_topk(spark, SF).toPandas()
-    assert len(got) <= M.CONTAIN_TOPK
+    got = dedup.dedup_containment_topk(spark, SF).toPandas()
+    assert len(got) <= dedup.CONTAIN_TOPK
     assert ((got.containment_micro >= 0) & (got.containment_micro <= 1_000_000)).all()
     assert (got.n_inter <= got.n_a).all()
     # brute-force one pair: recompute shingle containment for the top row
@@ -105,11 +106,11 @@ def test_kwic_matches_bruteforce(spark):
     for txt in docs.text:
         toks = re.findall("[a-z]+", txt)
         for i, t in enumerate(toks):
-            if t == M.KWIC_TERM:
+            if t == textops.KWIC_TERM:
                 prev = toks[i - 1] if i > 0 else "^"
                 nxt = toks[i + 1] if i < len(toks) - 1 else "$"
                 ctx[(prev, nxt)] += 1
-    ranked = sorted(ctx.items(), key=lambda kv: (-kv[1], kv[0]))[: M.KWIC_TOPK]
-    got = M.kwic_contexts(spark, SF).toPandas().sort_values("rk")
+    ranked = sorted(ctx.items(), key=lambda kv: (-kv[1], kv[0]))[: textops.KWIC_TOPK]
+    got = textops.kwic_contexts(spark, SF).toPandas().sort_values("rk")
     got_rows = [((p, n), c) for p, n, c in zip(got.prev_t, got.next_t, got.cnt)]
     assert got_rows == ranked

@@ -8,13 +8,13 @@ import os
 
 import pandas as pd
 
-from pdf_craft_spark.queries import corpusops4 as M
+from pdf_craft_spark.queries import pipelineq
 
 SF = "/root/testdata/sf0.001"
 
 
 def _golden(name):
-    return pd.read_parquet(os.path.join(M._GOLDEN_DIR, f"{name}.parquet"))
+    return pd.read_parquet(os.path.join(pipelineq._GOLDEN_DIR, f"{name}.parquet"))
 
 
 def test_ab_diff_matches_pandas_sequences(spark):
@@ -28,7 +28,7 @@ def test_ab_diff_matches_pandas_sequences(spark):
         return out
 
     sa, sb = seqs(a), seqs(b)
-    got = M.pipeline_ab_span_diff(spark, SF).toPandas().set_index("doc_id")
+    got = pipelineq.pipeline_ab_span_diff(spark, SF).toPandas().set_index("doc_id")
     for doc in sa:
         ea, eb = sa[doc], sb.get(doc, [])
         lcp = 0
@@ -46,14 +46,14 @@ def test_ab_diff_matches_pandas_sequences(spark):
 
 def test_transitions_sum_to_spans_minus_docs(spark):
     g = _golden("pipeline_extract_spans")
-    got = M.span_kind_transitions(spark, SF).toPandas()
+    got = pipelineq.span_kind_transitions(spark, SF).toPandas()
     assert got.cnt.sum() == len(g) - g.doc_id.nunique()
     kinds = set(g.kind)
     assert set(got.kind_from) <= kinds and set(got.kind_to) <= kinds
 
 
 def test_media_audit_invariants(spark):
-    got = M.media_ref_integrity_audit(spark, SF).toPandas().set_index("kind")
+    got = pipelineq.media_ref_integrity_audit(spark, SF).toPandas().set_index("kind")
     g = _golden("pipeline_extract_spans")
     assert got.loc["__all__"].n_spans == len(g)
     assert got.loc["__all__"].n_with_media == g.media_ref.notna().sum()

@@ -5,7 +5,7 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
-from pdf_craft_spark.queries import corpusops5 as M
+from pdf_craft_spark.queries import similarity
 from pdf_craft_spark.queries.similarity import N_QUERIES, TOP_K
 
 SF = "/root/testdata/sf0.01"
@@ -29,11 +29,11 @@ def _exact_topk(emb: pd.DataFrame):
 def test_sign_codes_match_numpy(spark):
     emb = pd.read_parquet(f"{SF}/embeddings.parquet")
     got = (
-        M._emb(spark, SF)
+        similarity._emb(spark, SF)
         .selectExpr(
             "vec_id",
-            f"({M._CODE_SPARK.format(off=0)}) AS c_lo",
-            f"({M._CODE_SPARK.format(off=32)}) AS c_hi",
+            f"({similarity._CODE_SPARK.format(off=0)}) AS c_lo",
+            f"({similarity._CODE_SPARK.format(off=32)}) AS c_hi",
         )
         .toPandas()
         .set_index("vec_id")
@@ -48,20 +48,20 @@ def test_sign_codes_match_numpy(spark):
 def test_binary_hash_recall_at_5(spark):
     emb = pd.read_parquet(f"{SF}/embeddings.parquet")
     truth = _exact_topk(emb)
-    got = M.sim_binary_hash_topk(spark, SF).toPandas()
+    got = similarity.sim_binary_hash_topk(spark, SF).toPandas()
     hits = total = 0
     for qi, grp in got.groupby("query_id"):
         hits += len(set(grp.neighbor_id) & truth[qi])
         total += TOP_K
     recall = hits / total
     # 64-bit sign codes at the 10% default candidate fraction measure
-    # 0.84 on this corpus (full curve in corpusops5.py); gate at 0.8
+    # 0.84 on this corpus (full curve in queries/similarity.py); gate at 0.8
     assert recall >= 0.8, recall
     print(f"binary-hash recall@5 = {recall:.3f}")
 
 
 def test_rerank_is_exact_on_candidates(spark):
-    got = M.sim_binary_hash_topk(spark, SF).toPandas()
+    got = similarity.sim_binary_hash_topk(spark, SF).toPandas()
     # ranks are 1..TOP_K per query, cosine non-increasing within query
     for _, grp in got.groupby("query_id"):
         assert list(grp["rank"]) == list(range(1, TOP_K + 1))

@@ -27,6 +27,17 @@ def test_order_is_least_recently_verified_first():
     assert rounds == sorted(rounds), "registry must be ordered oldest-verified first"
 
 
+def test_ties_break_on_the_query_name():
+    """Within one last-verified round the order is alphabetical, so which
+    never-verified queries a capped sweep reaches depends on the names
+    alone, never on which module holds a query or the import order."""
+    by_round: dict[int, list[str]] = {}
+    for q in QUERIES:
+        by_round.setdefault(_LAST_VERIFIED.get(q, -1), []).append(q)
+    for rnd, names in by_round.items():
+        assert names == sorted(names), f"round {rnd} is not in name order"
+
+
 def test_rotation_skips_only_the_most_recently_verified():
     """Cap-agnostic rotation invariant: every query a sweep skips must be
     at least as recently verified as every query it checks — i.e. the

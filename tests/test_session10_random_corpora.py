@@ -9,16 +9,11 @@ cohorts are avoided by construction where the op's contract requires)."""
 
 from __future__ import annotations
 
-import os
 import random
 
 import pytest
 
-
-def _write(spark, tmp, name, df):
-    path = os.path.join(tmp, f"{name}.parquet")
-    df.write.mode("overwrite").parquet(path)
-    return path
+from tests.oracle_harness import write_table
 
 
 @pytest.mark.parametrize("seed", [11, 29, 47])
@@ -42,7 +37,7 @@ def test_price_band_exactly_once_on_random_prices(spark, tmp_path, seed):
         rows.append((i, rng.choice(["ta", "tb"]), cents / 100.0))
     df = spark.createDataFrame(rows, ["p_partkey", "p_type", "p_retailprice"])
     sf = str(tmp_path)
-    _write(spark, sf, "part", df)
+    write_table(sf, "part", df)
 
     got = {r["p_type"]: r for r in price_band_self_join(spark, sf).collect()}
     by_type: dict[str, list] = {}
@@ -80,7 +75,7 @@ def test_weighted_median_on_random_weighted_multisets(spark, tmp_path, seed):
         rows, ["l_returnflag", "l_quantity", "l_extendedprice"]
     )
     sf = str(tmp_path)
-    _write(spark, sf, "lineitem", df)
+    write_table(sf, "lineitem", df)
 
     got = {r["l_returnflag"]: r for r in weighted_median_price(spark, sf).collect()}
     by_flag: dict[str, list] = {}
@@ -109,7 +104,7 @@ def test_mode_ties_on_random_multisets(spark, tmp_path, seed):
         # few distinct sizes => ties guaranteed
         rows.append((i, rng.choice(["ba", "bb"]), rng.choice([4, 7, 9])))
     df = spark.createDataFrame(rows, ["p_partkey", "p_brand", "p_size"])
-    _write(spark, str(tmp_path), "part", df)
+    write_table(str(tmp_path), "part", df)
     got = {r["p_brand"]: r for r in mode_exact_per_group(spark, str(tmp_path)).collect()}
     from collections import Counter
 
@@ -141,8 +136,8 @@ def test_gini_extremes_on_constructed_distributions(spark, tmp_path, seed):
     li = spark.createDataFrame(li_rows, ["l_suppkey", "l_extendedprice"])
     sup = spark.createDataFrame(sup_rows, ["s_suppkey", "s_nationkey"])
     sf = str(tmp_path)
-    _write(spark, sf, "lineitem", li)
-    _write(spark, sf, "supplier", sup)
+    write_table(sf, "lineitem", li)
+    write_table(sf, "supplier", sup)
     got = {r["s_nationkey"]: r for r in gini_revenue_concentration(spark, sf).collect()}
     assert got[0]["gini_ppm"] == 0
     assert got[1]["gini_ppm"] > 800_000

@@ -153,9 +153,7 @@ import random
 
 import pytest
 
-
-def _write(spark, tmp, name, df):
-    df.write.mode("overwrite").parquet(os.path.join(tmp, f"{name}.parquet"))
+from tests.oracle_harness import write_table
 
 
 @pytest.mark.parametrize("seed", [13, 59])
@@ -183,7 +181,7 @@ def test_theta_on_random_overlap(spark, tmp_path, seed):
     df = spark.createDataFrame(
         rows, ["event_id", "ts", "user_id", "event_type", "value", "props"]
     )
-    _write(spark, str(tmp_path), "events", df)
+    write_table(str(tmp_path), "events", df)
 
     r = theta_sketch_intersection(spark, str(tmp_path)).collect()[0]
     inter, union = p_set & c_set, p_set | c_set
@@ -223,7 +221,7 @@ def test_html_lossless_recovery_on_random_texts(spark, tmp_path, seed):
         ]
         docs.append((i, " ".join(toks), "en", "synth", len(" ".join(toks))))
     df = spark.createDataFrame(docs, ["doc_id", "text", "lang", "source", "n_chars"])
-    _write(spark, str(tmp_path), "documents", df)
+    write_table(str(tmp_path), "documents", df)
 
     got = {r["doc_id"]: r for r in html_main_content_extract(spark, str(tmp_path)).collect()}
     assert len(got) == len(docs)
@@ -312,7 +310,7 @@ def test_stump_finds_planted_split(spark, tmp_path, seed, planted_t):
     df = spark.createDataFrame(
         rows, ["l_orderkey", "l_quantity", "l_returnflag", "l_extendedprice"]
     )
-    _write(spark, str(tmp_path), "lineitem", df)
+    write_table(str(tmp_path), "lineitem", df)
 
     r = decision_stump_train(spark, str(tmp_path)).collect()[0]
     assert r["feature"] == "qty"
@@ -360,7 +358,7 @@ def test_pca_finds_planted_direction(spark, tmp_path, seed):
         ]
         rows.append((i, vec, 0))
     df = spark.createDataFrame(rows, ["vec_id", "embedding", "label"])
-    _write(spark, str(tmp_path), "embeddings", df)
+    write_table(str(tmp_path), "embeddings", df)
 
     got = {
         r["dim"]: r["v_scaled"]
@@ -480,7 +478,7 @@ def test_bootstrap_width_shrinks_with_n(spark, tmp_path):
     df = spark.createDataFrame(
         rows, ["o_orderkey", "o_orderpriority", "o_totalprice"]
     )
-    _write(spark, str(tmp_path), "orders", df)
+    write_table(str(tmp_path), "orders", df)
 
     got = {
         r["grp"]: r
@@ -513,7 +511,7 @@ def test_permutation_detects_planted_shift(spark, tmp_path):
         _perm_orders(rng, 3000, 200.0),
         ["o_orderkey", "o_orderpriority", "o_totalprice"],
     )
-    _write(spark, str(tmp_path), "orders", df)
+    write_table(str(tmp_path), "orders", df)
     r = permutation_test_diff(spark, str(tmp_path)).collect()[0]
     assert r["p_milli"] == 7, r
     # $200 planted shift = 20M milli-cents
@@ -530,7 +528,7 @@ def test_permutation_high_p_under_true_null(spark, tmp_path):
         _perm_orders(rng, 3000, 0.0),
         ["o_orderkey", "o_orderpriority", "o_totalprice"],
     )
-    _write(spark, str(tmp_path), "orders", df)
+    write_table(str(tmp_path), "orders", df)
     r = permutation_test_diff(spark, str(tmp_path)).collect()[0]
     assert r["p_milli"] > 100, r
 
@@ -574,7 +572,7 @@ def test_conformal_adapts_to_noise_scale(spark, tmp_path):
         )
         sub = os.path.join(str(tmp_path), f"s{int(sigma)}")
         os.makedirs(sub, exist_ok=True)
-        _write(spark, sub, "orders", df)
+        write_table(sub, "orders", df)
         r = conformal_interval_orders(spark, sub).collect()[0]
         assert r["coverage_ppm"] >= 870_000, (sigma, r)
         widths.append(r["width_mc"])

@@ -341,7 +341,7 @@ def test_km_curve_matches_pure_python_product_limit(spark):
 
 
 def test_grouping_sets_grains_are_consistent(spark):
-    from pdf_craft_spark.queries.relational2 import grouping_sets_revenue
+    from pdf_craft_spark.queries.relational import grouping_sets_revenue
 
     rows = grouping_sets_revenue(spark, SF).collect()
     fine = [r for r in rows if r["grain"] == 0]

@@ -13,15 +13,10 @@ from __future__ import annotations
 import duckdb
 import pytest
 
+from tests.oracle_harness import duck_views
+
 SF = "/root/testdata/sf0.001"
 SF01 = "/root/testdata/sf0.01"
-
-
-def _duck(sf_dir: str, tables=("orders", "customer", "events")):
-    con = duckdb.connect()
-    for t in tables:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
-    return con
 
 
 # --- durbin_watson_trend -----------------------------------------------------
@@ -100,7 +95,7 @@ def test_loo_excludes_own_row(spark):
     from pdf_craft_spark.queries.mlq import loo_target_encoding
 
     got = {r["c_mktsegment"]: r for r in loo_target_encoding(spark, SF).collect()}
-    con = _duck(SF, ("orders", "customer"))
+    con = duck_views(SF, ("orders", "customer"))
     rows = con.execute(
         """
         SELECT c_mktsegment,
@@ -134,7 +129,7 @@ def test_cv_train_excludes_test_fold(spark):
 
     got = {r["fold"]: r for r in cv_kfold_mse(spark, SF).collect()}
     assert set(got) == set(range(CV_FOLDS))
-    con = _duck(SF, ("orders",))
+    con = duck_views(SF, ("orders",))
     rows = con.execute(
         f"""
         SELECT o_orderpriority,
@@ -177,7 +172,7 @@ def test_ams_estimate_within_variance_bound(spark):
 
 def test_ams_exact_f2_is_self_join_size():
     """F2 on the key-count table == COUNT(*) of the actual self-join."""
-    con = _duck(SF, ("orders",))
+    con = duck_views(SF, ("orders",))
     f2 = con.execute(
         "SELECT sum(cnt * cnt) FROM (SELECT count(*) AS cnt FROM orders GROUP BY o_custkey)"
     ).fetchone()[0]
@@ -317,7 +312,7 @@ def test_priority_sample_matches_python_recompute(spark):
     )
 
     row = priority_sample_orders(spark, SF).collect()[0]
-    con = _duck(SF, ("orders",))
+    con = duck_views(SF, ("orders",))
     recs = con.execute(
         """
         SELECT o_orderkey,
@@ -544,7 +539,7 @@ def test_skew_advisor_matches_python_model(spark):
     )
 
     row = skew_salting_advisor(spark, SF).collect()[0]
-    con = _duck(SF, ("lineitem", "part"))
+    con = duck_views(SF, ("lineitem", "part"))
     keys = con.execute(
         """SELECT p_brand, count(*) FROM lineitem
            JOIN part ON l_partkey = p_partkey GROUP BY 1"""
@@ -659,7 +654,7 @@ def test_holt_kernel_equals_python_recurrence(spark):
     )
 
     got = {r["pri"]: r for r in holt_linear_forecast(spark, SF).collect()}
-    con = _duck(SF, ("orders",))
+    con = duck_views(SF, ("orders",))
     series = con.execute(
         """SELECT o_orderpriority,
                   CAST(sum(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100
@@ -875,7 +870,7 @@ def test_rolling_p90_matches_python(spark):
     from pdf_craft_spark.queries.timeseries import rolling_p90_exact_7d
 
     got = {r["w_day"]: r for r in rolling_p90_exact_7d(spark, SF).collect()}
-    con = _duck(SF, ("orders",))
+    con = duck_views(SF, ("orders",))
     raw = con.execute(
         """SELECT CAST(o_orderdate AS DATE),
                   CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)
@@ -910,7 +905,7 @@ def test_join_order_advisor_predictions_are_exact(spark):
     from pdf_craft_spark.queries.analyticsq import join_order_advisor
 
     row = join_order_advisor(spark, SF).collect()[0]
-    con = _duck(SF, ("lineitem", "orders", "customer"))
+    con = duck_views(SF, ("lineitem", "orders", "customer"))
     ia = con.execute(
         "SELECT count(*) FROM lineitem JOIN orders ON l_orderkey = o_orderkey"
     ).fetchone()[0]
@@ -937,7 +932,7 @@ def test_apriori_matches_bruteforce_and_downward_closure(spark):
 
     rows = apriori_triples(spark, SF).collect()
     assert rows  # non-empty at sf0.001 (94 triples measured)
-    con = _duck(SF, ("lineitem",))
+    con = duck_views(SF, ("lineitem",))
     brute = {
         (pa, pb, pc): s
         for pa, pb, pc, s in con.execute(
@@ -1061,7 +1056,7 @@ def test_median_ci_matches_python_orderstats(spark):
     )
 
     row = median_ci_orderstat(spark, SF).collect()[0]
-    con = _duck(SF, ("orders",))
+    con = duck_views(SF, ("orders",))
     vals = sorted(
         v for (v,) in con.execute(
             "SELECT CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)"
@@ -1106,7 +1101,7 @@ def test_streaming_restart_exactly_once(spark):
 
     rows = {r["event_type"]: r for r in
             streaming_checkpoint_restart(spark, SF).collect()}
-    con = _duck(SF, ("events",))
+    con = duck_views(SF, ("events",))
     want = dict(
         con.execute(
             "SELECT event_type, count(*) FROM events GROUP BY 1"
@@ -1152,7 +1147,7 @@ def test_deletion_impact_matches_direct_counts(spark):
 
     rows = {r["table_name"]: r for r in
             deletion_impact_scan(spark, SF).collect()}
-    con = _duck(SF, ("customer", "orders", "lineitem"))
+    con = duck_views(SF, ("customer", "orders", "lineitem"))
     n_c = con.execute(
         "SELECT count(*) FROM customer WHERE c_custkey % 50 = 3"
     ).fetchone()[0]
@@ -1208,7 +1203,7 @@ def test_bitmap_words_match_python(spark):
 
     row = bitmap_index_intersect(spark, SF).collect()[0]
     assert row["index_consistent"] is True
-    con = _duck(SF, ("orders",))
+    con = duck_views(SF, ("orders",))
     keys_f = {k for (k,) in con.execute(
         "SELECT o_orderkey FROM orders WHERE o_orderstatus = 'F'").fetchall()}
     keys_u = {k for (k,) in con.execute(
@@ -1373,7 +1368,7 @@ def test_equidepth_edges_match_orderstats(spark):
     )
 
     rows = equidepth_histogram(spark, SF).collect()
-    con = _duck(SF, ("orders",))
+    con = duck_views(SF, ("orders",))
     vals = sorted(
         v for (v,) in con.execute(
             "SELECT CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)"
@@ -1630,7 +1625,7 @@ def test_join_estimate_reasonable_and_exact_matches_f2(spark):
     from pdf_craft_spark.queries.dataquality import join_estimate_error
 
     row = join_estimate_error(spark, SF).collect()[0]
-    con = _duck(SF, ("lineitem",))
+    con = duck_views(SF, ("lineitem",))
     f2 = con.execute(
         "SELECT sum(cnt * cnt) FROM (SELECT count(*) AS cnt FROM lineitem"
         " GROUP BY l_partkey)"
@@ -1647,7 +1642,7 @@ def test_percentile_cont_matches_duckdb_native(spark):
     from pdf_craft_spark.queries.statsq import percentile_cont_exact
 
     rows = {r["p"]: r for r in percentile_cont_exact(spark, SF).collect()}
-    con = _duck(SF, ("orders",))
+    con = duck_views(SF, ("orders",))
     ref = con.execute(
         """SELECT quantile_cont(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100
            AS BIGINT), [0.25, 0.5, 0.75]) FROM orders"""
@@ -1706,7 +1701,7 @@ def test_inversions_match_python(spark):
     from pdf_craft_spark.queries.behavior import event_order_inversions
 
     rows = event_order_inversions(spark, SF).collect()
-    con = _duck(SF, ("events",))
+    con = duck_views(SF, ("events",))
     recs = con.execute(
         "SELECT user_id, event_id, epoch_us(ts) FROM events"
     ).fetchall()
@@ -1756,7 +1751,7 @@ def test_rank_churn_recompute(spark):
 
     rows = rank_churn_report(spark, SF).collect()
     assert 0 < len(rows) <= RANK_CHURN_TOP
-    con = _duck(SF, ("lineitem",))
+    con = duck_views(SF, ("lineitem",))
     recs = con.execute(
         """SELECT l_suppkey, CAST(l_shipdate AS DATE),
                   CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT)
@@ -1836,7 +1831,7 @@ def test_interval_quantiles_from_train_only(spark):
 
     rows = {r["event_type"]: r for r in
             forecast_interval_empirical(spark, SF).collect()}
-    con = _duck(SF, ("events",))
+    con = duck_views(SF, ("events",))
     recs = con.execute(
         """SELECT event_type, CAST(ts AS DATE), count(*)
            FROM events GROUP BY 1, 2 ORDER BY 1, 2"""

@@ -23,7 +23,7 @@ SF01 = "/root/testdata/sf0.01"
 def test_auc_matches_sklearn_style_reference(spark):
     """Exact tied-rank AUC on the real corpus == the O(n^2) pair-count
     definition (ties count half), computed in pure Python."""
-    from pdf_craft_spark.queries.corpusops6 import auc_exact_eval
+    from pdf_craft_spark.queries.mlq import auc_exact_eval
 
     rows = auc_exact_eval(spark, SF01).collect()
     assert len(rows) == 3
@@ -69,7 +69,7 @@ def test_auc_matches_sklearn_style_reference(spark):
 def test_cuped_identity_and_bounds(spark):
     """diff_cuped == diff_raw - theta * (xbar1 - xbar0), re-derived from
     the per-user table in DuckDB; rho2 in [0, 1e6]."""
-    from pdf_craft_spark.queries.corpusops6 import cuped_adjustment
+    from pdf_craft_spark.queries.statsq import cuped_adjustment
 
     row = cuped_adjustment(spark, SF01).collect()[0].asDict()
     assert row["n"] == row["n0"] + row["n1"] and row["n0"] > 0 and row["n1"] > 0
@@ -109,7 +109,7 @@ def test_rank_matrix_float_integer_identities(spark):
     """percent_rank == pr_num/pr_den and cume_dist == cd_num/cd_den in
     EXACT IEEE terms on every sampled row; rank/dense_rank/row_number
     obey their order constraints."""
-    from pdf_craft_spark.queries.corpusops6 import (
+    from pdf_craft_spark.queries.dataquality import (
         window_rank_semantics_matrix,
     )
 
@@ -135,7 +135,7 @@ def test_burstiness_bernoulli_floor_and_bounds(spark):
     """For a token with all per-doc counts == 1, VMR = 1 - df/N (the
     Bernoulli floor, < 1); any VMR above 1 requires a repeated token in
     some doc.  df and tf_sum are consistent."""
-    from pdf_craft_spark.queries.corpusops6 import term_burstiness
+    from pdf_craft_spark.queries.textops import term_burstiness
 
     rows = [r.asDict() for r in term_burstiness(spark, SF01).collect()]
     assert len(rows) >= 25  # the 30-token closed vocabulary, minus rares
@@ -155,7 +155,7 @@ def test_burstiness_bernoulli_floor_and_bounds(spark):
 def test_burstiness_planted_burst():
     """A planted corpus: 'aaa' once in each of 8 docs (VMR floor), 'bbb'
     8 times in one doc of 8 (bursty, VMR > 1)."""
-    from pdf_craft_spark.queries.corpusops6 import TERM_BURSTINESS_SQL
+    from pdf_craft_spark.queries.textops import TERM_BURSTINESS_SQL
 
     con = duckdb.connect()
     docs = ["aaa bbb" + " bbb" * 7] + ["aaa"] * 7
@@ -176,7 +176,7 @@ def test_burstiness_planted_burst():
 def test_hhi_bounds_and_monopoly_case(spark):
     """HHI in [1e6/k, 1e6] per nation on the real corpus; a planted
     single-brand market scores exactly 1e6 through the oracle."""
-    from pdf_craft_spark.queries.corpusops6 import (
+    from pdf_craft_spark.queries.analyticsq import (
         MARKET_CONCENTRATION_HHI_SQL,
         market_concentration_hhi,
     )
@@ -221,7 +221,7 @@ def test_jaro_winkler_kernel_matches_duckdb_builtin_exactly():
 
     import duckdb
 
-    from pdf_craft_spark.queries.corpusops7 import _jaro_winkler
+    from pdf_craft_spark.queries.dataquality import _jaro_winkler
 
     con = duckdb.connect()
     cases = [
@@ -245,7 +245,7 @@ def test_jaro_winkler_kernel_matches_duckdb_builtin_exactly():
 
 
 def test_jaro_winkler_pairs_blocked_and_bounded(spark):
-    from pdf_craft_spark.queries.corpusops7 import er_jaro_winkler_pairs
+    from pdf_craft_spark.queries.dataquality import er_jaro_winkler_pairs
 
     rows = [r.asDict() for r in er_jaro_winkler_pairs(spark, SF01).collect()]
     assert len(rows) > 50
@@ -265,7 +265,7 @@ def test_mutual_nn_symmetric_and_label_coherent(spark):
     """Every reported pair is mutually-best within its bucket's candidate
     set (re-derived via the oracle CTE), and pairs agree on label more
     often than the 10-label chance rate."""
-    from pdf_craft_spark.queries.corpusops7 import mutual_nn_pairs
+    from pdf_craft_spark.queries.similarity import mutual_nn_pairs
 
     rows = [r.asDict() for r in mutual_nn_pairs(spark, SF01).collect()]
     assert len(rows) > 20
@@ -284,7 +284,7 @@ def test_mutual_nn_symmetric_and_label_coherent(spark):
     con.execute(
         f"CREATE VIEW embeddings AS SELECT * FROM '{SF01}/embeddings.parquet'"
     )
-    from pdf_craft_spark.queries.corpusops7 import MUTUAL_NN_PAIRS_SQL
+    from pdf_craft_spark.queries.similarity import MUTUAL_NN_PAIRS_SQL
 
     best = con.execute(
         MUTUAL_NN_PAIRS_SQL.split("), mutual AS")[0].replace("WITH q AS", "WITH q AS")
@@ -300,7 +300,7 @@ def test_mutual_nn_symmetric_and_label_coherent(spark):
 
 
 def test_lift_gains_monotone_and_consistent(spark):
-    from pdf_craft_spark.queries.corpusops7 import lift_gains_table
+    from pdf_craft_spark.queries.mlq import lift_gains_table
 
     rows = sorted(
         (r.asDict() for r in lift_gains_table(spark, SF01).collect()),
@@ -322,7 +322,7 @@ def test_lift_gains_monotone_and_consistent(spark):
 
 
 def test_disparate_impact_reference_group_and_flag(spark):
-    from pdf_craft_spark.queries.corpusops7 import filter_disparate_impact
+    from pdf_craft_spark.queries.dataquality import filter_disparate_impact
 
     rows = [r.asDict() for r in filter_disparate_impact(spark, SF01).collect()]
     assert len(rows) == 5  # the 5 corpus languages
@@ -341,7 +341,7 @@ def test_waterfill_planted_skew():
     """Skewed counts through the oracle: sources (10, 20, 1000, 2000)
     tokens, B = 60% of 3030 = 1818 -> the two small sources are fully
     funded, the two big ones capped at level (1818-30)//2 = 894."""
-    from pdf_craft_spark.queries.corpusops8 import TOKEN_BUDGET_WATERFILL_SQL
+    from pdf_craft_spark.queries.traindata import TOKEN_BUDGET_WATERFILL_SQL
 
     con = duckdb.connect()
     docs = []
@@ -362,7 +362,7 @@ def test_waterfill_budget_respected(spark):
     """On the real corpus: allocations never exceed the budget, leftover
     is bounded by the number of capped sources, and every capped source
     had more tokens than the level."""
-    from pdf_craft_spark.queries.corpusops8 import token_budget_waterfill
+    from pdf_craft_spark.queries.traindata import token_budget_waterfill
 
     rows = [r.asDict() for r in token_budget_waterfill(spark, SF01).collect()]
     assert len(rows) == 20
@@ -385,7 +385,7 @@ def test_waterfill_budget_respected(spark):
 def test_hierarchy_shares_sum_within_parent(spark):
     from collections import defaultdict
 
-    from pdf_craft_spark.queries.corpusops8 import hierarchy_share_of_parent
+    from pdf_craft_spark.queries.analyticsq import hierarchy_share_of_parent
 
     rows = [r.asDict() for r in hierarchy_share_of_parent(spark, SF01).collect()]
     assert len(rows) == 25
@@ -409,7 +409,7 @@ def test_fd_matrix_identities(spark):
     """n_pair >= n_det always; fd_holds iff equality; the (yr -> mon)
     pair cannot hold (each year has 12 months) while any self-consistent
     derived FD the corpus does satisfy must be flagged 1."""
-    from pdf_craft_spark.queries.corpusops8 import fd_discovery_matrix
+    from pdf_craft_spark.queries.analyticsq import fd_discovery_matrix
 
     rows = [r.asDict() for r in fd_discovery_matrix(spark, SF01).collect()]
     assert len(rows) == 20
@@ -427,7 +427,7 @@ def test_fd_matrix_identities(spark):
 def test_pareto_monotone_and_exact_k(spark):
     import duckdb as _duck
 
-    from pdf_craft_spark.queries.corpusops8 import pareto_concentration_report
+    from pdf_craft_spark.queries.analyticsq import pareto_concentration_report
 
     rows = sorted(
         (r.asDict() for r in pareto_concentration_report(spark, SF01).collect()),
@@ -451,7 +451,7 @@ def test_pareto_monotone_and_exact_k(spark):
 def test_assortativity_planted_graphs():
     """A star graph is maximally disassortative (r = -1); through the
     oracle on a planted basket table."""
-    from pdf_craft_spark.queries.corpusops9 import (
+    from pdf_craft_spark.queries.graphq import (
         GRAPH_DEGREE_ASSORTATIVITY_SQL,
     )
 
@@ -474,7 +474,7 @@ def test_assortativity_planted_graphs():
 
 
 def test_assortativity_near_zero_on_random_corpus(spark):
-    from pdf_craft_spark.queries.corpusops9 import graph_degree_assortativity
+    from pdf_craft_spark.queries.graphq import graph_degree_assortativity
 
     row = graph_degree_assortativity(spark, SF01).collect()[0]
     assert row.n_directed_edges > 1000
@@ -487,7 +487,7 @@ def test_assortativity_near_zero_on_random_corpus(spark):
 def test_design_effect_planted_clustering():
     """Clusters with identical within-cluster values (perfect ICC=1)
     give DEFF = m; independent values give ICC ~ 0."""
-    from pdf_craft_spark.queries.corpusops9 import (
+    from pdf_craft_spark.queries.statsq import (
         CLUSTER_SAMPLE_DESIGN_EFFECT_SQL,
         CLUSTER_TAKE,
     )
@@ -514,7 +514,7 @@ def test_design_effect_planted_clustering():
 
 
 def test_design_effect_real_corpus_near_one(spark):
-    from pdf_craft_spark.queries.corpusops9 import cluster_sample_design_effect
+    from pdf_craft_spark.queries.statsq import cluster_sample_design_effect
 
     row = cluster_sample_design_effect(spark, SF01).collect()[0]
     assert row.n_clusters > 100
@@ -526,7 +526,7 @@ def test_design_effect_real_corpus_near_one(spark):
 
 
 def test_did_hand_computed(spark):
-    from pdf_craft_spark.queries.corpusops9 import did_estimator
+    from pdf_craft_spark.queries.statsq import did_estimator
 
     row = did_estimator(spark, SF01).collect()[0].asDict()
     cells = duckdb.execute(
@@ -552,7 +552,7 @@ def test_did_hand_computed(spark):
 def test_ltv_curve_monotone_per_cohort(spark):
     from collections import defaultdict
 
-    from pdf_craft_spark.queries.corpusops9 import ltv_cohort_curve
+    from pdf_craft_spark.queries.behavior import ltv_cohort_curve
 
     rows = [r.asDict() for r in ltv_cohort_curve(spark, SF01).collect()]
     assert len(rows) >= 20

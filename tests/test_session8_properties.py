@@ -84,7 +84,7 @@ def test_sliding_distinct_lower_bounded_by_single_day(spark):
 def test_topk_other_sections_sum_to_group_total(spark):
     """The OTHER rollup's conservation property: per nation, the slot
     balances sum to the plain per-nation total."""
-    from pdf_craft_spark.queries.relational2 import topk_suppliers_with_other
+    from pdf_craft_spark.queries.relational import topk_suppliers_with_other
 
     got = (
         topk_suppliers_with_other(spark, SF_DIR)

@@ -1,5 +1,5 @@
-"""Property tests for the stats2 inference ops.  Oracle parity is covered by
-test_oracle_parity; these recompute each statistic independently — brute
+"""Property tests for the rank, ANOVA and resampling ops in statsq.
+Oracle parity is covered by test_oracle_parity; these recompute each statistic independently — brute
 force / exact rational (Fraction) — and check the distributed plans emit the
 textbook value, not merely a self-consistent one."""
 
@@ -10,26 +10,19 @@ from collections import defaultdict
 from fractions import Fraction
 from itertools import combinations
 
-import duckdb
+from tests.oracle_harness import duck_views
 
 SF = "/root/testdata/sf0.001"
-
-
-def _con():
-    con = duckdb.connect()
-    for t in ("orders", "part", "lineitem"):
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF}/{t}.parquet'")
-    return con
 
 
 # --- mannwhitney_u_priority --------------------------------------------------
 
 
 def test_mannwhitney_matches_bruteforce_ranks(spark):
-    from pdf_craft_spark.queries.stats2 import MW_A, MW_B, mannwhitney_u_priority
+    from pdf_craft_spark.queries.statsq import MW_A, MW_B, mannwhitney_u_priority
 
     row = mannwhitney_u_priority(spark, SF).collect()[0]
-    raw = _con().execute(
+    raw = duck_views(SF, ("orders", "part", "lineitem")).execute(
         """
         SELECT CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT),
                o_orderpriority
@@ -72,13 +65,13 @@ def test_mannwhitney_matches_bruteforce_ranks(spark):
 
 
 def test_jackknife_matches_exact_loo(spark):
-    from pdf_craft_spark.queries.stats2 import jackknife_ratio_ci
+    from pdf_craft_spark.queries.statsq import jackknife_ratio_ci
 
     rows = {
         (r["l_returnflag"], r["l_linestatus"]): r
         for r in jackknife_ratio_ci(spark, SF).collect()
     }
-    raw = _con().execute(
+    raw = duck_views(SF, ("orders", "part", "lineitem")).execute(
         """
         SELECT l_returnflag, l_linestatus,
                CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT)
@@ -118,10 +111,10 @@ def test_jackknife_matches_exact_loo(spark):
 
 
 def test_anova_f_matches_exact_fractions(spark):
-    from pdf_craft_spark.queries.stats2 import anova_f_price_by_brand
+    from pdf_craft_spark.queries.statsq import anova_f_price_by_brand
 
     row = anova_f_price_by_brand(spark, SF).collect()[0]
-    raw = _con().execute(
+    raw = duck_views(SF, ("orders", "part", "lineitem")).execute(
         """
         SELECT p_brand, CAST(CAST(p_retailprice AS DECIMAL(18,2)) * 100 AS BIGINT)
         FROM part
@@ -149,10 +142,10 @@ def test_anova_f_matches_exact_fractions(spark):
 
 
 def test_kendall_tau_matches_bruteforce_pairs(spark):
-    from pdf_craft_spark.queries.stats2 import kendall_tau_price_size
+    from pdf_craft_spark.queries.statsq import kendall_tau_price_size
 
     rows = {r["p_brand"]: r for r in kendall_tau_price_size(spark, SF).collect()}
-    raw = _con().execute(
+    raw = duck_views(SF, ("orders", "part", "lineitem")).execute(
         """
         SELECT p_brand, CAST(p_size AS BIGINT),
                CAST(CAST(p_retailprice AS DECIMAL(18,2)) * 100 AS BIGINT)
@@ -193,10 +186,10 @@ def test_kendall_tau_matches_bruteforce_pairs(spark):
 
 
 def test_theil_sen_matches_bruteforce_median(spark):
-    from pdf_craft_spark.queries.stats2 import theil_sen_slope_customer
+    from pdf_craft_spark.queries.statsq import theil_sen_slope_customer
 
     rows = {r["o_custkey"]: r for r in theil_sen_slope_customer(spark, SF).collect()}
-    raw = _con().execute(
+    raw = duck_views(SF, ("orders", "part", "lineitem")).execute(
         """
         SELECT o_custkey,
                CAST(date_diff('day', DATE '1970-01-01', CAST(o_orderdate AS DATE)) AS BIGINT),
