@@ -31,6 +31,8 @@ containment over the LSH candidates.
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
@@ -502,19 +504,6 @@ SELECT doc_id, {bits} AS simhash_bits FROM agg ORDER BY doc_id
 DEDUP_SIMHASH_SQL = _simhash_duck_sql()
 
 
-# --- connected components over the near-dup graph ------------------------------
-# The dedup FINISHER: pairwise candidates (MinHash-LSH) only say "a looks
-# like b"; choosing one canonical document per duplicate CLUSTER needs the
-# transitive closure.  Implemented as iterative min-label propagation —
-# each round every node takes the min of its own and its neighbors'
-# labels; converges to the component's min doc_id in O(graph diameter)
-# rounds (near-dup clusters are shallow: measured 2-3 rounds here).  Each
-# round is ONE shuffle (join + groupBy on the same key); labels are
-# localCheckpoint'd per round — at cluster scale this is the standard
-# Pregel-style CC loop (driver only sees a 1-value convergence count).
-# The DuckDB oracle computes the same closure with WITH RECURSIVE, so the
-# iterative distributed algorithm is value-checked against a declarative
-# ground truth.
 # --- the artifact registry -------------------------------------------------
 # Every graph/cluster consumer (CC, LPA, k-core, BFS, triangles, link
 # prediction, keep-best, the estimate-error calibration) reads the SAME
@@ -528,8 +517,10 @@ DEDUP_SIMHASH_SQL = _simhash_duck_sql()
 # - scope is the Spark application for DataFrame artifacts and other
 #   session values, None for the numpy fits (the oracle builders call
 #   them at import, sessionless);
-# - a changed fingerprint rebuilds the entry, unpersisting and
-#   unprotecting the old checkpoint's blocks;
+# - every registry call evicts each entry of its scope whose fingerprint
+#   changed (a rewritten or deleted sf_dir), unpersisting and
+#   unprotecting the old checkpoint's blocks; a requested entry that was
+#   evicted is rebuilt;
 # - a new application drops every older application's entries and
 #   protected ids.
 # PROTECTED_RDD_IDS lets sweep harnesses (bench.py) release per-query
@@ -559,17 +550,23 @@ def _live_application(spark: SparkSession) -> str:
 def registered(spark: SparkSession | None, name: str, build):
     """The registry value of ``name``, scoped to ``spark``'s application
     (unscoped when None).  ``build()`` returns ``(value, rdd_ids)``; the
-    ids stay protected while the entry lives."""
-    key = (name, None if spark is None else _live_application(spark))
-    fp = fingerprint(name.partition(":")[2])
-    entry = _REGISTRY.get(key)
-    if entry is None or entry[0] != fp:
-        if entry is not None and entry[2]:
-            PROTECTED_RDD_IDS.difference_update(entry[2])
-            _unpersist(spark, entry[2])
+    ids stay protected while the entry lives.  Every entry of the scope
+    whose input changed or vanished is evicted first."""
+    scope = None if spark is None else _live_application(spark)
+    for key in [
+        k for k, e in _REGISTRY.items()
+        if k[1] == scope and e[0] != fingerprint(k[0].partition(":")[2])
+    ]:
+        ids = _REGISTRY.pop(key)[2]
+        if ids:
+            PROTECTED_RDD_IDS.difference_update(ids)
+            _unpersist(spark, ids)
+    key = (name, scope)
+    if key not in _REGISTRY:
+        fp = fingerprint(name.partition(":")[2])
         value, ids = build()
-        entry = _REGISTRY[key] = (fp, value, frozenset(ids))
-    return entry[1]
+        _REGISTRY[key] = (fp, value, frozenset(ids))
+    return _REGISTRY[key][1]
 
 
 def session_artifact(spark: SparkSession, name: str, build) -> DataFrame:
@@ -585,6 +582,40 @@ def session_artifact(spark: SparkSession, name: str, build) -> DataFrame:
         return df, ids
 
     return registered(spark, name, checkpoint)
+
+
+@contextmanager
+def core_width(spark: SparkSession):
+    """The block runs with shuffle width = defaultParallelism (restored
+    after): a round's exchanges carry a per-node vector, and in a session
+    tuned for wide stages with AQE coalescing off each one would launch
+    hundreds of near-empty tasks (pagerank at sf0.1: 33 s vs 6 s)."""
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", spark.sparkContext.defaultParallelism)
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", before)
+
+
+def rounds(spark, what: str, state: DataFrame, step, max_rounds: int, changed=None):
+    """The one Pregel-style round driver (Malewicz et al., SIGMOD 2010):
+    ``state = step(state)``, materialized as a localCheckpoint per round
+    (the written iteration table at prod), under ``core_width``.  With
+    ``changed(new, old) -> int`` the loop stops at the first round that
+    changes nothing and raises if ``max_rounds`` ends without one — a
+    partially propagated state is never returned.  Without it exactly
+    ``max_rounds`` rounds run, the count the oracles unroll."""
+    with core_width(spark):
+        for _ in range(max_rounds):
+            new = step(state).localCheckpoint(eager=True)
+            n = None if changed is None else changed(new, state)
+            state = new
+            if n == 0:
+                return state
+    if changed is not None:
+        raise RuntimeError(f"{what}: not converged in {max_rounds} rounds ({n} still changing)")
+    return state
 
 
 def release_unprotected(spark: SparkSession, keep: set[int]) -> None:
@@ -630,19 +661,38 @@ def minhash_sigs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def lsh_edges_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The near-dup pair graph in both directions (src, dst): the edge
+    table every round loop over it (CC, LPA, BFS, k-core) relaxes."""
+    def build() -> DataFrame:
+        pairs = lsh_pairs_cached(spark, sf_dir)
+        return pairs.selectExpr("doc_a AS src", "doc_b AS dst").unionAll(
+            pairs.selectExpr("doc_b AS src", "doc_a AS dst")
+        )
+
+    return session_artifact(spark, f"lsh_edges:{sf_dir}", build)
+
+
+# --- connected components over the near-dup graph ------------------------------
+# The dedup FINISHER: pairwise candidates (MinHash-LSH) only say "a looks
+# like b"; choosing one canonical document per duplicate CLUSTER needs the
+# transitive closure.  Implemented as iterative min-label propagation —
+# each round every node takes the min of its own and its neighbors'
+# labels; converges to the component's min doc_id in O(graph diameter)
+# rounds (near-dup clusters are shallow: measured 2-3 rounds here).  Each
+# round is ONE shuffle (join + groupBy on the same key), run by ``rounds``
+# (driver only sees a 1-value convergence count).  The DuckDB oracle
+# computes the same closure with WITH RECURSIVE, so the iterative
+# distributed algorithm is value-checked against a declarative ground
+# truth.  The 32-round bound is far above any real diameter here.
 def _cc_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Converged connected-component labels (doc_id, component) over the
-    near-dup pair graph — the core loop of dedup_components, shared via
-    cc_labels_cached with the downstream canonicalization/modularity
-    consumers (the written component table at prod)."""
-    pairs = lsh_pairs_cached(spark, sf_dir)
-    edges = pairs.selectExpr("doc_a AS src", "doc_b AS dst").unionAll(
-        pairs.selectExpr("doc_b AS src", "doc_a AS dst")
-    ).localCheckpoint(eager=True)
-    labels = _docs(spark, sf_dir).select(
-        "doc_id", F.col("doc_id").alias("component")
-    ).localCheckpoint(eager=True)
-    for _ in range(32):  # safety bound far above any real diameter here
+    near-dup pair graph — the written component table at prod, shared via
+    cc_labels_cached by dedup_components and the downstream
+    canonicalization/modularity consumers."""
+    edges = lsh_edges_cached(spark, sf_dir)
+
+    def step(labels: DataFrame) -> DataFrame:
         nbr = (
             edges.join(labels, edges["src"] == labels["doc_id"])
             .groupBy("dst")
@@ -651,30 +701,18 @@ def _cc_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the old label rides through the update projection, so the
         # convergence check is a filter over the materialized round table
         # instead of a second join per round
-        merged = (
-            labels.join(nbr, labels["doc_id"] == nbr["dst"], "left")
-            .select(
-                labels["doc_id"],
-                F.col("component").alias("oc"),
-                F.least(
-                    F.col("component"), F.coalesce("nbr_comp", F.col("component"))
-                ).alias("component"),
-            )
-            .localCheckpoint(eager=True)
+        return labels.join(nbr, labels["doc_id"] == nbr["dst"], "left").select(
+            labels["doc_id"],
+            F.col("component").alias("oc"),
+            F.least(
+                F.col("component"), F.coalesce("nbr_comp", F.col("component"))
+            ).alias("component"),
         )
-        changed = merged.filter(F.col("component") != F.col("oc")).count()
-        labels = merged.select("doc_id", "component")
-        if changed == 0:
-            break
-    else:
-        # a component with diameter > the safety bound would otherwise
-        # return silently wrong (partially-propagated) labels; make
-        # non-convergence an explicit failure instead
-        raise RuntimeError(
-            f"dedup_components: min-label propagation did not converge "
-            f"within 32 rounds ({changed} labels still changing)"
-        )
-    return labels
+
+    l0 = _docs(spark, sf_dir).select("doc_id", F.col("doc_id").alias("component"))
+    labels = rounds(spark, "dedup_components", l0, step, 32,
+                    lambda new, _old: new.filter(F.col("component") != F.col("oc")).count())
+    return labels.select("doc_id", "component")
 
 
 def cc_labels_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -684,9 +722,7 @@ def cc_labels_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window as W
-
-    labels = _cc_labels(spark, sf_dir)
+    labels = cc_labels_cached(spark, sf_dir)
     w = W.partitionBy("component")
     return labels.select(
         "doc_id",

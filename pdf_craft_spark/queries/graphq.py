@@ -17,10 +17,13 @@ edge each way per distinct trading pair), so every node has in- and
 out-edges and there is no dangling-mass special case.  FIXED_ITERS
 unrolled iterations (the registry oracle needs a closed form; DuckDB
 mirrors each iteration as a generated CTE).  At scale each iteration is
-one join-shuffle on the edge key + one aggregation — the same
-Pregel-style loop shape as dedup_components, with localCheckpoint
-cutting the lineage per round (local-mode stand-in for the written
-iteration table a production job would use).
+one join-shuffle on the edge key + one aggregation.  Every Pregel-style
+loop of the family (pagerank, LPA, hierarchy, BFS, k-core, SSSP, HITS and
+dedup_components' CC) runs through ``dedup.rounds``: one localCheckpoint
+per round (local-mode stand-in for the written iteration table a
+production job would use), one shuffle-width pin (``dedup.core_width``)
+and one non-convergence error.  maximal_matching_rounds keeps its own
+loop under the same pin, because its residual is part of its output.
 
 Reference pairing: the reference has no graph operator; this extends the
 engine-added analytics library (dedup_components' connected components
@@ -117,26 +120,6 @@ def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def pagerank_purchase_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """See module docstring.  The iteration loop runs under a shuffle
-    width of defaultParallelism (restored after): the rank vector is one
-    row per node, and in a session tuned for wide byte-light stages
-    (high shuffle_partitions + AQE coalesce off, as the bench pipeline
-    session is) each of the loop's small exchanges would otherwise
-    launch hundreds of near-empty tasks — measured 33s vs 6s at sf0.1
-    from scheduling overhead alone.  AQE partition coalescing does this
-    automatically in default sessions; pinning width = cores keeps the
-    loop sane in both."""
-    before = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", spark.sparkContext.defaultParallelism
-    )
-    try:
-        return _pagerank(spark, sf_dir)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", before)
-
-
-def _pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the shared bipartite trading-pair artifact.  The rank loop runs on
     # BIGINT node keys (customer id*2, supplier id*2+1 — bijective): the
     # million-row edge table then checkpoints and joins as 16 bytes/row
@@ -159,14 +142,14 @@ def _pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("out_deg"))
         .localCheckpoint(eager=True)
     )
-    ranks = deg.select("node", F.lit(SCALE).cast("long").alias("rank"))
+
     # the rank vector (one row per node) is tiny relative to the edge
     # table — broadcast it into the edge join so edges are NEVER
     # shuffled; each iteration's only wide operation is the partial-agg
     # sum of contributions by dst.  (At billion-node scale the vector
     # outgrows broadcast and this becomes a co-partitioned shuffle join
     # on a bucketed edge table — same loop, different join strategy.)
-    for _ in range(FIXED_ITERS):
+    def step(ranks: DataFrame) -> DataFrame:
         per_src = ranks.join(F.broadcast(deg), "node").selectExpr(
             "node AS src", "rank DIV out_deg AS c"
         )
@@ -175,16 +158,13 @@ def _pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy(F.col("dst").alias("node"))
             .agg(F.sum("c").alias("in_sum"))
         )
-        ranks = (
-            deg.select("node")
-            .join(contrib, "node", "left")
-            .selectExpr(
-                "node",
-                f"{_TELEPORT} + (85 * coalesce(in_sum, CAST(0 AS BIGINT)))"
-                " DIV 100 AS rank",
-            )
-            .localCheckpoint(eager=True)
+        return deg.select("node").join(contrib, "node", "left").selectExpr(
+            "node",
+            f"{_TELEPORT} + (85 * coalesce(in_sum, CAST(0 AS BIGINT))) DIV 100 AS rank",
         )
+
+    r0 = deg.select("node", F.lit(SCALE).cast("long").alias("rank"))
+    ranks = dedup.rounds(spark, "pagerank_purchase_graph", r0, step, FIXED_ITERS)
     named = ranks.selectExpr(
         "CASE WHEN node % 2 = 0 THEN 'c' || CAST(node DIV 2 AS STRING)"
         " ELSE 's' || CAST(node DIV 2 AS STRING) END AS node",
@@ -333,23 +313,15 @@ ORACLES["graph_triangle_stats"] = GRAPH_TRIANGLE_STATS_SQL
 # unrolls the same rounds as generated CTEs (the PageRank discipline,
 # minus the arithmetic because labels are ids, not mass).  Each round is
 # one edge-keyed join + one (v,label) count + one per-v argmax window —
-# the Pregel shape, lineage cut per round via localCheckpoint (the
-# written iteration table at prod).  Communities out: per-node final
+# the Pregel shape, run by dedup.rounds.  Communities out: per-node final
 # label + community size.
 LPA_ITERS = 2
 
 
 def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window as W
+    edges = dedup.lsh_edges_cached(spark, sf_dir).selectExpr("src AS v", "dst AS u")
 
-    pairs = lsh_pairs_cached(spark, sf_dir).select("doc_a", "doc_b")
-    edges = (
-        pairs.selectExpr("doc_a AS v", "doc_b AS u")
-        .unionAll(pairs.selectExpr("doc_b AS v", "doc_a AS u"))
-        .localCheckpoint(eager=True)
-    )
-    labels = edges.select("v").distinct().selectExpr("v", "v AS lab")
-    for _ in range(LPA_ITERS):
+    def step(labels: DataFrame) -> DataFrame:
         freq = (
             edges.join(labels.withColumnRenamed("v", "u"), "u")
             .groupBy("v", "lab")
@@ -358,12 +330,10 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
         rk = F.row_number().over(
             W.partitionBy("v").orderBy(F.desc("c"), F.asc("lab"))
         )
-        labels = (
-            freq.withColumn("rk", rk)
-            .filter(F.col("rk") == 1)
-            .select("v", "lab")
-            .localCheckpoint(eager=True)
-        )
+        return freq.withColumn("rk", rk).filter(F.col("rk") == 1).select("v", "lab")
+
+    l0 = edges.select("v").distinct().selectExpr("v", "v AS lab")
+    labels = dedup.rounds(spark, "graph_label_propagation", l0, step, LPA_ITERS)
     size = labels.groupBy("lab").agg(F.count(F.lit(1)).alias("community_size"))
     return (
         labels.join(size, "lab")
@@ -431,44 +401,34 @@ ORACLES["graph_label_propagation"] = GRAPH_LABEL_PROPAGATION_SQL
 # (cur, depth) where a parent exists; rows already at a root pass through
 # unchanged (their cost is the join probe, not extra traversal).  Rounds =
 # max depth = O(log N) (4 at sf0.01, ~7 at 10^12 docs), each one
-# equi-join + no aggregation; localCheckpoint cuts lineage per round
-# (written iteration table at prod).  For pathological depth the
+# equi-join + no aggregation, run by dedup.rounds.  For pathological depth the
 # pointer-jumping variant (self-composing the ancestor function, rounds =
 # log2 depth) is the escalation path; for b-ary forests the linear walk
 # is already log-bounded and cheaper per round.  Convergence is CHECKED —
 # a cycle in the parent column raises instead of silently looping.
 def hierarchy_flatten_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window as W
-
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
     nodes = docs.selectExpr(
         "doc_id AS child",
         "CASE WHEN doc_id < 7 THEN NULL ELSE doc_id div 7 END AS parent",
     ).localCheckpoint(eager=True)
-    state = nodes.selectExpr("child AS doc_id", "child AS cur", "CAST(0 AS INT) AS depth")
-    for _ in range(64):
-        nxt = (
-            state.join(nodes, state["cur"] == nodes["child"], "left")
-            .select(
-                "doc_id",
-                F.coalesce("parent", "cur").alias("cur"),
-                (F.col("depth") + F.when(F.col("parent").isNotNull(), 1).otherwise(0)).alias(
-                    "depth"
-                ),
-            )
-            .localCheckpoint(eager=True)
+
+    def step(state: DataFrame) -> DataFrame:
+        return state.join(nodes, state["cur"] == nodes["child"], "left").select(
+            "doc_id",
+            F.coalesce("parent", "cur").alias("cur"),
+            (F.col("depth") + F.when(F.col("parent").isNotNull(), 1).otherwise(0)).alias(
+                "depth"
+            ),
         )
-        advanced = nxt.join(
-            state.selectExpr("doc_id", "depth AS od"), "doc_id"
+
+    def advanced(new: DataFrame, old: DataFrame) -> int:
+        return new.join(
+            old.selectExpr("doc_id", "depth AS od"), "doc_id"
         ).filter(F.col("depth") != F.col("od")).count()
-        state = nxt
-        if advanced == 0:
-            break
-    else:
-        raise RuntimeError(
-            "hierarchy_flatten_docs: ancestor walk did not converge within "
-            "64 rounds — cycle in the parent relation?"
-        )
+
+    s0 = nodes.selectExpr("child AS doc_id", "child AS cur", "CAST(0 AS INT) AS depth")
+    state = dedup.rounds(spark, "hierarchy_flatten_docs", s0, step, 64, advanced)
     w = W.partitionBy("cur")
     return state.select(
         "doc_id",
@@ -511,9 +471,9 @@ ORACLES["hierarchy_flatten_docs"] = HIERARCHY_FLATTEN_DOCS_SQL
 # BFS = reachability + hops): minimum hop count from a deterministic seed
 # set (the 5 smallest node ids — data-derived, so seeds always exist on
 # the sparse near-dup node set) over the near-dup graph.  Frontier relaxation as
-# a Pregel-style loop — each round one equi-join (edges x current
-# distances) + a min-aggregate, lineage cut per round; convergence is
-# CHECKED and a non-terminating relaxation raises.  Rounds = eccentricity
+# a Pregel-style loop (dedup.rounds) — each round one equi-join (edges x
+# current distances) + a min-aggregate; convergence is CHECKED and a
+# non-terminating relaxation raises.  Rounds = eccentricity
 # of the seed set (near-dup clusters are shallow); at 10^12 docs the same
 # loop runs over the persisted edge table with distance state as a table
 # per round.  Unreachable docs are excluded (they carry no distance).
@@ -522,43 +482,32 @@ BFS_N_SEEDS = 5
 
 
 def graph_bfs_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pairs = lsh_pairs_cached(spark, sf_dir)
-    edges = (
-        pairs.selectExpr("doc_a AS src", "doc_b AS dst")
-        .unionAll(pairs.selectExpr("doc_b AS src", "doc_a AS dst"))
-        .localCheckpoint(eager=True)
-    )
+    edges = dedup.lsh_edges_cached(spark, sf_dir)
     nodes = edges.select(F.col("src").alias("doc_id")).distinct()
-    dist = (
+    seeds = (
         nodes.orderBy("doc_id")
         .limit(BFS_N_SEEDS)
         .selectExpr("doc_id", "CAST(0 AS INT) AS dist")
         .localCheckpoint(eager=True)
     )
-    for _ in range(BFS_MAX_ROUNDS):
-        relaxed = (
+
+    def step(dist: DataFrame) -> DataFrame:
+        return (
             edges.join(dist.withColumnRenamed("doc_id", "src"), "src")
             .selectExpr("dst AS doc_id", "dist + 1 AS dist")
             .unionByName(dist)
             .groupBy("doc_id")
             .agg(F.min("dist").alias("dist"))
-            .localCheckpoint(eager=True)
         )
-        changed = (
-            relaxed.join(
-                dist.withColumnRenamed("dist", "od"), "doc_id", "left"
-            )
+
+    def changed(new: DataFrame, old: DataFrame) -> int:
+        return (
+            new.join(old.withColumnRenamed("dist", "od"), "doc_id", "left")
             .filter(F.col("od").isNull() | (F.col("dist") != F.col("od")))
             .count()
         )
-        dist = relaxed
-        if changed == 0:
-            break
-    else:
-        raise RuntimeError(
-            f"graph_bfs_distance: frontier relaxation still changing after "
-            f"{BFS_MAX_ROUNDS} rounds"
-        )
+
+    dist = dedup.rounds(spark, "graph_bfs_distance", seeds, step, BFS_MAX_ROUNDS, changed)
     return dist.selectExpr("doc_id", "CAST(dist AS INT) AS dist").orderBy("doc_id")
 
 
@@ -597,7 +546,7 @@ ORACLES["graph_bfs_distance"] = GRAPH_BFS_DISTANCE_SQL
 # mere isolated pair bridges.  Dedup pipelines use exactly this cut to
 # separate "true duplicate families" from incidental pairwise hits.
 # Synchronous peel rounds (degree count -> keep set -> edge restrict),
-# each one shuffle on the node key, lineage cut per round; the loop is
+# each one shuffle on the node key, run by dedup.rounds; the loop is
 # CONVERGENCE-CHECKED — if the last unrolled round still removed edges
 # the op raises instead of returning a non-core (same discipline as
 # dedup_components / hierarchy_flatten_docs).  The oracle unrolls the
@@ -608,31 +557,24 @@ KCORE_ITERS = 3
 
 
 def graph_kcore_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pairs = lsh_pairs_cached(spark, sf_dir).select("doc_a", "doc_b")
-    edges = (
-        pairs.selectExpr("doc_a AS v", "doc_b AS u")
-        .unionAll(pairs.selectExpr("doc_b AS v", "doc_a AS u"))
-        .localCheckpoint(eager=True)
-    )
-    prev_n = edges.count()
-    for _ in range(KCORE_ITERS):
-        deg = edges.groupBy("v").agg(F.count(F.lit(1)).alias("deg"))
-        keep = deg.filter(F.col("deg") >= KCORE_K).select("v")
-        edges = (
-            edges.join(keep, "v")
-            .join(keep.withColumnRenamed("v", "u"), "u")
-            .select("v", "u")
-            .localCheckpoint(eager=True)
+    edges = dedup.lsh_edges_cached(spark, sf_dir).selectExpr("src AS v", "dst AS u")
+
+    def step(live: DataFrame) -> DataFrame:
+        keep = (
+            live.groupBy("v").agg(F.count(F.lit(1)).alias("deg"))
+            .filter(F.col("deg") >= KCORE_K)
+            .select("v")
         )
-        n = edges.count()
-        if n == prev_n:
-            break
-        prev_n = n
-    else:
-        # the for-loop exhausted without a fixpoint round
-        raise RuntimeError(
-            f"k-core peel did not converge in {KCORE_ITERS} rounds"
-        )
+        return live.join(keep, "v").join(keep.withColumnRenamed("v", "u"), "u").select("v", "u")
+
+    # the previous round's edge count is carried, so each round counts once
+    counts = [edges.count()]
+
+    def peeled(new: DataFrame, _old: DataFrame) -> int:
+        counts.append(new.count())
+        return counts[-2] - counts[-1]
+
+    edges = dedup.rounds(spark, "graph_kcore_decomposition", edges, step, KCORE_ITERS, peeled)
     return (
         edges.groupBy("v")
         .agg(F.count(F.lit(1)).alias("core_degree"))
@@ -889,7 +831,7 @@ ORACLES["graph_random_walks"] = GRAPH_RANDOM_WALKS_SQL
 # Pregel/Bellman-Ford relaxation: each round joins the edge table to the
 # current distance table and takes a per-vertex min,
 #     d'(v) = min(d(v), min_{(u,v) in E} d(u) + w(u,v)),
-# one shuffle per round, lineage cut per round, convergence CHECKED (a
+# one shuffle per round, run by dedup.rounds, convergence CHECKED (a
 # graph still relaxing after SSSP_MAX_ROUNDS raises rather than emitting
 # an unconverged table).  The oracle unrolls the same relaxation a fixed
 # SSSP_MAX_ROUNDS times — after convergence extra rounds are fixpoint
@@ -912,7 +854,7 @@ def sssp_weighted_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
         .unionAll(und.selectExpr("pb AS src", "pa AS dst", "w"))
         .localCheckpoint(eager=True)  # relaxed every round; = written edges
     )
-    dist = (
+    seeds = (
         edges.select(F.col("src").alias("node"))
         .distinct()
         .orderBy("node")
@@ -920,31 +862,25 @@ def sssp_weighted_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
         .selectExpr("node", "CAST(0 AS BIGINT) AS dist")
         .localCheckpoint(eager=True)
     )
-    for _ in range(SSSP_MAX_ROUNDS):
-        # carry the previous distance through the relax aggregate
-        # (min(od) ignores the candidate rows' NULLs), so convergence is
-        # a filter over the materialized round table instead of a second
-        # join per round — one shuffle per round, period (guide §2.4)
+
+    # carry the previous distance through the relax aggregate (min(od)
+    # ignores the candidate rows' NULLs), so convergence is a filter over
+    # the materialized round table instead of a second join per round —
+    # one shuffle per round, period (guide §2.4)
+    def step(dist: DataFrame) -> DataFrame:
         cand = edges.join(dist.withColumnRenamed("node", "src"), "src").selectExpr(
             "dst AS node", "dist + w AS d", "CAST(NULL AS BIGINT) AS od"
         )
-        relaxed = (
+        return (
             cand.unionByName(dist.selectExpr("node", "dist AS d", "dist AS od"))
             .groupBy("node")
             .agg(F.min("d").alias("dist"), F.min("od").alias("od"))
-            .localCheckpoint(eager=True)
         )
-        changed = relaxed.filter(
-            F.col("od").isNull() | (F.col("dist") != F.col("od"))
-        ).count()
-        dist = relaxed.select("node", "dist")
-        if changed == 0:
-            break
-    else:
-        raise RuntimeError(
-            f"sssp_weighted_copurchase: still relaxing after "
-            f"{SSSP_MAX_ROUNDS} rounds"
-        )
+
+    def changed(new: DataFrame, _old: DataFrame) -> int:
+        return new.filter(F.col("od").isNull() | (F.col("dist") != F.col("od"))).count()
+
+    dist = dedup.rounds(spark, "sssp_weighted_copurchase", seeds, step, SSSP_MAX_ROUNDS, changed)
     return dist.selectExpr(
         "CAST(node AS BIGINT) AS part_id", "CAST(dist AS BIGINT) AS dist"
     ).orderBy("part_id")
@@ -1006,54 +942,47 @@ ORACLES["sssp_weighted_copurchase"] = SSSP_WEIGHTED_COPURCHASE_SQL
 # <= SCALE after normalization, degree sums <= deg_max * SCALE ~ 1e10,
 # times SCALE = 1e16).  Same loop discipline as pagerank: the score
 # vector (one row per node) broadcasts into the edge join so the edge
-# table is NEVER shuffled; one partial-agg per half-step;
-# localCheckpoint cuts lineage per round (prod twin: written iteration
-# table).  FIXED unrolled iterations so DuckDB mirrors the exact
-# arithmetic as CTEs.
+# table is NEVER shuffled; one partial-agg per half-step; dedup.rounds
+# checkpoints the hub vector per round and the step checkpoints the
+# authority half-step.  FIXED unrolled iterations so DuckDB mirrors the
+# exact arithmetic as CTEs.
 HITS_SCALE = 10**6
 HITS_ITERS = 3
 HITS_TOPK = 10
 
 
 def graph_hits_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    before = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", spark.sparkContext.defaultParallelism
-    )
-    try:
-        return _hits(spark, sf_dir)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", before)
-
-
-def _hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the shared bipartite trading-pair artifact IS the edge table here
     edges = custsupp_cached(spark, sf_dir)
-    custs = edges.select("cust").distinct()
-    h = custs.select("cust", F.lit(HITS_SCALE).cast("long").alias("h"))
-    for _ in range(HITS_ITERS):
+    auth = []  # each round's authority vector; the last one is output
+
+    def step(h: DataFrame) -> DataFrame:
         a = (
             edges.join(F.broadcast(h), "cust")
             .groupBy("supp")
             .agg(F.sum("h").alias("a"))
         )
         amax = a.agg(F.max("a").alias("mx"))
-        a = (
+        auth.append(
             a.crossJoin(F.broadcast(amax))
             .selectExpr("supp", f"(a * {HITS_SCALE}) DIV mx AS a")
             .localCheckpoint(eager=True)
         )
         h = (
-            edges.join(F.broadcast(a), "supp")
+            edges.join(F.broadcast(auth[-1]), "supp")
             .groupBy("cust")
             .agg(F.sum("a").alias("h"))
         )
         hmax = h.agg(F.max("h").alias("mx"))
-        h = (
-            h.crossJoin(F.broadcast(hmax))
-            .selectExpr("cust", f"(h * {HITS_SCALE}) DIV mx AS h")
-            .localCheckpoint(eager=True)
+        return h.crossJoin(F.broadcast(hmax)).selectExpr(
+            "cust", f"(h * {HITS_SCALE}) DIV mx AS h"
         )
+
+    h0 = edges.select("cust").distinct().select(
+        "cust", F.lit(HITS_SCALE).cast("long").alias("h")
+    )
+    h = dedup.rounds(spark, "graph_hits_scores", h0, step, HITS_ITERS)
+    a = auth[-1]
     top_a = (
         a.orderBy(F.desc("a"), "supp")
         .limit(HITS_TOPK)
@@ -1280,21 +1209,6 @@ MM_ROUNDS = 5
 
 
 def maximal_matching_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # same loop discipline as pagerank/HITS: pin the shuffle width to the
-    # core count for the tiny per-round exchanges (a default-200 session
-    # pays ~200 near-empty tasks per round; measured 16s -> ~5s in the
-    # vanilla driver session)
-    before = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", spark.sparkContext.defaultParallelism
-    )
-    try:
-        return _maximal_matching(spark, sf_dir)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", before)
-
-
-def _maximal_matching(spark: SparkSession, sf_dir: str) -> DataFrame:
     h = md5_prefix_long_sql("concat(cust, '_', supp)", 15, "spark")
     # edge-hash projection over the shared trading-pair artifact; still
     # checkpointed because every matching round re-reads the eh column
@@ -1306,34 +1220,37 @@ def _maximal_matching(spark: SparkSession, sf_dir: str) -> DataFrame:
     live = edges
     total = 0
     out_rows = []
-    for rnd in range(1, MM_ROUNDS + 1):
-        prop = (
-            live.groupBy("cust")
-            .agg(F.min(F.struct("eh", "supp")).alias("m"))
-            .selectExpr("cust", "m.supp AS supp", "m.eh AS eh")
-        )
-        acc = (
-            prop.groupBy("supp")
-            .agg(F.min(F.struct("eh", "cust")).alias("m"))
-            .selectExpr("m.cust AS cust", "supp")
-            .localCheckpoint(eager=True)
-        )
-        n_round = acc.count()
-        total += n_round
-        live = (
-            live.join(F.broadcast(acc.select("cust")), "cust", "left_anti")
-            .join(F.broadcast(acc.select("supp")), "supp", "left_anti")
-            .localCheckpoint(eager=True)
-        )
-        residual = live.count()
-        out_rows.append((rnd, n_round, total, residual))
-        if residual == 0:
-            # remaining rounds act on an empty graph — emit their rows
-            # without paying 2 joins + 2 checkpoints each (the driver-sim
-            # vanilla session measured 17.6s for the dead rounds alone)
-            for r2 in range(rnd + 1, MM_ROUNDS + 1):
-                out_rows.append((r2, 0, total, 0))
-            break
+    # the one hand-written round loop: the residual is part of the output,
+    # not a convergence failure; it runs under the round driver's pin
+    with dedup.core_width(spark):
+        for rnd in range(1, MM_ROUNDS + 1):
+            prop = (
+                live.groupBy("cust")
+                .agg(F.min(F.struct("eh", "supp")).alias("m"))
+                .selectExpr("cust", "m.supp AS supp", "m.eh AS eh")
+            )
+            acc = (
+                prop.groupBy("supp")
+                .agg(F.min(F.struct("eh", "cust")).alias("m"))
+                .selectExpr("m.cust AS cust", "supp")
+                .localCheckpoint(eager=True)
+            )
+            n_round = acc.count()
+            total += n_round
+            live = (
+                live.join(F.broadcast(acc.select("cust")), "cust", "left_anti")
+                .join(F.broadcast(acc.select("supp")), "supp", "left_anti")
+                .localCheckpoint(eager=True)
+            )
+            residual = live.count()
+            out_rows.append((rnd, n_round, total, residual))
+            if residual == 0:
+                # remaining rounds act on an empty graph — emit their rows
+                # without paying 2 joins + 2 checkpoints each (the driver-sim
+                # vanilla session measured 17.6s for the dead rounds alone)
+                for r2 in range(rnd + 1, MM_ROUNDS + 1):
+                    out_rows.append((r2, 0, total, 0))
+                break
     return spark.createDataFrame(
         out_rows,
         "round long, matched_this_round long, matched_total long,"

@@ -3,8 +3,9 @@
 Every cross-query memo (the DataFrame session artifacts, the numpy IVF/PQ
 fits, the two-run resume rows) lives in one registry in queries/dedup.py,
 keyed on its session and the fingerprint of its sf_dir's tables.  These
-tests rewrite a table in place and restart the session, and check that
-neither leaves a stale entry or a stale protected RDD id behind."""
+tests rewrite a table in place, delete an sf_dir and restart the session,
+and check that none of them leaves a stale entry or a stale protected RDD
+id behind."""
 
 from __future__ import annotations
 
@@ -47,6 +48,25 @@ def test_rewritten_tables_rebuild_their_artifacts(spark, tmp_path):
     assert not old_ids & dedup.PROTECTED_RDD_IDS
     persisted = {int(k) for k in spark.sparkContext._jsc.getPersistentRDDs().keySet()}
     assert not old_ids & persisted, "the stale checkpoint must be unpersisted"
+
+
+def test_vanished_inputs_evict_their_artifacts(spark, tmp_path):
+    """A sweep that builds on a fresh copy of its tables and then deletes
+    the copy must not keep the old entry's blocks for the session."""
+    d = str(tmp_path / "gone")
+    shutil.copytree(SF_DIR, d)
+    before = set(dedup.PROTECTED_RDD_IDS)
+    dedup.shingles_cached(spark, d)
+    old_ids = dedup.PROTECTED_RDD_IDS - before
+    assert old_ids
+
+    shutil.rmtree(d)
+    dedup.shingles_cached(spark, SF_DIR)  # any artifact request
+
+    assert all(name != f"shingles:{d}" for name, _scope in dedup._REGISTRY)
+    assert not old_ids & dedup.PROTECTED_RDD_IDS
+    persisted = {int(k) for k in spark.sparkContext._jsc.getPersistentRDDs().keySet()}
+    assert not old_ids & persisted, "the vanished input's checkpoint must be unpersisted"
 
 
 _RESTART = textwrap.dedent(

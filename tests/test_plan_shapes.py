@@ -922,6 +922,32 @@ def test_stream_lifecycle_lives_in_the_driver():
     assert not outside, f"run streams through streamingq._run_stream: {outside}"
 
 
+def test_round_loops_run_through_the_driver():
+    """A loop that checkpoints per round goes through dedup.rounds, which
+    owns the checkpoint-per-round lifecycle, the shuffle-width pin and the
+    non-convergence error.  maximal_matching_rounds keeps its own loop:
+    its residual is part of its output, not a failure."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "pdf_craft_spark" / "queries"
+    owners = {"rounds", "maximal_matching_rounds"}
+    loops = [
+        f"{path.name}:{top.name}:{loop.lineno}"
+        for path in sorted(pkg.rglob("*.py"))
+        for top in ast.parse(path.read_text()).body
+        if isinstance(top, ast.FunctionDef) and top.name not in owners
+        for loop in ast.walk(top)
+        if isinstance(loop, (ast.For, ast.While))
+        and any(
+            isinstance(node, ast.Attribute) and node.attr == "localCheckpoint"
+            for stmt in loop.body + loop.orelse
+            for node in ast.walk(stmt)
+        )
+    ]
+    assert not loops, f"run round loops through dedup.rounds: {loops}"
+
+
 def test_env_knobs_are_allowlisted():
     """The package reads exactly these env vars; every other decision is a
     module constant, so no unset knob multiplies the configurations the
