@@ -2,88 +2,103 @@
 
 Behavioral spec: the reference's resume markers — skip page if its XML
 exists, skip doc if 'done' exists (/root/reference/pdf_craft/pdf/ocr.py:
-92-95,129-136,218-219).  Spark-native equivalent:
+92-95,129-136,218-219).  Spark-native equivalent, one landing
+(``append_uncommitted``) that batch resume (``run_with_resume``) and
+streaming micro-batches (streaming/incremental.py) share:
 
-- output spans land through a TABLE-FORMAT SINK (plans/sinks.py): here a
+- output spans land through a TABLE-FORMAT SINK (plans/sinks.py): a
   bucket-partitioned parquet dataset (bucket = sinks.bucket_expr — an
-  md5-derived id any engine can recompute); on Iceberg the native
-  bucket(n, doc_id) transform with snapshot-atomic commits — the resume
-  logic below is sink-agnostic.
+  md5-derived id any engine can recompute).
 - resume = LEFT ANTI join of the input docs against the doc_ids already
   committed — only uncommitted documents are recomputed.
-- every run appends a manifest row per bucket (run_id, bucket, n_docs,
-  n_spans, wall_sec) — the per-partition lineage + metrics record the
-  north rule asks for.
+- every landing appends a manifest row per touched bucket (run_id,
+  bucket, n_docs, n_spans, wall_sec, status) — the per-partition lineage
+  + metrics record the north rule asks for.  Its counts are observed on
+  the spans write itself, so the manifest costs no scan of the committed
+  table.
 """
 
 from __future__ import annotations
 
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from pdf_craft_spark.plans.pipeline import extract_spans_df
-from pdf_craft_spark.plans.sinks import ParquetBucketSink
+from pdf_craft_spark.plans.sinks import N_BUCKETS, ParquetBucketSink, bucket_expr
+
+# the layout (nullability included) of every manifest file written so far,
+# so that old and new files read back as one table
+MANIFEST_SCHEMA = (
+    "bucket int, n_docs bigint not null, n_spans bigint not null, "
+    "run_id string not null, wall_sec double not null, status string not null"
+)
 
 
 def append_uncommitted(docs: DataFrame, sink, run_id: str) -> None:
-    """The one resume path, shared by batch resume (run_with_resume) and
-    streaming micro-batches (streaming/incremental.py): left-anti join
-    ``docs`` against the doc_ids already committed in ``sink``, extract
-    the rest and append their spans tagged with ``run_id``."""
-    done = sink.committed_doc_ids(docs.sparkSession)
+    """The one landing: left-anti join ``docs`` against the doc_ids
+    already committed in ``sink``, extract the rest, append their spans
+    tagged with ``run_id``, then append this run's manifest rows."""
+    t0 = time.time()
+    spark = docs.sparkSession
+    done = sink.committed_doc_ids(spark)
     todo = docs if done is None else docs.join(done, "doc_id", "left_anti")
+    spans = extract_spans_df(todo).withColumns(
+        {"run_id": F.lit(run_id), "bucket": bucket_expr()}
+    )
+    # observe() rejects DISTINCT, so documents are counted by their span at
+    # offset 0: the kernel numbers each document's output spans from 0
+    # (operators/render.py render_document, pinned by
+    # test_pipeline_spark.py::test_nested_output_order).  One array per
+    # count, written as SQL: building 32 Column trees over py4j added
+    # 0.25 s per landing, more than the observation itself.
+    def per_bucket(cond: str):
+        counts = ", ".join(f"count_if(bucket = {k}{cond})" for k in range(N_BUCKETS))
+        return F.expr(f"array({counts})")
 
-    # every span row carries the run that produced it — row-level lineage,
-    # and run_with_resume's per-run manifest delta is a cheap scan filtered
-    # on run_id (row-group stats / snapshot metadata prune old runs)
-    # instead of a re-extraction
-    sink.append_spans(extract_spans_df(todo).withColumn("run_id", F.lit(run_id)))
+    seen = Observation()
+    sink.append_spans(spans.observe(
+        seen,
+        per_bucket("").alias("n_spans"),
+        per_bucket(" AND `offset` = 0").alias("n_docs"),
+    ))
+    got = seen.get
+    keep = [k for k in range(N_BUCKETS) if got["n_spans"][k]]
+    # the run-level wall clock, identical across its rows
+    wall = round(time.time() - t0, 3)
+    manifest = pa.table({
+        "bucket": keep,
+        "n_docs": [got["n_docs"][k] for k in keep],
+        "n_spans": [got["n_spans"][k] for k in keep],
+        "run_id": [run_id] * len(keep),
+        "wall_sec": [wall] * len(keep),
+        "status": ["committed"] * len(keep),
+    })
+    # an Arrow table, one file per landing: rows from a Python list go
+    # through a pickled RDD, and the tiny write took 0.8 s instead of
+    # 0.13 s (local[4], 4-core VM)
+    sink.append_manifest(spark.createDataFrame(manifest, MANIFEST_SCHEMA).coalesce(1))
 
 
 def run_with_resume(
-    spark: SparkSession,
-    docs: DataFrame,
-    out_dir: str,
-    run_id: str,
-    sink=None,
+    spark: SparkSession, docs: DataFrame, out_dir: str, run_id: str
 ) -> dict:
-    """Extract `docs`, skipping documents already committed in the sink.
-
-    Returns run stats; output is appended bucket-partitioned, and the
-    manifest gains one row per touched bucket.  ``sink`` defaults to the
-    parquet sink rooted at out_dir; pass an IcebergSink for a catalog
-    table (plans/sinks.py documents the 1:1 mapping).
-    """
-    if sink is None:
-        sink = ParquetBucketSink(out_dir)
+    """Land ``docs`` in the parquet sink rooted at ``out_dir``, skipping
+    documents already committed there; returns the run's wall clock and
+    the committed totals."""
+    sink = ParquetBucketSink(out_dir)
     t0 = time.time()
     append_uncommitted(docs, sink, run_id)
     wall = time.time() - t0
 
-    out = sink.read_spans(spark)
-    # manifest rows record THIS run's delta per bucket; wall_sec is the
-    # run-level wall clock (identical across the run's bucket rows)
-    lineage = (
-        out.filter(F.col("run_id") == run_id)
-        .groupBy("bucket")
-        .agg(
-            F.countDistinct("doc_id").alias("n_docs"),
-            F.count(F.lit(1)).alias("n_spans"),
-        )
-        .withColumn("run_id", F.lit(run_id))
-        .withColumn("wall_sec", F.lit(round(wall, 3)))
-        .withColumn("status", F.lit("committed"))
-    )
-    sink.append_manifest(lineage)
-
-    stats_row = out.agg(
+    totals = sink.read_spans(spark).agg(
         F.countDistinct("doc_id").alias("docs"), F.count(F.lit(1)).alias("spans")
     ).collect()[0]
     return {
         "run_id": run_id,
         "wall_sec": wall,
-        "total_docs_committed": stats_row["docs"],
-        "total_spans_committed": stats_row["spans"],
+        "total_docs_committed": totals["docs"],
+        "total_spans_committed": totals["spans"],
     }

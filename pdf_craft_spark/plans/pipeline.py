@@ -33,7 +33,6 @@ reference, jointer.py:42-96) — that bound holds for any plan.
 
 from __future__ import annotations
 
-import os
 from collections.abc import Callable, Iterable, Iterator
 from functools import partial
 
@@ -151,9 +150,8 @@ def _doc_spans(pdf: pd.DataFrame):
     (doc_id, offset) pairs after the partition-local sort — one vectorized
     comparison catches that and raises instead of emitting a silently
     doubled document.  A duplicate landing in ANOTHER partition is
-    invisible to any single task; enable the table-level assertion
-    (PDF_CRAFT_SPARK_ASSERT_UNIQUE_DOCS=1 / assert_unique_docs=True on
-    the plan builders) to check that before the kernel runs."""
+    invisible to any single task; pass assert_unique_docs=True to the
+    plan builders to check that before the kernel runs."""
     import numpy as np
 
     ids = pdf["doc_id"].to_numpy()
@@ -175,7 +173,7 @@ def _doc_spans(pdf: pd.DataFrame):
         yield ids[i], list(zip(kinds[i:j], texts[i:j], media[i:j], offs[i:j]))
 
 
-def _check_unique_docs(docs: DataFrame, assert_unique_docs: bool | None) -> None:
+def _check_unique_docs(docs: DataFrame, assert_unique_docs: bool) -> None:
     """Opt-in table-level contract assertion: exactly one row per doc_id.
 
     The zero-shuffle plan relies on this invariant (module docstring); a
@@ -183,13 +181,8 @@ def _check_unique_docs(docs: DataFrame, assert_unique_docs: bool | None) -> None
     single kernel task can detect (the in-kernel guard in _doc_spans
     catches the same-partition case for free).  This check is one cheap
     aggregation job (narrow scan + partial count, no wide rows move), but
-    it IS an extra job, so it's off by default and enabled per-call or via
-    PDF_CRAFT_SPARK_ASSERT_UNIQUE_DOCS=1 in debug/test environments and
-    backfill runs over uncurated tables."""
-    if assert_unique_docs is None:
-        assert_unique_docs = (
-            os.environ.get("PDF_CRAFT_SPARK_ASSERT_UNIQUE_DOCS") == "1"
-        )
+    it IS an extra job, so it's off by default and enabled per call, e.g.
+    for backfill runs over uncurated tables."""
     if not assert_unique_docs:
         return
     dup = (
@@ -226,7 +219,7 @@ def _extraction_plan(
     schema: str | T.StructType,
     emit: Callable[[str, list, bool], Iterable[tuple]],
     stage1: bool,
-    assert_unique_docs: bool | None,
+    assert_unique_docs: bool,
 ) -> DataFrame:
     """The one extraction plan every sink shares: nested contract table in,
     ``emit(doc_id, pages, stage1_done)`` rows out, typed by ``schema``.
@@ -296,7 +289,7 @@ def extract_spans_df(
     docs: DataFrame,
     stage1: bool = True,
     boilerplate: bool = False,
-    assert_unique_docs: bool | None = None,
+    assert_unique_docs: bool = False,
 ) -> DataFrame:
     """Full extraction: nested contract table in, flat output spans out
     (doc_id, chapter_id, kind, text, media_ref, offset)."""
@@ -330,7 +323,7 @@ def _emit_markdown(doc_id: str, pages: list, stage1_done: bool) -> list[tuple]:
 
 
 def extract_markdown_df(
-    docs: DataFrame, stage1: bool = True, assert_unique_docs: bool | None = None
+    docs: DataFrame, stage1: bool = True, assert_unique_docs: bool = False
 ) -> DataFrame:
     """S8: the markdown-file sink as a DataFrame — one rendered markdown
     string per document (same kernel, string output instead of spans)."""
@@ -361,7 +354,7 @@ def extract_epub_records_df(
     docs: DataFrame,
     stage1: bool = True,
     which: str = "records",
-    assert_unique_docs: bool | None = None,
+    assert_unique_docs: bool = False,
 ) -> DataFrame:
     """S9: the EPUB record sink as a DataFrame — flat
     TextBlock/Formula/Image/Table/Footnote rows per document

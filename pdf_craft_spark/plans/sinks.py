@@ -1,17 +1,13 @@
 """Table-format sink seam for the checkpointed extraction output (S4/S7/S10).
 
-The resume/lineage logic in plans/checkpoint.py talks to THIS interface
-only; the storage format is a plugin.  Two implementations:
-
-- ParquetBucketSink — what runs in this sandbox: bucket-partitioned
-  parquet datasets with Spark's _SUCCESS/staging atomicity.
-- IcebergSink — the production mapping, code-shaped: the same four
-  operations expressed against Spark's DataSourceV2 ``writeTo`` API.  It
-  needs the iceberg-spark-runtime jar + a configured catalog.  Neither
-  is available here (no Iceberg jar is installed and there is no network
-  to fetch one), so no test exercises the class; it raises a clear error
-  without them.  Every method body is the real call, so "use Iceberg at
-  prod" is a config change, not a rewrite.
+The one landing (plans/checkpoint.append_uncommitted) talks to THIS
+interface only.  ParquetBucketSink is what runs: bucket-partitioned
+parquet datasets with Spark's _SUCCESS/staging atomicity.  The Iceberg
+mapping is documented per method — each names the Iceberg call it stands
+for (``writeTo(...).append()`` snapshots, the ``bucket(n, doc_id)``
+transform).  An Iceberg code twin needs the iceberg-spark-runtime jar to
+be tested at all, so it comes back only once such a jar is in the
+repository.
 
 Contract (what checkpoint.py relies on):
 - ``append_spans`` is atomic-or-absent per call: a crashed run must never
@@ -93,8 +89,9 @@ class ParquetBucketSink:
             raise
 
     def append_spans(self, flat: DataFrame) -> None:
-        """Append span rows bucket-partitioned; Spark's commit protocol
-        (task staging + job-level rename + _SUCCESS) gives append-or-absent.
+        """Append span rows, which carry their ``bucket`` (bucket_expr),
+        partitioned by it; Spark's commit protocol (task staging +
+        job-level rename + _SUCCESS) gives append-or-absent.
 
         Iceberg: ``flat.writeTo('cat.db.spans').append()`` — one atomic
         snapshot; concurrent runs serialize via optimistic retry.  Resume
@@ -102,7 +99,6 @@ class ParquetBucketSink:
         if dedup-on-write were ever needed:
         ``MERGE INTO spans t USING delta s ON t.doc_id = s.doc_id AND
         t.offset = s.offset WHEN NOT MATCHED THEN INSERT *``."""
-        flat = flat.withColumn("bucket", bucket_expr())
         flat.write.mode("append").partitionBy("bucket").parquet(self._spans_path())
 
     def read_spans(self, spark: SparkSession) -> DataFrame:
@@ -128,77 +124,3 @@ class ParquetBucketSink:
     def read_manifest(self, spark: SparkSession) -> DataFrame:
         return spark.read.parquet(self._manifest_path())
 
-
-class IcebergSink:
-    """The same four operations against a real Iceberg catalog table.
-
-    Requires ``iceberg-spark-runtime`` on the classpath and a catalog in
-    the session conf, e.g.::
-
-        spark.sql.catalog.cat = org.apache.iceberg.spark.SparkCatalog
-        spark.sql.catalog.cat.type = hadoop
-        spark.sql.catalog.cat.warehouse = /path/wh
-
-    Not runnable in this sandbox (no jars baked in, no network to fetch
-    them) — constructor probes the catalog and fails with instructions.
-    """
-
-    def __init__(self, spark: SparkSession, table: str):
-        self.table = table
-        self.manifest_table = table + "_manifest"
-        try:
-            spark.sql(f"SELECT 1 FROM {table} LIMIT 0")
-            self._exists = True
-        except Exception as exc:
-            if "TABLE_OR_VIEW_NOT_FOUND" in str(exc):
-                self._exists = False  # catalog works, table doesn't exist yet
-            else:
-                raise RuntimeError(
-                    "Iceberg catalog unavailable: add iceberg-spark-runtime "
-                    "to spark.jars and configure spark.sql.catalog.<name>"
-                ) from exc
-
-    def _with_bucket(self, flat: DataFrame) -> DataFrame:
-        # an explicit bucket column (identical hash to the parquet sink)
-        # keeps the manifest's per-bucket lineage sink-agnostic; the table
-        # is ALSO physically partitioned by it
-        return flat.withColumn("bucket", bucket_expr())
-
-    def committed_doc_ids(self, spark: SparkSession) -> DataFrame | None:
-        if not self._exists:
-            return None
-        return spark.table(self.table).select("doc_id").distinct()
-
-    def append_spans(self, flat: DataFrame) -> None:
-        flat = self._with_bucket(flat)
-        if self._exists:
-            flat.writeTo(self.table).append()  # one atomic snapshot
-            return
-        # the cached _exists probe can be stale (table created concurrently
-        # or externally after the constructor ran): treat ALREADY_EXISTS
-        # from create() as "someone else won the race" and retry as an
-        # append — symmetric with append_manifest's race handling
-        try:
-            flat.writeTo(self.table).partitionedBy(F.col("bucket")).create()
-        except Exception as exc:
-            if "ALREADY_EXISTS" not in str(exc):
-                raise
-            flat.writeTo(self.table).append()
-        self._exists = True
-
-    def read_spans(self, spark: SparkSession) -> DataFrame:
-        return spark.table(self.table)
-
-    def append_manifest(self, lineage: DataFrame) -> None:
-        # only a MISSING table falls back to create(); any other append
-        # failure (commit conflict, schema drift) must propagate rather
-        # than be masked by a confusing TABLE_ALREADY_EXISTS from create()
-        try:
-            lineage.writeTo(self.manifest_table).append()
-        except Exception as exc:
-            if "TABLE_OR_VIEW_NOT_FOUND" not in str(exc):
-                raise
-            lineage.writeTo(self.manifest_table).create()
-
-    def read_manifest(self, spark: SparkSession) -> DataFrame:
-        return spark.table(self.manifest_table)

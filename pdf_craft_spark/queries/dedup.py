@@ -574,10 +574,13 @@ def session_artifact(spark: SparkSession, name: str, build) -> DataFrame:
     under ``name`` = ``"<artifact>:<sf_dir>"``."""
 
     def checkpoint():
+        df = build()
+        # only the artifact's own checkpoint is protected: the round
+        # checkpoints ``build`` makes are cut off by it, and nested
+        # artifacts built inside ``build`` already own their ids
         before = _persisted(spark)
-        df = build().localCheckpoint(eager=True)
-        # nested artifacts built inside ``build`` already own their ids
-        ids = _persisted(spark) - before - PROTECTED_RDD_IDS
+        df = df.localCheckpoint(eager=True)
+        ids = _persisted(spark) - before
         PROTECTED_RDD_IDS.update(ids)
         return df, ids
 

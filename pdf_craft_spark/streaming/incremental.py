@@ -3,19 +3,17 @@
 The reference is a resumable batch pipeline (SURVEY.md §2.10: no
 event-time semantics anywhere), so the Spark-native incremental story is
 file-arrival Structured Streaming: new parquet files of interleaved docs
-land in a directory; each micro-batch runs the SAME batch extraction plan
-via ``foreachBatch`` and appends to the same bucket-partitioned output the
-batch checkpoint (plans/checkpoint.py) uses.
+land in a directory; each micro-batch lands through ``foreachBatch`` and
+the one landing batch resume takes (plans/checkpoint.append_uncommitted):
+the same extraction plan, the same bucket-partitioned spans dataset, and
+one manifest row per touched bucket with ``run_id = epoch_<id>``.
 
 Delivery semantics: ``foreachBatch`` is at-least-once — a micro-batch can
 REPLAY after a failure between the parquet append and the offset commit.
-The sink is therefore made idempotent at the document level: each batch is
-left-anti-joined against the doc_ids already committed to the output
-(plans/checkpoint.append_uncommitted, the same path batch resume takes), so
-a replayed batch re-writes nothing and the OBSERVED result is
-effectively-once per document.  On Iceberg the same property comes
-cheaper, from MERGE/overwrite-by-filter snapshot atomicity keyed on
-(epoch_id, doc_id).
+The landing is idempotent at the document level: each batch is
+left-anti-joined against the doc_ids already committed to the output, so
+a replayed batch writes no spans and no manifest row, and the OBSERVED
+result is effectively-once per document.
 """
 
 from __future__ import annotations

@@ -8,10 +8,10 @@ Usage (cluster):
         scripts/run_extraction.py \\
         --input  <interleaved docs table/path> \\
         --output <spans output dir> \\
-        --run-id r1 [--resume] [--boilerplate]
+        --run-id r1 [--resume]
 
 Locally the same script runs on local[N] (SPARK_GRAFT_CPUS).  Input is a
-parquet/Iceberg dataset of (doc_id, spans); output is the
+parquet dataset of (doc_id, spans); output is the
 bucket-partitioned spans dataset + per-bucket manifest lineage
 (plans/checkpoint.py).  With --resume, committed documents are skipped
 via the left-anti join.
@@ -54,7 +54,6 @@ def main() -> None:
     ap.add_argument("--output", required=True)
     ap.add_argument("--run-id", default=None)
     ap.add_argument("--resume", action="store_true")
-    ap.add_argument("--boilerplate", action="store_true")
     ap.add_argument("--generate-docs", type=int, default=None,
                     help="generate a synthetic corpus of N docs at --input first")
     args = ap.parse_args()

@@ -69,6 +69,23 @@ def test_vanished_inputs_evict_their_artifacts(spark, tmp_path):
     assert not old_ids & persisted, "the vanished input's checkpoint must be unpersisted"
 
 
+def test_an_artifact_protects_only_its_own_checkpoint(spark, tmp_path):
+    """The round checkpoints made while an artifact builds are cut off by
+    the artifact's own checkpoint; protecting them too would keep their
+    blocks for the whole session."""
+    d = str(tmp_path / "sf")
+    shutil.copytree(SF_DIR, d)
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    before = {int(k) for k in persisted().keySet()}
+    want = dedup.dedup_components(spark, d).collect()
+    app = spark.sparkContext.applicationId
+    for name in ("cc_labels", "lsh_pairs"):
+        assert len(dedup._REGISTRY[(f"{name}:{d}", app)][2]) == 1, name
+
+    dedup.release_unprotected(spark, before)
+    assert dedup.dedup_components(spark, d).collect() == want
+
+
 _RESTART = textwrap.dedent(
     """
     import sys

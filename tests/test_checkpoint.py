@@ -1,12 +1,45 @@
 """S10 resume semantics: a second run over a superset input recomputes
-ONLY the uncommitted documents; manifest rows accrue per bucket."""
+ONLY the uncommitted documents; manifest rows accrue per bucket and
+always agree with the spans their run wrote."""
 
 from __future__ import annotations
 
 import uuid
 
+from pyspark.sql import functions as F
+
 from pdf_craft_spark.plans.checkpoint import run_with_resume
 from pdf_craft_spark.plans.pipeline import corpus_df
+from pdf_craft_spark.plans.sinks import ParquetBucketSink
+
+# the manifest layout every earlier landing wrote: old and new manifest
+# files must read back as one table
+MANIFEST_COLUMNS = (
+    "struct<bucket:int,n_docs:bigint,n_spans:bigint,run_id:string,"
+    "wall_sec:double,status:string>"
+)
+
+
+def manifest_matches_spans(spark, out_dir: str) -> list:
+    """Assert every run's manifest rows equal a groupBy("bucket") of the
+    spans carrying its run_id; return the manifest rows."""
+    sink = ParquetBucketSink(out_dir)
+    manifest = sink.read_manifest(spark)
+    assert manifest.schema.simpleString() == MANIFEST_COLUMNS
+    got = sorted(
+        tuple(r) for r in manifest.select("run_id", "bucket", "n_docs", "n_spans").collect()
+    )
+    want = sorted(
+        tuple(r)
+        for r in sink.read_spans(spark)
+        .filter(F.col("run_id").isNotNull())
+        .groupBy("run_id", "bucket")
+        .agg(F.countDistinct("doc_id"), F.count(F.lit(1)))
+        .collect()
+    )
+    assert got == want
+    assert {r.status for r in manifest.select("status").collect()} <= {"committed"}
+    return got
 
 
 def test_resume_skips_committed(spark, tmp_path):
@@ -29,6 +62,7 @@ def test_resume_skips_committed(spark, tmp_path):
     runs = {r.run_id for r in manifest.select("run_id").distinct().collect()}
     assert runs == {"run1", "run2"}
     assert manifest.filter(manifest.status == "committed").count() >= 2
+    manifest_matches_spans(spark, out_dir)
 
 
 def test_resume_into_pre_run_id_output(spark, tmp_path):
@@ -53,12 +87,15 @@ def test_resume_into_pre_run_id_output(spark, tmp_path):
     # legacy rows surface with NULL run_id; new rows carry r2
     assert out.filter(F.col("run_id").isNull()).count() > 0
     assert out.filter(F.col("run_id") == "r2").count() > 0
+    assert {r[0] for r in manifest_matches_spans(spark, out_dir)} == {"r2"}
 
 
 def test_noop_rerun(spark, tmp_path):
     out_dir = str(tmp_path / "out")
     run_with_resume(spark, corpus_df(spark, 3, partitions=2), out_dir, uuid.uuid4().hex)
     before = spark.read.parquet(f"{out_dir}/spans").count()
+    manifest = manifest_matches_spans(spark, out_dir)
     run_with_resume(spark, corpus_df(spark, 3, partitions=2), out_dir, uuid.uuid4().hex)
     after = spark.read.parquet(f"{out_dir}/spans").count()
     assert before == after
+    assert manifest_matches_spans(spark, out_dir) == manifest

@@ -982,7 +982,6 @@ def test_env_knobs_are_allowlisted():
         "SPARK_GRAFT_CPUS",
         "SPARK_GRAFT_DRIVER_MEM",
         "SPARK_GRAFT_ORACLE_SF_DIR",
-        "PDF_CRAFT_SPARK_ASSERT_UNIQUE_DOCS",
     }
 
 

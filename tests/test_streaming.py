@@ -1,6 +1,7 @@
 """Structured-Streaming incremental ingest: files that arrive later are
 extracted by later micro-batches; output equals the batch pipeline's; a
-replayed micro-batch (foreachBatch is at-least-once) appends nothing."""
+replayed micro-batch (foreachBatch is at-least-once) appends nothing; each
+epoch's manifest rows agree with the spans it wrote."""
 
 from __future__ import annotations
 
@@ -11,6 +12,7 @@ from pdf_craft_spark.streaming.incremental import (
     make_batch_processor,
     start_incremental_extraction,
 )
+from tests.test_checkpoint import manifest_matches_spans
 
 
 def test_incremental_equals_batch(spark, tmp_path):
@@ -38,6 +40,8 @@ def test_incremental_equals_batch(spark, tmp_path):
         (r.doc_id, r.offset, r.kind, r.text, r.media_ref) for r in want.collect()
     )
     assert got_rows == want_rows
+    runs = {r[0] for r in manifest_matches_spans(spark, out)}
+    assert runs and all(run.startswith("epoch_") for run in runs)
 
 
 def test_batch_replay_is_idempotent(spark, tmp_path):
@@ -50,10 +54,12 @@ def test_batch_replay_is_idempotent(spark, tmp_path):
 
     process(batch, 0)
     once = spark.read.parquet(os.path.join(out, "spans")).count()
+    manifest = manifest_matches_spans(spark, out)
     process(batch, 0)  # exact replay of epoch 0
     process(batch, 1)  # overlapping next epoch (same docs re-listed)
     again = spark.read.parquet(os.path.join(out, "spans")).count()
     assert once == again
+    assert manifest_matches_spans(spark, out) == manifest
 
     got = spark.read.parquet(os.path.join(out, "spans"))
     per_doc = {r.doc_id: r.cnt for r in got.groupBy("doc_id").count().withColumnRenamed("count", "cnt").collect()}
