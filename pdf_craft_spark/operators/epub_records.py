@@ -39,7 +39,7 @@ from dataclasses import dataclass, field
 from pdf_craft_spark.operators.jointer import parse_content
 from pdf_craft_spark.operators.latex import KIND_TEXT
 from pdf_craft_spark.operators.model import Asset, Chapter, FootnoteRef, Para, Seg
-from pdf_craft_spark.operators.render import RefNumbers, _normalize_lines
+from pdf_craft_spark.operators.render import RefNumbers, _normalize_lines, number_references
 from pdf_craft_spark.operators.toclib import TITLE_KINDS, TocItem
 
 try:  # pragma: no cover - not present in this image
@@ -351,17 +351,7 @@ def document_epub_records(
 ) -> list[tuple]:
     """Flat rows for the DataFrame sink: (chapter_id, seq, record, level,
     text, latex, media_ref, html, title, caption, footnote_id)."""
-    from pdf_craft_spark.operators.render import collect_reference_keys
-
-    all_keys: list[tuple[int, int]] = []
-    seen: set[tuple[int, int]] = set()
-    for ch in chapters:
-        for key in collect_reference_keys(ch):
-            if key not in seen:
-                seen.add(key)
-                all_keys.append(key)
-    all_keys.sort()
-    ref_numbers: RefNumbers = {k: i for i, k in enumerate(all_keys, 1)}
+    ref_numbers = number_references(chapters)
 
     rows: list[tuple] = []
     seq = 0

@@ -160,6 +160,14 @@ def collect_reference_keys(chapter: Chapter) -> list[tuple[int, int]]:
     return out
 
 
+def number_references(chapters: list[Chapter]) -> RefNumbers:
+    """Document-wide footnote numbers: every chapter's reference keys,
+    deduplicated and sorted by (page, order), numbered from 1 (J6/W7).
+    The dict iterates in number order."""
+    keys = sorted({key for ch in chapters for key in collect_reference_keys(ch)})
+    return {k: i for i, k in enumerate(keys, 1)}
+
+
 def render_document(
     chapters: list[Chapter],
     refs_by_key: dict[tuple[int, int], FootnoteRef],
@@ -170,15 +178,7 @@ def render_document(
     numbering is global first-appearance order sorted by (page, order)
     (J6/W7).
     """
-    all_keys: list[tuple[int, int]] = []
-    seen: set[tuple[int, int]] = set()
-    for ch in chapters:
-        for key in collect_reference_keys(ch):
-            if key not in seen:
-                seen.add(key)
-                all_keys.append(key)
-    all_keys.sort()
-    ref_numbers: RefNumbers = {k: i for i, k in enumerate(all_keys, 1)}
+    ref_numbers = number_references(chapters)
 
     md_parts: list[str] = []
     spans: list[OutSpan] = []
@@ -217,7 +217,7 @@ def render_document(
     # '---' divider + '## References' heading (render.py:82) — a markdown
     # rendering artifact, so it joins md_parts but is NOT a content span
     divider_pending = True
-    for i, key in enumerate(all_keys, 1):
+    for key, i in ref_numbers.items():
         ref = refs_by_key.get(key)
         if ref is None:
             continue

@@ -9,6 +9,8 @@ streaming micro-batches (streaming/incremental.py) share:
 - output spans land through a TABLE-FORMAT SINK (plans/sinks.py): a
   bucket-partitioned parquet dataset (bucket = sinks.bucket_expr — an
   md5-derived id any engine can recompute).
+- outside tables enter here, so the landing rebalances an input with
+  fewer partitions than cores before the anti-join.
 - resume = LEFT ANTI join of the input docs against the doc_ids already
   committed — only uncommitted documents are recomputed.
 - every landing appends a manifest row per touched bucket (run_id,
@@ -16,6 +18,7 @@ streaming micro-batches (streaming/incremental.py) share:
   + metrics record the north rule asks for.  Its counts are observed on
   the spans write itself, so the manifest costs no scan of the committed
   table.
+- both datasets are read through the layouts declared in plans/sinks.py.
 """
 
 from __future__ import annotations
@@ -27,14 +30,22 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from pdf_craft_spark.plans.pipeline import extract_spans_df
-from pdf_craft_spark.plans.sinks import N_BUCKETS, ParquetBucketSink, bucket_expr
+from pdf_craft_spark.plans.sinks import MANIFEST_SCHEMA, N_BUCKETS, ParquetBucketSink, bucket_expr
 
-# the layout (nullability included) of every manifest file written so far,
-# so that old and new files read back as one table
-MANIFEST_SCHEMA = (
-    "bucket int, n_docs bigint not null, n_spans bigint not null, "
-    "run_id string not null, wall_sec double not null, status string not null"
-)
+
+def _ensure_parallelism(docs: DataFrame) -> DataFrame:
+    """Rebalance ONLY when the source has fewer partitions than cores.
+
+    The rebalance happens at the nested-row level (one row per document),
+    so document atomicity — the zero-shuffle plan's precondition — is
+    preserved by construction.  A 100 TB table has orders of magnitude
+    more splits than executors, so at scale this branch never fires and
+    extraction stays fully narrow.  Asked of a scan or a micro-batch, not
+    of the anti-join, the partition count runs no job."""
+    sc = docs.sparkSession.sparkContext
+    if docs.rdd.getNumPartitions() < sc.defaultParallelism:
+        docs = docs.repartition(sc.defaultParallelism, "doc_id")
+    return docs
 
 
 def append_uncommitted(docs: DataFrame, sink, run_id: str) -> None:
@@ -43,6 +54,7 @@ def append_uncommitted(docs: DataFrame, sink, run_id: str) -> None:
     tagged with ``run_id``, then append this run's manifest rows."""
     t0 = time.time()
     spark = docs.sparkSession
+    docs = _ensure_parallelism(docs)
     done = sink.committed_doc_ids(spark)
     todo = docs if done is None else docs.join(done, "doc_id", "left_anti")
     spans = extract_spans_df(todo).withColumns(

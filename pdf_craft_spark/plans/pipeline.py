@@ -1,13 +1,14 @@
 """The distributed extraction plan.
 
 Shape (SURVEY.md §3.3, tightened round 4): one fully NARROW pipeline,
-ZERO shuffles.
+ZERO shuffles, the same for every sink and every input; building it runs
+no Spark job (the landing rebalances an under-partitioned input).
 
   stage 0  corpus scan (Iceberg/parquet; here: distributed generation)
-  stage 1  NARROW vectorized prep on the nested span arrays — pure
-           Catalyst higher-order functions, whole-stage-codegen'd, no
-           Python, no shuffle:
-             F1 whitespace normalize   transform + regexp_replace/trim
+  stage 1  NARROW vectorized prep on the exploded span rows — Catalyst
+           scalar expressions, whole-stage-codegen'd, no Python, no
+           shuffle (always on: the kernel runs with stage1_done=True):
+             F1 whitespace normalize   regexp_replace + trim
              F3 degeneration filter    filter + rlike with a Java-regex
                                        backreference ('(.{2,5})\\1{15}')
              F4 title '#'-strip        conditional regexp_replace
@@ -200,29 +201,14 @@ def _check_unique_docs(docs: DataFrame, assert_unique_docs: bool) -> None:
         )
 
 
-def _ensure_parallelism(docs: DataFrame) -> DataFrame:
-    """Rebalance ONLY when the source has fewer partitions than cores.
-
-    The rebalance happens at the nested-row level (one row per document),
-    so document atomicity — the zero-shuffle plan's precondition — is
-    preserved by construction.  A 100 TB table has orders of magnitude
-    more splits than executors, so at scale this branch never fires and
-    extraction stays fully narrow."""
-    sc = docs.sparkSession.sparkContext
-    if docs.rdd.getNumPartitions() < sc.defaultParallelism:
-        docs = docs.repartition(sc.defaultParallelism, "doc_id")
-    return docs
-
-
 def _extraction_plan(
     docs: DataFrame,
     schema: str | T.StructType,
-    emit: Callable[[str, list, bool], Iterable[tuple]],
-    stage1: bool,
+    emit: Callable[[str, list], Iterable[tuple]],
     assert_unique_docs: bool,
 ) -> DataFrame:
     """The one extraction plan every sink shares: nested contract table in,
-    ``emit(doc_id, pages, stage1_done)`` rows out, typed by ``schema``.
+    ``emit(doc_id, pages)`` rows out, typed by ``schema``.
 
     ZERO-shuffle plan (round 4): the contract table holds ONE ROW PER
     DOCUMENT and rows are atomic within a partition, so explode_spans
@@ -233,14 +219,11 @@ def _extraction_plan(
     exchange, outputs value-identical (and at 100 TB the win is
     structural — extraction is scan-local, no shuffle bytes at all).  A
     partition-LOCAL sort (no exchange) still runs so unordered spans
-    arrays get their offset order restored; _ensure_parallelism guards
-    the small-input case where scan partitions < cores."""
+    arrays get their offset order restored.  Kernel parallelism is the
+    input's partition count (checkpoint.append_uncommitted rebalances)."""
     ensure_package_shipped(docs.sparkSession)
     _check_unique_docs(docs, assert_unique_docs)
-    flat = explode_spans(_ensure_parallelism(docs))
-    if stage1:
-        flat = prepare_stage1(flat)
-    flat = flat.sortWithinPartitions("doc_id", "offset")
+    flat = prepare_stage1(explode_spans(docs)).sortWithinPartitions("doc_id", "offset")
     if isinstance(schema, str):
         schema = T.StructType.fromDDL(schema)
     cols = schema.fieldNames()
@@ -251,7 +234,7 @@ def _extraction_plan(
 
         rows: list[tuple] = []
         for doc_id, spans in _doc_spans(pdf):
-            rows.extend(emit(doc_id, parse_raw_spans(spans), stage1))
+            rows.extend(emit(doc_id, parse_raw_spans(spans)))
         return pd.DataFrame(rows, columns=cols)
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -276,25 +259,20 @@ def _extraction_plan(
     return flat.mapInPandas(kernel, schema=schema)
 
 
-def _emit_spans(doc_id: str, pages: list, stage1_done: bool, boilerplate: bool) -> list[tuple]:
+def _emit_spans(doc_id: str, pages: list, boilerplate: bool) -> list[tuple]:
     from pdf_craft_spark.operators.document import extract_document
 
-    _, out_spans = extract_document(
-        pages, stage1_done=stage1_done, boilerplate_strip=boilerplate
-    )
+    _, out_spans = extract_document(pages, stage1_done=True, boilerplate_strip=boilerplate)
     return [(doc_id, s.chapter_id, s.kind, s.text, s.media_ref, s.offset) for s in out_spans]
 
 
 def extract_spans_df(
-    docs: DataFrame,
-    stage1: bool = True,
-    boilerplate: bool = False,
-    assert_unique_docs: bool = False,
+    docs: DataFrame, boilerplate: bool = False, assert_unique_docs: bool = False
 ) -> DataFrame:
     """Full extraction: nested contract table in, flat output spans out
     (doc_id, chapter_id, kind, text, media_ref, offset)."""
     emit = partial(_emit_spans, boilerplate=boilerplate)
-    return _extraction_plan(docs, OUT_SPAN_SCHEMA, emit, stage1, assert_unique_docs)
+    return _extraction_plan(docs, OUT_SPAN_SCHEMA, emit, assert_unique_docs)
 
 
 def to_nested_output(flat_spans: DataFrame) -> DataFrame:
@@ -315,19 +293,17 @@ def to_nested_output(flat_spans: DataFrame) -> DataFrame:
 MARKDOWN_SCHEMA = "doc_id string, markdown string, n_spans int"
 
 
-def _emit_markdown(doc_id: str, pages: list, stage1_done: bool) -> list[tuple]:
+def _emit_markdown(doc_id: str, pages: list) -> list[tuple]:
     from pdf_craft_spark.operators.document import extract_document
 
-    md, out_spans = extract_document(pages, stage1_done=stage1_done)
+    md, out_spans = extract_document(pages, stage1_done=True)
     return [(doc_id, md, len(out_spans))]
 
 
-def extract_markdown_df(
-    docs: DataFrame, stage1: bool = True, assert_unique_docs: bool = False
-) -> DataFrame:
+def extract_markdown_df(docs: DataFrame, assert_unique_docs: bool = False) -> DataFrame:
     """S8: the markdown-file sink as a DataFrame — one rendered markdown
     string per document (same kernel, string output instead of spans)."""
-    return _extraction_plan(docs, MARKDOWN_SCHEMA, _emit_markdown, stage1, assert_unique_docs)
+    return _extraction_plan(docs, MARKDOWN_SCHEMA, _emit_markdown, assert_unique_docs)
 
 
 EPUB_RECORD_SCHEMA = (
@@ -341,20 +317,17 @@ EPUB_TOC_SCHEMA = (
 )
 
 
-def _emit_epub(doc_id: str, pages: list, stage1_done: bool, which: str) -> list[tuple]:
+def _emit_epub(doc_id: str, pages: list, which: str) -> list[tuple]:
     from pdf_craft_spark.operators.document import extract_epub_records
 
-    records, tocs = extract_epub_records(pages, stage1_done=stage1_done)
+    records, tocs = extract_epub_records(pages, stage1_done=True)
     if which == "records":
         return [(doc_id, *r) for r in records]
     return [(doc_id, t.toc_id, t.parent_id, t.pos, t.title, t.has_chapter) for t in tocs]
 
 
 def extract_epub_records_df(
-    docs: DataFrame,
-    stage1: bool = True,
-    which: str = "records",
-    assert_unique_docs: bool = False,
+    docs: DataFrame, which: str = "records", assert_unique_docs: bool = False
 ) -> DataFrame:
     """S9: the EPUB record sink as a DataFrame — flat
     TextBlock/Formula/Image/Table/Footnote rows per document
@@ -362,7 +335,7 @@ def extract_epub_records_df(
     same zero-shuffle plan shape as the other sinks."""
     schema = EPUB_RECORD_SCHEMA if which == "records" else EPUB_TOC_SCHEMA
     emit = partial(_emit_epub, which=which)
-    return _extraction_plan(docs, schema, emit, stage1, assert_unique_docs)
+    return _extraction_plan(docs, schema, emit, assert_unique_docs)
 
 
 def doc_metrics(flat_spans: DataFrame) -> DataFrame:

@@ -17,6 +17,10 @@ Contract (what checkpoint.py relies on):
   files under the dataset root; Iceberg: the current snapshot).
 - ``append_manifest`` records per-run, per-bucket lineage rows; it lands
   AFTER the spans commit, so a manifest row implies its data is queryable.
+
+Every read goes through the declared layouts (SPANS_SCHEMA,
+MANIFEST_SCHEMA): no schema inference, and a dataset with no data file
+yet reads as an empty table.
 """
 
 from __future__ import annotations
@@ -25,10 +29,27 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from pdf_craft_spark.schemas import OUT_SPAN_SCHEMA
 
 # the one bucket count of every spans dataset: a dataset written with two
 # counts would split one document's lineage across incompatible buckets
 N_BUCKETS = 16
+
+# the spans dataset: the kernel's span columns, the landing's run_id and
+# the partition column.  Files written before run_id existed read it as NULL.
+SPANS_SCHEMA = T.StructType([
+    *OUT_SPAN_SCHEMA.fields,
+    T.StructField("run_id", T.StringType()),
+    T.StructField("bucket", T.IntegerType()),
+])
+# the layout (nullability included) of every manifest file written so far,
+# so that old and new files read back as one table
+MANIFEST_SCHEMA = (
+    "bucket int, n_docs bigint not null, n_spans bigint not null, "
+    "run_id string not null, wall_sec double not null, status string not null"
+)
 
 
 def bucket_expr():
@@ -82,7 +103,7 @@ class ParquetBucketSink:
         from pyspark.errors import AnalysisException
 
         try:
-            return spark.read.parquet(self._spans_path()).select("doc_id").distinct()
+            return self.read_spans(spark).select("doc_id").distinct()
         except AnalysisException as exc:
             if "PATH_NOT_FOUND" in str(exc):
                 return None  # first run: nothing committed yet
@@ -102,14 +123,11 @@ class ParquetBucketSink:
         flat.write.mode("append").partitionBy("bucket").parquet(self._spans_path())
 
     def read_spans(self, spark: SparkSession) -> DataFrame:
-        """Full committed dataset.  mergeSchema: output dirs written before
-        a column existed (e.g. run_id) must union footers, not sample one.
+        """Full committed dataset, read as SPANS_SCHEMA.
 
-        Iceberg: ``spark.table('cat.db.spans')`` — schema evolution is
-        tracked in table metadata, so the mergeSchema workaround drops out."""
-        return (
-            spark.read.option("mergeSchema", "true").parquet(self._spans_path())
-        )
+        Iceberg: ``spark.table('cat.db.spans')`` — the schema lives in the
+        table metadata."""
+        return spark.read.schema(SPANS_SCHEMA).parquet(self._spans_path())
 
     def append_manifest(self, lineage: DataFrame) -> None:
         """Per-run per-bucket lineage rows (run_id, bucket, n_docs,
@@ -122,5 +140,5 @@ class ParquetBucketSink:
         lineage.write.mode("append").parquet(self._manifest_path())
 
     def read_manifest(self, spark: SparkSession) -> DataFrame:
-        return spark.read.parquet(self._manifest_path())
+        return spark.read.schema(MANIFEST_SCHEMA).parquet(self._manifest_path())
 

@@ -1123,24 +1123,14 @@ ORACLES["dedup_keep_best"] = DEDUP_KEEP_BEST_SQL
 # layout, banding, or shingle recipe ever drifts from true Jaccard
 # behavior, the histogram moves and the oracle hash breaks — the
 # estimator's calibration is a DRIVER ROW, not a pytest claim.
-# Scale: signatures and shingle arrays are each built once (persisted
-# index tables at prod — localCheckpoint here); candidates come from the
-# band equi-join, never all-pairs; the exact verify is per-pair
+# Scale: signatures, shingle arrays and the candidate pairs are each
+# built once per session (persisted index tables at prod — session
+# artifacts here); candidates are the LSH band equi-join's pairs
+# (lsh_pairs_cached), never all-pairs; the exact verify is per-pair
 # array_intersect, so the costly leg is |candidates| rows.
 def minhash_estimate_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     sig = minhash_sigs_cached(spark, sf_dir)
-    bands = _bands_from_sig(sig).localCheckpoint(eager=True)
-    a, b = bands.alias("a"), bands.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
+    pairs = lsh_pairs_cached(spark, sf_dir).select("doc_a", "doc_b")
     sa = sig.select(
         F.col("doc_id").alias("doc_a"),
         *[F.col(f"s{j}").alias(f"a{j}") for j in range(N_HASHES)],

@@ -67,8 +67,9 @@ def test_resume_skips_committed(spark, tmp_path):
 
 def test_resume_into_pre_run_id_output(spark, tmp_path):
     """An output dir written before the run_id column existed (schema
-    drift) must resume cleanly: the sink's mergeSchema read unions the
-    footers and the lineage delta filter sees NULL run_id on old files."""
+    drift) must resume cleanly: the sink reads through its declared
+    layout, so old files surface run_id as NULL and the lineage delta
+    filter skips them."""
     from pyspark.sql import functions as F
 
     from pdf_craft_spark.plans.pipeline import extract_spans_df
@@ -99,3 +100,17 @@ def test_noop_rerun(spark, tmp_path):
     after = spark.read.parquet(f"{out_dir}/spans").count()
     assert before == after
     assert manifest_matches_spans(spark, out_dir) == manifest
+
+
+def test_empty_landing_then_landing(spark, tmp_path):
+    """An empty landing leaves a spans dir with no data file; it and every
+    later landing into that dir read it as an empty table, not as a
+    layout to infer."""
+    out_dir = str(tmp_path / "out")
+    stats = run_with_resume(spark, corpus_df(spark, 8).limit(0), out_dir, "empty")
+    assert (stats["total_docs_committed"], stats["total_spans_committed"]) == (0, 0)
+
+    stats = run_with_resume(spark, corpus_df(spark, 4, partitions=2), out_dir, "r2")
+    assert stats["total_docs_committed"] == 4
+    assert stats["total_spans_committed"] > 0
+    assert {r[0] for r in manifest_matches_spans(spark, out_dir)} == {"r2"}

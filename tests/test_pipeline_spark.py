@@ -27,7 +27,7 @@ def _local_truth(doc_id: int) -> list[tuple]:
 
 def test_spark_pipeline_matches_kernel(spark):
     docs = corpus_df(spark, N_DOCS, SEED, partitions=4)
-    flat = extract_spans_df(docs, stage1=True)
+    flat = extract_spans_df(docs)
     rows = flat.collect()
     by_doc: dict[str, list] = {}
     for r in rows:
@@ -42,16 +42,16 @@ def test_spark_pipeline_matches_kernel(spark):
 
 
 def test_stage1_off_equals_on(spark):
+    """The plan always runs F1/F3/F4 in the JVM (stage 1) and the kernel
+    with stage1_done=True; the local kernel on raw pages applies the
+    Python F1/F3/F4 instead.  Both must give the same spans."""
     docs = corpus_df(spark, 6, SEED, partitions=2)
-    on = {
-        (r.doc_id, r.offset): (r.kind, r.text, r.media_ref)
-        for r in extract_spans_df(docs, stage1=True).collect()
-    }
-    off = {
-        (r.doc_id, r.offset): (r.kind, r.text, r.media_ref)
-        for r in extract_spans_df(docs, stage1=False).collect()
-    }
-    assert on == off
+    on: dict[str, list] = {}
+    for r in extract_spans_df(docs).collect():
+        on.setdefault(r.doc_id, []).append((r.kind, r.text, r.media_ref, r.offset))
+    assert len(on) == 6
+    for doc_id, rows in on.items():
+        assert sorted(rows, key=lambda t: t[3]) == _local_truth(int(doc_id)), doc_id
 
 
 def test_nested_output_order(spark):

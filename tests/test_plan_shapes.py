@@ -6,10 +6,13 @@ asserted here so a future edit cannot silently regress them.
 - the relational family keeps predicate pushdown + column pruning at the
   parquet scan;
 - the extraction plan is fully NARROW (zero exchanges) between scan and
-  kernel, with a rebalance that fires only for under-partitioned inputs.
+  kernel for every input, and building it starts no Spark job; the
+  rebalance of under-partitioned inputs lives in the landing.
 """
 
 from __future__ import annotations
+
+import uuid
 
 import pytest
 
@@ -18,6 +21,21 @@ SF_DIR = "/root/testdata/sf0.001"
 
 def _executed_plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _jobs_started(spark, fn) -> list[int]:
+    """Run ``fn()`` under a fresh job group; the ids of the jobs it started."""
+    sc = spark.sparkContext
+    group = uuid.uuid4().hex
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # job starts reach the status tracker through the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return list(sc.statusTracker().getJobIdsForGroup(group))
 
 
 @pytest.mark.parametrize("name", ["sim_lsh_topk", "sim_ivf_topk"])
@@ -54,25 +72,64 @@ def test_a1_scan_pushdown_and_pruning(spark):
 def test_extraction_has_zero_exchanges(spark, builder, kwargs):
     """Round 4: extraction is fully narrow — one row per document means
     explode already co-locates every doc's spans, so no sink's plan may
-    carry an exchange at all (only a partition-local sort)."""
+    carry an exchange at all (only a partition-local sort), whatever the
+    input's partition count."""
     from pdf_craft_spark.plans import pipeline
 
     build = getattr(pipeline, builder)
-    plan = _executed_plan(build(pipeline.corpus_df(spark, 64), **kwargs))
-    n_exchanges = plan.count("Exchange ")
-    assert n_exchanges == 0, f"expected a fully narrow plan, got:\n{plan}"
-    assert "Sort " in plan  # the partition-local offset-order restore
+    for docs in (pipeline.corpus_df(spark, 64), pipeline.corpus_df(spark, 8, partitions=1)):
+        plan = _executed_plan(build(docs, **kwargs))
+        n_exchanges = plan.count("Exchange ")
+        assert n_exchanges == 0, f"expected a fully narrow plan, got:\n{plan}"
+        assert "Sort " in plan  # the partition-local offset-order restore
 
 
-def test_extraction_rebalances_underpartitioned_input(spark):
-    """The zero-shuffle plan's one precondition is parallelism: a source
-    with fewer partitions than cores is rebalanced first (nested-row
-    repartition — doc atomicity preserved by construction)."""
-    from pdf_craft_spark.plans.pipeline import corpus_df, extract_spans_df
+def test_building_extraction_plans_starts_no_job(spark):
+    """Building any extraction plan, over a scan or over the landing's
+    broadcast anti-join, runs nothing: asking the anti-join for its
+    partition count would run the committed-ids scan and its broadcast."""
+    from pyspark.sql import functions as F
 
-    docs = corpus_df(spark, 8, partitions=1)
-    plan = _executed_plan(extract_spans_df(docs))
-    assert "hashpartitioning(doc_id" in plan, plan
+    from pdf_craft_spark.plans import pipeline
+
+    docs = pipeline.corpus_df(spark, 8, partitions=2)
+    done = pipeline.corpus_df(spark, 4, partitions=1).select("doc_id").distinct()
+    todo = docs.join(F.broadcast(done), "doc_id", "left_anti")
+    builds = (
+        pipeline.extract_spans_df,
+        pipeline.extract_markdown_df,
+        pipeline.extract_epub_records_df,
+        lambda d: pipeline.extract_epub_records_df(d, which="toc"),
+    )
+    for source in (docs, todo):
+        for build in builds:
+            assert _jobs_started(spark, lambda: build(source)) == []
+
+
+def test_extraction_rebalances_underpartitioned_input(spark, tmp_path):
+    """The zero-shuffle plan's one precondition is parallelism: the
+    landing rebalances a source with fewer partitions than cores
+    (nested-row repartition — doc atomicity preserved by construction),
+    so the kernel runs on at least one partition per core."""
+    from pdf_craft_spark.plans.checkpoint import append_uncommitted
+    from pdf_craft_spark.plans.pipeline import corpus_df
+    from pdf_craft_spark.plans.sinks import ParquetBucketSink
+
+    jobs: list[int] = []
+
+    class Sink(ParquetBucketSink):
+        def append_spans(self, flat):
+            jobs.extend(_jobs_started(spark, lambda: super(Sink, self).append_spans(flat)))
+
+    append_uncommitted(corpus_df(spark, 8, partitions=1), Sink(str(tmp_path / "out")), "r1")
+    tracker = spark.sparkContext.statusTracker()
+    tasks = [
+        info.numTasks
+        for j in jobs
+        for s in tracker.getJobInfo(j).stageIds
+        if (info := tracker.getStageInfo(s)) is not None
+    ]
+    assert max(tasks) >= spark.sparkContext.defaultParallelism, tasks
 
 
 def test_minhash_band_index_is_materialized(spark):
