@@ -21,13 +21,24 @@ Also here: the binary sign-hash index (sim_binary_hash_topk, 1 bit per
 dimension: the cheapest rung of the quantization ladder below SQ8 and PQ,
 Hamming candidates then exact-cosine rerank), mutual-nearest-neighbor
 pairs, the blocked k-NN graph, and embedding near-dup verification.
+
+The retrieval spine: the Spark side of every query here is assembled from
+one copy of each retrieval step — ``_normed`` (the per-row norm2
+projection), ``_sides`` (the query and corpus sides), ``_cosine`` (the
+rounded cosine), ``_top_k`` (the per-key rank-and-cut, the one place a
+top-k cutoff changes), ``_query_top_k`` (the final TOP_K answer shape),
+``_rerank`` (exact cosine over a candidate shortlist), ``_adc_exprs``
+(PQ lookup tables and the ADC score), ``_recall_hits`` (hits against a
+ground truth) and ``_lloyd`` (the seeded Lloyd fit behind both IVF and
+PQ).  The DuckDB oracles (``*_SQL``, ``_*_duck_sql``) are the reference
+implementations and spell every step out on their own.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession, Window as W
+from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from pdf_craft_spark.queries import dedup
@@ -56,34 +67,110 @@ _DOT = (
 )
 
 
-def sim_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _emb(spark, sf_dir)
-    # norms are per-row: compute them once per side BEFORE the cross join
-    # (the higher-order aggregate is interpreted, not codegen'd — don't
-    # re-evaluate it per pair)
-    q = emb.filter(F.col("vec_id") < N_QUERIES).select(
+# --- the retrieval spine -------------------------------------------------------
+def _normed(emb: DataFrame, dot: str, *keep: str) -> DataFrame:
+    """(vec_id, *keep, embedding, norm2) with norm2 the ``dot`` template of
+    embedding with itself.  Norms are per row: compute them once per side
+    BEFORE a join (the higher-order aggregate is interpreted, not
+    codegen'd — never re-evaluate it per pair)."""
+    return emb.select(
+        "vec_id",
+        *keep,
+        "embedding",
+        F.expr(dot.format(a="embedding", b="embedding")).alias("norm2"),
+    )
+
+
+def _sides(
+    base: DataFrame, q_extra: list[Column], c_extra: list[Column]
+) -> tuple[DataFrame, DataFrame]:
+    """The query side (query_id, qe, nq, *q_extra) over vec_id <
+    N_QUERIES and the corpus side (neighbor_id, ce, nc, *c_extra) of a
+    ``_normed`` frame."""
+    q = base.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("qe"),
-        F.expr(_DOT.format(a="embedding", b="embedding")).alias("nq"),
+        F.col("norm2").alias("nq"),
+        *q_extra,
     )
-    c = emb.select(
+    c = base.select(
         F.col("vec_id").alias("neighbor_id"),
         F.col("embedding").alias("ce"),
-        F.expr(_DOT.format(a="embedding", b="embedding")).alias("nc"),
+        F.col("norm2").alias("nc"),
+        *c_extra,
     )
-    joined = F.broadcast(q).crossJoin(c).filter(F.col("query_id") != F.col("neighbor_id"))
-    dot = F.expr(_DOT.format(a="qe", b="ce"))
-    cos = dot / F.sqrt(F.col("nq") * F.col("nc"))
-    scored = joined.select(
-        "query_id", "neighbor_id", F.round(cos, 6).alias("cos_sim")
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
+    return q, c
+
+
+def _cosine(dot: str, na: str, nb: str) -> Column:
+    """The cosine of the SQL dot product ``dot`` over the norms ``na`` and
+    ``nb``, rounded to 6 places so both engines rank identical values."""
+    return F.round(F.expr(dot) / F.sqrt(F.col(na) * F.col(nb)), 6)
+
+
+def _top_k(df: DataFrame, key: str, order: list[Column], k: int, rank: str) -> DataFrame:
+    """The first ``k`` rows of each ``key`` in ``order``, numbered from 1
+    in the int column ``rank``; callers cast the rank their schema needs."""
+    w = W.partitionBy(key).orderBy(*order)
+    return df.withColumn(rank, F.row_number().over(w)).filter(F.col(rank) <= k)
+
+
+def _query_top_k(scored: DataFrame, score: str, *keep: str) -> DataFrame:
+    """The answer shape of the top-k queries: the TOP_K neighbors of each
+    query, best ``score`` first and ties to the lower neighbor_id, as
+    (query_id, rank bigint, neighbor_id, *keep, score)."""
+    order = [F.desc(score), F.asc("neighbor_id")]
     return (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "rank", "neighbor_id", "cos_sim")
+        _top_k(scored, "query_id", order, TOP_K, "rank")
+        .select(
+            "query_id",
+            F.col("rank").cast("bigint").alias("rank"),
+            "neighbor_id",
+            *keep,
+            score,
+        )
         .orderBy("query_id", "rank")
     )
+
+
+def _rerank(shortlist: DataFrame, base: DataFrame, *keep: str) -> DataFrame:
+    """Exact-cosine rerank of a (query_id, neighbor_id, *keep) shortlist:
+    full vectors come from the ``_normed`` frame ``base`` for shortlist
+    rows only."""
+    q, c = _sides(base, [], [])
+    scored = (
+        shortlist.join(F.broadcast(q), "query_id")
+        .join(c, "neighbor_id")
+        .select(
+            "query_id",
+            "neighbor_id",
+            *keep,
+            _cosine(_DOT.format(a="qe", b="ce"), "nq", "nc").alias("cos_sim"),
+        )
+    )
+    return _query_top_k(scored, "cos_sim", *keep)
+
+
+def _recall_hits(approx: DataFrame, gt: DataFrame) -> DataFrame:
+    """One row per ground-truth query: n is how many of its ``approx``
+    (query_id, neighbor_id) rows are in ``gt`` (null where none are)."""
+    hits = (
+        approx.join(gt, ["query_id", "neighbor_id"])
+        .groupBy("query_id")
+        .agg(F.count(F.lit(1)).alias("n"))
+    )
+    return gt.select("query_id").distinct().join(hits, "query_id", "left")
+
+
+def sim_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    q, c = _sides(_normed(_emb(spark, sf_dir), _DOT), [], [])
+    joined = F.broadcast(q).crossJoin(c).filter(F.col("query_id") != F.col("neighbor_id"))
+    scored = joined.select(
+        "query_id",
+        "neighbor_id",
+        _cosine(_DOT.format(a="qe", b="ce"), "nq", "nc").alias("cos_sim"),
+    )
+    return _query_top_k(scored, "cos_sim")
 
 
 _DOT_DUCK = (
@@ -218,11 +305,8 @@ def _bucket_int_expr(tbl: int) -> str:
 
 
 def sim_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _emb(spark, sf_dir)
-    base = emb.select(
-        "vec_id",
-        "embedding",
-        F.expr(_DOT.format(a="embedding", b="embedding")).alias("norm2"),
+    base = _normed(_emb(spark, sf_dir), _DOT).select(
+        "*",
         *[
             F.expr(_bucket_int_expr(t)).cast("int").alias(f"bt{t}")
             for t in range(N_TABLES)
@@ -234,36 +318,21 @@ def sim_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sf0.1, results identical).  At prod this is the written hash-table
     # index.
     base = base.localCheckpoint(eager=True)
-    c = base.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("ce"),
-        F.col("norm2").alias("nc"),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(t).alias("t"), F.col(f"bt{t}").alias("b"))
-                    for t in range(N_TABLES)
-                ]
-            )
-        ).alias("tb"),
-    ).select("neighbor_id", "ce", "nc", F.col("tb.t").alias("ct"), F.col("tb.b").alias("cb"))
+    tables = F.explode(
+        F.array(
+            *[
+                F.struct(F.lit(t).alias("t"), F.col(f"bt{t}").alias("b"))
+                for t in range(N_TABLES)
+            ]
+        )
+    ).alias("tb")
+    q, c = _sides(base, [tables], [tables])
+    c = c.select(
+        "neighbor_id", "ce", "nc", F.col("tb.t").alias("ct"), F.col("tb.b").alias("cb")
+    )
     masks = _probe_masks()
     q = (
-        base.filter(F.col("vec_id") < N_QUERIES)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("qe"),
-            F.col("norm2").alias("nq"),
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(F.lit(t).alias("t"), F.col(f"bt{t}").alias("b"))
-                        for t in range(N_TABLES)
-                    ]
-                )
-            ).alias("tb"),
-        )
-        .select(
+        q.select(
             "query_id",
             "qe",
             "nq",
@@ -282,25 +351,18 @@ def sim_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand = q.join(
         c, (q["qt"] == c["ct"]) & (q["pb"] == c["cb"])
     ).filter(F.col("query_id") != F.col("neighbor_id"))
-    dot = F.expr(_DOT.format(a="qe", b="ce"))
     # a pair found by several tables/probes scores identically — dedup by
     # max (same value) before the top-k window
     scored = (
         cand.select(
             "query_id",
             "neighbor_id",
-            F.round(dot / F.sqrt(F.col("nq") * F.col("nc")), 6).alias("cs"),
+            _cosine(_DOT.format(a="qe", b="ce"), "nq", "nc").alias("cs"),
         )
         .groupBy("query_id", "neighbor_id")
         .agg(F.max("cs").alias("cos_sim"))
     )
-    w = W.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "rank", "neighbor_id", "cos_sim")
-        .orderBy("query_id", "rank")
-    )
+    return _query_top_k(scored, "cos_sim")
 
 
 def _lsh_topk_duck_sql() -> str:
@@ -472,31 +534,42 @@ def _ivf_fit(sf_dir: str) -> tuple[int, int, list[tuple[int, list[float]]], dict
     # unnormalized k-means on this corpus at equal nprobe
     sample = mat / np.sqrt((mat * mat).sum(axis=1))[:, None]
     k = max(1, math.ceil(math.sqrt(n)))
-    # k-means++-style deterministic seeding: farthest-point traversal over
-    # the sample (next seed = argmax of min squared distance to the chosen
-    # set; argmax first-hit breaks ties toward the lowest index).  Spreads
-    # seeds over the data hull instead of following vec_id order — better
-    # list balance than the former evenly-spaced picks at zero extra cost
-    # (O(k·n·d) on a ≤2048-row sample).
+    cents = _lloyd(sample, k, KMEANS_ITERS, True)
+    nprobe, cal = _calibrate_nprobe(sample, cents)
+    return n, nprobe, [(ci, [float(v) for v in cents[ci]]) for ci in range(k)], cal
+
+
+def _lloyd(points: "object", k: int, iters: int, spherical: bool) -> "object":
+    """k centroids of ``points`` after ``iters`` Lloyd rounds; with
+    ``spherical`` each mean is renormalized to the unit sphere.
+
+    Seeding is k-means++-style and deterministic: farthest-point traversal
+    over the points (next seed = argmax of min squared distance to the
+    chosen set; argmax first-hit breaks ties toward the lowest index).  It
+    spreads seeds over the data hull instead of following vec_id order —
+    better list balance than evenly-spaced picks at zero extra cost
+    (O(k·n·d) on a ≤2048-row sample).  Distances are elementwise ops plus
+    an axis sum (pairwise, single-threaded — deterministic across runs),
+    assignment ties go to the lowest centroid (argmin first-hit), and an
+    empty cluster keeps its centroid."""
+    import numpy as np
+
     seed_idx = [0]
-    mind = ((sample - sample[0]) ** 2).sum(axis=1)
+    mind = ((points - points[0]) ** 2).sum(axis=1)
     for _ in range(1, k):
         nxt = int(mind.argmax())
         seed_idx.append(nxt)
-        mind = np.minimum(mind, ((sample - sample[nxt]) ** 2).sum(axis=1))
-    cents = sample[seed_idx].copy()
-    for _ in range(KMEANS_ITERS):
-        # (n_sample, k) squared distances via elementwise ops + axis sum
-        # (pairwise, single-threaded — deterministic across runs)
-        d2 = ((sample[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2)
-        assign = d2.argmin(axis=1)  # ties -> lowest cid (argmin first-hit)
+        mind = np.minimum(mind, ((points - points[nxt]) ** 2).sum(axis=1))
+    cents = points[seed_idx].copy()
+    for _ in range(iters):
+        d2 = ((points[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2)
+        assign = d2.argmin(axis=1)
         for ci in range(k):
-            members = sample[assign == ci]
+            members = points[assign == ci]
             if len(members):
                 c = members.mean(axis=0)
-                cents[ci] = c / np.sqrt((c * c).sum())
-    nprobe, cal = _calibrate_nprobe(sample, cents)
-    return n, nprobe, [(ci, [float(v) for v in cents[ci]]) for ci in range(k)], cal
+                cents[ci] = c / np.sqrt((c * c).sum()) if spherical else c
+    return cents
 
 
 def _calibrate_nprobe(sample: "object", cents: "object") -> tuple[int, dict]:
@@ -600,19 +673,11 @@ def ivf_assign_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     evaluation across the family."""
     def build() -> DataFrame:
         _n, _nprobe, cents, _cal = ivf_fit(sf_dir)
-        return (
-            _emb(spark, sf_dir)
-            .select(
-                "vec_id",
-                "embedding",
-                F.expr(_DOT.format(a="embedding", b="embedding")).alias("norm2"),
-            )
-            .select(
-                "vec_id",
-                "embedding",
-                "norm2",
-                F.array_sort(F.expr(_ivf_dsorted_expr(cents))).alias("dsorted"),
-            )
+        return _normed(_emb(spark, sf_dir), _DOT).select(
+            "vec_id",
+            "embedding",
+            "norm2",
+            F.array_sort(F.expr(_ivf_dsorted_expr(cents))).alias("dsorted"),
         )
 
     return dedup.session_artifact(spark, f"ivf_assign:{sf_dir}", build)
@@ -630,38 +695,17 @@ def sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.element_at("dsorted", 1)["c"].alias("cid"),  # ties → lowest cid
         F.slice("dsorted", 1, nprobe).alias("probes"),
     )
-    c = base.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("ce"),
-        F.col("norm2").alias("nc"),
-        "cid",
-    )
-    q = (
-        base.filter(F.col("vec_id") < N_QUERIES)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("qe"),
-            F.col("norm2").alias("nq"),
-            F.explode("probes").alias("p"),
-        )
-        .select("query_id", "qe", "nq", F.col("p.c").alias("pcid"))
-    )
+    q, c = _sides(base, [F.explode("probes").alias("p")], [F.col("cid")])
+    q = q.select("query_id", "qe", "nq", F.col("p.c").alias("pcid"))
     cand = q.join(c, q["pcid"] == c["cid"]).filter(
         F.col("query_id") != F.col("neighbor_id")
     )
-    dot = F.expr(_DOT.format(a="qe", b="ce"))
     scored = cand.select(
         "query_id",
         "neighbor_id",
-        F.round(dot / F.sqrt(F.col("nq") * F.col("nc")), 6).alias("cos_sim"),
+        _cosine(_DOT.format(a="qe", b="ce"), "nq", "nc").alias("cos_sim"),
     )
-    w = W.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "rank", "neighbor_id", "cos_sim")
-        .orderBy("query_id", "rank")
-    )
+    return _query_top_k(scored, "cos_sim")
 
 
 def _ivf_duck_sql(sf_dir: str) -> str:
@@ -717,14 +761,6 @@ SELECT query_id, rank, neighbor_id, cos_sim FROM (
 """
 
 
-try:
-    SIM_IVF_TOPK_SQL = _ivf_duck_sql(ORACLE_SF_DIR)
-except (FileNotFoundError, OSError):  # pragma: no cover - testdata present here
-    # ONLY a missing fit directory degrades to rows-only driver checks;
-    # any other fit failure is a real bug and must surface at import
-    SIM_IVF_TOPK_SQL = None
-
-
 # --- ANN recall@k vs the brute-force ground truth ------------------------------
 # The quality gate the approximate paths answer to: for each query, how
 # many of the true top-k (sim_cosine_topk) does each ANN path recover?
@@ -741,17 +777,11 @@ def sim_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # DAG.  At corpus scale an evaluation harness would read gt from a
     # written table anyway, so the inline form is also the honest shape.
     gt = sim_cosine_topk(spark, sf_dir).select("query_id", "neighbor_id")
-    qids = gt.select("query_id").distinct()
     parts = []
     for method, fn in (("ivf", sim_ivf_topk), ("lsh", sim_lsh_topk)):
         approx = fn(spark, sf_dir).select("query_id", "neighbor_id")
-        hits = (
-            approx.join(gt, ["query_id", "neighbor_id"])
-            .groupBy("query_id")
-            .agg(F.count(F.lit(1)).alias("n"))
-        )
         parts.append(
-            qids.join(hits, "query_id", "left").select(
+            _recall_hits(approx, gt).select(
                 F.lit(method).alias("method"),
                 "query_id",
                 F.coalesce(F.col("n"), F.lit(0)).cast("int").alias("n_hits"),
@@ -821,12 +851,6 @@ ORACLES = {
     "sim_lsh_buckets": SIM_LSH_BUCKETS_SQL,
     "sim_lsh_topk": SIM_LSH_TOPK_SQL,
 }
-# fit-dependent oracles read ORACLE_SF_DIR's parquet at import; if that
-# directory is absent in some driver environment, these two degrade to
-# rows-only checks instead of failing the whole module import
-if SIM_IVF_TOPK_SQL is not None:
-    ORACLES["sim_ivf_topk"] = SIM_IVF_TOPK_SQL
-    ORACLES["sim_recall"] = _recall_duck_sql(ORACLE_SF_DIR)
 
 
 # --- SQ8 scalar-quantized top-k (the compressed-index scan) -----------------
@@ -886,13 +910,7 @@ def sim_sq8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"round(((CAST(({dot_i}) AS DOUBLE) * sq) * scv) / CAST(16129.0 AS DOUBLE), 6)"
         " AS score_q",
     )
-    w = W.partitionBy("query_id").orderBy(F.desc("score_q"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "rank", "neighbor_id", "score_q")
-        .orderBy("query_id", "rank")
-    )
+    return _query_top_k(scored, "score_q")
 
 
 _DOT_I_DUCK = (
@@ -1143,19 +1161,15 @@ def semantic_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("norm2").alias("nb"),
         "cid",
     )
-    cos = F.round(
-        F.expr(_DOT.format(a="ea", b="eb")) / F.sqrt(F.col("na") * F.col("nb")), 6
-    )
+    cos = _cosine(_DOT.format(a="ea", b="eb"), "na", "nb")
     pairs = (
         a.join(b, "cid")
         .filter(F.col("vec_a") < F.col("vec_b"))
         .select("cid", "vec_a", "vec_b", cos.alias("cos_sim"))
         .filter(F.col("cos_sim") >= SEMDEDUP_THRESH)
     )
-    w = W.partitionBy("vec_b").orderBy("vec_a")
     return (
-        pairs.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") == 1)
+        _top_k(pairs, "vec_b", [F.asc("vec_a")], 1, "rk")
         .select(
             F.col("vec_b").alias("vec_id"),
             F.col("cid").cast("int").alias("cid"),
@@ -1208,14 +1222,7 @@ ORDER BY vec_id
 """
 
 
-try:
-    SEMANTIC_DEDUP_CLUSTERS_SQL = _semdedup_duck_sql(ORACLE_SF_DIR)
-except (FileNotFoundError, OSError):  # pragma: no cover - testdata present here
-    SEMANTIC_DEDUP_CLUSTERS_SQL = None
-
 QUERIES["semantic_dedup_clusters"] = semantic_dedup_clusters
-if SEMANTIC_DEDUP_CLUSTERS_SQL is not None:
-    ORACLES["semantic_dedup_clusters"] = SEMANTIC_DEDUP_CLUSTERS_SQL
 
 
 # --- product quantization: ADC shortlist + exact rerank ----------------------
@@ -1262,20 +1269,7 @@ def _pq_fit(sf_dir: str) -> list[list[tuple[int, list[float]]]]:
     for m in range(PQ_M):
         sub = unit[:, m * PQ_SUB : (m + 1) * PQ_SUB]
         k = min(PQ_K, len(sub))
-        seed_idx = [0]
-        mind = ((sub - sub[0]) ** 2).sum(axis=1)
-        for _ in range(1, k):
-            nxt = int(mind.argmax())
-            seed_idx.append(nxt)
-            mind = np.minimum(mind, ((sub - sub[nxt]) ** 2).sum(axis=1))
-        cents = sub[seed_idx].copy()
-        for _ in range(PQ_ITERS):
-            d2 = ((sub[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2)
-            assign = d2.argmin(axis=1)
-            for ci in range(k):
-                members = sub[assign == ci]
-                if len(members):
-                    cents[ci] = members.mean(axis=0)
+        cents = _lloyd(sub, k, PQ_ITERS, False)
         books.append([(ci, [float(v) for v in cents[ci]]) for ci in range(k)])
     return books
 
@@ -1315,82 +1309,53 @@ def pq_codes_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     ivfpq_topk, so it runs once per session instead of once per query."""
     def build() -> DataFrame:
         books = pq_fit(sf_dir)
-        base = _emb(spark, sf_dir).select(
-            "vec_id",
-            "embedding",
-            F.expr(_DOT.format(a="embedding", b="embedding")).alias("norm2"),
-        )
+        base = _normed(_emb(spark, sf_dir), _DOT)
         return base.selectExpr("vec_id", *_pq_code_exprs(books))
 
     return dedup.session_artifact(spark, f"pq_codes:{sf_dir}", build)
 
 
-def pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _emb(spark, sf_dir)
-    books = pq_fit(sf_dir)
-    base = emb.select(
-        "vec_id",
-        "embedding",
-        F.expr(_DOT.format(a="embedding", b="embedding")).alias("norm2"),
-    )
-    codes = pq_codes_cached(spark, sf_dir)
-    # per-query ADC lookup tables: 8 arrays of 16 partial dots, ordered by
-    # code (transform preserves codebook order), element_at(lut, c+1) is
-    # the table lookup
-    lut_exprs = []
-    for m, book in enumerate(books):
-        off = m * PQ_SUB
-        lut_exprs.append(
-            f"transform({_pq_cent_array(book)}, s -> aggregate("
-            f"zip_with(slice(embedding, {off + 1}, {PQ_SUB}), s.v, "
-            "(x, y) -> CAST(x AS DOUBLE) / sqrt(norm2) * y), "
-            "CAST(0.0 AS DOUBLE), (acc, v) -> acc + v))"
-            f" AS lut{m}"
-        )
-    qrows = (
-        base.filter(F.col("vec_id") < N_QUERIES)
-        .selectExpr("vec_id AS query_id", *lut_exprs)
-        .localCheckpoint(eager=True)
-    )
+def _adc_exprs(books) -> tuple[list[str], str]:
+    """The per-query ADC lookup tables lut0..lut7 (selectExpr items over
+    embedding + norm2) and the ADC score over them (adc_score, needs
+    lut0..lut7 and codes c0..c7 in scope).  Each table holds the 16
+    partial dots of one subspace in code order (transform preserves
+    codebook order), so element_at(lut, c+1) is the table lookup."""
+    luts = [
+        f"transform({_pq_cent_array(book)}, s -> aggregate("
+        f"zip_with(slice(embedding, {m * PQ_SUB + 1}, {PQ_SUB}), s.v, "
+        "(x, y) -> CAST(x AS DOUBLE) / sqrt(norm2) * y), "
+        "CAST(0.0 AS DOUBLE), (acc, v) -> acc + v))"
+        f" AS lut{m}"
+        for m, book in enumerate(books)
+    ]
     adc_sum = " + ".join(
         f"element_at(lut{m}, CAST(c{m} AS INT) + 1)" for m in range(PQ_M)
+    )
+    return luts, f"round({adc_sum}, 6) AS adc_score"
+
+
+def pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    books = pq_fit(sf_dir)
+    base = _normed(_emb(spark, sf_dir), _DOT)
+    codes = pq_codes_cached(spark, sf_dir)
+    luts, adc_score = _adc_exprs(books)
+    qrows = (
+        base.filter(F.col("vec_id") < N_QUERIES)
+        .selectExpr("vec_id AS query_id", *luts)
+        .localCheckpoint(eager=True)
     )
     adc = (
         F.broadcast(qrows)
         .crossJoin(codes)
         .filter(F.col("query_id") != F.col("vec_id"))
-        .selectExpr(
-            "query_id",
-            "vec_id AS neighbor_id",
-            f"round({adc_sum}, 6) AS adc_score",
-        )
+        .selectExpr("query_id", "vec_id AS neighbor_id", adc_score)
     )
-    ws = W.partitionBy("query_id").orderBy(F.desc("adc_score"), F.asc("neighbor_id"))
-    shortlist = (
-        adc.withColumn("srk", F.row_number().over(ws))
-        .filter(F.col("srk") <= PQ_SHORTLIST)
-        .select("query_id", "neighbor_id")
+    order = [F.desc("adc_score"), F.asc("neighbor_id")]
+    shortlist = _top_k(adc, "query_id", order, PQ_SHORTLIST, "srk").select(
+        "query_id", "neighbor_id"
     )
-    # exact rerank: fetch full vectors for shortlist rows only
-    qv = base.selectExpr("vec_id AS query_id", "embedding AS qe", "norm2 AS nq")
-    cv = base.selectExpr("vec_id AS neighbor_id", "embedding AS ce", "norm2 AS nc")
-    dot = F.expr(_DOT.format(a="qe", b="ce"))
-    scored = (
-        shortlist.join(F.broadcast(qv), "query_id")
-        .join(cv, "neighbor_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(dot / F.sqrt(F.col("nq") * F.col("nc")), 6).alias("cos_sim"),
-        )
-    )
-    wr = W.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(wr).cast("bigint"))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "rank", "neighbor_id", "cos_sim")
-        .orderBy("query_id", "rank")
-    )
+    return _rerank(shortlist, base)
 
 
 def _pq_duck_sql(sf_dir: str) -> str:
@@ -1476,14 +1441,7 @@ SELECT query_id, rank, neighbor_id, cos_sim FROM (
 """
 
 
-try:
-    PQ_TOPK_SQL = _pq_duck_sql(ORACLE_SF_DIR)
-except (FileNotFoundError, OSError):  # pragma: no cover - testdata present here
-    PQ_TOPK_SQL = None
-
 QUERIES["pq_topk"] = pq_topk
-if PQ_TOPK_SQL is not None:
-    ORACLES["pq_topk"] = PQ_TOPK_SQL
 
 
 # --- IVF-PQ: the composed billion-scale index ---------------------------------
@@ -1518,22 +1476,13 @@ def ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     index = base.select(
         "vec_id", F.element_at("dsorted", 1)["c"].alias("cid")
     ).join(pq_codes_cached(spark, sf_dir), "vec_id")
-    lut_exprs = []
-    for m, book in enumerate(books):
-        off = m * PQ_SUB
-        lut_exprs.append(
-            f"transform({_pq_cent_array(book)}, s -> aggregate("
-            f"zip_with(slice(embedding, {off + 1}, {PQ_SUB}), s.v, "
-            "(x, y) -> CAST(x AS DOUBLE) / sqrt(norm2) * y), "
-            "CAST(0.0 AS DOUBLE), (acc, v) -> acc + v))"
-            f" AS lut{m}"
-        )
+    luts, adc_score = _adc_exprs(books)
     qrows = (
         base.filter(F.col("vec_id") < N_QUERIES)
         .selectExpr(
             "vec_id AS query_id",
             f"slice(dsorted, 1, {nprobe}) AS probes",
-            *lut_exprs,
+            *luts,
         )
         .localCheckpoint(eager=True)
     )
@@ -1544,44 +1493,17 @@ def ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         "query_id", *[f"lut{m}" for m in range(PQ_M)], F.col("p.c").alias("pcid")
     )
-    adc_sum = " + ".join(
-        f"element_at(lut{m}, CAST(c{m} AS INT) + 1)" for m in range(PQ_M)
-    )
     cand = (
         F.broadcast(q)
         .join(index, q["pcid"] == index["cid"])
         .filter(F.col("query_id") != F.col("vec_id"))
-        .selectExpr(
-            "query_id",
-            "vec_id AS neighbor_id",
-            f"round({adc_sum}, 6) AS adc_score",
-        )
+        .selectExpr("query_id", "vec_id AS neighbor_id", adc_score)
     )
-    ws = W.partitionBy("query_id").orderBy(F.desc("adc_score"), F.asc("neighbor_id"))
-    shortlist = (
-        cand.withColumn("srk", F.row_number().over(ws))
-        .filter(F.col("srk") <= IVFPQ_SHORTLIST)
-        .select("query_id", "neighbor_id")
+    order = [F.desc("adc_score"), F.asc("neighbor_id")]
+    shortlist = _top_k(cand, "query_id", order, IVFPQ_SHORTLIST, "srk").select(
+        "query_id", "neighbor_id"
     )
-    qv = base.selectExpr("vec_id AS query_id", "embedding AS qe", "norm2 AS nq")
-    cv = base.selectExpr("vec_id AS neighbor_id", "embedding AS ce", "norm2 AS nc")
-    dot = F.expr(_DOT.format(a="qe", b="ce"))
-    scored = (
-        shortlist.join(F.broadcast(qv), "query_id")
-        .join(cv, "neighbor_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(dot / F.sqrt(F.col("nq") * F.col("nc")), 6).alias("cos_sim"),
-        )
-    )
-    wr = W.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(wr).cast("bigint"))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "rank", "neighbor_id", "cos_sim")
-        .orderBy("query_id", "rank")
-    )
+    return _rerank(shortlist, base)
 
 
 def _ivfpq_duck_sql(sf_dir: str) -> str:
@@ -1692,14 +1614,7 @@ SELECT query_id, rank, neighbor_id, cos_sim FROM (
 """
 
 
-try:
-    IVFPQ_TOPK_SQL = _ivfpq_duck_sql(ORACLE_SF_DIR)
-except (FileNotFoundError, OSError):  # pragma: no cover - testdata present here
-    IVFPQ_TOPK_SQL = None
-
 QUERIES["ivfpq_topk"] = ivfpq_topk
-if IVFPQ_TOPK_SQL is not None:
-    ORACLES["ivfpq_topk"] = IVFPQ_TOPK_SQL
 
 
 # --- ndcg_eval_topk: the canonical graded ranking metric --------------------
@@ -1726,33 +1641,23 @@ _NDCG_DISC = [int(1_000_000 / _math.log2(r + 1)) for r in range(1, TOP_K + 1)]
 
 def ndcg_eval_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _emb(spark, sf_dir)
-    q = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("label").alias("qlabel"),
-        F.col("embedding").alias("qe"),
-        F.expr(_DOT.format(a="embedding", b="embedding")).alias("nq"),
-    )
-    c = emb.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("label").alias("clabel"),
-        F.col("embedding").alias("ce"),
-        F.expr(_DOT.format(a="embedding", b="embedding")).alias("nc"),
+    q, c = _sides(
+        _normed(emb, _DOT, "label"),
+        [F.col("label").alias("qlabel")],
+        [F.col("label").alias("clabel")],
     )
     joined = (
         F.broadcast(q).crossJoin(c).filter(F.col("query_id") != F.col("neighbor_id"))
     )
-    dot = F.expr(_DOT.format(a="qe", b="ce"))
     scored = joined.select(
         "query_id",
         "qlabel",
         "neighbor_id",
         F.expr("CASE WHEN qlabel = clabel THEN 1 ELSE 0 END").alias("rel"),
-        F.round(dot / F.sqrt(F.col("nq") * F.col("nc")), 6).alias("cs"),
+        _cosine(_DOT.format(a="qe", b="ce"), "nq", "nc").alias("cs"),
     )
-    w = W.partitionBy("query_id").orderBy(F.desc("cs"), F.asc("neighbor_id"))
-    top = scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= TOP_K
-    )
+    order = [F.desc("cs"), F.asc("neighbor_id")]
+    top = _top_k(scored, "query_id", order, TOP_K, "rank")
     disc = "CASE rank " + " ".join(
         f"WHEN {r + 1} THEN {d}" for r, d in enumerate(_NDCG_DISC)
     ) + " END"
@@ -1870,7 +1775,6 @@ TRUNC_DIMS = (8, 16, 32)
 
 def ann_dim_truncation_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     gt = sim_cosine_topk(spark, sf_dir).select("query_id", "neighbor_id")
-    qids = gt.select("query_id").distinct()
     emb = _emb(spark, sf_dir)
     parts = []
     for d in TRUNC_DIMS:
@@ -1879,16 +1783,7 @@ def ann_dim_truncation_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             "(x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
             "CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)" % (d, d)
         )
-        q = emb.filter(F.col("vec_id") < N_QUERIES).select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("qe"),
-            F.expr(dot.format(a="embedding", b="embedding")).alias("nq"),
-        )
-        c = emb.select(
-            F.col("vec_id").alias("neighbor_id"),
-            F.col("embedding").alias("ce"),
-            F.expr(dot.format(a="embedding", b="embedding")).alias("nc"),
-        )
+        q, c = _sides(_normed(emb, dot), [], [])
         scored = (
             F.broadcast(q)
             .crossJoin(c)
@@ -1896,26 +1791,15 @@ def ann_dim_truncation_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select(
                 "query_id",
                 "neighbor_id",
-                F.round(
-                    F.expr(dot.format(a="qe", b="ce"))
-                    / F.sqrt(F.col("nq") * F.col("nc")),
-                    6,
-                ).alias("cs"),
+                _cosine(dot.format(a="qe", b="ce"), "nq", "nc").alias("cs"),
             )
         )
-        w = W.partitionBy("query_id").orderBy(F.desc("cs"), F.asc("neighbor_id"))
-        approx = (
-            scored.withColumn("rk", F.row_number().over(w))
-            .filter(F.col("rk") <= TOP_K)
-            .select("query_id", "neighbor_id")
-        )
-        hits = (
-            approx.join(gt, ["query_id", "neighbor_id"])
-            .groupBy("query_id")
-            .agg(F.count(F.lit(1)).alias("n"))
+        order = [F.desc("cs"), F.asc("neighbor_id")]
+        approx = _top_k(scored, "query_id", order, TOP_K, "rk").select(
+            "query_id", "neighbor_id"
         )
         parts.append(
-            qids.join(hits, "query_id", "left")
+            _recall_hits(approx, gt)
             .agg(
                 F.count(F.lit(1)).cast("long").alias("n_queries"),
                 F.sum(F.coalesce(F.col("n"), F.lit(0))).cast("long").alias("n_hits"),
@@ -2033,41 +1917,9 @@ def sim_binary_hash_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             " AS hamming",
         )
     )
-    wc = W.partitionBy("query_id").orderBy(F.asc("hamming"), F.asc("neighbor_id"))
-    cand = scored.withColumn("crk", F.row_number().over(wc)).filter(
-        F.col("crk") <= BIN_CAND
-    )
-    qe = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qe"),
-        F.expr(_DOT.format(a="embedding", b="embedding")).alias("nq"),
-    )
-    ce = emb.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("ce"),
-        F.expr(_DOT.format(a="embedding", b="embedding")).alias("nc"),
-    )
-    rer = (
-        cand.join(F.broadcast(qe), "query_id")
-        .join(ce, "neighbor_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            "hamming",
-            F.round(
-                F.expr(_DOT.format(a="qe", b="ce"))
-                / F.sqrt(F.col("nq") * F.col("nc")),
-                6,
-            ).alias("cos_sim"),
-        )
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (
-        rer.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "rank", "neighbor_id", "hamming", "cos_sim")
-        .orderBy("query_id", "rank")
-    )
+    order = [F.asc("hamming"), F.asc("neighbor_id")]
+    cand = _top_k(scored, "query_id", order, BIN_CAND, "crk")
+    return _rerank(cand, _normed(emb, _DOT), "hamming")
 
 
 SIM_BINARY_HASH_TOPK_SQL = f"""
@@ -2161,8 +2013,7 @@ def mutual_nn_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = dots.selectExpr("va AS src", "vb AS prt", "dot").unionAll(
         dots.selectExpr("vb AS src", "va AS prt", "dot")
     )
-    wr = W.partitionBy("src").orderBy(F.desc("dot"), F.asc("prt"))
-    best = edges.withColumn("rk", F.row_number().over(wr)).filter(F.col("rk") == 1)
+    best = _top_k(edges, "src", [F.desc("dot"), F.asc("prt")], 1, "rk")
     fwd = best.selectExpr("src AS a", "prt AS b", "dot")
     rev = best.selectExpr("prt AS a", "src AS b")
     mutual = fwd.join(rev, ["a", "b"]).filter(F.col("a") < F.col("b"))
@@ -2228,25 +2079,21 @@ ORACLES["mutual_nn_pairs"] = MUTUAL_NN_PAIRS_SQL
 # coarse quantizer stand-in), then exact cosine >= 0.35 confirms near-dups
 # (threshold sized to the synthetic embeddings: same-label q99 ~ 0.30).
 def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "label", "embedding", F.expr(_DOT.format(a="embedding", b="embedding")).alias("nrm")
-    )
+    emb = _normed(load_table(spark, sf_dir, "embeddings"), _DOT, "label")
     a = emb.select(
         F.col("vec_id").alias("vec_a"),
         F.col("label"),
         F.col("embedding").alias("ea"),
-        F.col("nrm").alias("na"),
+        F.col("norm2").alias("na"),
     )
     b = emb.select(
         F.col("vec_id").alias("vec_b"),
         F.col("label"),
         F.col("embedding").alias("eb"),
-        F.col("nrm").alias("nb"),
+        F.col("norm2").alias("nb"),
     )
     pairs = a.join(b, "label").filter(F.col("vec_a") < F.col("vec_b"))
-    cos = F.round(
-        F.expr(_DOT.format(a="ea", b="eb")) / F.sqrt(F.col("na") * F.col("nb")), 6
-    )
+    cos = _cosine(_DOT.format(a="ea", b="eb"), "na", "nb")
     return (
         pairs.select("label", "vec_a", "vec_b", cos.alias("cos_sim"))
         .filter(F.col("cos_sim") >= 0.35)
@@ -2292,18 +2139,10 @@ KNN_K = 3
 
 
 def knn_graph_block(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        "label",
-        "embedding",
-        F.expr(_DOT.format(a="embedding", b="embedding")).alias("nrm"),
-    )
-    a = emb.selectExpr("vec_id AS va", "label", "embedding AS ea", "nrm AS na")
-    b = emb.selectExpr("vec_id AS vb", "label", "embedding AS eb", "nrm AS nb")
-    cos = F.round(
-        F.expr(_DOT.format(a="ea", b="eb")) / F.sqrt(F.col("na") * F.col("nb")),
-        6,
-    )
+    emb = _normed(load_table(spark, sf_dir, "embeddings"), _DOT, "label")
+    a = emb.selectExpr("vec_id AS va", "label", "embedding AS ea", "norm2 AS na")
+    b = emb.selectExpr("vec_id AS vb", "label", "embedding AS eb", "norm2 AS nb")
+    cos = _cosine(_DOT.format(a="ea", b="eb"), "na", "nb")
     # cosine is symmetric bit-for-bit (elementwise products commute and
     # the fold order is unchanged), so evaluate the interpreted
     # higher-order dot once per UNORDERED pair (va < vb), materialize,
@@ -2317,13 +2156,11 @@ def knn_graph_block(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint(eager=True)
     )
     pairs = half.unionAll(half.selectExpr("vb AS va", "va AS vb", "cos_sim"))
-    rk = F.row_number().over(
-        W.partitionBy("va").orderBy(F.desc("cos_sim"), F.asc("vb"))
-    )
     return (
-        pairs.withColumn("rk", rk.cast("long"))
-        .filter(F.col("rk") <= KNN_K)
-        .selectExpr("va AS vec_id", "rk", "vb AS neighbor", "cos_sim")
+        _top_k(pairs, "va", [F.desc("cos_sim"), F.asc("vb")], KNN_K, "rk")
+        .selectExpr(
+            "va AS vec_id", "CAST(rk AS BIGINT) AS rk", "vb AS neighbor", "cos_sim"
+        )
         .orderBy("vec_id", "rk")
     )
 
@@ -2352,3 +2189,12 @@ ORDER BY vec_id, rk
 
 QUERIES["knn_graph_block"] = knn_graph_block
 ORACLES["knn_graph_block"] = KNN_GRAPH_BLOCK_SQL
+
+
+# fit-dependent oracles embed literals fit on ORACLE_SF_DIR's parquet at
+# import: ONLY a missing fit directory degrades to rows-only driver checks;
+# any other fit failure is a real bug and must surface at import
+try:
+    ORACLES.update(oracle_overrides(ORACLE_SF_DIR))
+except (FileNotFoundError, OSError):  # pragma: no cover - testdata present here
+    pass

@@ -1005,6 +1005,48 @@ def test_round_loops_run_through_the_driver():
     assert not loops, f"run round loops through dedup.rounds: {loops}"
 
 
+def test_retrieval_ranks_through_one_tail():
+    """The vector-search family ranks and scores through one copy of each
+    step: in queries/similarity.py a row_number window appears only in
+    _top_k, the one place a top-k cutoff changes, and the cosine division
+    round(dot / sqrt(na * nb), 6) only in _cosine.  The DuckDB oracles are
+    SQL text and spell out their own."""
+    import ast
+    import pathlib
+
+    path = (
+        pathlib.Path(__file__).resolve().parents[1]
+        / "pdf_craft_spark" / "queries" / "similarity.py"
+    )
+
+    def is_rank(node):
+        return isinstance(node, ast.Attribute) and node.attr == "row_number"
+
+    def is_cosine(node):
+        # <dot> / F.sqrt(...): numpy's np.sqrt in the fits is not a cosine
+        return (
+            isinstance(node, ast.BinOp)
+            and isinstance(node.op, ast.Div)
+            and isinstance(node.right, ast.Call)
+            and isinstance(node.right.func, ast.Attribute)
+            and node.right.func.attr == "sqrt"
+            and isinstance(node.right.func.value, ast.Name)
+            and node.right.func.value.id == "F"
+        )
+
+    strays = [
+        f"{what}:{node.lineno}"
+        for top in ast.parse(path.read_text()).body
+        for node in ast.walk(top)
+        for what, owner, hit in (
+            ("row_number", "_top_k", is_rank),
+            ("cosine", "_cosine", is_cosine),
+        )
+        if hit(node) and getattr(top, "name", None) != owner
+    ]
+    assert not strays, f"rank in similarity._top_k, score in similarity._cosine: {strays}"
+
+
 def test_env_knobs_are_allowlisted():
     """The package reads exactly these env vars; every other decision is a
     module constant, so no unset knob multiplies the configurations the
