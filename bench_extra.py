@@ -4,15 +4,17 @@
 NOT the driver bench (bench.py is frozen for measurement) — this file
 exists so optimization work can (a) time individual queries in isolation
 with the noop sink (§1.4: computes every column, no sink cost, no
-count() column pruning), (b) capture `.explain("formatted")` plans into
-plans/r06/<query>_<tag>.txt for before/after evidence, and (c) sweep an
-arbitrary subset of queries in bench order under the same session conf
-and inter-query unpersist discipline bench.py uses, so numbers here are
-comparable to the frozen ledger.
+count() column pruning), (b) write each query's executedPlan, with the
+expression ids (`#12`), exchange ids (`plan_id=34`) and lambda variable
+ids (`lambda x_5`) stripped, to <dir>/<query>.txt, so two checkouts'
+plans compare with `diff -r` whatever ran before in the session, and
+(c) sweep an arbitrary subset of queries in bench order under the same
+session conf and inter-query unpersist discipline bench.py uses, so
+numbers here are comparable to the frozen ledger.
 
 Usage:
   python bench_extra.py --queries dedup_lsh_quality setsim_prefix_join \
-      --tag before --plans           # time + dump plans
+      --plans /tmp/plans_before      # time + dump plans
   python bench_extra.py --queries ... --reps 3   # timing only
 """
 
@@ -21,6 +23,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import re
 import sys
 import time
 
@@ -31,8 +34,7 @@ CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--queries", nargs="+", required=True)
-    ap.add_argument("--tag", default=None, help="plan file suffix (before/after)")
-    ap.add_argument("--plans", action="store_true", help="dump formatted plans")
+    ap.add_argument("--plans", metavar="DIR", help="write id-stripped executedPlans here")
     ap.add_argument("--reps", type=int, default=1)
     ap.add_argument("--sink", choices=["noop", "count"], default="noop")
     ap.add_argument("--cpus", type=int, default=CPUS)
@@ -53,8 +55,8 @@ def main() -> None:
             "spark.ui.showConsoleProgress": "false",
         },
     )
-    plans_dir = os.path.join(os.path.dirname(os.path.abspath(__file__)), "plans", "r06")
-    os.makedirs(plans_dir, exist_ok=True)
+    if args.plans:
+        os.makedirs(args.plans, exist_ok=True)
 
     jsc = spark.sparkContext._jsc
     keep = {int(k) for k in jsc.getPersistentRDDs().keySet()}
@@ -71,14 +73,11 @@ def main() -> None:
                 df.count()
             secs.append(round(time.time() - t0, 3))
             spark.sparkContext.setJobDescription(None)
-        if args.plans and args.tag:
+        if args.plans:
             df = QUERIES[name](spark, SF_DIR)
-            mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                "formatted"
-            )
-            txt = df._jdf.queryExecution().explainString(mode)
-            with open(os.path.join(plans_dir, f"{name}_{args.tag}.txt"), "w") as f:
-                f.write(txt)
+            txt = df._jdf.queryExecution().executedPlan().toString()
+            with open(os.path.join(args.plans, f"{name}.txt"), "w") as f:
+                f.write(re.sub(r"#\d+|plan_id=\d+|(?<=lambda \w)_\d+", "", txt))
         out[name] = secs
         print(f"# {name}: {secs}", file=sys.stderr)
         # bench.py's inter-query unpersist discipline

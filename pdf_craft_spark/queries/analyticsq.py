@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from pdf_craft_spark.queries.dedup import md5_prefix_long_sql as _md5pl
+from pdf_craft_spark.queries.dedup import md5_prefix_long_sql as _md5pl, top_k
 from pdf_craft_spark.sources import load_table as _t
 
 
@@ -1811,10 +1811,8 @@ def stratified_fixed_quota(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _t(spark, sf_dir, "documents").selectExpr(
         "doc_id", "lang", f"({pr}) AS priority"
     )
-    w = W.partitionBy("lang").orderBy("priority", "doc_id")
     return (
-        d.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= STRAT_QUOTA)
+        top_k(d, ["lang"], [F.asc("priority"), F.asc("doc_id")], STRAT_QUOTA, "rk")
         .selectExpr(
             "lang",
             "doc_id",

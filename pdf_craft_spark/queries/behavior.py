@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from pdf_craft_spark.queries.dedup import md5_prefix_long_sql
+from pdf_craft_spark.queries.dedup import md5_prefix_long_sql, top_k
 from pdf_craft_spark.queries.graphq import basket_cached, copurchase_sup_cached
 from pdf_craft_spark.sources import load_table
 
@@ -381,13 +381,10 @@ def event_path_trigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(F.count("*").alias("n"))
     )
-    rk = F.row_number().over(
-        W.orderBy(F.desc("n"), F.asc("e1"), F.asc("e2"), F.asc("e3"))
-    )
+    order = [F.desc("n"), F.asc("e1"), F.asc("e2"), F.asc("e3")]
     return (
-        tri.withColumn("rk", rk.cast("long"))
-        .filter(F.col("rk") <= PATH_TOPK)
-        .selectExpr("rk", "e1", "e2", "e3", "CAST(n AS BIGINT) AS n")
+        top_k(tri, [], order, PATH_TOPK, "rk")
+        .selectExpr("CAST(rk AS BIGINT) AS rk", "e1", "e2", "e3", "CAST(n AS BIGINT) AS n")
         .orderBy("rk")
     )
 
@@ -507,12 +504,8 @@ def recsys_item_cooccurrence_topk(spark: SparkSession, sf_dir: str) -> DataFrame
             ).alias("score"),
         )
     )
-    w = W.partitionBy("item").orderBy(F.desc("score"), F.asc("rec"))
     return (
-        scored.select(
-            "item", "rec", "support", "score", F.row_number().over(w).alias("rk")
-        )
-        .filter(F.col("rk") <= RECSYS_TOPK)
+        top_k(scored, ["item"], [F.desc("score"), F.asc("rec")], RECSYS_TOPK, "rk")
         .select(
             F.col("item").cast("long").alias("item"),
             F.col("rec").cast("long").alias("rec"),

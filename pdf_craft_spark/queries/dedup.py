@@ -27,13 +27,18 @@ each bucket.
 Corpus-level dedup measures live here too: the saturation curve (how fast
 new unique content dries up as the corpus grows) and asymmetric
 containment over the LSH candidates.
+
+So do the query package's shared mechanics: the artifact registry
+(``registered``, ``session_artifact``), the round driver (``rounds``,
+``core_width``) and the one rank-and-cut, ``top_k``, through which every
+family's constant-k ``row_number`` window goes.
 """
 
 from __future__ import annotations
 
 from contextlib import contextmanager
 
-from pyspark.sql import DataFrame, SparkSession, Window as W
+from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from pdf_craft_spark.sources import fingerprint, load_table
@@ -206,18 +211,10 @@ def dedup_token_jaccard_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-    # top-20 via orderBy().limit() → TakeOrderedAndProject: each task keeps
-    # its local top-20 and only those reach the driver — no global
-    # single-task sort of all candidate pairs (the previous unpartitioned
-    # row_number window funneled every pair through one task).  The rank
-    # window then runs over just the 20 surviving rows.
-    top = jac.select("doc_a", "doc_b", "n_inter", "jaccard").orderBy(
-        F.desc("jaccard"), F.asc("doc_a"), F.asc("doc_b")
-    ).limit(20)
-    w = W.orderBy(F.desc("jaccard"), F.asc("doc_a"), F.asc("doc_b"))
+    order = [F.desc("jaccard"), F.asc("doc_a"), F.asc("doc_b")]
     return (
-        top.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .select("rank", "doc_a", "doc_b", "n_inter", "jaccard")
+        top_k(jac, [], order, 20, "rank")
+        .selectExpr("CAST(rank AS BIGINT) AS rank", "doc_a", "doc_b", "n_inter", "jaccard")
         .orderBy("rank")
     )
 
@@ -619,6 +616,19 @@ def rounds(spark, what: str, state: DataFrame, step, max_rounds: int, changed=No
     if changed is not None:
         raise RuntimeError(f"{what}: not converged in {max_rounds} rounds ({n} still changing)")
     return state
+
+
+def top_k(df: DataFrame, keys: list[str], order: list[Column], k: int, rank: str) -> DataFrame:
+    """The one rank-and-cut: the first ``k`` rows of each ``keys`` group
+    (one global ranking when ``keys`` is empty) in ``order``, numbered
+    from 1 in the int column ``rank``; callers cast the rank their schema
+    needs.  The planner infers the eager cut from ``row_number() <= k``:
+    a keyed rank is cut per partition (a partial WindowGroupLimit) before
+    its shuffle, and a global one plans as TakeOrderedAndProject, where
+    each task keeps its local top k and only those reach the final task,
+    so callers never write an ``orderBy(...).limit(k)`` in front of it."""
+    w = W.partitionBy(*keys).orderBy(*order)
+    return df.withColumn(rank, F.row_number().over(w)).filter(F.col(rank) <= k)
 
 
 def release_unprotected(spark: SparkSession, keep: set[int]) -> None:
@@ -1664,10 +1674,9 @@ def dedup_containment_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_a",
         "CAST((1000000 * n_inter) DIV n_a AS BIGINT) AS containment_micro",
     )
-    wk = W.orderBy(F.col("containment_micro").desc(), F.col("a"), F.col("b"))
+    order = [F.col("containment_micro").desc(), F.col("a"), F.col("b")]
     return (
-        scored.withColumn("rk", F.row_number().over(wk))
-        .where(F.col("rk") <= CONTAIN_TOPK)
+        top_k(scored, [], order, CONTAIN_TOPK, "rk")
         .selectExpr("CAST(rk AS INT) AS rk", "a", "b", "n_inter", "n_a", "containment_micro")
         .orderBy("rk")
     )

@@ -327,10 +327,8 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("v", "lab")
             .agg(F.count(F.lit(1)).alias("c"))
         )
-        rk = F.row_number().over(
-            W.partitionBy("v").orderBy(F.desc("c"), F.asc("lab"))
-        )
-        return freq.withColumn("rk", rk).filter(F.col("rk") == 1).select("v", "lab")
+        best = dedup.top_k(freq, ["v"], [F.desc("c"), F.asc("lab")], 1, "rk")
+        return best.select("v", "lab")
 
     l0 = edges.select("v").distinct().selectExpr("v", "v AS lab")
     labels = dedup.rounds(spark, "graph_label_propagation", l0, step, LPA_ITERS)
@@ -1330,10 +1328,9 @@ def graph_edge_support(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("eu", "ev")
         .agg(F.count(F.lit(1)).cast("long").alias("support"))
     )
-    wk = W.orderBy(F.col("support").desc(), F.col("eu"), F.col("ev"))
+    order = [F.col("support").desc(), F.col("eu"), F.col("ev")]
     return (
-        support.withColumn("rk", F.row_number().over(wk))
-        .where(F.col("rk") <= TRUSS_TOPK)
+        dedup.top_k(support, [], order, TRUSS_TOPK, "rk")
         .selectExpr(
             "CAST(rk AS INT) AS rk",
             "eu AS part_a",

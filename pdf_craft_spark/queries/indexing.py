@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from pdf_craft_spark.queries.dedup import top_k
 from pdf_craft_spark.queries.textops import IDF_SCALE
 from pdf_craft_spark.sources import load_table as _t
 
@@ -946,11 +947,9 @@ def phrase_query_positional(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("doc_id")
         .agg(F.count(F.lit(1)).cast("long").alias("n_hits"))
     )
-    wk = W.orderBy(F.col("n_hits").desc(), F.col("doc_id"))
-    return (
-        hits.withColumn("rk", F.row_number().over(wk))
-        .where(F.col("rk") <= PHRASE_TOPK)
-        .select("doc_id", "n_hits", F.col("rk").cast("int").alias("rk"))
+    order = [F.col("n_hits").desc(), F.col("doc_id")]
+    return top_k(hits, [], order, PHRASE_TOPK, "rk").select(
+        "doc_id", "n_hits", F.col("rk").cast("int").alias("rk")
     )
 
 

@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from pdf_craft_spark.queries.dedup import md5_prefix_long_sql
+from pdf_craft_spark.queries.dedup import md5_prefix_long_sql, top_k
 from pdf_craft_spark.sources import load_table as _t
 
 QUERIES: dict = {}
@@ -835,10 +835,7 @@ def survival_km_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = _t(spark, sf_dir, "orders").select(
         "o_custkey", "o_orderkey", F.col("o_orderdate").cast("date").alias("d")
     )
-    w = "PARTITION BY o_custkey ORDER BY d, o_orderkey"
-    ranked = o.selectExpr(
-        "o_custkey", "d", f"row_number() OVER ({w}) AS rk"
-    ).filter("rk <= 2")
+    ranked = top_k(o, ["o_custkey"], [F.asc("d"), F.asc("o_orderkey")], 2, "rk")
     horizon = ranked.agg(F.expr("max(d) AS hz"))
     gaps = (
         ranked.groupBy("o_custkey")
@@ -1146,13 +1143,9 @@ def bandit_replay_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-    wp = W.partitionBy("ctx").orderBy(
-        F.desc("train_mean_cents"), F.asc("action")
-    )
-    policy = (
-        grid.withColumn("rk", F.row_number().over(wp))
-        .where(F.col("rk") == 1)
-        .select("ctx", F.col("action").alias("chosen"), "train_mean_cents")
+    order = [F.desc("train_mean_cents"), F.asc("action")]
+    policy = top_k(grid, ["ctx"], order, 1, "rk").select(
+        "ctx", F.col("action").alias("chosen"), "train_mean_cents"
     )
     ev_eval = evc.where(F.col("day") >= F.col("cutoff"))
     scored = ev_eval.join(F.broadcast(policy), "ctx").groupBy(

@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from pdf_craft_spark.queries.dedup import md5_prefix_long_sql as _md5pl
+from pdf_craft_spark.queries.dedup import md5_prefix_long_sql as _md5pl, top_k
 from pdf_craft_spark.sources import load_table as _t
 
 
@@ -305,11 +305,10 @@ GROUP BY user_id ORDER BY user_id
 # sort, keep leading slice).
 def o2_topk_parts_per_brand(spark: SparkSession, sf_dir: str) -> DataFrame:
     part = _t(spark, sf_dir, "part")
-    w = W.partitionBy("p_brand").orderBy(F.desc("p_retailprice"), F.asc("p_partkey"))
+    order = [F.desc("p_retailprice"), F.asc("p_partkey")]
     return (
-        part.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= 3)
-        .select("p_brand", "rank", "p_partkey", "p_retailprice")
+        top_k(part, ["p_brand"], order, 3, "rank")
+        .selectExpr("p_brand", "CAST(rank AS BIGINT) AS rank", "p_partkey", "p_retailprice")
         .orderBy("p_brand", "rank")
     )
 
@@ -1206,10 +1205,7 @@ def survival_reorder_times(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = _t(spark, sf_dir, "orders").select(
         "o_custkey", "o_orderkey", F.col("o_orderdate").cast("date").alias("d")
     )
-    w = W.partitionBy("o_custkey").orderBy("d", "o_orderkey")
-    ranked = o.select(
-        "o_custkey", "d", F.row_number().over(w).alias("rk")
-    ).filter(F.col("rk") <= 2)
+    ranked = top_k(o, ["o_custkey"], [F.asc("d"), F.asc("o_orderkey")], 2, "rk")
     first = ranked.filter("rk = 1").selectExpr("o_custkey", "d AS d1")
     second = ranked.filter("rk = 2").selectExpr("o_custkey", "d AS d2")
     gaps = first.join(second, "o_custkey", "left").select(

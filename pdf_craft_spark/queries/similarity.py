@@ -25,20 +25,21 @@ pairs, the blocked k-NN graph, and embedding near-dup verification.
 The retrieval spine: the Spark side of every query here is assembled from
 one copy of each retrieval step — ``_normed`` (the per-row norm2
 projection), ``_sides`` (the query and corpus sides), ``_cosine`` (the
-rounded cosine), ``_top_k`` (the per-key rank-and-cut, the one place a
-top-k cutoff changes), ``_query_top_k`` (the final TOP_K answer shape),
-``_rerank`` (exact cosine over a candidate shortlist), ``_adc_exprs``
-(PQ lookup tables and the ADC score), ``_recall_hits`` (hits against a
-ground truth) and ``_lloyd`` (the seeded Lloyd fit behind both IVF and
-PQ).  The DuckDB oracles (``*_SQL``, ``_*_duck_sql``) are the reference
-implementations and spell every step out on their own.
+rounded cosine), ``dedup.top_k`` (the query package's one rank-and-cut,
+the one place a top-k cutoff changes), ``_query_top_k`` (the final TOP_K
+answer shape), ``_rerank`` (exact cosine over a candidate shortlist),
+``_adc_exprs`` (PQ lookup tables and the ADC score), ``_recall_hits``
+(hits against a ground truth) and ``_lloyd`` (the seeded Lloyd fit
+behind both IVF and PQ).  The DuckDB oracles (``*_SQL``,
+``_*_duck_sql``) are the reference implementations and spell every step
+out on their own.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window as W
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pdf_craft_spark.queries import dedup
@@ -108,20 +109,13 @@ def _cosine(dot: str, na: str, nb: str) -> Column:
     return F.round(F.expr(dot) / F.sqrt(F.col(na) * F.col(nb)), 6)
 
 
-def _top_k(df: DataFrame, key: str, order: list[Column], k: int, rank: str) -> DataFrame:
-    """The first ``k`` rows of each ``key`` in ``order``, numbered from 1
-    in the int column ``rank``; callers cast the rank their schema needs."""
-    w = W.partitionBy(key).orderBy(*order)
-    return df.withColumn(rank, F.row_number().over(w)).filter(F.col(rank) <= k)
-
-
 def _query_top_k(scored: DataFrame, score: str, *keep: str) -> DataFrame:
     """The answer shape of the top-k queries: the TOP_K neighbors of each
     query, best ``score`` first and ties to the lower neighbor_id, as
     (query_id, rank bigint, neighbor_id, *keep, score)."""
     order = [F.desc(score), F.asc("neighbor_id")]
     return (
-        _top_k(scored, "query_id", order, TOP_K, "rank")
+        dedup.top_k(scored, ["query_id"], order, TOP_K, "rank")
         .select(
             "query_id",
             F.col("rank").cast("bigint").alias("rank"),
@@ -1169,7 +1163,7 @@ def semantic_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("cos_sim") >= SEMDEDUP_THRESH)
     )
     return (
-        _top_k(pairs, "vec_b", [F.asc("vec_a")], 1, "rk")
+        dedup.top_k(pairs, ["vec_b"], [F.asc("vec_a")], 1, "rk")
         .select(
             F.col("vec_b").alias("vec_id"),
             F.col("cid").cast("int").alias("cid"),
@@ -1352,7 +1346,7 @@ def pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .selectExpr("query_id", "vec_id AS neighbor_id", adc_score)
     )
     order = [F.desc("adc_score"), F.asc("neighbor_id")]
-    shortlist = _top_k(adc, "query_id", order, PQ_SHORTLIST, "srk").select(
+    shortlist = dedup.top_k(adc, ["query_id"], order, PQ_SHORTLIST, "srk").select(
         "query_id", "neighbor_id"
     )
     return _rerank(shortlist, base)
@@ -1500,7 +1494,7 @@ def ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .selectExpr("query_id", "vec_id AS neighbor_id", adc_score)
     )
     order = [F.desc("adc_score"), F.asc("neighbor_id")]
-    shortlist = _top_k(cand, "query_id", order, IVFPQ_SHORTLIST, "srk").select(
+    shortlist = dedup.top_k(cand, ["query_id"], order, IVFPQ_SHORTLIST, "srk").select(
         "query_id", "neighbor_id"
     )
     return _rerank(shortlist, base)
@@ -1657,7 +1651,7 @@ def ndcg_eval_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         _cosine(_DOT.format(a="qe", b="ce"), "nq", "nc").alias("cs"),
     )
     order = [F.desc("cs"), F.asc("neighbor_id")]
-    top = _top_k(scored, "query_id", order, TOP_K, "rank")
+    top = dedup.top_k(scored, ["query_id"], order, TOP_K, "rank")
     disc = "CASE rank " + " ".join(
         f"WHEN {r + 1} THEN {d}" for r, d in enumerate(_NDCG_DISC)
     ) + " END"
@@ -1795,7 +1789,7 @@ def ann_dim_truncation_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         order = [F.desc("cs"), F.asc("neighbor_id")]
-        approx = _top_k(scored, "query_id", order, TOP_K, "rk").select(
+        approx = dedup.top_k(scored, ["query_id"], order, TOP_K, "rk").select(
             "query_id", "neighbor_id"
         )
         parts.append(
@@ -1918,7 +1912,7 @@ def sim_binary_hash_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     order = [F.asc("hamming"), F.asc("neighbor_id")]
-    cand = _top_k(scored, "query_id", order, BIN_CAND, "crk")
+    cand = dedup.top_k(scored, ["query_id"], order, BIN_CAND, "crk")
     return _rerank(cand, _normed(emb, _DOT), "hamming")
 
 
@@ -2013,7 +2007,7 @@ def mutual_nn_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = dots.selectExpr("va AS src", "vb AS prt", "dot").unionAll(
         dots.selectExpr("vb AS src", "va AS prt", "dot")
     )
-    best = _top_k(edges, "src", [F.desc("dot"), F.asc("prt")], 1, "rk")
+    best = dedup.top_k(edges, ["src"], [F.desc("dot"), F.asc("prt")], 1, "rk")
     fwd = best.selectExpr("src AS a", "prt AS b", "dot")
     rev = best.selectExpr("prt AS a", "src AS b")
     mutual = fwd.join(rev, ["a", "b"]).filter(F.col("a") < F.col("b"))
@@ -2157,7 +2151,7 @@ def knn_graph_block(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     pairs = half.unionAll(half.selectExpr("vb AS va", "va AS vb", "cos_sim"))
     return (
-        _top_k(pairs, "va", [F.desc("cos_sim"), F.asc("vb")], KNN_K, "rk")
+        dedup.top_k(pairs, ["va"], [F.desc("cos_sim"), F.asc("vb")], KNN_K, "rk")
         .selectExpr(
             "va AS vec_id", "CAST(rk AS BIGINT) AS rk", "vb AS neighbor", "cos_sim"
         )

@@ -41,6 +41,7 @@ from pdf_craft_spark.queries.dedup import (
     HASH_PCT_SQL as _HASH_PCT_SQL,
     hash_pct,
     md5_prefix_long_sql as _md5_long,
+    top_k,
 )
 from pdf_craft_spark.queries.timeseries import SLIDE_DAYS
 from pdf_craft_spark.sources import load_table
@@ -444,8 +445,6 @@ def _cms_bucket(engine: str, r: int) -> str:
 
 
 def cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window as W
-
     items = load_table(spark, sf_dir, "orders").select("o_custkey")
     stack_args = ", ".join(
         f"{r}, {_cms_bucket('spark', r)}" for r in range(_CMS_D)
@@ -471,13 +470,11 @@ def cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("o_custkey")
         .agg(F.min("cnt").alias("cms_est"))
     )
-    w = W.orderBy(F.desc("exact_cnt"), F.asc("o_custkey"))
+    order = [F.desc("exact_cnt"), F.asc("o_custkey")]
     return (
-        exact.join(est, "o_custkey")
-        .withColumn("rk", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rk") <= _CMS_TOPK)
+        top_k(exact.join(est, "o_custkey"), [], order, _CMS_TOPK, "rk")
         .selectExpr(
-            "rk",
+            "CAST(rk AS BIGINT) AS rk",
             "o_custkey",
             "exact_cnt",
             "cms_est",
@@ -891,21 +888,10 @@ def theta_sketch_intersection(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
     )
     dh = base.selectExpr("event_type", f"({h}) AS h").distinct()
-    sk = (
-        dh.selectExpr("event_type", "h", f"h % {_SHARDS} AS shard")
-        .withColumn(
-            "rnk1",
-            F.expr(
-                "row_number() OVER (PARTITION BY event_type, shard ORDER BY h)"
-            ),
-        )
-        .filter(F.col("rnk1") <= _K)
-        .withColumn(
-            "rnk",
-            F.expr("row_number() OVER (PARTITION BY event_type ORDER BY h)"),
-        )
-        .filter(F.col("rnk") <= _K)
-        .select("event_type", "h", "rnk")
+    shards = dh.selectExpr("event_type", "h", f"h % {_SHARDS} AS shard")
+    per_shard = top_k(shards, ["event_type", "shard"], [F.asc("h")], _K, "rnk1")
+    sk = top_k(per_shard, ["event_type"], [F.asc("h")], _K, "rnk").select(
+        "event_type", "h", "rnk"
     )
     thetas = (
         sk.groupBy()

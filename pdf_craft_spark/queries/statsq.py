@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from pdf_craft_spark.queries.dedup import md5_prefix_long_sql
+from pdf_craft_spark.queries.dedup import md5_prefix_long_sql, top_k
 from pdf_craft_spark.sources import load_table as _t
 
 QUERIES: dict = {}
@@ -1886,10 +1886,9 @@ def chi2_terms_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
                 * CAST(a + c AS DOUBLE) * CAST(b + d AS DOUBLE))
            ) AS BIGINT) AS chi2_micro""",
     )
-    wk = W.partitionBy("source").orderBy(F.col("chi2_micro").desc(), F.col("t"))
+    order = [F.col("chi2_micro").desc(), F.col("t")]
     return (
-        scored.withColumn("rk", F.row_number().over(wk))
-        .where(F.col("rk") <= CHI2_TOPK)
+        top_k(scored, ["source"], order, CHI2_TOPK, "rk")
         .select(
             "source", F.col("rk").cast("int").alias("rk"), "t", "a", "chi2_micro"
         )
@@ -2157,10 +2156,8 @@ def cluster_sample_design_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ts",
         "CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS y",
     )
-    wo = W.partitionBy("user_id").orderBy("ts", "event_id")
     taken = (
-        ev.withColumn("rn", F.row_number().over(wo))
-        .filter(F.col("rn") <= CLUSTER_TAKE)
+        top_k(ev, ["user_id"], [F.asc("ts"), F.asc("event_id")], CLUSTER_TAKE, "rn")
         .groupBy("user_id")
         .agg(
             F.count(F.lit(1)).cast("long").alias("mi"),

@@ -25,6 +25,7 @@ from pdf_craft_spark.queries.dedup import (
     _tokens,
     hash_pct,
     shingles_cached,
+    top_k,
 )
 from pdf_craft_spark.queries.pipelineq import GOLDEN_DOCS, SEED
 from pdf_craft_spark.sources import load_table
@@ -371,11 +372,9 @@ def keyword_tfidf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"tf * (({IDF_SCALE} * n_docs) DIV df) AS score",
         )
     )
-    w = W.partitionBy("doc_id").orderBy(F.col("score").desc(), "term")
+    order = [F.col("score").desc(), F.asc("term")]
     return (
-        scored.repartition(par, "doc_id")
-        .withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= _KW_TOPK)
+        top_k(scored.repartition(par, "doc_id"), ["doc_id"], order, _KW_TOPK, "rk")
         .select("doc_id", F.col("rk").cast("long").alias("rk"), "term", "score")
         .orderBy("doc_id", "rk")
     )
@@ -691,11 +690,9 @@ def bpe_merge_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("pair"),
     )
     agg = pairs.groupBy("pair").agg(F.sum("freq").alias("n"))
-    rk = F.row_number().over(W.orderBy(F.desc("n"), F.asc("pair")))
     return (
-        agg.withColumn("rk", rk.cast("long"))
-        .filter(F.col("rk") <= BPE_MERGE_TOPK)
-        .selectExpr("rk", "pair", "CAST(n AS BIGINT) AS n")
+        top_k(agg, [], [F.desc("n"), F.asc("pair")], BPE_MERGE_TOPK, "rk")
+        .selectExpr("CAST(rk AS BIGINT) AS rk", "pair", "CAST(n AS BIGINT) AS n")
         .orderBy("rk")
     )
 
@@ -1123,28 +1120,10 @@ def rrf_rank_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = _tokens()
     stop_arr = F.array(*[F.lit(s) for s in STOPWORDS])
     n_stop = F.size(F.filter(toks, lambda t: F.array_contains(stop_arr, F.lower(t))))
-    lista = (
-        docs.select("doc_id", n_stop.alias("s"))
-        .orderBy(F.desc("s"), "doc_id")
-        .limit(RRF_LIST_N)
-        .select(
-            "doc_id",
-            F.row_number()
-            .over(W.orderBy(F.desc("s"), "doc_id"))
-            .alias("ra"),
-        )
-    )
-    listb = (
-        docs.select("doc_id", F.col("n_chars").alias("c"))
-        .orderBy(F.desc("c"), "doc_id")
-        .limit(RRF_LIST_N)
-        .select(
-            "doc_id",
-            F.row_number()
-            .over(W.orderBy(F.desc("c"), "doc_id"))
-            .alias("rb"),
-        )
-    )
+    stop = docs.select("doc_id", n_stop.alias("s"))
+    size = docs.select("doc_id", F.col("n_chars").alias("c"))
+    lista = top_k(stop, [], [F.desc("s"), F.asc("doc_id")], RRF_LIST_N, "ra")
+    listb = top_k(size, [], [F.desc("c"), F.asc("doc_id")], RRF_LIST_N, "rb")
     fused = lista.join(listb, "doc_id", "full_outer").selectExpr(
         "doc_id",
         "CAST(ra AS INT) AS rank_stopword",
@@ -1273,10 +1252,9 @@ def collocation_lift_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(second), "b")
         .crossJoin(F.broadcast(n))
     )
-    wk = W.orderBy(F.col("c_ab").desc(), F.col("a"), F.col("b"))
+    order = [F.col("c_ab").desc(), F.col("a"), F.col("b")]
     return (
-        scored.withColumn("rk", F.row_number().over(wk))
-        .where(F.col("rk") <= COLLOC_TOPK)
+        top_k(scored, [], order, COLLOC_TOPK, "rk")
         .selectExpr(
             "a",
             "b",
@@ -1564,10 +1542,8 @@ def zipf_rank_frequency(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     freq = toks.groupBy("t").agg(F.count(F.lit(1)).cast("long").alias("f"))
     f1 = freq.agg(F.max("f").cast("long").alias("f1"))
-    wk = W.orderBy(F.col("f").desc(), F.col("t"))
     return (
-        freq.withColumn("r", F.row_number().over(wk))
-        .where(F.col("r") <= ZIPF_TOPK)
+        top_k(freq, [], [F.col("f").desc(), F.col("t")], ZIPF_TOPK, "r")
         .crossJoin(F.broadcast(f1))
         .selectExpr(
             "CAST(r AS INT) AS r",
@@ -1633,10 +1609,9 @@ def kwic_contexts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("prev_t", "next_t")
         .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
     )
-    wk = W.orderBy(F.col("cnt").desc(), F.col("prev_t"), F.col("next_t"))
+    order = [F.col("cnt").desc(), F.col("prev_t"), F.col("next_t")]
     return (
-        ctx.withColumn("rk", F.row_number().over(wk))
-        .where(F.col("rk") <= KWIC_TOPK)
+        top_k(ctx, [], order, KWIC_TOPK, "rk")
         .selectExpr("CAST(rk AS INT) AS rk", "prev_t", "next_t", "cnt")
         .orderBy("rk")
     )

@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from pdf_craft_spark.queries.dedup import top_k
 from pdf_craft_spark.sources import load_table as _t
 
 
@@ -1696,8 +1697,7 @@ def forecast_reconciliation(spark: SparkSession, sf_dir: str) -> DataFrame:
         "CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents",
     )
     weekly = o.groupBy("seg", "wk").agg(F.sum("cents").cast("long").alias("rev"))
-    wseg = W.partitionBy("seg").orderBy(F.desc("wk"))
-    last5 = weekly.withColumn("rn", F.row_number().over(wseg)).where("rn <= 5")
+    last5 = top_k(weekly, ["seg"], [F.desc("wk")], 5, "rn")
     wmed = W.partitionBy("seg").orderBy("rev")
     seg_fc = (
         last5.withColumn("mr", F.row_number().over(wmed))
@@ -1705,11 +1705,9 @@ def forecast_reconciliation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .selectExpr("seg", "rev AS fc_seg")
     )
     totals = weekly.groupBy("wk").agg(F.sum("rev").cast("long").alias("trev"))
-    wt = W.orderBy(F.desc("wk"))
     wtm = W.orderBy("trev")
     top_fc = (
-        totals.withColumn("rn", F.row_number().over(wt))
-        .where("rn <= 5")
+        top_k(totals, [], [F.desc("wk")], 5, "rn")
         .withColumn("mr", F.row_number().over(wtm))
         .where("mr = 3")
         .selectExpr("CAST(trev AS BIGINT) AS fc_top")

@@ -35,6 +35,7 @@ from pdf_craft_spark.queries.dedup import (
     hash_pct as _dedup_hash_pct,
     md5_prefix_long_sql,
     shingles_cached,
+    top_k,
 )
 from pdf_craft_spark.queries.similarity import _emb
 from pdf_craft_spark.sources import load_table
@@ -540,7 +541,7 @@ ORACLES["sample_mixture_by_lang"] = SAMPLE_MIXTURE_BY_LANG_SQL
 # that is (a) reproducible across reruns/appends/repartitioning (unlike
 # rand()), and (b) MERGEABLE: top-k of a union == top-k of per-shard
 # top-ks, so executors reduce locally and ship k rows each — Spark plans
-# the orderBy().limit(k) as TakeOrderedAndProject, exactly that shape.
+# the global top_k as TakeOrderedAndProject, exactly that shape.
 # The tie-break is the hash itself (collision-free on distinct doc_ids).
 RESERVOIR_K = 100
 
@@ -549,9 +550,9 @@ def reservoir_sample_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir).selectExpr(
         "doc_id", "md5(CAST(doc_id AS STRING)) AS priority", "n_chars"
     )
-    sample = docs.orderBy("priority").limit(RESERVOIR_K)
+    sample = top_k(docs, [], [F.asc("priority")], RESERVOIR_K, "rk")
     return sample.select(
-        F.row_number().over(W.orderBy("priority")).cast("long").alias("rk"),
+        F.col("rk").cast("long").alias("rk"),
         F.col("doc_id").cast("long").alias("doc_id"),
         "priority",
         F.col("n_chars").cast("long").alias("n_chars"),
@@ -702,12 +703,8 @@ def contrastive_pairs_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
         "h",
         f"CAST(conv(substr(h, 1, 4), 16, 10) AS BIGINT) % {PAIR_BUCKETS} AS bkt",
     )
-    rep = (
-        keyed.withColumn(
-            "rk", F.row_number().over(W.partitionBy("bkt").orderBy("h"))
-        )
-        .filter(F.col("rk") == 1)
-        .selectExpr("bkt", "doc_id AS pair_doc", "chunk_idx AS pair_idx")
+    rep = top_k(keyed, ["bkt"], [F.asc("h")], 1, "rk").selectExpr(
+        "bkt", "doc_id AS pair_doc", "chunk_idx AS pair_idx"
     )
     neg = (
         keyed.join(F.broadcast(rep), "bkt")
@@ -775,8 +772,7 @@ def negative_sample_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.md5(F.col("neg_id").cast("string")), "neg_id")
         .limit(NEG_POOL)
     )
-    w = W.partitionBy("doc_id").orderBy("r", "neg_id")
-    return (
+    drawn = (
         docs.crossJoin(F.broadcast(pool))
         .filter(F.col("doc_id") != F.col("neg_id"))
         .withColumn(
@@ -789,8 +785,9 @@ def negative_sample_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             ),
         )
-        .withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= NEG_K)
+    )
+    return (
+        top_k(drawn, ["doc_id"], [F.asc("r"), F.asc("neg_id")], NEG_K, "rk")
         .select(
             F.col("doc_id").cast("long").alias("doc_id"),
             F.col("neg_id").cast("long").alias("neg_id"),
@@ -1067,13 +1064,8 @@ def priority_sample_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         "CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) DIV 100 AS w",
         f"({h}) + 1 AS u",
     )
-    ranked = (
-        o.selectExpr("o_orderkey", "w", f"(w * {1 << 40}) DIV u AS q")
-        .orderBy(F.desc("q"), "o_orderkey")
-        .limit(PRIORITY_K + 1)
-    )
-    wr = W.orderBy(F.desc("q"), "o_orderkey")
-    top = ranked.select("o_orderkey", "w", "q", F.row_number().over(wr).alias("rk"))
+    scored = o.selectExpr("o_orderkey", "w", f"(w * {1 << 40}) DIV u AS q")
+    top = top_k(scored, [], [F.desc("q"), F.asc("o_orderkey")], PRIORITY_K + 1, "rk")
     tau = top.where(F.col("rk") == PRIORITY_K + 1).selectExpr("q AS tau")
     sample = top.where(F.col("rk") <= PRIORITY_K)
     est = (

@@ -1007,10 +1007,10 @@ def test_round_loops_run_through_the_driver():
 
 def test_retrieval_ranks_through_one_tail():
     """The vector-search family ranks and scores through one copy of each
-    step: in queries/similarity.py a row_number window appears only in
-    _top_k, the one place a top-k cutoff changes, and the cosine division
-    round(dot / sqrt(na * nb), 6) only in _cosine.  The DuckDB oracles are
-    SQL text and spell out their own."""
+    step: queries/similarity.py spells no row_number window (its ranks go
+    through dedup.top_k, the one place a top-k cutoff changes), and the
+    cosine division round(dot / sqrt(na * nb), 6) appears only in _cosine.
+    The DuckDB oracles are SQL text and spell out their own."""
     import ast
     import pathlib
 
@@ -1044,7 +1044,180 @@ def test_retrieval_ranks_through_one_tail():
         )
         if hit(node) and getattr(top, "name", None) != owner
     ]
-    assert not strays, f"rank in similarity._top_k, score in similarity._cosine: {strays}"
+    assert not strays, f"rank through dedup.top_k, score in similarity._cosine: {strays}"
+
+
+def test_top_k_plans_a_partial_cut(spark):
+    """dedup.top_k relies on the planner for its eager cut: a keyed rank
+    is cut per partition (a partial WindowGroupLimit) before it shuffles,
+    and a global rank becomes TakeOrderedAndProject, so no rank ever
+    funnels every row through one task."""
+    from pyspark.sql import functions as F
+
+    from pdf_craft_spark.queries.dedup import top_k
+
+    df = spark.range(1000).selectExpr("id % 7 AS g", "id")
+    keyed = _executed_plan(top_k(df, ["g"], [F.desc("id")], 3, "rk"))
+    exchange = keyed.find("Exchange")
+    assert exchange != -1 and "row_number(), 3, Partial" in keyed[exchange:], keyed
+    glob = _executed_plan(top_k(df, [], [F.desc("id")], 3, "rk"))
+    assert "TakeOrderedAndProject(limit=3" in glob, glob
+
+
+def test_rank_and_cut_runs_through_top_k():
+    """Every constant-k rank-and-cut in the query package is dedup.top_k:
+    outside it, no row_number column (a Column window, or F.expr/selectExpr
+    SQL) is filtered with exactly ``<= k``, ``< k`` or ``= 1``, and no
+    row_number ranks a frame already cut by a hand-written ``.limit(k)``.
+    Picks of one rank (``mr = 3``), medians, per-row prefix lengths,
+    numbering and multi-window conditions keep their own code; the DuckDB
+    oracles are SQL text passed to no Spark call and spell out their own."""
+    import ast
+    import pathlib
+    import re
+
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "pdf_craft_spark" / "queries"
+    sql_rank = re.compile(r"row_number\(\)\s*OVER\s*\(", re.I)
+    sql_cut = re.compile(r"\s*(\w+)\s*(<=|>=|<|>|=)\s*(\d+|\{\})\s*")
+
+    def text(node):
+        # string constants and f-strings, each {...} part as "{}"
+        if isinstance(node, ast.Constant) and isinstance(node.value, str):
+            return node.value
+        if isinstance(node, ast.JoinedStr):
+            return "".join(
+                v.value if isinstance(v, ast.Constant) else "{}" for v in node.values
+            )
+        return None
+
+    def sql_names(s):
+        # the AS name after each row_number() OVER (...)
+        for m in sql_rank.finditer(s):
+            depth, i = 1, m.end()
+            while depth and i < len(s):
+                depth += {"(": 1, ")": -1}.get(s[i], 0)
+                i += 1
+            alias = re.match(r"\s*AS\s+(\w+)", s[i:], re.I)
+            if alias:
+                yield alias.group(1)
+
+    def strays(top):
+        parent = {c: p for p in ast.walk(top) for c in ast.iter_child_nodes(p)}
+        assigned = {}
+        for node in ast.walk(top):
+            if isinstance(node, ast.Assign) and isinstance(node.targets[0], ast.Name):
+                assigned[node.targets[0].id] = node.value
+
+        def chain(node):
+            # the receivers of a method chain: F.row_number().over(w).cast(..)
+            while True:
+                yield node
+                if isinstance(node, ast.Call):
+                    node = node.func
+                elif isinstance(node, ast.Attribute):
+                    node = node.value
+                else:
+                    return
+
+        def reaches(node, hit, seen=()):
+            # a link of the chain, or of a named frame's assignment, is a hit
+            for link in chain(node):
+                if hit(link):
+                    return True
+                if isinstance(link, ast.Name) and link.id in assigned and link.id not in seen:
+                    return reaches(assigned[link.id], hit, seen + (link.id,))
+            return False
+
+        def is_rank(link):
+            if isinstance(link, ast.Call) and getattr(link.func, "attr", None) == "expr":
+                return bool(link.args and sql_rank.search(text(link.args[0]) or ""))
+            return isinstance(link, ast.Attribute) and link.attr == "row_number"
+
+        def ranks(node):
+            return reaches(node, is_rank)
+
+        def limited(node):
+            return reaches(node, lambda link: getattr(link, "attr", None) == "limit")
+
+        # rank name -> [(line, frame the window is added to)]
+        bound = {}
+        for node in ast.walk(top):
+            if not (isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)):
+                continue
+            what, args = node.func.attr, node.args
+            if what == "withColumn" and len(args) == 2 and ranks(args[1]):
+                bound.setdefault(text(args[0]), []).append((args[1].lineno, node.func.value))
+            elif what == "alias" and args and ranks(node.func.value):
+                frame = parent.get(node)
+                while frame is not None and not (
+                    isinstance(frame, ast.Call)
+                    and isinstance(frame.func, ast.Attribute)
+                    and frame.func.attr in ("select", "withColumn")
+                ):
+                    frame = parent.get(frame)
+                recv = frame.func.value if frame is not None else None
+                bound.setdefault(text(args[0]), []).append((node.lineno, recv))
+            elif what in ("selectExpr", "expr"):
+                for arg in args:
+                    for name in sql_names(text(arg) or ""):
+                        recv = node.func.value if what == "selectExpr" else None
+                        bound.setdefault(name, []).append((arg.lineno, recv))
+
+        def window(name, line):
+            sites = sorted(bound.get(name, ()), key=lambda s: s[0])
+            before = [s for s in sites if s[0] <= line]
+            return (before or sites or [(None, None)])[-1][0]
+
+        hits = {line for sites in bound.values() for line, recv in sites
+                if recv is not None and limited(recv)}
+        # (name, op, constant rhs) of each filter that is one comparison
+        tests = []
+        for node in ast.walk(top):
+            if not (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in ("filter", "where")
+                and len(node.args) == 1
+            ):
+                continue
+            cond, s = node.args[0], text(node.args[0])
+            if s is not None and (m := sql_cut.fullmatch(s)):
+                tests.append((node.func.end_lineno, m.group(1), m.group(2), m.group(3)))
+            elif (
+                isinstance(cond, ast.Compare)
+                and len(cond.ops) == 1
+                and isinstance(cond.left, ast.Call)
+                and getattr(cond.left.func, "attr", getattr(cond.left.func, "id", None)) == "col"
+                and cond.left.args
+                and not any(isinstance(n, ast.Call) for n in ast.walk(cond.comparators[0]))
+            ):
+                right = cond.comparators[0]
+                op = {ast.LtE: "<=", ast.Lt: "<", ast.Eq: "=", ast.GtE: ">=", ast.Gt: ">"}
+                tests.append((
+                    node.func.end_lineno,
+                    text(cond.left.args[0]),
+                    op.get(type(cond.ops[0])),
+                    str(right.value) if isinstance(right, ast.Constant) else "{}",
+                ))
+        # a rank read as both `<= k` and `> k` splits its rows in two: no cut
+        split = {name for _, name, op, _ in tests if op in (">", ">=")}
+        hits.update(
+            window(name, line)
+            for line, name, op, rhs in tests
+            if name in bound and name not in split
+            and (op in ("<=", "<") or op == "=" and rhs == "1")
+        )
+        return hits
+
+    found = sorted(
+        f"{path.name}:{line}"
+        for path in sorted(pkg.rglob("*.py"))
+        for top in ast.parse(path.read_text()).body
+        if isinstance(top, ast.FunctionDef)
+        and not (path.name == "dedup.py" and top.name == "top_k")
+        for line in strays(top)
+    )
+    assert not found, f"rank and cut through dedup.top_k: {found}"
 
 
 def test_env_knobs_are_allowlisted():
